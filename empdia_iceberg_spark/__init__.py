@@ -104,81 +104,73 @@ if not _in_pyspark_worker():
 #      (tools/next_sweep.py emits the order);
 #   3. the stalest previously-green block as tail filler.
 #
-# ROUND 16 ARITHMETIC (optimization round 2): never-swept debt stays
-# ZERO (all 304 queries have driver rows through r15; zero FAILs ever).
-# The window is (1) the 14 queries whose answer paths round 16's
-# optimization targets touch (VERDICT r15 "Next round" list: the
-# pagerank iteration loop, the table_sql_pruned_read action cut, the
-# governance/alter statement bundles, the merge family's shared
-# BY-SOURCE scan, user_profile_similarity, partitioned-write within-dir
-# splitting, and the pyds drain import trim) — every changed path gets
-# a driver oracle row this round, same verification-positive promotion
-# policy as r15 — then (2) the ENTIRE 32-name r8 cohort (oldest
-# last-swept; burning it moves max staleness to r9), then (3) 4 r9
-# names as tail filler.
+# ROUND 17 ARITHMETIC (simplicity round): never-swept debt stays ZERO
+# (all 304 queries have driver rows through r16; zero FAILs ever). The
+# window is (1) the 10 queries whose answer paths round 17's
+# pruning-planner merge touches — the SQL read path, the transform-
+# pruned reads, predicate UPDATE/DELETE file-finding (all now through
+# SnapshotTable.plan_files), and the alter-type footer audit — every
+# changed path gets a driver oracle row this round, then (2) the ENTIRE
+# 35-name r9 cohort (oldest last-swept; burning it moves max
+# staleness to r10), then (3) 5 r10 names as tail filler.
 _SWEEP_PRIORITY = [
-    "pagerank_trading_graph",  # r16-opt target: iteration loop
-    "table_sql_pruned_read",  # r16-opt target: CTAS+INSERT action cut
-    "table_governance_sql",  # r16-opt target: statement-bundle actions
-    "table_alter_type_sql",  # r16-opt target: statement-bundle actions
-    "table_merge_sync_dml",  # r16-opt target: shared BY-SOURCE scan
-    "table_merge_upsert",  # r16-opt: merge path shared with sync_dml
-    "table_merge_pruned",  # r16-opt: merge path shared with sync_dml
-    "user_profile_similarity",  # r16-opt target: pivot/pair-join evidence
-    "table_partition_transforms_sql",  # r16-opt target: within-dir file split
-    "table_partition_evolution",  # r16-opt: partitioned-write path
-    "stream_cdc_apply",  # r16-opt: merge path in drains
-    "stream_cdc_tail",  # r16-opt target: drain import trim
-    "stream_native_sink_medallion",  # r16-opt target: drain import trim
-    "pipeline_medallion",  # r16-opt: merge + pyds tail
-    "doc_weighted_sample",  # r8 cohort burn
-    "doc_sample_per_lang",  # r8 cohort burn
-    "doc_tfidf_top_terms",  # r8 cohort burn
-    "emb_decontaminate",  # r8 cohort burn
-    "doc_repetition_stats",  # r8 cohort burn
-    "doc_rake_keyphrases",  # r8 cohort burn
-    "doc_oov_rate",  # r8 cohort burn
-    "nb_lang_confusion",  # r8 cohort burn
-    "classifier_agreement_kappa",  # r8 cohort burn
-    "multimodal_audio_zcr",  # r8 cohort burn
-    "udtf_split_fixed_cols",  # r8 cohort burn
-    "events_session_window_batch",  # r8 cohort burn
-    "events_rolling_median_7d",  # r8 cohort burn
-    "events_rolling_wau",  # r8 cohort burn
-    "events_linear_attribution",  # r8 cohort burn
-    "events_ohlc_hourly",  # r8 cohort burn
-    "events_scd2_history",  # r8 cohort burn
-    "events_weekly_retention",  # r8 cohort burn
-    "mc_pi_estimate",  # r8 cohort burn
-    "orders_var_cvar",  # r8 cohort burn
-    "ab_sprt_trace",  # r8 cohort burn
-    "ab_test_conversion",  # r8 cohort burn
-    "ols_by_returnflag",  # r8 cohort burn
-    "quantile_transform_acctbal",  # r8 cohort burn
-    "revenue_concentration_hhi",  # r8 cohort burn
-    "revenue_gini_customers",  # r8 cohort burn
-    "corpus_zipf_slope",  # r8 cohort burn
-    "revenue_price_volume_bridge",  # r8 cohort burn
-    "revenue_recognition_schedule",  # r8 cohort burn
-    "revenue_yoy_growth",  # r8 cohort burn
-    "customer_segment_migration",  # r8 cohort burn
-    "customer_rfm_segments",  # r8 cohort burn
-    "orders_interpurchase_intervals",  # r9 filler
-    "orders_status_summary",  # r9 filler
-    "lineitem_fifo_allocation",  # r9 filler
-    "join_key_skew_stats",  # r9 filler
-    # ---- 50-slot window ends here (14 r16-changed + 32 r8 + 4 r9) ----
-    "table_stats_pruned_dml",  # last swept r15
+    "table_sql_pruned_read",  # r17 change: SQL read path plans through plan_files
+    "table_partition_transforms_sql",  # r17 change: read_pruned_transform adapter
+    "table_partition_replace_sql",  # r17 change: read_pruned_transform adapter
+    "table_range_mor_pruned_read",  # r17 change: read_pruned_transform_range adapter
+    "table_stats_pruned_dml",  # r17 change: DML file-finding through plan_files
+    "table_update_dml",  # r17 change: DML file-finding through plan_files
+    "table_delete_dml",  # r17 change: DML file-finding through plan_files
+    "table_ddl_lifecycle",  # r17 change: UPDATE file-finding through plan_files
+    "table_rename_column_sql",  # r17 change: UPDATE file-finding through plan_files
+    "table_alter_type_sql",  # r17 change: _raw_dtypes hoisted, fails loudly
+    "duplicate_baskets",  # r9 cohort burn
+    "graph_bfs_hops",  # r9 cohort burn
+    "graph_kcore_sizes",  # r9 cohort burn
+    "graph_degree_assortativity",  # r9 cohort burn
+    "item_item_similar_parts",  # r9 cohort burn
+    "seq2_event_patterns",  # r9 cohort burn
+    "doc_fuzzy_clusters",  # r9 cohort burn
+    "doc_greedy_coverage_select",  # r9 cohort burn
+    "doc_pack_windows",  # r9 cohort burn
+    "hash_split_assignments",  # r9 cohort burn
+    "domain_mixture_weights",  # r9 cohort burn
+    "embedding_quantize_int8",  # r9 cohort burn
+    "variant_props_typed",  # r9 cohort burn
+    "secure_masked_view",  # r9 cohort burn
+    "observed_metrics_shipments",  # r9 cohort burn
+    "dq_checks_orders",  # r9 cohort burn
+    "semi_join_active_customers",  # r9 cohort burn
+    "anti_join_inactive_customers",  # r9 cohort burn
+    "set_ops_segments",  # r9 cohort burn
+    "rollup_pricing",  # r9 cohort burn
+    "cube_order_priority",  # r9 cohort burn
+    "distinct_counts",  # r9 cohort burn
+    "approx_distinct_counts",  # r9 cohort burn
+    "topk_orders_global",  # r9 cohort burn
+    "scalar_string_fns",  # r9 cohort burn
+    "date_fns_orders",  # r9 cohort burn
+    "json_extract_events",  # r9 cohort burn
+    "orders_above_customer_avg",  # r9 cohort burn
+    "events_hourly_rollup",  # r9 cohort burn
+    "pivot_status_by_priority",  # r9 cohort burn
+    "null_safe_join_acctbal",  # r9 cohort burn
+    "map_functions_props",  # r9 cohort burn
+    "grouping_sets_pricing",  # r9 cohort burn
+    "percentile_order_values",  # r9 cohort burn
+    "approx_percentile_sketch",  # r9 cohort burn
+    "q1_pricing_agg",  # r10 filler
+    "q3_join3_topk",  # r10 filler
+    "events_multi_grain_rollup",  # r10 filler
+    "salted_join_skewed",  # r10 filler
+    "unpivot_pricing_metrics",  # r10 filler
+    # ---- 50-slot window ends here (10 r17-changed + 35 r9 + 5 r10) ----
     "table_posdel_rewrite_sql",  # last swept r15
-    "table_range_mor_pruned_read",  # last swept r15
-    "table_partition_replace_sql",  # last swept r15
     "table_position_delete_dml",  # last swept r15
     "table_changes_sql",  # last swept r15
     "stream_table_tail",  # last swept r15
     "table_delete_mor_dml",  # last swept r15
     "table_mor_deletes",  # last swept r15
-    "table_update_dml",  # last swept r15
-    "table_delete_dml",  # last swept r15
     "table_time_travel_sql",  # last swept r15
     "table_metadata_tables_sql",  # last swept r15
     "curation_pipeline",  # last swept r15
@@ -208,46 +200,6 @@ _SWEEP_PRIORITY = [
     "events_max_drawdown_user",  # last swept r15
     "forecast_backtest_snaive",  # last swept r15
     "profile_orders_stats",  # last swept r15
-    "duplicate_baskets",  # last swept r9
-    "graph_bfs_hops",  # last swept r9
-    "graph_kcore_sizes",  # last swept r9
-    "graph_degree_assortativity",  # last swept r9
-    "item_item_similar_parts",  # last swept r9
-    "seq2_event_patterns",  # last swept r9
-    "doc_fuzzy_clusters",  # last swept r9
-    "doc_greedy_coverage_select",  # last swept r9
-    "doc_pack_windows",  # last swept r9
-    "hash_split_assignments",  # last swept r9
-    "domain_mixture_weights",  # last swept r9
-    "embedding_quantize_int8",  # last swept r9
-    "variant_props_typed",  # last swept r9
-    "secure_masked_view",  # last swept r9
-    "observed_metrics_shipments",  # last swept r9
-    "dq_checks_orders",  # last swept r9
-    "semi_join_active_customers",  # last swept r9
-    "anti_join_inactive_customers",  # last swept r9
-    "set_ops_segments",  # last swept r9
-    "rollup_pricing",  # last swept r9
-    "cube_order_priority",  # last swept r9
-    "distinct_counts",  # last swept r9
-    "approx_distinct_counts",  # last swept r9
-    "topk_orders_global",  # last swept r9
-    "scalar_string_fns",  # last swept r9
-    "date_fns_orders",  # last swept r9
-    "json_extract_events",  # last swept r9
-    "orders_above_customer_avg",  # last swept r9
-    "events_hourly_rollup",  # last swept r9
-    "pivot_status_by_priority",  # last swept r9
-    "null_safe_join_acctbal",  # last swept r9
-    "map_functions_props",  # last swept r9
-    "grouping_sets_pricing",  # last swept r9
-    "percentile_order_values",  # last swept r9
-    "approx_percentile_sketch",  # last swept r9
-    "q1_pricing_agg",  # last swept r10
-    "q3_join3_topk",  # last swept r10
-    "events_multi_grain_rollup",  # last swept r10
-    "salted_join_skewed",  # last swept r10
-    "unpivot_pricing_metrics",  # last swept r10
     "doc_dedup_survivors",  # last swept r10
     "doc_text_stats",  # last swept r10
     "doc_token_counts",  # last swept r10
@@ -282,7 +234,6 @@ _SWEEP_PRIORITY = [
     "termination_flags",  # last swept r10
     "table_statement_corners",  # last swept r11
     "table_refs_sql",  # last swept r11
-    "table_rename_column_sql",  # last swept r11
     "table_maintenance_sql",  # last swept r11
     "table_insert_dml",  # last swept r11
     "table_hilbert_layout",  # last swept r11
@@ -401,7 +352,6 @@ _SWEEP_PRIORITY = [
     "stream_dedup_bounded_state",  # last swept r14
     "stream_stream_left_join",  # last swept r14
     "table_insert_overwrite_dml",  # last swept r14
-    "table_ddl_lifecycle",  # last swept r14
     "seasonal_strength_scan",  # last swept r14
     "events_seasonal_residual_outliers",  # last swept r14
     "events_linear_interpolate",  # last swept r14
@@ -422,6 +372,53 @@ _SWEEP_PRIORITY = [
     "anova_acctbal_segments",  # last swept r14
     "ks_acctbal_two_sample",  # last swept r14
     "lineitem_corr_matrix",  # last swept r14
+    "pagerank_trading_graph",  # last swept r16
+    "table_governance_sql",  # last swept r16
+    "table_merge_sync_dml",  # last swept r16
+    "table_merge_upsert",  # last swept r16
+    "table_merge_pruned",  # last swept r16
+    "user_profile_similarity",  # last swept r16
+    "table_partition_evolution",  # last swept r16
+    "stream_cdc_apply",  # last swept r16
+    "stream_cdc_tail",  # last swept r16
+    "stream_native_sink_medallion",  # last swept r16
+    "pipeline_medallion",  # last swept r16
+    "doc_weighted_sample",  # last swept r16
+    "doc_sample_per_lang",  # last swept r16
+    "doc_tfidf_top_terms",  # last swept r16
+    "emb_decontaminate",  # last swept r16
+    "doc_repetition_stats",  # last swept r16
+    "doc_rake_keyphrases",  # last swept r16
+    "doc_oov_rate",  # last swept r16
+    "nb_lang_confusion",  # last swept r16
+    "classifier_agreement_kappa",  # last swept r16
+    "multimodal_audio_zcr",  # last swept r16
+    "udtf_split_fixed_cols",  # last swept r16
+    "events_session_window_batch",  # last swept r16
+    "events_rolling_median_7d",  # last swept r16
+    "events_rolling_wau",  # last swept r16
+    "events_linear_attribution",  # last swept r16
+    "events_ohlc_hourly",  # last swept r16
+    "events_scd2_history",  # last swept r16
+    "events_weekly_retention",  # last swept r16
+    "mc_pi_estimate",  # last swept r16
+    "orders_var_cvar",  # last swept r16
+    "ab_sprt_trace",  # last swept r16
+    "ab_test_conversion",  # last swept r16
+    "ols_by_returnflag",  # last swept r16
+    "quantile_transform_acctbal",  # last swept r16
+    "revenue_concentration_hhi",  # last swept r16
+    "revenue_gini_customers",  # last swept r16
+    "corpus_zipf_slope",  # last swept r16
+    "revenue_price_volume_bridge",  # last swept r16
+    "revenue_recognition_schedule",  # last swept r16
+    "revenue_yoy_growth",  # last swept r16
+    "customer_segment_migration",  # last swept r16
+    "customer_rfm_segments",  # last swept r16
+    "orders_interpurchase_intervals",  # last swept r16
+    "orders_status_summary",  # last swept r16
+    "lineitem_fifo_allocation",  # last swept r16
+    "join_key_skew_stats",  # last swept r16
 ]
 
 if not _in_pyspark_worker():

@@ -2118,6 +2118,33 @@ def table_rename_column_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _raw_dtypes(d: str) -> dict:
+    """{column: Spark-style physical type} of the first parquet file of
+    data dir ``d``, straight off its FOOTER (r16): the alter-type
+    audit's claim is about the bytes on disk, and the footer schema IS
+    that record — pyarrow reads it in ~1 ms, where a Spark relation per
+    dir cost ~125 ms (driver file listing + schema merge)."""
+    import glob
+    import os as _os
+
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(_os.path.join(d, "*.parquet")))
+    if not files:
+        raise ValueError(f"no parquet file in data dir {d}")
+    out = {}
+    for fld in pq.read_schema(files[0]):
+        s = str(fld.type)
+        if s == "int64":
+            s = "bigint"
+        elif s == "int32":
+            s = "int"
+        elif s.startswith("decimal128(") or s.startswith("decimal("):
+            s = "decimal(" + s.split("(", 1)[1].replace(" ", "")
+        out[fld.name] = s
+    return out
+
+
 @register(
     "table_alter_type_sql",
     oracle=f"""
@@ -2195,30 +2222,6 @@ def table_alter_type_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = SnapshotTable(spark, "lineitem_widen", scratch_root())
     dirs = t._read_meta(t.current_version())["dirs"]
-
-    # Raw physical-encoding audit straight off the parquet FOOTER
-    # (r16): the audit's claim is about the bytes on disk, and the
-    # footer schema IS that record — read it with pyarrow (~1 ms)
-    # instead of building a Spark relation per dir (~125 ms each,
-    # driver file listing + schema merge for a one-file dir).
-    def _raw_dtypes(d: str) -> dict:
-        import glob as _glob
-        import os as _os
-
-        import pyarrow.parquet as _pq
-
-        f = sorted(_glob.glob(_os.path.join(d, "*.parquet")))[0]
-        out = {}
-        for fld in _pq.read_schema(f):
-            s = str(fld.type)
-            if s == "int64":
-                s = "bigint"
-            elif s == "int32":
-                s = "int"
-            elif s.startswith("decimal128(") or s.startswith("decimal("):
-                s = "decimal(" + s.split("(", 1)[1].replace(" ", "")
-            out[fld.name] = s
-        return out
 
     raw_old = _raw_dtypes(dirs[0])
     raw_new = _raw_dtypes(dirs[-1])

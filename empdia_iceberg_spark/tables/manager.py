@@ -38,7 +38,10 @@ import re
 import shutil
 import time
 import uuid
+from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -267,8 +270,8 @@ _PATH_EXACT_TYPES = (str, int, datetime.date)
 def hive_escape_value(v) -> str | None:
     """Render a partition value exactly as the partitionBy writer does,
     or None when the value's str() is not provably the writer's
-    rendering (callers full-scan that dir behind the residual filter —
-    pruning is never allowed to change semantics)."""
+    rendering. The planner decodes dir names instead of encoding values
+    (`hive_unescape_value`); this is the writer-side half of the pair."""
     if v is None:
         return HIVE_DEFAULT_PARTITION
     if isinstance(v, bool) or not isinstance(v, _PATH_EXACT_TYPES):
@@ -326,6 +329,59 @@ def _acquire_excl_lock(
             time.sleep(sleep_s)
     os.close(fd)
     raise TimeoutError(f"{what}: lock busy")
+
+
+# the exceptions a Spark call over py4j raises (analysis errors, captured
+# JVM errors, gateway failures) — a planner fallback catches these and
+# nothing broader
+_SPARK_ERRORS = (Py4JError, PySparkException)
+_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+@dataclass
+class Level:
+    """One pruning level's tally (considered = selected + pruned) and
+    the first reason it read some of its input whole instead."""
+
+    considered: int = 0
+    selected: int = 0
+    pruned: int = 0
+    reason: str | None = None
+
+    def count(self, keep: bool) -> bool:
+        self.considered += 1
+        self.selected += keep
+        self.pruned += not keep
+        return keep
+
+    def decline(self, reason: str) -> None:
+        self.reason = self.reason or reason
+
+
+@dataclass
+class Decision:
+    """What `SnapshotTable.plan_files` considered, kept and skipped, and
+    why, per level: data dirs whose lead partition entry is bounded,
+    their hive subdirs, and the files footer stats were consulted for."""
+
+    dirs: Level = field(default_factory=Level)
+    subdirs: Level = field(default_factory=Level)
+    files: Level = field(default_factory=Level)
+
+    def decline(self, reason: str) -> None:
+        for level in (self.dirs, self.subdirs, self.files):
+            level.decline(reason)
+
+    def audit(self, meta: dict) -> dict:
+        """The pruned-read audit dict the stories and tests pin."""
+        return {
+            "dirs_pruned": self.dirs.pruned,
+            "subdirs_selected": self.subdirs.selected,
+            "subdirs_pruned": self.subdirs.pruned,
+            "dirs_full_scan": len(meta["dirs"]) - self.dirs.considered,
+            "files_skipped_by_stats": self.files.pruned,
+            "mor_deletes_applied": len(meta.get("delete_dirs", [])),
+        }
 
 
 class SnapshotTable:
@@ -1699,7 +1755,7 @@ class SnapshotTable:
     # kinds whose footer stats round-trip losslessly into envelope
     # bounds: ints and dates compare natively; strings rely on the
     # parquet contract that truncated min/max stay conservative (the
-    # same contract _stats_files_matching already leans on)
+    # same contract plan_files' footer-stats step already leans on)
     _ENV_STAT_KINDS = ("int", "str", "date")
 
     # at most this many candidate dirs ride the source-stats aggregate
@@ -3208,128 +3264,65 @@ class SnapshotTable:
             pass
         return out
 
-    def _stats_files_matching(
-        self, d: str, bounds: dict, phys: dict
-    ) -> tuple[list[str], int]:
-        """(candidate files of dir ``d``, n skipped): a file survives
-        unless SOME bounded column's footer range provably misses its
-        [lo, hi] — or the file is all-NULL in that column (a bound
-        conjunct is never NULL-satisfied). Any per-file doubt
-        (missing/foreign-typed stats, incomparable types) keeps the
-        file: stats pruning only ever narrows the SCAN, the predicate
-        itself re-applies to every surviving row."""
-        stats = self._dir_file_stats(d)
-        # timestamp stat values are NAIVE UTC; bounds parse from
-        # session-tz-rendered literals, so the comparison is only
-        # provable under a UTC session — otherwise ts columns decline
-        tz_utc = self.spark.conf.get("spark.sql.session.timeZone") in (
-            "UTC", "Etc/UTC", "GMT", "Z",
-        )
-        cand: list[str] = []
-        skipped = 0
-        for rel, ent in stats["files"].items():
-            keep = True
-            for col, (lo, hi) in bounds.items():
-                ce = ent["cols"].get(phys.get(col, col))
-                if ce is None:
-                    continue
-                if ce["kind"] == "ts" and not tz_utc:
-                    continue
-                try:
-                    if ent["rows"] > 0 and ce["nulls"] >= ent["rows"]:
-                        keep = False
-                        break
-                    mn = self._stats_decode(ce["min"], ce["kind"])
-                    mx = self._stats_decode(ce["max"], ce["kind"])
-                    if lo is not None and mx < lo:
-                        keep = False
-                        break
-                    if hi is not None and mn > hi:
-                        keep = False
-                        break
-                except (TypeError, ValueError):
-                    continue
-            if keep:
-                cand.append(os.path.join(d, rel))
-            else:
-                skipped += 1
-        return cand, skipped
-
     # ------------------------------------------------------- pruned COW DML
 
     def _dirs_matching(self, meta: dict, condition) -> set[str]:
-        """Exact file-pruning pass for predicate-shaped DML (UPDATE /
-        DELETE ... WHERE): ONE column-pruned, filter-pushed scan over the
-        raw data dirs returns the DISTINCT FILES containing a matching
-        row (`input_file_name()` — metadata-sized result, never rows),
-        mapped back to their data dirs. At 100 TB this is the pass
-        Iceberg does with manifest column stats; without per-column
-        manifests the scan itself is the stats source, but it reads only
-        the predicate's columns (column pruning) with the predicate
-        pushed to parquet (row-group skip), shuffles nothing, and
-        collects O(|files|). Raw dirs (not the MOR-composed read) keep
-        the pass cheap; a MOR-deleted row matching the predicate costs
-        at most a spurious rewrite, never a wrong answer."""
-        from urllib.parse import unquote, urlparse
+        """The data dirs holding a row that matches a predicate DML's
+        ``condition``, found in O(candidate files) — Iceberg's manifest
+        shape. The predicate's top-level conjuncts become raw bounds
+        (the SQL prune parser over its Catalyst SQL, ANALYZED over an
+        empty frame in the committed schema: driver-only, no job),
+        `plan_files` narrows the scan, and `_dirs_hit` runs it exactly
+        over raw dirs — a MOR-deleted match costs at most a spurious
+        rewrite, never a wrong answer."""
+        from .sqlprune import bounds_from_condition
 
-        # Stats pre-pass (r15, VERDICT ask #3): extract inclusive
-        # raw-value bounds from the predicate's top-level conjuncts
-        # (same parser as the SQL prune path) and consult the per-file
-        # footer-stat manifests — files whose ranges provably miss the
-        # bounds never enter the scan, so the file-finding pass costs
-        # O(candidate files) instead of O(table), Iceberg's manifest
-        # shape. The scan over survivors stays the exactness source.
-        scan_targets: list[str] = list(meta["dirs"])
-        skipped = 0
         bounds: dict = {}
-        if os.environ.get("SPARK_GRAFT_DISABLE_FILE_STATS"):
-            bounds = None  # kill switch: scaling-study comparator
+        why = None
         try:
-            if bounds is None:
-                raise RuntimeError("file stats disabled")
-            from .sqlprune import bounds_from_condition
-
-            # Recover the predicate's Catalyst SQL by ANALYZING it over
-            # an empty frame in the committed schema (driver-only, no
-            # job; the ANALYZED plan is used because the optimizer
-            # would fold a filter over an empty relation away) — the
-            # same trusted `condition().sql()` form the SQL prune
-            # parser consumes.
-            probe = self.spark.createDataFrame(
-                [], T.StructType.fromJson(json.loads(meta["schema"]))
-            ).filter(condition)
-            jplan = probe._jdf.queryExecution().analyzed()
+            jplan = (
+                self.spark.createDataFrame(
+                    [], T.StructType.fromJson(json.loads(meta["schema"]))
+                )
+                .filter(condition)
+                ._jdf.queryExecution()
+                .analyzed()
+            )
             if jplan.getClass().getSimpleName() == "Filter":
                 bounds = bounds_from_condition(
                     jplan.condition().sql(), allow_float=True
                 )
-        except Exception:
-            bounds = {}
-        if bounds:
-            phys = self._physical_map(meta["schema"])
-            cand: list[str] = []
-            for d in meta["dirs"]:
-                try:
-                    files, sk = self._stats_files_matching(d, bounds, phys)
-                except Exception:
-                    files, sk = self._walk_parquet(d), 0
-                cand.extend(files)
-                skipped += sk
-            scan_targets = cand
+        except _SPARK_ERRORS as ex:
+            why = f"predicate not analyzable into bounds: {ex!r}"
+        paths, decision = self.plan_files(meta, bounds)
+        if why:
+            decision.decline(why)
         # class-level so the audit survives across SnapshotTable
         # instances (execute_dml constructs its own): registered
         # stories and tests read the audit of the LAST predicate-DML
         # file-finding pass per table name
         SnapshotTable._DML_STATS_AUDITS[self.name] = {
             "bounded_columns": sorted(bounds),
-            "files_scanned": len(scan_targets) if bounds else -1,
-            "files_skipped_by_stats": skipped,
+            "files_scanned": decision.files.selected if bounds else -1,
+            "files_skipped_by_stats": decision.files.pruned,
+            "decision": decision,
         }
-        if not scan_targets:
+        return self._dirs_hit(meta, paths, condition)
+
+    def _dirs_hit(self, meta: dict, paths: list[str], condition) -> set[str]:
+        """The data dirs of ``meta`` owning a file under ``paths`` with a
+        row matching ``condition``: ONE filter-pushed scan collects the
+        DISTINCT `input_file_name()`s (metadata-sized, never rows), each
+        climbed up its dirname chain to its owning dir — O(|files| ×
+        partition depth), not O(|files| × |dirs|)."""
+        from urllib.parse import unquote, urlparse
+
+        if not paths:
             return set()
-        matched_files = set()
+        owners = {d.rstrip("/"): d for d in meta["dirs"]}
+        hit = set()
         for r in (
-            self._read_dirs(scan_targets, schema_json=meta["schema"])
+            self._read_dirs(paths, schema_json=meta["schema"])
             .filter(condition)
             .select(F.input_file_name().alias("f"))
             .distinct()
@@ -3337,21 +3330,10 @@ class SnapshotTable:
         ):
             # input_file_name returns a URI (file:///...); compare paths
             parsed = urlparse(r[0])
-            matched_files.add(unquote(parsed.path) if parsed.scheme else r[0])
-        # Files live directly under the dir or under hive _p_*/ subdirs:
-        # climb each file's dirname chain to its owning data dir via one
-        # set lookup per level. The former per-dir prefix scan was
-        # O(|files| × |dirs|) in the driver — metadata-sized here, but a
-        # 10⁵-file × 10³-dir table made it an O(10⁸) Python loop (r10
-        # VERDICT nit); this is O(|files| × partition-depth).
-        dirs_by_path = {d.rstrip("/"): d for d in meta["dirs"]}
-        hit = set()
-        for f in matched_files:
-            p = os.path.dirname(f)
+            p = os.path.dirname(unquote(parsed.path) if parsed.scheme else r[0])
             while p and p != "/":
-                owner = dirs_by_path.get(p)
-                if owner is not None:
-                    hit.add(owner)
+                if p in owners:
+                    hit.add(owners[p])
                     break
                 p = os.path.dirname(p)
         return hit
@@ -3943,6 +3925,8 @@ class SnapshotTable:
         (`applies_to`, the sequence-number rule), so later appends of the
         same key survive. Data dirs sharing the same applicable delete
         set are read together."""
+        if not dirs:
+            return self._read_dirs([], merge_schema, meta["schema"])
         deletes = meta.get("delete_dirs", [])
         defaults = self._schema_defaults(meta["schema"])
 
@@ -4279,387 +4263,224 @@ class SnapshotTable:
         return row["v"]
 
     def read_pruned(self, col: str, value, version: int | None = None) -> DataFrame:
-        """Metadata-driven partition pruning across evolving specs
-        (Iceberg's model: the catalog chooses files). For each data dir:
-        if its spec leads with `col` — or with a TRANSFORM over `col`
-        (hidden partitioning: filtering ts prunes days(ts) dirs) — only
-        the matching hive subdir is listed; otherwise the whole dir is
-        read and the residual filter applies. The result always equals
-        read().filter(col == value) — pruning is a file-listing
-        optimization, never a semantics change."""
+        """Exactly read().filter(col == value), scanning only what
+        `plan_files` keeps. Dirs led by a TRANSFORM over ``col`` (hidden
+        partitioning: filtering ts prunes days(ts) dirs) prune on the
+        value the writer's own JVM expression maps ``value`` to."""
         cur = version if version is not None else self.current_version()
         meta = self._read_meta(cur)
-        chosen: list[str] = []
-        tval_cache: dict[str, object] = {}
-        tz_ok = meta.get("tz") in (
-            None,
-            self.spark.conf.get("spark.sql.session.timeZone"),
-        )
-        for d, spec in zip(meta["dirs"], self._dir_specs(meta)):
-            if spec and transform_source(spec[0]) == col:
-                e = spec[0]
-                if parse_transform(e)[0] in _TIME_TRANSFORM_FMT and not tz_ok:
-                    # dir values were rendered under a different session
-                    # timezone — probing would silently drop rows; read
-                    # the dir whole behind the residual filter instead
-                    chosen.append(d)
-                    continue
-                if e not in tval_cache:
-                    tval_cache[e] = hive_escape_value(
-                        self._prune_value(e, value, meta["schema"])
-                    )
-                if tval_cache[e] is None:
-                    # str(value) is not provably the writer's rendering
-                    # (bool/float/decimal): full-scan behind the residual
-                    chosen.append(d)
-                    continue
-                sub = os.path.join(
-                    d, f"_p_{transform_slug(e)}={tval_cache[e]}"
-                )
-                if os.path.isdir(sub):
-                    chosen.append(sub)
-            else:
-                chosen.append(d)
-        if not chosen:
-            return self.read(version).filter(F.col(col) == F.lit(value)).limit(0)
-        # the MOR-composed read: live equality/position deletes and
-        # initial-defaults apply to the pruned subdir listing exactly as
-        # they do to a full read (r15 — previously this path read raw
-        # dirs, which would have resurrected MOR-deleted rows)
-        part = self._read_dirs_mor(meta, chosen)
-        return part.filter(F.col(col) == F.lit(value))
+        bounds = {col: (value, value)}
+        for spec in self._dir_specs(meta):
+            if spec and spec[0] not in bounds and transform_source(spec[0]) == col:
+                tv = self._prune_value(spec[0], value, meta["schema"])
+                bounds[spec[0]] = (tv, tv)
+        paths, _ = self.plan_files(meta, bounds)
+        return self._read_dirs_mor(meta, paths).filter(F.col(col) == F.lit(value))
 
     def read_pruned_transform(
         self, entry: str, tvalue, version: int | None = None
     ) -> tuple[DataFrame, dict]:
-        """Hidden-partitioning pruned read: every row whose TRANSFORM
-        value equals ``tvalue`` (e.g. entry='days(ts)',
-        tvalue='2024-01-03' reads one day). Dirs whose spec leads with
-        the entry contribute only the matching hive subdir — a missing
-        subdir prunes the whole dir from the listing; dirs written under
-        other specs are read whole behind the residual filter. The
-        residual transform predicate applies to EVERY row, so the result
-        is exactly read().filter(transform(col) == tvalue) regardless of
-        layout. Returns (df, audit) — the audit pins dirs_pruned /
-        subdirs_selected / dirs_full_scan so a registered story can
-        hash-check that pruning actually happened."""
-        entry = canonical_transform(entry)
-        cur = version if version is not None else self.current_version()
-        meta = self._read_meta(cur)
-        chosen: list[str] = []
-        audit = {"dirs_pruned": 0, "subdirs_selected": 0, "dirs_full_scan": 0}
-        tz_ok = meta.get("tz") in (
-            None,
-            self.spark.conf.get("spark.sql.session.timeZone"),
-        )
-        is_time = parse_transform(entry)[0] in _TIME_TRANSFORM_FMT
-        esc = hive_escape_value(tvalue)
-        for d, spec in zip(meta["dirs"], self._dir_specs(meta)):
-            if spec and spec[0] == entry and esc is not None and (
-                tz_ok or not is_time
-            ):
-                sub = os.path.join(d, f"_p_{transform_slug(entry)}={esc}")
-                if os.path.isdir(sub):
-                    chosen.append(sub)
-                    audit["subdirs_selected"] += 1
-                else:
-                    audit["dirs_pruned"] += 1
-            else:
-                chosen.append(d)
-                audit["dirs_full_scan"] += 1
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        src = transform_source(entry)
-        residual = (
-            transform_expr_on(F.col(src), schema[src].dataType, entry)
-            == F.lit(tvalue)
-        )
-        audit["mor_deletes_applied"] = len(meta.get("delete_dirs", []))
-        if not chosen:
-            return self.read(version).filter(residual).limit(0), audit
-        # MOR composition (r15): chosen subdirs flow through the same
-        # merge-on-read group machinery as a full read — a subdir
-        # inherits its parent data dir's applicable delete set — so
-        # live-delete tables prune too instead of raising
-        df = self._read_dirs_mor(meta, chosen)
-        return df.filter(residual), audit
+        """Hidden-partitioning point read: exactly read().filter(
+        transform(col) == tvalue) (entry='days(ts)', tvalue='2024-01-03'
+        reads one day). Returns (df, audit): dirs_pruned /
+        subdirs_selected / dirs_full_scan / mor_deletes_applied let a
+        registered story hash-check that pruning actually happened."""
+        df, audit = self.read_pruned_transform_range(entry, tvalue, tvalue, version)
+        del audit["subdirs_pruned"]
+        return df, audit
 
     def read_pruned_transform_range(
-        self,
-        entry: str,
-        lo,
-        hi,
-        version: int | None = None,
+        self, entry: str, lo, hi, version: int | None = None
     ) -> tuple[DataFrame, dict]:
-        """Hidden-partitioning pruned RANGE read: every row whose
-        transform value falls in [lo, hi], both ends inclusive, either
-        end None for an open range — `ts BETWEEN a AND b` over a
-        days(ts) table is the dominant event-table read shape this
-        serves (Iceberg: a manifest range scan over partition bounds).
-
-        Dirs whose spec leads with ``entry`` list their hive subdirs
-        once (driver-side, metadata-sized) and keep only those whose
-        DECODED value — the writer's hive path escaping inverted — lies
-        in the range; dirs under other specs read whole. The residual
-        transform predicate applies to every row, so the result is
-        exactly read().filter(lo <= transform(col) <= hi) regardless of
-        layout. The __HIVE_DEFAULT_PARTITION__ subdir (NULL transform
-        value) is always pruned: NULL fails any range residual.
-        Composes with merge-on-read like the point read. Time-transform
-        values compare lexicographically (the date_format renderings
-        are fixed-width per transform, so string order IS chronological
-        order); integer truncate values compare numerically; bucket()
-        has no ordering semantics and is refused."""
+        """Hidden-partitioning RANGE read: exactly read().filter(lo <=
+        transform(col) <= hi), both ends inclusive, either end None for
+        an open range — `ts BETWEEN a AND b` over a days(ts) table is
+        the dominant event-table read shape (Iceberg: a manifest range
+        scan over partition bounds) — scanning only what `plan_files`
+        keeps. Time-transform values compare as fixed-width strings
+        (chronological order), integer truncate values numerically;
+        bucket() has no ordering, so it serves point reads only.
+        Returns (df, audit) like `read_pruned_transform`, plus
+        subdirs_pruned."""
         entry = canonical_transform(entry)
-        kind, _n, src = parse_transform(entry)
-        if kind == "bucket":
+        if lo is None and hi is None:
+            raise ValueError("range pruning needs at least one bound")
+        if parse_transform(entry)[0] == "bucket" and lo != hi:
             raise ValueError(
                 "range pruning over bucket() has no ordering semantics"
             )
-        if lo is None and hi is None:
-            raise ValueError("range pruning needs at least one bound")
         cur = version if version is not None else self.current_version()
         meta = self._read_meta(cur)
-        tz_ok = meta.get("tz") in (
-            None,
-            self.spark.conf.get("spark.sql.session.timeZone"),
-        )
-        is_time = kind in _TIME_TRANSFORM_FMT
-        as_int = isinstance(lo if lo is not None else hi, int) and not isinstance(
-            lo if lo is not None else hi, bool
-        )
-
-        def _in_range(decoded: str) -> bool:
-            if decoded == HIVE_DEFAULT_PARTITION:
-                return False
-            if as_int:
-                try:
-                    v: object = int(decoded)
-                except ValueError:
-                    return False
-            else:
-                v = decoded
-            return (lo is None or v >= lo) and (hi is None or v <= hi)
-
-        slug = transform_slug(entry)
-        chosen: list[str] = []
-        audit = {
-            "dirs_pruned": 0,
-            "subdirs_selected": 0,
-            "subdirs_pruned": 0,
-            "dirs_full_scan": 0,
-        }
-        for d, spec in zip(meta["dirs"], self._dir_specs(meta)):
-            if spec and spec[0] == entry and (tz_ok or not is_time):
-                subs = self._subdir_values(d, slug)
-                picked = [p for p, val in subs if _in_range(val)]
-                chosen.extend(sorted(picked))
-                audit["subdirs_selected"] += len(picked)
-                audit["subdirs_pruned"] += len(subs) - len(picked)
-                if not picked:
-                    audit["dirs_pruned"] += 1
-            else:
-                chosen.append(d)
-                audit["dirs_full_scan"] += 1
-        audit["mor_deletes_applied"] = len(meta.get("delete_dirs", []))
+        paths, decision = self.plan_files(meta, {entry: (lo, hi)})
+        src = transform_source(entry)
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         texpr = transform_expr_on(F.col(src), schema[src].dataType, entry)
-        residual = F.lit(True)
-        if lo is not None:
-            residual = residual & (texpr >= F.lit(lo))
-        if hi is not None:
-            residual = residual & (texpr <= F.lit(hi))
-        if not chosen:
-            return self.read(version).filter(residual).limit(0), audit
-        df = self._read_dirs_mor(meta, chosen)
-        return df.filter(residual), audit
+        if lo == hi:
+            residual = texpr == F.lit(lo)
+        else:
+            residual = F.lit(True)
+            if lo is not None:
+                residual = residual & (texpr >= F.lit(lo))
+            if hi is not None:
+                residual = residual & (texpr <= F.lit(hi))
+        audit = decision.audit(meta)
+        del audit["files_skipped_by_stats"]
+        return self._read_dirs_mor(meta, paths).filter(residual), audit
 
-    # python-side strftime renderings of the time transforms — same
-    # output as the writer's date_format under a MATCHING session tz
-    # (the tz_ok guard refuses the probe otherwise), letting the SQL
-    # prune path convert timestamp bounds without a Spark job per bound
-    _TIME_STRFTIME = {
-        "years": "%Y",
-        "months": "%Y-%m",
-        "days": "%Y-%m-%d",
-        "hours": "%Y-%m-%d-%H",
-    }
+    def plan_files(self, meta: dict, bounds: dict) -> tuple[list[str], Decision]:
+        """The one file planner behind every pruned read and predicate
+        DML: the paths of snapshot ``meta`` that may hold a row inside
+        ``bounds``, and the Decision tallying each level.
 
-    def read_pruned_for_bounds(
-        self, bounds: dict, version: int | None = None
-    ) -> tuple[DataFrame, dict]:
-        """The SQL front-end's pruned read (r15): ``bounds`` maps a
-        partition SOURCE column to an inclusive raw-value range
-        ``(lo, hi)`` (python datetime/date/str/int; None = open end)
-        extracted from a statement's top-level WHERE conjuncts. Returns
-        ``(df, audit)`` where df is a SUPERSET of
-        ``read().filter(<conjuncts>)`` — the statement re-applies its
-        own WHERE over the temp view, so the query's filter IS the
-        residual and the final result is provably identical to running
-        against the full read.
-
-        Every transform except bucket() is MONOTONE (prefix/floor/
-        date_format truncations), so a raw-value range maps through the
-        transform to a transform-value range [T(lo), T(hi)]; bucket()
-        participates only for point bounds (lo == hi), mapped through
-        the writer's own xxhash64 probe. Subdir values are compared
-        DECODED (hive unescaping inverted), the
-        __HIVE_DEFAULT_PARTITION__ subdir always prunes (a NULL source
-        fails every bound conjunct under SQL semantics), and a
-        mismatched session timezone or unconvertible bound degrades
-        that dir to a full scan — pruning can only ever widen, never
-        drop, the row set. Composes with merge-on-read."""
-        cur = version if version is not None else self.current_version()
-        meta = self._read_meta(cur)
-        tz_ok = meta.get("tz") in (
-            None,
-            self.spark.conf.get("spark.sql.session.timeZone"),
-        )
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        audit = {
-            "dirs_pruned": 0,
-            "subdirs_selected": 0,
-            "subdirs_pruned": 0,
-            "dirs_full_scan": 0,
-        }
-        _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        tcache: dict[str, tuple | None] = {}
-
-        def _tbounds(e: str) -> tuple | None:
-            """entry -> inclusive (tlo, thi) in TRANSFORM-value space,
-            or None when the bound cannot be provably converted (that
-            dir full-scans)."""
-            if e in tcache:
-                return tcache[e]
-            kind, n, src = parse_transform(e)
-            lo, hi = bounds[src]
-            dtype = schema[src].dataType if src in schema.fieldNames() else None
-            res: tuple | None = None
-            try:
-                if kind in _TIME_TRANSFORM_FMT:
-                    if tz_ok and all(
-                        v is None or isinstance(v, (datetime.datetime, datetime.date))
-                        for v in (lo, hi)
-                    ):
-                        fmt = self._TIME_STRFTIME[kind]
-                        res = (
-                            lo.strftime(fmt) if lo is not None else None,
-                            hi.strftime(fmt) if hi is not None else None,
-                        )
-                elif kind == "identity":
-                    if isinstance(dtype, T.StringType) and all(
-                        v is None or isinstance(v, str) for v in (lo, hi)
-                    ):
-                        res = (lo, hi)
-                    elif isinstance(dtype, _INT_TYPES) and all(
-                        v is None
-                        or (isinstance(v, int) and not isinstance(v, bool))
-                        for v in (lo, hi)
-                    ):
-                        res = (lo, hi)
-                elif kind == "truncate":
-                    if isinstance(dtype, T.StringType) and all(
-                        v is None or isinstance(v, str) for v in (lo, hi)
-                    ):
-                        res = (
-                            lo[:n] if lo is not None else None,
-                            hi[:n] if hi is not None else None,
-                        )
-                    elif isinstance(dtype, _INT_TYPES) and all(
-                        v is None
-                        or (isinstance(v, int) and not isinstance(v, bool))
-                        for v in (lo, hi)
-                    ):
-                        res = (
-                            lo - lo % n if lo is not None else None,
-                            hi - hi % n if hi is not None else None,
-                        )
-                elif kind == "bucket":
-                    if lo is not None and lo == hi:
-                        b = self._prune_value(e, lo, meta["schema"])
-                        res = (int(b), int(b))
-            except Exception:
-                res = None
-            if res == (None, None):
-                res = None
-            tcache[e] = res
-            return res
-
+        ``bounds`` maps a column to an inclusive raw-value range
+        ``(lo, hi)`` (None = open end), or a transform entry such as
+        ``days(ts)`` to a range of its partition values. (1) Each dir's
+        lead spec entry gets a transform-value range (`_transform_range`);
+        (2) such dirs keep only the hive subdirs whose DECODED value is
+        in range, other dirs read whole; (3) files whose footer stats
+        provably miss a column bound drop out — paths are files only
+        then. Anything unprovable keeps its input, so the caller's own
+        filter stays the residual."""
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        decision = Decision()
+        ranges: dict = {}
         chosen: list[str] = []
         for d, spec in zip(meta["dirs"], self._dir_specs(meta)):
             e = spec[0] if spec else None
-            if e is None or transform_source(e) not in bounds:
+            if e is not None and e not in ranges:
+                ranges[e] = self._transform_range(e, bounds, meta, tz, decision.dirs)
+            if ranges.get(e) is None:
                 chosen.append(d)
-                audit["dirs_full_scan"] += 1
                 continue
-            tb = _tbounds(e)
-            if tb is None:
-                chosen.append(d)
-                audit["dirs_full_scan"] += 1
-                continue
-            tlo, thi = tb
+            tlo, thi = ranges[e]
             as_int = isinstance(tlo if tlo is not None else thi, int)
+            # Spark's writer files '' with NULL under the default
+            # partition: a string range reaching '' keeps that subdir
+            kind = parse_transform(e)[0]
+            keep_default = not (as_int or tlo) and kind in ("identity", "truncate")
+            pre = f"_p_{transform_slug(e)}="
+            try:
+                names = sorted(os.listdir(d))
+            except FileNotFoundError:
+                names = []
             picked = []
-            for p, val in self._subdir_values(d, transform_slug(e)):
-                if val == HIVE_DEFAULT_PARTITION:
-                    audit["subdirs_pruned"] += 1
+            for nm in names:
+                p = os.path.join(d, nm)
+                if not (nm.startswith(pre) and os.path.isdir(p)):
                     continue
-                v: object = val
-                if as_int:
-                    try:
-                        v = int(val)
-                    except ValueError:
-                        audit["subdirs_pruned"] += 1
-                        continue
-                if (tlo is None or v >= tlo) and (thi is None or v <= thi):
-                    picked.append(p)
+                v = hive_unescape_value(nm[len(pre):])
+                if v == HIVE_DEFAULT_PARTITION:
+                    keep = keep_default
                 else:
-                    audit["subdirs_pruned"] += 1
-            chosen.extend(sorted(picked))
-            audit["subdirs_selected"] += len(picked)
-            if not picked:
-                audit["dirs_pruned"] += 1
-        # File-stat refinement (r15): within the surviving dirs/subdirs,
-        # consult the footer-stat sidecars for EVERY bounded column —
-        # including non-partition ones the transforms can't see — and
-        # drop files whose ranges provably miss. A refined file list
-        # flows through the same MOR group machinery (a file inherits
-        # its dir's applicable deletes/defaults via _dir_within).
-        files_skipped = 0
-        if chosen:
-            phys = self._physical_map(meta["schema"])
-            refined: list[str] = []
-            for d in chosen:
-                try:
-                    files, sk = self._stats_files_matching(d, bounds, phys)
-                except Exception:
-                    refined.append(d)
-                    continue
-                refined.extend(files)
-                files_skipped += sk
-            if files_skipped:
-                chosen = refined
-        audit["files_skipped_by_stats"] = files_skipped
-        audit["mor_deletes_applied"] = len(meta.get("delete_dirs", []))
-        if not chosen:
-            return self.read(version).limit(0), audit
-        return self._read_dirs_mor(meta, chosen), audit
+                    try:
+                        v = int(v) if as_int else v
+                        keep = (tlo is None or v >= tlo) and (thi is None or v <= thi)
+                    except ValueError:
+                        keep = False
+                if decision.subdirs.count(keep):
+                    picked.append(p)
+            if decision.dirs.count(bool(picked)):
+                chosen.extend(picked)
+        phys = self._physical_map(meta["schema"])
+        raw = {c: b for c, b in bounds.items() if c in phys}
+        if not (raw and chosen):
+            return chosen, decision
+        files = decision.files
+        refined: list[str] = []
+        for p in chosen:
+            try:
+                stats = self._dir_file_stats(p)["files"]
+            except (OSError, ValueError) as ex:  # ValueError: bad footer
+                files.decline(f"footer stats unreadable in {p}: {ex!r}")
+                n = len(self._walk_parquet(p))
+                files.considered += n
+                files.selected += n
+                refined.append(p)
+                continue
+            for rel, ent in stats.items():
+                keep = True
+                for col, (lo, hi) in raw.items():
+                    ce = ent["cols"].get(phys[col])
+                    if ce is None:
+                        continue
+                    if ce["kind"] == "ts" and tz not in ("UTC", "Etc/UTC", "GMT", "Z"):
+                        # ts stats are NAIVE UTC, bounds session-rendered
+                        files.decline(f"timestamp stats need a UTC session, not {tz}")
+                        continue
+                    if ent["rows"] > 0 and ce["nulls"] >= ent["rows"]:
+                        keep = False  # no bound conjunct is NULL-satisfied
+                        break
+                    try:
+                        mn = self._stats_decode(ce["min"], ce["kind"])
+                        mx = self._stats_decode(ce["max"], ce["kind"])
+                        keep = not (
+                            (lo is not None and mx < lo) or (hi is not None and mn > hi)
+                        )
+                    except (TypeError, ValueError):
+                        continue  # incomparable stats keep the file
+                    if not keep:
+                        break
+                if files.count(keep):
+                    refined.append(os.path.join(p, rel))
+        return (refined if files.pruned else chosen), decision
 
-    def _subdir_values(self, d: str, slug: str) -> list[tuple[str, str]]:
-        """(subdir path, hive-DECODED partition value) for each
-        `_p_<slug>=*` hive subdir of data dir ``d`` — one driver-side
-        listdir, metadata-sized (subdir count = distinct partition
-        values in the dir, never row- or file-proportional)."""
-        pre = f"_p_{slug}="
-        out = []
-        try:
-            names = os.listdir(d)
-        except FileNotFoundError:
-            return out
-        for nm in names:
-            full = os.path.join(d, nm)
-            if nm.startswith(pre) and os.path.isdir(full):
-                out.append((full, hive_unescape_value(nm[len(pre):])))
-        return out
+    def _transform_range(
+        self, e: str, bounds: dict, meta: dict, tz: str, level: Level
+    ) -> tuple | None:
+        """Inclusive (lo, hi) range of entry ``e``'s partition values
+        (str or int ends, None = open) that every row inside ``bounds``
+        lies in, or None when ``bounds`` leaves ``e`` open or the range
+        is not provable — the reason then goes to ``level``. Given
+        transform values pass through; raw bounds map through the
+        transform, which is MONOTONE for all but bucket(), whose point
+        bounds go through the writer's own xxhash64 probe."""
+        kind, n, src = parse_transform(e)
+        given = e in bounds and kind != "identity"
+        lo, hi = bounds[e] if given else bounds.get(src, (None, None))
+        ends = [v for v in (lo, hi) if v is not None]
+        if not ends:
+            return None
+        if kind in _TIME_TRANSFORM_FMT and meta.get("tz") not in (None, tz):
+            level.decline(
+                f"{e} values were rendered in {meta['tz']}, the session is in {tz}"
+            )
+            return None
+
+        def all_of(typ) -> bool:
+            return all(isinstance(v, typ) and not isinstance(v, bool) for v in ends)
+
+        def each(f) -> tuple:
+            return tuple(None if v is None else f(v) for v in (lo, hi))
+
+        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        dtype = schema[src].dataType if src in schema.fieldNames() else None
+        res = None
+        if given:
+            res = (lo, hi) if all_of(str) or all_of(int) else None
+        elif kind in _TIME_TRANSFORM_FMT:
+            if all_of(datetime.date):  # datetime is a date subclass
+                # the writer's date_format pattern as strftime: the same
+                # rendering under the matching session timezone, no job
+                fmt = _TIME_TRANSFORM_FMT[kind]
+                pairs = ("yyyy", "%Y"), ("MM", "%m"), ("dd", "%d"), ("HH", "%H")
+                for java, py in pairs:
+                    fmt = fmt.replace(java, py)
+                res = each(lambda v: v.strftime(fmt))
+        elif kind == "bucket":
+            if lo == hi:
+                try:
+                    b = int(self._prune_value(e, lo, meta["schema"]))
+                except _SPARK_ERRORS + (TypeError, ValueError) as ex:
+                    level.decline(f"{e} probe of {lo!r} failed: {ex!r}")
+                    return None
+                res = (b, b)
+        elif isinstance(dtype, T.StringType) and all_of(str):
+            res = (lo, hi) if kind == "identity" else each(lambda v: v[:n])
+        elif isinstance(dtype, _INT_TYPES) and all_of(int):
+            res = (lo, hi) if kind == "identity" else each(lambda v: v - v % n)
+        if res is None:
+            level.decline(f"bound {(lo, hi)!r} on {src} does not map to {e} values")
+        return res
 
     def changes(
         self,

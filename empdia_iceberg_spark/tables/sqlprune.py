@@ -20,10 +20,11 @@ re-parsing user SQL:
    bounds per column. Ignoring a conjunct is always SOUND: bounds
    from a SUBSET of conjuncts admit a SUPERSET of the filter's rows.
 3. Per table, bounds are unioned across scan occurrences (a self-join
-   needs rows for BOTH sides) and handed to
-   `SnapshotTable.read_pruned_for_bounds`, which maps them through
-   the monotone partition transforms and re-registers the PRUNED
-   frame behind the same temp view name.
+   needs rows for BOTH sides) and handed to `SnapshotTable.plan_files`,
+   which maps them through the monotone partition transforms onto
+   dirs and hive subdirs, drops files by footer stats, and returns the
+   paths with a `Decision`; the PRUNED read of those paths is
+   re-registered behind the same temp view name.
 4. The statement re-analyzes against the pruned views — its own WHERE
    is the residual, so the result is provably identical to the full
    read — and the full views are restored immediately after analysis
@@ -45,13 +46,12 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
-import json
-
 from .manager import SnapshotTable, _dir_within
 
 # audits of the last try_sql_prune call that re-registered anything:
-# {table_name: audit dict} — read by registered stories to hash-pin
-# that pruning actually engaged on the SQL path
+# {table_name: audit dict, plus the table's Decision under "decision"}
+# — read by registered stories to hash-pin that pruning actually
+# engaged on the SQL path
 LAST_SQL_PRUNE_AUDITS: dict = {}
 
 
@@ -76,15 +76,15 @@ def _strip_outer_parens(s: str) -> str:
     return s
 
 
-def _top_and_split(s: str) -> list[str]:
-    """Split on ' AND ' at paren depth 0, outside string literals."""
+def _top_split(s: str, sep: str) -> list[str]:
+    """Split on ``sep`` at paren depth 0, outside string literals."""
     parts, depth, in_str, cur, i = [], 0, False, [], 0
     while i < len(s):
         c = s[i]
         if in_str:
             cur.append(c)
             if c == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":
+                if s[i + 1 : i + 2] == "'":
                     cur.append("'")
                     i += 1
                 else:
@@ -92,16 +92,13 @@ def _top_and_split(s: str) -> list[str]:
         elif c == "'":
             in_str = True
             cur.append(c)
-        elif c == "(":
-            depth += 1
+        elif c in "()":
+            depth += 1 if c == "(" else -1
             cur.append(c)
-        elif c == ")":
-            depth -= 1
-            cur.append(c)
-        elif depth == 0 and s[i : i + 5] == " AND ":
+        elif depth == 0 and s.startswith(sep, i):
             parts.append("".join(cur))
             cur = []
-            i += 4
+            i += len(sep) - 1
         else:
             cur.append(c)
         i += 1
@@ -113,7 +110,7 @@ def conjuncts(cond_sql: str) -> list[str]:
     """Recursively flatten a Catalyst condition-SQL string into its
     top-level AND conjuncts (each stripped of redundant parens)."""
     s = _strip_outer_parens(cond_sql)
-    parts = _top_and_split(s)
+    parts = _top_split(s, " AND ")
     if len(parts) == 1:
         return [s]
     return [c for p in parts for c in conjuncts(p)]
@@ -206,7 +203,7 @@ def parse_conjunct(
     mi = _IN.match(conj)
     if mi:
         vals, fams = [], set()
-        for item in _top_comma_split(mi.group("items")):
+        for item in _top_split(mi.group("items"), ","):
             lm = _LIT_ONLY.match(item.strip())
             lit = _parse_literal(lm, allow_float) if lm else None
             if lit is None:
@@ -251,37 +248,6 @@ def parse_conjunct(
         elif kind == "int":
             val = val - 1
     return [(col, "hi", val)]
-
-
-def _top_comma_split(s: str) -> list[str]:
-    parts, depth, in_str, cur, i = [], 0, False, [], 0
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            cur.append(c)
-            if c == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":
-                    cur.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-            cur.append(c)
-        elif c == "(":
-            depth += 1
-            cur.append(c)
-        elif c == ")":
-            depth -= 1
-            cur.append(c)
-        elif depth == 0 and c == ",":
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    parts.append("".join(cur))
-    return parts
 
 
 def bounds_from_condition(cond_sql: str, allow_float: bool = False) -> dict:
@@ -358,13 +324,10 @@ def _relation_table(jnode, table_dirs: dict) -> str | None:
     """LogicalRelation -> owning snapshot-table name, matched by every
     rootPath lying within the table's CURRENT data dirs (delete-file
     scans live in d*/p* dirs outside meta['dirs'] and never match)."""
-    try:
-        rel = jnode.relation()
-        if rel.getClass().getSimpleName() != "HadoopFsRelation":
-            return None
-        paths = [str(p) for p in _seq(rel.location().rootPaths())]
-    except Exception:
+    rel = jnode.relation()
+    if rel.getClass().getSimpleName() != "HadoopFsRelation":
         return None
+    paths = [str(p) for p in _seq(rel.location().rootPaths())]
     if not paths:
         return None
     for name, dirs in table_dirs.items():
@@ -377,37 +340,28 @@ def _relation_table(jnode, table_dirs: dict) -> str | None:
     return None
 
 
-def _project_is_alias_free(jnode) -> bool:
-    try:
-        return all(
-            e.getClass().getSimpleName() == "AttributeReference"
-            for e in _seq(jnode.projectList())
-        )
-    except Exception:
-        return False
-
-
 def collect_scan_occurrences(df: DataFrame, table_dirs: dict) -> dict:
     """Optimized-plan walk: {table: [condition-SQL or None, ...]} —
     one entry per parquet-scan occurrence of the table, carrying the
     AND of Filter conditions sitting directly above it (only Filter
     and alias-free Project nodes may stand between; anything else
     resets the context, so a condition is never attributed across an
-    aggregate, join, or renaming projection)."""
+    aggregate, join, or renaming projection). A py4j failure anywhere
+    in the walk raises: an occurrence the walk cannot attribute could
+    belong to any table, so the caller declines the whole statement."""
     out: dict[str, list] = {}
 
     def walk(node, conds: list):
         cls = node.getClass().getSimpleName()
         if cls == "Filter":
-            try:
-                c = node.condition().sql()
-            except Exception:
-                c = None
-            walk(_seq(node.children())[0], conds + [c] if c else [None])
+            walk(_seq(node.children())[0], conds + [node.condition().sql()])
             return
         if cls == "Project":
-            nxt = conds if _project_is_alias_free(node) else []
-            walk(_seq(node.children())[0], nxt)
+            alias_free = all(
+                e.getClass().getSimpleName() == "AttributeReference"
+                for e in _seq(node.projectList())
+            )
+            walk(_seq(node.children())[0], conds if alias_free else [])
             return
         if cls == "SubqueryAlias":
             walk(_seq(node.children())[0], conds)
@@ -415,12 +369,9 @@ def collect_scan_occurrences(df: DataFrame, table_dirs: dict) -> dict:
         if cls == "LogicalRelation":
             name = _relation_table(node, table_dirs)
             if name is not None:
-                if conds and all(c is not None for c in conds):
-                    out.setdefault(name, []).append(
-                        " AND ".join(f"({c})" for c in conds)
-                    )
-                else:
-                    out.setdefault(name, []).append(None)
+                out.setdefault(name, []).append(
+                    " AND ".join(f"({c})" for c in conds) if conds else None
+                )
             return
         for ch in _seq(node.children()):
             walk(ch, [])
@@ -442,64 +393,43 @@ def try_sql_prune(
     over auto-materialized snapshot-table views. Returns the re-planned
     DataFrame when pruning engaged for at least one table, else None
     (caller keeps the full-read plan). Never raises: any unexpected
-    failure warns and falls back — pruning is a physical optimization,
-    the full-read plan is always available."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_DISABLE_SQL_PRUNE"):
-        return None  # kill switch: scaling-study comparator
+    failure warns with its reason and falls back — pruning is a
+    physical optimization, the full-read plan is always available."""
     try:
-        candidates: dict[str, SnapshotTable] = {}
-        table_dirs: dict[str, list] = {}
         full_views = dict(registered)
+        # ONE version listing and metadata read per table and statement:
+        # the same meta serves the plan walk, the bounds and the plan
+        tables: dict[str, tuple] = {}
         for n in full_views:
             t = SnapshotTable(spark, n, root)
             cur = t.current_version()
-            if cur is None:
-                continue
-            meta = t._read_meta(cur)
-            # partitioned tables prune dirs/subdirs; unpartitioned ones
-            # still stat-prune FILES from the footer-stat sidecars, so
-            # every live table is a candidate (r15)
-            candidates[n] = t
-            table_dirs[n] = list(meta["dirs"])
-        if not candidates:
+            if cur is not None:
+                tables[n] = (t, t._read_meta(cur))
+        if not tables:
             return None
-        occurrences = collect_scan_occurrences(df, table_dirs)
-        pruned_names: list[str] = []
+        occurrences = collect_scan_occurrences(
+            df, {n: meta["dirs"] for n, (_t, meta) in tables.items()}
+        )
         audits: dict[str, dict] = {}
         for name, conds in occurrences.items():
             if not conds or any(c is None for c in conds):
                 continue  # some scan of this table needs every row
+            t, meta = tables[name]
+            # a bound naming no column of this table (the parser is
+            # textual) bounds nothing: plan_files reads only spec
+            # sources and schema columns
             bounds = _union_bounds(
-                [
-                    bounds_from_condition(c, allow_float=True)
-                    for c in conds
-                ]
+                [bounds_from_condition(c, allow_float=True) for c in conds]
             )
-            t = candidates[name]
-            meta = t._read_meta(t.current_version())
-            schema_cols = {
-                f["name"]
-                for f in json.loads(meta["schema"]).get("fields", [])
-            }
-            # every bounded column must be a REAL column of this table
-            # (a qualified conjunct above our relation can only name our
-            # columns, but the parser is textual — keep it provable)
-            bounds = {c: b for c, b in bounds.items() if c in schema_cols}
             if not bounds:
                 continue
-            pdf, audit = t.read_pruned_for_bounds(bounds)
-            if (
-                audit["subdirs_pruned"] == 0
-                and audit["dirs_pruned"] == 0
-                and audit["files_skipped_by_stats"] == 0
-            ):
+            paths, decision = t.plan_files(meta, bounds)
+            levels = (decision.dirs, decision.subdirs, decision.files)
+            if not any(lv.pruned for lv in levels):
                 continue  # nothing actually pruned: keep the full plan
-            pdf.createOrReplaceTempView(name)
-            pruned_names.append(name)
-            audits[name] = audit
-        if not pruned_names:
+            t._read_dirs_mor(meta, paths).createOrReplaceTempView(name)
+            audits[name] = {**decision.audit(meta), "decision": decision}
+        if not audits:
             return None
         try:
             # re-analysis binds the pruned views into the NEW plan ...
@@ -508,12 +438,10 @@ def try_sql_prune(
             # ... and the full views come straight back (a DataFrame
             # keeps the plan it analyzed; later statements re-register
             # anyway, but out-of-band spark.table() must never see a
-            # stale pruned view)
-            # Restored from the SAME DataFrame objects
+            # stale pruned view), from the SAME DataFrame objects
             # materialize_tables registered — a fresh t.read() would
-            # RELIST the whole table per statement (the sql_prune
-            # scaling study measured that doubling the wall cost).
-            for name in pruned_names:
+            # RELIST the whole table per statement
+            for name in audits:
                 full_views[name].createOrReplaceTempView(name)
         LAST_SQL_PRUNE_AUDITS.clear()
         LAST_SQL_PRUNE_AUDITS.update(audits)

@@ -1,18 +1,23 @@
-"""Property tests for the r15 pruning machinery's pure functions:
-hive escape/unescape roundtrip (against arbitrary strings) and
-conjunct-parser robustness (never raises, bounds always implied)."""
+"""Property tests for the pruning machinery: hive escape/unescape
+roundtrip (against arbitrary strings), conjunct-parser robustness
+(never raises, bounds always implied), and `SnapshotTable.plan_files`
+soundness over a table mixing every partition layout."""
 
 from __future__ import annotations
 
 import datetime
 
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from empdia_iceberg_spark.tables.manager import (
     HIVE_DEFAULT_PARTITION,
+    SnapshotTable,
     hive_escape_value,
     hive_unescape_value,
+    scratch_root,
 )
 from empdia_iceberg_spark.tables.sqlprune import (
     bounds_from_condition,
@@ -114,3 +119,107 @@ def test_ts_strictness_tightening_exact(ts, op):
         assert hi == ts - us
     else:
         assert hi == ts
+
+
+# ------------------------------------------------------ planner soundness
+
+_S_VALUES = ["", "a", "a/b", "ab", "abc", "b", "ba", "c:d", None]
+_DAY0 = datetime.datetime(2024, 1, 1)
+
+
+@pytest.fixture(scope="module")
+def mixed_table(spark):
+    """One data dir per layout — unpartitioned, identity(s), days(ts),
+    truncate(2, s), bucket(4, k) — with NULL and '' values, escaped
+    strings, and one live MOR delete."""
+    t = SnapshotTable(spark, "t_plan_props", scratch_root())
+    t.drop()
+    specs = [None, ["s"], ["days(ts)"], ["truncate(2, s)"], ["bucket(4, k)"]]
+    for b, spec in enumerate(specs):
+        rows = [
+            (
+                b * 100 + i,
+                None if i == 7 else (b * 3 + i) % 12,
+                _S_VALUES[(b + i) % len(_S_VALUES)],
+                None if i == 5 else _DAY0 + datetime.timedelta(hours=7 * i + b),
+            )
+            for i in range(12)
+        ]
+        df = spark.createDataFrame(rows, "n int, k int, s string, ts timestamp")
+        if b == 0:
+            t.create(df)
+            continue
+        t.evolve_partitioning(spec)
+        t.append(df)
+    t.delete_where_mor(F.col("n") % 5 == 0, key="n")
+    yield t
+    t.drop()
+
+
+def _range(values):
+    return st.tuples(st.one_of(st.none(), values), st.one_of(st.none(), values))
+
+
+_BOUNDS = st.fixed_dictionaries(
+    {},
+    optional={
+        "n": _range(st.integers(-5, 420)),
+        "k": st.one_of(
+            _range(st.integers(-1, 12)),
+            st.integers(-1, 12).map(lambda v: (v, v)),
+            _range(st.integers(-1, 12).map(lambda v: v + 0.5)),
+        ),
+        "s": _range(st.sampled_from([v for v in _S_VALUES if v is not None])),
+        "ts": _range(
+            st.integers(0, 90).map(lambda h: _DAY0 + datetime.timedelta(hours=h))
+        ),
+    },
+)
+
+
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(_BOUNDS)
+@example({"s": (None, "b")})  # '' rows share the default partition
+@example({"k": (3, 3), "ts": (_DAY0, None)})  # bucket probe, days range
+def test_plan_files_is_sound(spark, mixed_table, bounds):
+    """The planned read filtered by the bounds equals read() filtered by
+    them, and every Decision level tallies considered = selected +
+    pruned."""
+    t = mixed_table
+    meta = t._read_meta(t.current_version())
+    paths, decision = t.plan_files(meta, bounds)
+    for level in (decision.dirs, decision.subdirs, decision.files):
+        assert level.selected + level.pruned == level.considered
+    cond = F.lit(True)
+    for col, (lo, hi) in bounds.items():
+        if lo is not None:
+            cond = cond & (F.col(col) >= F.lit(lo))
+        if hi is not None:
+            cond = cond & (F.col(col) <= F.lit(hi))
+    want = sorted(r["n"] for r in t.read().filter(cond).select("n").collect())
+    got = sorted(
+        r["n"]
+        for r in t._read_dirs_mor(meta, paths).filter(cond).select("n").collect()
+    )
+    assert got == want, (bounds, decision)
+
+
+def test_plan_files_names_its_declines(spark, mixed_table):
+    """A ts bound under a non-UTC session: the days(ts) dir reads whole
+    and ts footer stats are not consulted, and the Decision says why."""
+    t = mixed_table
+    meta = t._read_meta(t.current_version())
+    bounds = {"ts": (_DAY0, _DAY0 + datetime.timedelta(hours=5))}
+    _paths, utc = t.plan_files(meta, bounds)
+    assert utc.dirs.considered == 1 and utc.dirs.reason is None
+    old = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        paths, decision = t.plan_files(meta, bounds)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert decision.dirs.considered == 0 and decision.files.pruned == 0
+    assert "America/New_York" in decision.dirs.reason
+    assert "days(ts)" in decision.dirs.reason
+    assert "UTC session" in decision.files.reason
+    assert sorted(paths) == sorted(meta["dirs"])

@@ -2901,6 +2901,18 @@ def test_alter_column_type_guards(spark, nation):
     t2.drop()
 
 
+def test_raw_dtypes_names_a_dir_without_parquet(spark, tmp_path):
+    """The alter-type story's footer audit fails loudly, naming the dir,
+    when a data dir holds no parquet file (was a bare IndexError)."""
+    from empdia_iceberg_spark.tables.ddl import _raw_dtypes
+
+    spark.range(3).write.parquet(str(tmp_path / "full"))
+    assert _raw_dtypes(str(tmp_path / "full")) == {"id": "bigint"}
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(ValueError, match="no parquet file in data dir .*empty"):
+        _raw_dtypes(str(tmp_path / "empty"))
+
+
 def test_rename_table_moves_history_refs_and_deletes(spark, nation):
     """RENAME TO: the catalog move carries versions, refs, MOR delete
     dirs, and data-dir references (absolute-path prefix rewrite); reads,

@@ -978,10 +978,11 @@ def run_dml_stats_study(spark, scale: int, reps: int) -> dict:
     one append per replica, so the table holds `scale` data dirs with
     disjoint o_orderkey ranges — probing a FIXED key range that lives
     entirely in replica 0. WITH the footer-stat manifests
-    (`_dirs_matching`'s stats pre-pass) the pass reads only replica
-    0's files: flat in table size. WITHOUT them (the
-    SPARK_GRAFT_DISABLE_FILE_STATS kill switch) the pass scans the
-    predicate column of EVERY file: linear. The hit-dir sets are
+    (`_dirs_matching`, planned by `plan_files`) the pass reads only
+    replica 0's files: flat in table size. WITHOUT them (the same
+    exact scan over every dir of the snapshot, `_dirs_hit` on all of
+    meta["dirs"]) the pass scans the predicate column of EVERY file:
+    linear. The hit-dir sets are
     asserted identical every rep — stats pruning narrows the scan,
     never the answer. Iceberg pays exactly this shape via manifest
     min/max; the sidecar warm-up (footer reads) is untimed pay-once
@@ -1005,26 +1006,19 @@ def run_dml_stats_study(spark, scale: int, reps: int) -> dict:
     meta = t._read_meta(t.current_version())
     cond = F.col("o_orderkey").between(100, 200)  # replica-0 keys only
 
-    def find(disabled: bool) -> tuple[set, float]:
-        if disabled:
-            os.environ["SPARK_GRAFT_DISABLE_FILE_STATS"] = "1"
-        else:
-            os.environ.pop("SPARK_GRAFT_DISABLE_FILE_STATS", None)
-        try:
-            best, hit = float("inf"), None
-            t._dirs_matching(meta, cond)  # warm (and build sidecars)
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                h = t._dirs_matching(meta, cond)
-                best = min(best, time.perf_counter() - t0)
-                hit = h
-            return hit, best
-        finally:
-            os.environ.pop("SPARK_GRAFT_DISABLE_FILE_STATS", None)
+    def find(pass_) -> tuple[set, float]:
+        best, hit = float("inf"), None
+        pass_()  # warm (and build sidecars)
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            h = pass_()
+            best = min(best, time.perf_counter() - t0)
+            hit = h
+        return hit, best
 
-    hit_stats, with_best = find(disabled=False)
+    hit_stats, with_best = find(lambda: t._dirs_matching(meta, cond))
     audit = dict(SnapshotTable._DML_STATS_AUDITS["orders_dml_stats_scale"])
-    hit_plain, without_best = find(disabled=True)
+    hit_plain, without_best = find(lambda: t._dirs_hit(meta, meta["dirs"], cond))
     assert hit_stats == hit_plain, (
         f"dml_stats x{scale}: hit-dir parity violated"
     )
@@ -1052,8 +1046,8 @@ def run_sql_prune_study(spark, scale: int, reps: int) -> dict:
     one-day read flat vs linear; this times the same one-day read as a
     PLAIN SQL statement through execute_sql — plan walk, bounds
     extraction, subdir selection, re-analysis and all — against the
-    identical statement with the prune pass disabled (the
-    SPARK_GRAFT_DISABLE_SQL_PRUNE kill switch). Same events ×k shape
+    identical statement through `spark.sql` over the full `t.read()`
+    registered as the view (no prune pass). Same events ×k shape
     (replicas shift ts 35 days: scaling adds DAYS, the probed day stays
     constant). Row values asserted identical between the arms."""
     from pyspark.sql import functions as F
@@ -1076,37 +1070,31 @@ def run_sql_prune_study(spark, scale: int, reps: int) -> dict:
         "WHERE CAST(ts AS DATE) = DATE '2024-01-03'"
     )
 
-    def run(disabled: bool):
-        if disabled:
-            os.environ["SPARK_GRAFT_DISABLE_SQL_PRUNE"] = "1"
-        else:
-            os.environ.pop("SPARK_GRAFT_DISABLE_SQL_PRUNE", None)
-        try:
-            rows = execute_sql(spark, stmt).collect()  # warm
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                rows = execute_sql(spark, stmt).collect()
-                best = min(best, time.perf_counter() - t0)
-            return [tuple(r) for r in rows], best
-        finally:
-            os.environ.pop("SPARK_GRAFT_DISABLE_SQL_PRUNE", None)
+    def run(query):
+        rows = query().collect()  # warm
+        best = float("inf")
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            rows = query().collect()
+            best = min(best, time.perf_counter() - t0)
+        return [tuple(r) for r in rows], best
 
-    pruned_rows, pruned_best = run(disabled=False)
-    full_rows, full_best = run(disabled=True)
+    pruned_rows, pruned_best = run(lambda: execute_sql(spark, stmt))
+    t.read().createOrReplaceTempView("events_sqlprune_scale")
+    full_rows, full_best = run(lambda: spark.sql(stmt))
     assert pruned_rows == full_rows, f"sql_prune x{scale}: value mismatch"
     n_rows = pruned_rows[0][0]
     t.drop()
     print(
         f"|   sql_prune x{scale}: SQL one-day read pruned "
-        f"{round(pruned_best, 3)} s vs prune-disabled "
+        f"{round(pruned_best, 3)} s vs full-view "
         f"{round(full_best, 3)} s",
         flush=True,
     )
     return {
         "study": "sql_prune", "scale": scale, "rows": n_rows,
         "spark_sec": round(pruned_best, 3),
-        "duckdb_sec": round(full_best, 3),  # the disabled comparator
+        "duckdb_sec": round(full_best, 3),  # the full-view comparator
         "ratio": round(pruned_best / full_best, 2),
     }
 
