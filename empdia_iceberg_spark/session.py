@@ -5,13 +5,133 @@ splitting, partition coalescing), shuffle partitions sized by env,
 UTC session timezone so timestamp semantics match the DuckDB oracle,
 Arrow enabled for every pandas boundary. On a real cluster the same
 builder is used — only master/memory change.
+
+Python workers import the driver's pyspark. Spark puts
+``$SPARK_HOME/python/lib/pyspark.zip`` and ``py4j-*-src.zip`` first on
+the path of every Python process it starts (``PythonUtils.sparkPythonPath``
+builds it from ``$SPARK_HOME`` alone, so no conf can reorder it). Stock
+Spark ships those zips without bytecode and zipimport never caches any,
+so every fresh process compiles pyspark from source again. Spark 4.1
+spawns such a process, the streaming-source runner, for every streaming
+query start: its import-to-first-call time was 1.17 s from the zip and
+0.52 s from the installed, compiled package (4-core host). So when the
+driver's pyspark is a directory install of the same version as
+``$SPARK_HOME``, ``get_spark`` launches the JVM with ``SPARK_HOME`` pointing
+at an overlay (``worker_pyspark_home``): every entry of the real home as
+a symlink, except that the two zips are directories of the same names
+holding a link to the driver's ``pyspark`` and ``py4j`` packages. Python
+treats a directory path entry as a plain import root, so the workers run
+the same code from its compiled bytecode. In any other case the launch is
+the stock one.
 """
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import re
+import shutil
+import tempfile
 
+import py4j
+import py4j.version
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
+
+
+def _package_dir(module) -> str | None:
+    """The directory a package was imported from, or None when it was
+    not imported from a plain directory (a zip, a namespace package)."""
+    f = getattr(module, "__file__", None) or ""
+    if os.path.basename(f) == "__init__.py" and os.path.isfile(f):
+        return os.path.dirname(f)
+    return None
+
+
+def _mirror(src: str, dst: str, swaps: dict[str, str], rel: str = "") -> None:
+    """Fill ``dst/rel`` with a symlink to each entry of ``src/rel``. An
+    entry named in ``swaps`` becomes a directory holding one link, to the
+    package dir it maps to; an ancestor of such an entry is mirrored
+    recursively."""
+    if rel:
+        os.mkdir(os.path.join(dst, rel))
+    for name in sorted(os.listdir(os.path.join(src, rel))):
+        r = os.path.join(rel, name)
+        if r in swaps:
+            os.mkdir(os.path.join(dst, r))
+            os.symlink(swaps[r], os.path.join(dst, r, os.path.basename(swaps[r])))
+        elif any(s.startswith(r + os.sep) for s in swaps):
+            _mirror(src, dst, swaps, r)
+        else:
+            os.symlink(os.path.join(src, r), os.path.join(dst, r))
+
+
+def worker_pyspark_home() -> tuple[str | None, str]:
+    """Return ``(overlay SPARK_HOME, reason)`` for a launch whose Python
+    workers import the driver's pyspark and py4j, or ``(None, reason)``
+    when the launch must be the stock one. See the module docstring.
+
+    The overlay is built once under ``tempfile.gettempdir()``, keyed by
+    the real ``SPARK_HOME``, the two package dirs and their versions, into
+    a temporary sibling that is renamed into place; later calls reuse it.
+    """
+    spark_home = os.environ.get("SPARK_HOME")
+    if not spark_home:
+        return None, "SPARK_HOME is not set"
+    lib = os.path.join("python", "lib")
+    if not os.path.isfile(os.path.join(spark_home, lib, "pyspark.zip")):
+        return None, f"{spark_home}/{lib}/pyspark.zip is not a regular file"
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None, "a gateway is already running"
+    pyspark_dir, py4j_dir = _package_dir(pyspark), _package_dir(py4j)
+    if pyspark_dir is None or py4j_dir is None:
+        return None, "the driver's pyspark or py4j is not a directory install"
+    try:
+        with open(os.path.join(spark_home, "RELEASE")) as f:
+            m = re.match(r"Spark (\S+)", f.readline())
+    except OSError as exc:
+        return None, f"cannot read {spark_home}/RELEASE: {exc}"
+    if m is None or m.group(1) != pyspark.__version__:
+        found = m.group(1) if m else "no version"
+        return None, f"driver pyspark {pyspark.__version__} != {found} in {spark_home}/RELEASE"
+    py4j_zip = f"py4j-{py4j.version.__version__}-src.zip"
+    if not os.path.isfile(os.path.join(spark_home, lib, py4j_zip)):
+        return None, f"{spark_home}/{lib} has no {py4j_zip} for the driver's py4j"
+
+    real = os.path.realpath(spark_home)
+    targets = [os.path.realpath(pyspark_dir), os.path.realpath(py4j_dir)]
+    key = hashlib.sha1("\0".join([real, *targets]).encode()).hexdigest()[:12]
+    overlay = os.path.join(
+        tempfile.gettempdir(),
+        f"spark-home-{pyspark.__version__}-py4j-{py4j.version.__version__}-{key}",
+    )
+    swaps = {os.path.join(lib, "pyspark.zip"): targets[0], os.path.join(lib, py4j_zip): targets[1]}
+    if not os.path.isdir(overlay):
+        tmp = None
+        try:
+            tmp = tempfile.mkdtemp(prefix=os.path.basename(overlay) + ".",
+                                   dir=os.path.dirname(overlay))
+            os.chmod(tmp, 0o755)  # mkdtemp's 0700 would hide it from other users
+            _mirror(real, tmp, swaps)
+            os.rename(tmp, overlay)
+        except OSError as exc:
+            if tmp is not None:
+                shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.isdir(overlay):  # not a lost race with another builder
+                return None, f"cannot build an overlay at {overlay}: {exc}"
+    try:
+        complete = set(os.listdir(real)) <= set(os.listdir(overlay)) and all(
+            os.path.samefile(os.path.join(overlay, r, os.path.basename(t)), t)
+            for r, t in swaps.items())
+    except OSError:
+        complete = False
+    if not complete:
+        return None, f"overlay {overlay} is incomplete; delete it to rebuild"
+    return overlay, f"pyspark {pyspark.__version__} and py4j {py4j.version.__version__} match {real}"
 
 
 def get_spark(
@@ -23,6 +143,10 @@ def get_spark(
 
     Env knobs: ``SPARK_GRAFT_CPUS`` (local parallelism, default 32),
     ``SPARK_GRAFT_SHUFFLE`` (shuffle partitions, default = cpus).
+
+    Logs one record on this module's logger: ``worker_pyspark=`` the
+    overlay ``SPARK_HOME`` the JVM was launched with, or ``stock``, and
+    the reason (``worker_pyspark_home``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -59,6 +183,18 @@ def get_spark(
         # Don't let AQE coalesce tiny-SF shuffles below the core count.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     )
-    spark = builder.getOrCreate()
+    home, reason = worker_pyspark_home()
+    _LOG.info("worker_pyspark=%s reason=%s", home or "stock", reason)
+    if home is None:
+        spark = builder.getOrCreate()
+    else:
+        # only the launch reads it: the JVM and every Python process it
+        # starts keep the overlay, this process keeps the real home
+        stock = os.environ["SPARK_HOME"]
+        os.environ["SPARK_HOME"] = home
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            os.environ["SPARK_HOME"] = stock
     spark.sparkContext.setLogLevel("WARN")
     return spark
