@@ -34,7 +34,6 @@ import re
 import shutil
 import tempfile
 
-import py4j
 import py4j.version
 import pyspark
 from pyspark import SparkContext
@@ -59,7 +58,7 @@ def _mirror(src: str, dst: str, swaps: dict[str, str], rel: str = "") -> None:
     recursively."""
     if rel:
         os.mkdir(os.path.join(dst, rel))
-    for name in sorted(os.listdir(os.path.join(src, rel))):
+    for name in os.listdir(os.path.join(src, rel)):
         r = os.path.join(rel, name)
         if r in swaps:
             os.mkdir(os.path.join(dst, r))
