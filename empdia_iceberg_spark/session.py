@@ -27,7 +27,7 @@ the stock one.
 
 from __future__ import annotations
 
-import hashlib
+import atexit
 import logging
 import os
 import re
@@ -51,32 +51,15 @@ def _package_dir(module) -> str | None:
     return None
 
 
-def _mirror(src: str, dst: str, swaps: dict[str, str], rel: str = "") -> None:
-    """Fill ``dst/rel`` with a symlink to each entry of ``src/rel``. An
-    entry named in ``swaps`` becomes a directory holding one link, to the
-    package dir it maps to; an ancestor of such an entry is mirrored
-    recursively."""
-    if rel:
-        os.mkdir(os.path.join(dst, rel))
-    for name in os.listdir(os.path.join(src, rel)):
-        r = os.path.join(rel, name)
-        if r in swaps:
-            os.mkdir(os.path.join(dst, r))
-            os.symlink(swaps[r], os.path.join(dst, r, os.path.basename(swaps[r])))
-        elif any(s.startswith(r + os.sep) for s in swaps):
-            _mirror(src, dst, swaps, r)
-        else:
-            os.symlink(os.path.join(src, r), os.path.join(dst, r))
-
-
 def worker_pyspark_home() -> tuple[str | None, str]:
     """Return ``(overlay SPARK_HOME, reason)`` for a launch whose Python
     workers import the driver's pyspark and py4j, or ``(None, reason)``
     when the launch must be the stock one. See the module docstring.
 
-    The overlay is built once under ``tempfile.gettempdir()``, keyed by
-    the real ``SPARK_HOME``, the two package dirs and their versions, into
-    a temporary sibling that is renamed into place; later calls reuse it.
+    Each call builds a fresh overlay in a private ``mkdtemp`` under
+    ``tempfile.gettempdir()``, removed when the interpreter exits. A
+    directory that is already there is never used: anyone who can write
+    the temp dir could point its ``bin`` or ``jars`` elsewhere.
     """
     spark_home = os.environ.get("SPARK_HOME")
     if not spark_home:
@@ -102,34 +85,34 @@ def worker_pyspark_home() -> tuple[str | None, str]:
         return None, f"{spark_home}/{lib} has no {py4j_zip} for the driver's py4j"
 
     real = os.path.realpath(spark_home)
-    targets = [os.path.realpath(pyspark_dir), os.path.realpath(py4j_dir)]
-    key = hashlib.sha1("\0".join([real, *targets]).encode()).hexdigest()[:12]
-    overlay = os.path.join(
-        tempfile.gettempdir(),
-        f"spark-home-{pyspark.__version__}-py4j-{py4j.version.__version__}-{key}",
-    )
-    swaps = {os.path.join(lib, "pyspark.zip"): targets[0], os.path.join(lib, py4j_zip): targets[1]}
-    if not os.path.isdir(overlay):
-        tmp = None
-        try:
-            tmp = tempfile.mkdtemp(prefix=os.path.basename(overlay) + ".",
-                                   dir=os.path.dirname(overlay))
-            os.chmod(tmp, 0o755)  # mkdtemp's 0700 would hide it from other users
-            _mirror(real, tmp, swaps)
-            os.rename(tmp, overlay)
-        except OSError as exc:
-            if tmp is not None:
-                shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(overlay):  # not a lost race with another builder
-                return None, f"cannot build an overlay at {overlay}: {exc}"
+    swaps = {"pyspark.zip": pyspark_dir, py4j_zip: py4j_dir}
+    overlay = None
     try:
-        complete = set(os.listdir(real)) <= set(os.listdir(overlay)) and all(
-            os.path.samefile(os.path.join(overlay, r, os.path.basename(t)), t)
-            for r, t in swaps.items())
-    except OSError:
-        complete = False
-    if not complete:
-        return None, f"overlay {overlay} is incomplete; delete it to rebuild"
+        overlay = tempfile.mkdtemp(prefix="spark-home-")
+        # the fixed layout: every entry a link to the real one, except
+        # python/ and python/lib/, whose two zips become directories
+        # holding one link each, to the driver's package
+        for top in os.listdir(real):
+            if top != "python":
+                os.symlink(os.path.join(real, top), os.path.join(overlay, top))
+        os.mkdir(os.path.join(overlay, "python"))
+        for name in os.listdir(os.path.join(real, "python")):
+            if name != "lib":
+                os.symlink(os.path.join(real, "python", name), os.path.join(overlay, "python", name))
+        os.mkdir(os.path.join(overlay, lib))
+        for name in os.listdir(os.path.join(real, lib)):
+            dst = os.path.join(overlay, lib, name)
+            if name in swaps:
+                os.mkdir(dst)
+                pkg = os.path.realpath(swaps[name])
+                os.symlink(pkg, os.path.join(dst, os.path.basename(pkg)))
+            else:
+                os.symlink(os.path.join(real, lib, name), dst)
+    except OSError as exc:
+        if overlay is not None:
+            shutil.rmtree(overlay, ignore_errors=True)
+        return None, f"cannot build an overlay under {tempfile.gettempdir()}: {exc}"
+    atexit.register(shutil.rmtree, overlay, ignore_errors=True)
     return overlay, f"pyspark {pyspark.__version__} and py4j {py4j.version.__version__} match {real}"
 
 
@@ -145,7 +128,9 @@ def get_spark(
 
     Logs one record on this module's logger: ``worker_pyspark=`` the
     overlay ``SPARK_HOME`` the JVM was launched with, or ``stock``, and
-    the reason (``worker_pyspark_home``).
+    the reason (``worker_pyspark_home``). When a gateway from an earlier
+    launch in this process is still up, the record names the overlay that
+    launch used, read from the JVM.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -183,7 +168,15 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     )
     home, reason = worker_pyspark_home()
-    _LOG.info("worker_pyspark=%s reason=%s", home or "stock", reason)
+    shown = home or "stock"
+    if SparkContext._jvm is not None:
+        # a stopped session keeps its gateway, whose JVM keeps the home it
+        # was launched with: report where its workers import pyspark from
+        launched = SparkContext._jvm.java.lang.System.getenv("SPARK_HOME")
+        if launched and os.path.isdir(os.path.join(launched, "python", "lib", "pyspark.zip")):
+            shown = launched
+        reason = f"{reason}; launched earlier with SPARK_HOME={launched}"
+    _LOG.info("worker_pyspark=%s reason=%s", shown, reason)
     if home is None:
         spark = builder.getOrCreate()
     else:

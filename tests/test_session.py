@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import logging
 import os
+import shutil
 import sys
 import tempfile
 import types
@@ -68,6 +69,7 @@ def fake_home(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_HOME", str(home))
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkContext, "_jvm", None)
     return home
 
 
@@ -92,18 +94,39 @@ def test_overlay_mirrors_home_and_swaps_the_two_zips(fake_home):
         assert os.path.realpath(os.path.join(entry, pkg)) == target
 
 
-def test_overlay_is_reused_without_rebuilding(fake_home, monkeypatch):
+def _is_overlay_for(path, home):
+    """``path`` is a private overlay of ``home`` whose zips lead to the
+    driver's packages."""
+    st = os.stat(path)
+    lib = os.path.join(path, "python", "lib")
+    return (st.st_uid == os.getuid() and st.st_mode & 0o777 == 0o700
+            and os.path.realpath(os.path.join(path, "bin")) == os.path.realpath(home / "bin")
+            and os.path.realpath(os.path.join(lib, "pyspark.zip", "pyspark")) == PYSPARK_DIR)
+
+
+def test_overlay_never_trusts_a_directory_already_there(fake_home, tmp_path):
+    # someone else's look-alike: correct zip links, its own bin
+    planted = os.path.join(tempfile.gettempdir(), "spark-home-planted")
+    os.makedirs(os.path.join(planted, "python", "lib", "pyspark.zip"))
+    os.symlink(PYSPARK_DIR, os.path.join(planted, "python", "lib", "pyspark.zip", "pyspark"))
+    (tmp_path / "evil-bin").mkdir()
+    os.symlink(tmp_path / "evil-bin", os.path.join(planted, "bin"))
     first, _ = session.worker_pyspark_home()
-    inode = os.stat(first).st_ino
-
-    def no_rebuild(*args, **kwargs):
-        raise AssertionError("overlay rebuilt")
-
-    monkeypatch.setattr(session, "_mirror", no_rebuild)
     second, reason = session.worker_pyspark_home()
-    assert second == first, reason
-    assert os.stat(second).st_ino == inode
-    assert os.listdir(tempfile.gettempdir()) == [os.path.basename(first)]
+    assert second is not None, reason
+    assert len({first, second, planted}) == 3
+    assert _is_overlay_for(first, fake_home) and _is_overlay_for(second, fake_home)
+
+
+def test_overlay_is_removed_at_exit(fake_home, monkeypatch):
+    at_exit = []
+    monkeypatch.setattr(session.atexit, "register",
+                        lambda f, *args, **kwargs: at_exit.append((f, args, kwargs)))
+    overlay, reason = session.worker_pyspark_home()
+    assert overlay is not None, reason
+    for f, args, kwargs in at_exit:
+        f(*args, **kwargs)
+    assert os.listdir(tempfile.gettempdir()) == []
 
 
 @pytest.mark.parametrize(
@@ -138,33 +161,10 @@ def test_overlay_declines_with_a_reason(fake_home, monkeypatch, breakage, phrase
     assert os.listdir(tempfile.gettempdir()) == []
 
 
-def test_overlay_build_that_loses_a_race_uses_the_winners(fake_home, monkeypatch):
-    mirror = session._mirror
-
-    def race(src, dst, swaps, rel=""):
-        if not rel:  # another process renames its overlay into place first
-            winner = os.path.join(tempfile.gettempdir(), os.path.basename(dst).rsplit(".", 1)[0])
-            os.mkdir(winner)
-            mirror(src, winner, swaps)
-        mirror(src, dst, swaps, rel)
-
-    monkeypatch.setattr(session, "_mirror", race)
-    overlay, reason = session.worker_pyspark_home()
-    assert overlay is not None, reason
-    assert os.listdir(tempfile.gettempdir()) == [os.path.basename(overlay)]
-
-
 def test_overlay_that_cannot_be_built_declines(fake_home, monkeypatch):
     monkeypatch.setattr(tempfile, "tempdir", str(fake_home / "no-such-dir"))
     overlay, reason = session.worker_pyspark_home()
     assert overlay is None and "cannot build an overlay" in reason
-
-
-def test_incomplete_overlay_declines(fake_home):
-    overlay, _ = session.worker_pyspark_home()
-    os.unlink(os.path.join(overlay, "python", "lib", "pyspark.zip", "pyspark"))
-    again, reason = session.worker_pyspark_home()
-    assert again is None and "incomplete" in reason
 
 
 # ------------------------------------------- get_spark around the launch
@@ -192,12 +192,30 @@ def test_get_spark_sets_spark_home_only_around_the_launch(fake_home, monkeypatch
         else:
             launched = session.get_spark()
     assert os.environ["SPARK_HOME"] == str(fake_home)
-    overlay, _ = session.worker_pyspark_home()
+    (overlay,) = os.listdir(tempfile.gettempdir())
+    overlay = os.path.join(tempfile.gettempdir(), overlay)
+    assert _is_overlay_for(overlay, fake_home)
     if not launch_fails:
         assert launched.spark_home == overlay
     records = [r for r in caplog.records if r.name == "empdia_iceberg_spark.session"]
     assert len(records) == 1
     assert f"worker_pyspark={overlay} " in records[0].getMessage()
+
+
+def test_get_spark_after_stop_reports_the_earlier_launch(fake_home, monkeypatch, caplog):
+    # a stopped session keeps its gateway, and its JVM the overlay home
+    overlay, _ = session.worker_pyspark_home()
+    system = types.SimpleNamespace(getenv={"SPARK_HOME": overlay}.get)
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    monkeypatch.setattr(SparkContext, "_jvm", types.SimpleNamespace(
+        java=types.SimpleNamespace(lang=types.SimpleNamespace(System=system))))
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda builder: _Launched(os.environ["SPARK_HOME"]))
+    with caplog.at_level(logging.INFO, logger="empdia_iceberg_spark.session"):
+        session.get_spark()
+    (record,) = [r for r in caplog.records if r.name == "empdia_iceberg_spark.session"]
+    assert record.getMessage().startswith(f"worker_pyspark={overlay} ")
+    assert "launched earlier" in record.getMessage()
 
 
 def test_get_spark_declined_launch_is_stock(fake_home, monkeypatch, caplog):
@@ -253,7 +271,10 @@ def test_workers_import_the_drivers_pyspark(spark, monkeypatch):
     monkeypatch.undo()
     if overlay is None:
         return
-    assert spark._jvm.java.lang.System.getenv("SPARK_HOME") == overlay, reason
+    shutil.rmtree(overlay)
+    launched = spark._jvm.java.lang.System.getenv("SPARK_HOME")
+    assert os.path.realpath(os.path.join(launched, "python", "lib", "pyspark.zip",
+                                         "pyspark")) == PYSPARK_DIR, reason
     assert os.path.realpath(os.path.dirname(row.pyspark_file)) == PYSPARK_DIR
     # a file the OS can open, so no path component is a zip archive
     assert os.path.isfile(row.pyspark_file)
