@@ -3,7 +3,13 @@
 
 ``__spark_entry__.py`` exposes the registry to the driver:
 ``queries()[name](spark, sf_dir) -> DataFrame`` and
-``oracle_sql()[name] -> str`` (omitted for rows-only ops).
+``oracle_sql()[name] -> str`` (omitted for rows-only ops), in the
+driver's sweep order.
+
+The first ``specs()``/``queries()``/``oracles()`` call imports every
+module of the package for its ``@register`` side effects, so importing
+the package alone (as every Spark worker does) loads no operator module.
+Registration order follows import history.
 
 Discipline enforced by convention (SURVEY §7 slice 1 pitfalls):
 - alias every computed column identically in Spark and SQL;
@@ -13,6 +19,8 @@ Discipline enforced by convention (SURVEY §7 slice 1 pitfalls):
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -21,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
+_loaded = False
 
 
 @dataclass(frozen=True)
@@ -43,33 +52,27 @@ def register(name: str, oracle: Optional[str] = None, doc: str = ""):
     return deco
 
 
-def promote(first: list[str]) -> None:
-    """Reorder the registry so ``first`` (in order) precedes everything else.
+def _load() -> None:
+    """Import every module under the package once. Memoised only after a
+    walk that succeeds, so a failing import raises on every read."""
+    global _loaded
+    if _loaded:
+        return
+    import empdia_iceberg_spark
 
-    The driver's per-round CORRECTNESS sweep checks the first ~50
-    registered queries; with ~258 registered, rotation is required so no
-    query goes two rounds without driver evidence. ``__init__.py`` calls
-    this once after all modules register, with the current round's
-    priority list: (1) queries with no driver row yet, (2) queries whose
-    implementation changed this round, (3) the half not swept last round.
-    Unknown names are an error — they mean the rotation list is stale.
-    """
-    unknown = [n for n in first if n not in _REGISTRY]
-    if unknown:
-        raise KeyError(f"promote(): unregistered query names {unknown}")
-    rest = [n for n in _REGISTRY if n not in set(first)]
-    reordered = {n: _REGISTRY[n] for n in list(first) + rest}
-    _REGISTRY.clear()
-    _REGISTRY.update(reordered)
+    for info in pkgutil.walk_packages(empdia_iceberg_spark.__path__, "empdia_iceberg_spark."):
+        importlib.import_module(info.name)
+    _loaded = True
 
 
 def specs() -> dict[str, QuerySpec]:
+    _load()
     return dict(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:
-    return {name: spec.fn for name, spec in _REGISTRY.items()}
+    return {name: spec.fn for name, spec in specs().items()}
 
 
 def oracles() -> dict[str, str]:
-    return {name: spec.oracle for name, spec in _REGISTRY.items() if spec.oracle is not None}
+    return {name: spec.oracle for name, spec in specs().items() if spec.oracle is not None}

@@ -1702,6 +1702,15 @@ def execute_sql_script(
     return results
 
 
+# execute_sql dispatches on a statement's first keyword. Only statements
+# whose body spark.sql evaluates (reads, DML bodies, CTAS and CREATE VIEW
+# bodies) resolve persisted views and snapshot tables as temp views first.
+_READ_KEYWORDS = frozenset({"SELECT", "WITH"})
+_DML_KEYWORDS = frozenset({"INSERT", "UPDATE", "DELETE", "MERGE"})
+_DDL_KEYWORDS = frozenset({"CREATE", "ALTER", "DROP", "OPTIMIZE", "VACUUM", "TRUNCATE", "CALL", "ANALYZE"})
+_BODY_KEYWORDS = _READ_KEYWORDS | _DML_KEYWORDS | {"CREATE"}
+
+
 def execute_sql(
     spark: SparkSession,
     statement: str,
@@ -1725,25 +1734,19 @@ def execute_sql(
     statement = materialize_metadata_tables(spark, statement, root)
     head = statement.lstrip().lstrip("(").split(None, 1)
     kw = head[0].upper() if head else ""
-    # View/table materialization only for statements whose BODY is
-    # evaluated through spark.sql (reads and write bodies). Pure
-    # metadata statements (ALTER/DROP/CALL/SHOW/DESCRIBE/ANALYZE/
-    # OPTIMIZE/VACUUM/TRUNCATE) dispatch to SnapshotTable methods that
-    # never resolve the temp-view namespace — refreshing every view
-    # for them paid an O(tables·py4j) driver tax per statement (r16;
-    # the governance bundle spent ~0.3 s/call re-registering reads no
-    # statement used). A DROP's stale auto-view is harmless: the next
-    # READING statement re-runs materialize_tables, whose cleanup
-    # drops it before spark.sql can resolve it.
+    # Pure metadata statements never resolve the temp-view namespace;
+    # refreshing every view for them cost O(tables·py4j) per statement
+    # (r16). A DROP's stale auto-view is harmless: the next reading
+    # statement's materialize_tables drops it before spark.sql runs.
     registered: list = []
-    if kw in ("SELECT", "WITH", "INSERT", "UPDATE", "DELETE", "MERGE", "CREATE"):
+    if kw in _BODY_KEYWORDS:
         # persisted views resolve for every READING statement; CREATE/
         # DROP VIEW manage the catalog and must not resolve their own
         # target
         if not (_CREATE_VIEW.match(statement) or _DROP_VIEW.match(statement)):
             materialize_views(spark, statement, root, depth=_view_depth)
         registered = materialize_tables(spark, statement, root)
-    if kw in ("SELECT", "WITH"):
+    if kw in _READ_KEYWORDS:
         df = spark.sql(statement)
         if registered:
             # partition pruning for the SQL read path: if Catalyst
@@ -1757,7 +1760,7 @@ def execute_sql(
             if pruned is not None:
                 return pruned
         return df
-    if kw in ("INSERT", "UPDATE", "DELETE", "MERGE"):
+    if kw in _DML_KEYWORDS:
         return execute_dml(spark, statement, root, mor_key)
     if kw in ("DESCRIBE", "DESC"):
         m = _DESCRIBE_HEAD.match(statement)
@@ -1788,15 +1791,14 @@ def execute_sql(
                 f"t): {statement[:60]!r}"
             )
         return show_tables(spark, root)
-    if kw in ("CREATE", "ALTER", "DROP", "OPTIMIZE", "VACUUM",
-              "TRUNCATE", "CALL", "ANALYZE"):
+    if kw in _DDL_KEYWORDS:
         if mor_key is not None:
             raise ValueError("mor_key applies to DML DELETE only")
         return execute_ddl(spark, statement, root)
     raise ValueError(
-        f"unsupported SQL statement (expected SELECT/WITH, "
-        f"INSERT/UPDATE/DELETE/MERGE, CREATE/ALTER/DROP/TRUNCATE TABLE, "
-        f"OPTIMIZE, or VACUUM): {statement[:80]!r}"
+        f"unsupported SQL statement (expected one of "
+        f"{'/'.join(sorted(_READ_KEYWORDS | _DML_KEYWORDS | _DDL_KEYWORDS))}"
+        f"/DESCRIBE/DESC/SHOW): {statement[:80]!r}"
     )
 
 

@@ -1,14 +1,17 @@
 """The session factory's launch decision: Python workers import the
 driver's installed pyspark through an overlay SPARK_HOME when the
 driver's pyspark matches the distribution, and the launch is the stock
-one otherwise. Also pins the worker-process test that keeps the
-registry fan-out out of Spark's Python workers."""
+one otherwise. Also pins that importing the package loads no operator
+module, in a fresh interpreter and in Spark's Python workers, while the
+registry's first read loads them all."""
 
 from __future__ import annotations
 
+import ast
 import logging
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
 import types
@@ -20,34 +23,49 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 import empdia_iceberg_spark
-from empdia_iceberg_spark import session
+from empdia_iceberg_spark import registry, session
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 PY4J_ZIP = f"py4j-{py4j.version.__version__}-src.zip"
 PYSPARK_DIR = os.path.realpath(os.path.dirname(pyspark.__file__))
 PY4J_DIR = os.path.realpath(os.path.dirname(py4j.__file__))
 
 
-# ------------------------------------------------------ worker detection
-@pytest.mark.parametrize(
-    "spec_name, file, expected",
-    [
-        # a runner started with -m whose pyspark loads from bytecode
-        ("pyspark.sql.streaming.python_streaming_source_runner",
-         "/x/pyspark/sql/streaming/__pycache__/python_streaming_source_runner.cpython-311.pyc",
-         True),
-        # `python -m pyspark.daemon`, the parent of forked UDF workers
-        ("pyspark.daemon", "/x/pyspark.zip/pyspark/daemon.py", True),
-        # a user script run by path keeps its registry, whatever its name
-        (None, "/tmp/x/pyspark/worker.py", False),
-    ],
-    ids=["pyc-runner", "m-daemon", "script-by-path"],
-)
-def test_in_pyspark_worker_matches_main_module(monkeypatch, spec_name, file, expected):
-    main = types.ModuleType("__main__")
-    main.__file__ = file
-    main.__spec__ = types.SimpleNamespace(name=spec_name) if spec_name else None
-    monkeypatch.setitem(sys.modules, "__main__", main)
-    assert empdia_iceberg_spark._in_pyspark_worker() is expected
+# ------------------------------------------------------ registry loading
+def test_package_import_loads_no_operator_module():
+    code = (
+        "import sys, empdia_iceberg_spark; "
+        "print(sorted(m for m in sys.modules if m.startswith('empdia_iceberg_spark.')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
+    ).stdout
+    heavy = [
+        m for m in ast.literal_eval(out)
+        if m.split(".")[1] in ("operators", "functions", "plans", "sources", "streaming", "tables")
+    ]
+    assert heavy == []
+
+
+def test_registry_holds_every_register_decorator_in_the_source():
+    """A module the registry's walk skips (say, a subpackage without
+    ``__init__.py``) leaves its ``@register`` queries out of the count."""
+    calls = 0
+    for dirpath, _, files in os.walk(os.path.dirname(empdia_iceberg_spark.__file__)):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            with open(os.path.join(dirpath, f)) as fh:
+                tree = ast.parse(fh.read())
+            calls += sum(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for node in ast.walk(tree)
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                for d in node.decorator_list
+            )
+    assert calls > 0
+    assert len(registry.specs()) == calls
 
 
 # ------------------------------------------------------- overlay helper

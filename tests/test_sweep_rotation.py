@@ -1,11 +1,12 @@
-"""Guard the sweep-rotation machinery (VERDICT r8 "what's wrong" #4):
-`_SWEEP_PRIORITY` is load-bearing for the driver-evidence contract —
-the driver's CORRECTNESS sweep covers the FIRST 50 registered queries,
-and `registry.promote()` applies the list at import. A stale name only
-failed at import before; nothing checked the list's INVARIANTS:
-full-registry coverage without duplicates, and every name that still
-lacks a driver row sitting inside the 50-slot window (otherwise debt
-silently survives the round the rotation claimed to retire it)."""
+"""Guard the driver's sweep order (VERDICT r8 "what's wrong" #4).
+
+The driver's CORRECTNESS sweep covers the FIRST 50 names of
+``__spark_entry__.queries()``. That order is computed: the hand-kept
+``CHANGED_THIS_ROUND`` head, then names with no driver row, then the
+stalest. These tests read the driver rows with their own helper, not
+the code under test, and pin the order's invariants: full-registry
+coverage without duplicates, every name that still lacks a driver row
+inside the 50-slot window, and nothing staler left outside it."""
 
 from __future__ import annotations
 
@@ -13,37 +14,51 @@ import glob
 import json
 import os
 import re
+import subprocess
 
-import empdia_iceberg_spark
+import pytest
+
+import __spark_entry__
 from empdia_iceberg_spark import registry
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 50  # driver sweeps exactly this many names per round (r2+)
 
 
-def _driver_swept() -> set:
-    swept = set()
+def _round(path: str) -> int:
+    return int(re.search(r"_r(\d+)", os.path.basename(path)).group(1))
+
+
+def _driver_swept(before: int | None = None) -> dict[str, int]:
+    """Name -> the latest round whose CORRECTNESS file has its row,
+    over the rounds below ``before`` (all of them when None)."""
+    latest: dict[str, int] = {}
     for f in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = _round(f)
+        if before is not None and rnd >= before:
+            continue
         with open(f) as fh:
-            swept |= set(json.load(fh))
-    return swept
+            for name in json.load(fh):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
 def test_sweep_priority_is_a_permutation_of_the_registry():
-    names = list(registry.specs())
-    pri = empdia_iceberg_spark._SWEEP_PRIORITY
-    assert len(pri) == len(set(pri)), "duplicate names in _SWEEP_PRIORITY"
-    assert sorted(pri) == sorted(names), (
-        "_SWEEP_PRIORITY must cover the registry exactly once (promote() "
-        "catches unknown names but not omissions, which silently fall to "
-        "module-import order at the tail)"
-    )
+    order = list(__spark_entry__.queries())
+    assert len(order) == len(set(order))
+    assert sorted(order) == sorted(registry.specs())
+    head = __spark_entry__.CHANGED_THIS_ROUND
+    assert tuple(order[: len(head)]) == tuple(head)
+    assert list(__spark_entry__.oracle_sql()) == [
+        n for n in order if registry.specs()[n].oracle is not None
+    ]
 
 
 def test_all_never_swept_names_sit_inside_the_driver_window():
-    window = list(registry.specs())[:WINDOW]
-    never = {n for n in registry.specs() if n not in _driver_swept()}
-    outside = never - set(window)
+    order = list(__spark_entry__.queries())
+    swept = _driver_swept()
+    never = {n for n in order if n not in swept}
+    outside = never - set(order[:WINDOW])
     assert not outside, (
         f"{len(outside)} never-driver-swept queries are outside the "
         f"{WINDOW}-slot sweep window and would miss this round's "
@@ -51,10 +66,30 @@ def test_all_never_swept_names_sit_inside_the_driver_window():
     )
 
 
+def test_no_name_outside_the_window_is_staler_than_one_inside():
+    order = list(__spark_entry__.queries())
+    latest = _driver_swept(before=__spark_entry__.SWEEP_ROUND)
+    head = len(__spark_entry__.CHANGED_THIS_ROUND)
+    inside = [latest.get(n, 0) for n in order[head:WINDOW]]
+    outside = [latest.get(n, 0) for n in order[WINDOW:]]
+    assert not inside or not outside or max(inside) <= min(outside)
+
+
+def test_unregistered_changed_name_is_an_error(monkeypatch):
+    monkeypatch.setattr(
+        __spark_entry__, "CHANGED_THIS_ROUND",
+        (*__spark_entry__.CHANGED_THIS_ROUND, "no_such_query"),
+    )
+    with pytest.raises(KeyError, match="no_such_query"):
+        __spark_entry__.queries()
+    with pytest.raises(KeyError, match="no_such_query"):
+        __spark_entry__.oracle_sql()
+
+
 def test_sweep_comment_round_matches_latest_correctness_file():
-    """The arithmetic comment above _SWEEP_PRIORITY must be for the
-    CURRENT round (latest COMMITTED CORRECTNESS_r{N}.json + 1) — a stale
-    comment means the rotation was not rethought this round.
+    """``SWEEP_ROUND`` must be the CURRENT round (latest COMMITTED
+    CORRECTNESS_r{N}.json + 1); a stale round means the rotation was not
+    rethought this round, and its window reads last round's rows.
 
     Only committed artifacts count (r9 ADVICE): the driver drops the
     current round's own CORRECTNESS file as an untracked artifact
@@ -63,8 +98,6 @@ def test_sweep_comment_round_matches_latest_correctness_file():
     forcing function fire at the START of the next code round (when the
     round-N artifacts get committed) instead. Falls back to the glob if
     git is unavailable (fresh tarball)."""
-    import subprocess
-
     try:
         tracked = subprocess.run(
             ["git", "ls-files", "CORRECTNESS_r*.json"],
@@ -76,16 +109,11 @@ def test_sweep_comment_round_matches_latest_correctness_file():
         files = [os.path.join(REPO, f) for f in tracked]
     except (OSError, subprocess.CalledProcessError):
         files = glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    rounds = [
-        int(re.search(r"_r(\d+)", os.path.basename(f)).group(1)) for f in files
-    ]
+    rounds = [_round(f) for f in files]
     if not rounds:  # fresh clone without driver artifacts
         return
     current = max(rounds) + 1
-    src = open(os.path.join(REPO, "empdia_iceberg_spark", "__init__.py")).read()
-    m = re.search(r"# ROUND (\d+) ARITHMETIC", src)
-    assert m, "rotation arithmetic comment missing"
-    assert int(m.group(1)) == current, (
-        f"rotation comment says round {m.group(1)} but driver artifacts "
-        f"say the current round is {current} — rotate _SWEEP_PRIORITY first"
+    assert __spark_entry__.SWEEP_ROUND == current, (
+        f"SWEEP_ROUND is {__spark_entry__.SWEEP_ROUND} but driver artifacts "
+        f"say the current round is {current} — rotate the sweep first"
     )

@@ -1,8 +1,10 @@
 """Profile the driver-style correctness sweep: per-query wall time.
 
-Mimics the driver: for each registry entry, run the Spark query at sf0.01
-and collect, then run the DuckDB oracle (if any). Prints per-query seconds
-sorted descending so we can attack the slowest entries.
+Mimics the driver: for each name of ``__spark_entry__.queries()``, in the
+driver's sweep order, run the Spark query at sf0.01 and collect, then run
+the ``oracle_sql()`` DuckDB oracle (if any). Prints per-query seconds
+sorted descending so we can attack the slowest entries. ``first_n``
+profiles the first n names; 50 is the driver's per-round window.
 
 Usage: python tools/profile_sweep.py [first_n]
 """
@@ -17,7 +19,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import empdia_iceberg_spark as e
+import __spark_entry__ as e
 from empdia_iceberg_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -36,25 +38,25 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    specs = list(e.registry.specs().values())[:first_n]
+    oracles = e.oracle_sql()
     times: list[tuple[str, float, float]] = []
-    for spec in specs:
+    for name, fn in list(e.queries().items())[:first_n]:
         t0 = time.time()
         try:
-            df = spec.fn(get_spark(), SF_DIR)
+            df = fn(get_spark(), SF_DIR)
             df.collect()
         except Exception as exc:  # noqa: BLE001
-            print(f"SPARK FAIL {spec.name}: {exc}")
+            print(f"SPARK FAIL {name}: {exc}")
         t_spark = time.time() - t0
         t0 = time.time()
-        if spec.oracle:
+        if name in oracles:
             try:
-                con.execute(spec.oracle).fetchall()
+                con.execute(oracles[name]).fetchall()
             except Exception as exc:  # noqa: BLE001
-                print(f"ORACLE FAIL {spec.name}: {exc}")
+                print(f"ORACLE FAIL {name}: {exc}")
         t_duck = time.time() - t0
-        times.append((spec.name, t_spark, t_duck))
-        print(f"{spec.name:40s} spark={t_spark:7.2f}s duck={t_duck:6.2f}s", flush=True)
+        times.append((name, t_spark, t_duck))
+        print(f"{name:40s} spark={t_spark:7.2f}s duck={t_duck:6.2f}s", flush=True)
 
     print("\n=== slowest ===")
     for name, ts, td in sorted(times, key=lambda x: -(x[1] + x[2]))[:15]:
