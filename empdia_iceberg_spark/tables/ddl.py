@@ -26,8 +26,8 @@ completes the declarative statement surface: a user can stand up,
 evolve, mutate, and retire a snapshot table entirely in SQL strings,
 while every expression inside those statements — the CTAS SELECT, the
 column types, the DML clauses — is parsed by Catalyst/Spark itself;
-the layer here only finds clause boundaries (same discipline as
-dml.py, reusing its quote/paren-aware scanner).
+the layer here only finds clause boundaries with a quote/paren-aware
+scanner (dml.py leaves even that to Spark's parser).
 
 Scale posture: CTAS is one Spark job writing the table's initial
 snapshot under the target-file-size policy; ADD COLUMN is O(1) —
@@ -54,11 +54,7 @@ from empdia_iceberg_spark.functions.exact import exact_sum2, sql_sum2
 from empdia_iceberg_spark.operators.layout import morton_spark
 from empdia_iceberg_spark.registry import register
 from empdia_iceberg_spark.sources.tables import load
-from empdia_iceberg_spark.tables.dml import (
-    _find_keyword,
-    _split_top_level,
-    execute_dml,
-)
+from empdia_iceberg_spark.tables.dml import execute_dml
 from empdia_iceberg_spark.tables.manager import (
     DEFAULT_ROOT,
     SnapshotTable,
@@ -280,12 +276,77 @@ def show_create_table(
     return spark.createDataFrame([(stmt,)], "createtab_stmt string")
 
 
+def _split_top_level(s: str, sep: str = ",") -> list[str]:
+    """Split on ``sep`` at paren/quote depth 0 only — `'a' = 'v,w',
+    n => f(x, y)` must yield two items, not four. Backslash escapes
+    inside quotes are honored (Spark SQL string syntax): a comma after
+    `'it\\'s x, y'` must NOT split inside the literal."""
+    parts, buf, depth, quote = [], [], 0, None
+    i, n = 0, len(s)
+    while i < n:
+        ch = s[i]
+        if quote:
+            if ch == "\\" and i + 1 < n:
+                buf.append(ch)
+                buf.append(s[i + 1])
+                i += 2
+                continue
+            if ch == quote:
+                quote = None
+        elif ch in ("'", '"'):
+            quote = ch
+        elif ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif ch == sep and depth == 0:
+            parts.append("".join(buf))
+            buf = []
+            i += 1
+            continue
+        buf.append(ch)
+        i += 1
+    parts.append("".join(buf))
+    return [p.strip() for p in parts if p.strip()]
+
+
+def _find_keyword(s: str, kw: str) -> int:
+    """Index of the first TOP-LEVEL occurrence of keyword ``kw`` —
+    outside quotes and parens, on word boundaries — or -1."""
+    depth, quote = 0, None
+    k = len(kw)
+    i, n = 0, len(s)
+    while i < n:
+        ch = s[i]
+        if quote:
+            if ch == "\\" and i + 1 < n:
+                i += 2
+                continue
+            if ch == quote:
+                quote = None
+        elif ch in ("'", '"'):
+            quote = ch
+        elif ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif (
+            depth == 0
+            and s[i : i + k].upper() == kw
+            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
+            and (i + k >= n or not (s[i + k].isalnum() or s[i + k] == "_"))
+        ):
+            return i
+        i += 1
+    return -1
+
+
 def _split_columns(s: str) -> list[str]:
     """Split an ADD COLUMNS list on commas at paren AND angle-bracket
     depth 0 — `a decimal(12,2), b map<string,int>` must yield two
-    column definitions. dml's _split_top_level tracks only parens and
-    quotes (DML expressions have no bare type syntax); type lists do
-    not contain string literals, so a plain depth counter suffices."""
+    column definitions. _split_top_level tracks only parens and
+    quotes; type lists do not contain string literals, so a plain depth
+    counter suffices."""
     parts, buf, depth = [], [], 0
     for ch in s:
         if ch in "(<":
@@ -1688,7 +1749,7 @@ def execute_sql_script(
     root: str = DEFAULT_ROOT,
 ) -> list:
     """Run a multi-statement SQL script: statements split on TOP-LEVEL
-    semicolons (the dml quote/paren-aware scanner — a ';' inside a
+    semicolons (the quote/paren-aware `_split_top_level` — a ';' inside a
     string literal or parens never splits), executed in order through
     :func:`execute_sql`, results returned as a list (DataFrames for
     reads, result dicts for DDL/DML). Fails fast: the first error stops
@@ -1756,7 +1817,9 @@ def execute_sql(
             # whenever scoping or bounds can't be PROVEN)
             from .sqlprune import try_sql_prune
 
-            pruned = try_sql_prune(spark, df, statement, root, registered)
+            pruned = try_sql_prune(
+                spark, df, lambda: spark.sql(statement), root, registered
+            )
             if pruned is not None:
                 return pruned
         return df

@@ -5,15 +5,18 @@ manager's engines (append_checked, pruned copy-on-write
 update_where/delete_where_pruned, the clause-generalized pruned merge)
 or, on request, the merge-on-read delete path.
 
-Stock Spark SQL cannot parse UPDATE/DELETE against plain parquet (those
-statements exist only for v2 catalogs like the real Iceberg runtime,
-absent in this environment — SURVEY §7 slice 5). The front-end here
-keeps the USER surface declarative while staying Spark-first where it
-counts: the statement's WHERE clause and every assignment RHS are
-handed verbatim to ``F.expr`` — i.e. parsed, analyzed and optimized by
-Catalyst with the full Spark SQL expression language (functions, CASE,
-subquery-free scalar logic) — so the only thing the regex layer does is
-split the statement's clause skeleton, never interpret expressions.
+Spark's own SQL parser reads every statement
+(``sessionState().sqlParser().parsePlan``) into an InsertIntoStatement,
+UpdateTable, DeleteFromTable or MergeIntoTable node, and the front-end
+dispatches on the node's class. Spark executes UPDATE/DELETE/MERGE only
+against v2 catalogs like the real Iceberg runtime, absent in this
+environment (SURVEY §7 slice 5), so the nodes route to the snapshot
+engines instead. No statement text is scanned here: every WHERE and ON
+condition, assignment RHS, clause condition and VALUES entry reaches
+the engines as its parsed Catalyst expression wrapped in a ``Column``
+(the same unresolved expression ``F.expr`` builds from text), and query
+bodies (an INSERT source, a ``USING (subquery)``) are analyzed from
+their parsed plans.
 
 Scale posture (inherited from `_cow_rewrite`): an UPDATE/DELETE touching
 0.1% of a 100 TB table rewrites only the files that contain a matching
@@ -31,9 +34,8 @@ copy-on-write vs merge-on-read row-level-operation modes.
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException, ParseException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from empdia_iceberg_spark.functions.exact import exact_sum2, sql_sum2
@@ -44,271 +46,153 @@ from empdia_iceberg_spark.tables.manager import (
     SnapshotTable,
     scratch_root,
 )
+from empdia_iceberg_spark.tables.sqlprune import _seq, try_sql_prune
 
-_UPDATE_HEAD = re.compile(
-    r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*?)\s*;?\s*$", re.IGNORECASE | re.DOTALL
-)
-_DELETE_HEAD = re.compile(
-    r"^\s*DELETE\s+FROM\s+(\w+)\s*(.*?)\s*;?\s*$", re.IGNORECASE | re.DOTALL
-)
-
-
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren/quote depth 0 only — `SET a = f(x, y),
-    b = 'v,w'` must yield two assignments, not four. Backslash escapes
-    inside quotes are honored (Spark SQL string syntax): a comma after
-    `'it\\'s x, y'` must NOT split inside the literal."""
-    parts, buf, depth, quote = [], [], 0, None
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\" and i + 1 < n:
-                buf.append(ch)
-                buf.append(s[i + 1])
-                i += 2
-                continue
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
+# Spark's parser enforces the merge engine's first-match-wins guard
+# itself; these conditions keep the engine's wording for it
+_LAST_CLAUSE_SIDES = {
+    "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION": "MATCHED",
+    "NON_LAST_NOT_MATCHED_BY_TARGET_CLAUSE_OMIT_CONDITION": "NOT MATCHED",
+    "NON_LAST_NOT_MATCHED_BY_SOURCE_CLAUSE_OMIT_CONDITION": "NOT MATCHED BY SOURCE",
+}
 
 
-def _find_keyword(s: str, kw: str, start: int = 0) -> int:
-    """Index of the first TOP-LEVEL occurrence of keyword ``kw`` at or
-    after ``start`` — outside quotes and parens, on word boundaries —
-    or -1. The primitive under _split_at_keyword and the CASE/END
-    nesting tracker (which must distinguish 'keyword at end of string'
-    from 'not found' — an empty remainder is a real occurrence)."""
-    depth, quote = 0, None
-    k = len(kw)
-    i, n = start, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\" and i + 1 < n:
-                i += 2
-                continue
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and s[i : i + k].upper() == kw
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (i + k >= n or not (s[i + k].isalnum() or s[i + k] == "_"))
-        ):
-            return i
-        i += 1
-    return -1
+def _parse(spark: SparkSession, statement: str):
+    try:
+        return spark._jsparkSession.sessionState().sqlParser().parsePlan(statement)
+    except ParseException as ex:
+        side = _LAST_CLAUSE_SIDES.get(ex.getCondition())
+        if side is not None:
+            raise ValueError(
+                f"only the LAST WHEN {side} clause may omit AND <cond> "
+                "(first-match-wins makes later clauses unreachable)"
+            ) from ex
+        raise ValueError(f"cannot parse DML statement: {str(ex).strip()}") from ex
 
 
-def _split_at_keyword(s: str, kw: str) -> tuple[str, str | None]:
-    """Split ``s`` at the first TOP-LEVEL occurrence of keyword ``kw`` —
-    outside quotes and parens, on word boundaries — returning
-    (before, after) or (s, None). A quote-blind regex split broke valid
-    statements whose string literals contain the keyword. NOTE: an
-    occurrence with an EMPTY remainder also returns after=None (a bare
-    trailing WHERE means 'no WHERE clause'); keyword COUNTING must use
-    _find_keyword instead."""
-    i = _find_keyword(s, kw)
-    if i < 0:
-        return s.strip(), None
-    return s[:i].strip(), s[i + len(kw) :].strip() or None
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
 
 
-def _split_where(s: str) -> tuple[str, str | None]:
-    return _split_at_keyword(s, "WHERE")
+def _column(spark: SparkSession, expr) -> Column:
+    """A parsed Catalyst expression as a Column, with no text round-trip.
+    An expression's origin() span is no substitute for its text: a
+    BETWEEN condition's span starts at the keyword, dropping the column."""
+    sql = spark._jvm.org.apache.spark.sql
+    return Column(sql.Column(sql.classic.ExpressionColumnNode.apply(expr)))
 
 
-def _case_depth_delta(s: str) -> int:
-    """Net CASE-expression nesting change across ``s``: +1 per
-    top-level CASE keyword, -1 per END (quote/paren-aware, word
-    boundaries). Used to tell clause-level WHEN from expression-level
-    WHEN, which can only legally occur inside CASE ... END."""
-    depth, i = 0, 0
-    while True:
-        pos_c = _find_keyword(s, "CASE", i)
-        pos_e = _find_keyword(s, "END", i)
-        if pos_c < 0 and pos_e < 0:
-            return depth
-        if pos_e < 0 or (0 <= pos_c < pos_e):
-            depth += 1
-            i = pos_c + 4
-        else:
-            depth -= 1
-            i = pos_e + 3
+def _condition(spark: SparkSession, opt) -> Column | None:
+    return _column(spark, opt.get()) if opt.isDefined() else None
 
 
-def _split_merge_clauses(s: str) -> list[str]:
-    """Split ``ON <cond> WHEN ... WHEN ...`` at top-level clause
-    boundaries ONLY — a WHEN that starts a ``WHEN [NOT] MATCHED``
-    clause OUTSIDE any CASE ... END expression. Parens don't protect
-    expression-level WHENs (``SET v = CASE WHEN s.a > 0 THEN 1 ELSE 0
-    END`` is legal Spark SQL at depth 0), and the MATCHED lookahead
-    alone is not enough either — ``CASE WHEN matched THEN 1`` with a
-    column literally named `matched` would fake a boundary — so the
-    scanner tracks CASE/END nesting and splits only at CASE-depth 0."""
-    segs: list[str] = [""]
-    case_depth = 0
-    rest = s
-    while True:
-        before, after = _split_at_keyword(rest, "WHEN")
-        if after is None:
-            segs[-1] = f"{segs[-1]} {before}".strip()
-            return segs
-        case_depth += _case_depth_delta(before)
-        if case_depth == 0 and re.match(
-            r"^(NOT\s+)?MATCHED\b", after, re.IGNORECASE
-        ):
-            segs[-1] = f"{segs[-1]} {before}".strip()
-            segs.append("")  # a real clause boundary: start a new segment
-        else:
-            # expression-level WHEN (inside CASE ... END): glue the
-            # keyword back into the current segment and keep scanning
-            segs[-1] = f"{segs[-1]} {before} WHEN".strip()
-        rest = after
+def _dataframe(spark: SparkSession, plan) -> DataFrame:
+    """Analyze a parsed query node, as ``spark.sql`` does its text."""
+    sql = spark._jvm.org.apache.spark.sql
+    return DataFrame(sql.classic.Dataset.ofRows(spark._jsparkSession, plan), spark)
 
 
-def _parse_assignments(set_clause: str) -> dict[str, str]:
-    out: dict[str, str] = {}
-    for item in _split_top_level(set_clause):
-        m = re.match(r"^\s*(\w+)\s*=\s*(.+)$", item, re.DOTALL)
-        if not m:
-            raise ValueError(f"cannot parse SET assignment: {item!r}")
-        col, rhs = m.group(1), m.group(2).strip()
+def _table_name(node, what: str) -> str:
+    """The one-part name a statement's relation node refers to."""
+    if _kind(node) == "SubqueryAlias":
+        raise ValueError(f"{what}: a target alias is not supported")
+    parts = _seq(node.multipartIdentifier())
+    if len(parts) != 1:
+        raise ValueError(
+            f"{what}: multipart table name {'.'.join(parts)!r} is not "
+            "supported (snapshot tables have one-part names)"
+        )
+    return parts[0]
+
+
+def _assignments(spark: SparkSession, seq, t_names: set, what: str) -> dict:
+    """SET assignments as {col: Column}. The target column may be
+    qualified (``SET t.col = ...``, the canonical Spark/Iceberg MERGE
+    form) by the target table or its alias — assigning into the source
+    is not a thing."""
+    out: dict = {}
+    for a in _seq(seq):
+        *qual, col = _seq(a.key().nameParts())
+        if qual and ".".join(qual).lower() not in t_names:
+            raise ValueError(
+                f"{what} target {'.'.join(qual)}.{col} does not name the "
+                f"target table (expected one of {sorted(t_names)})"
+            )
         if col in out:
             raise ValueError(f"column {col!r} assigned twice in SET clause")
-        out[col] = rhs
-    if not out:
-        raise ValueError("UPDATE statement has an empty SET clause")
+        out[col] = _column(spark, a.value())
     return out
 
 
-def _parse_merge_assignments(set_clause: str) -> tuple[dict, dict]:
-    """SET assignments for MERGE: the target may be qualified with the
-    target table/alias (``SET t.col = ...`` — the canonical
-    Spark/Iceberg MERGE form). Returns ({col: rhs}, {col: qualifier});
-    qualifier validation is the statement parser's job (it knows the
-    aliases)."""
-    out: dict[str, str] = {}
-    quals: dict[str, str] = {}
-    for item in _split_top_level(set_clause):
-        m = re.match(r"^\s*(?:(\w+)\s*\.\s*)?(\w+)\s*=\s*(.+)$", item, re.DOTALL)
-        if not m:
-            raise ValueError(f"cannot parse MERGE SET assignment: {item!r}")
-        qual, col, rhs = m.group(1), m.group(2), m.group(3).strip()
-        if col in out:
-            raise ValueError(f"column {col!r} assigned twice in SET clause")
-        out[col] = rhs
-        if qual is not None:
-            quals[col] = qual
-    if not out:
-        raise ValueError("MERGE UPDATE has an empty SET clause")
-    return out, quals
-
-
-_INSERT_HEAD = re.compile(
-    r"^\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?(\w+)\s*(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
 def _execute_insert(
-    spark: SparkSession, head: "re.Match", root: str, mor_key: str | None
+    spark: SparkSession,
+    plan,
+    statement: str,
+    root: str,
+    mor_key: str | None,
+    mor_position: bool,
 ) -> dict:
     """``INSERT INTO t [(cols)] VALUES (...), (...) | SELECT ...`` —
     the append statement that completes the DML surface. The row source
-    is Catalyst-parsed in full (`SELECT * FROM VALUES ...` / the SELECT
-    itself); the column list maps positionally; omitted table columns
-    land NULL (append's additive alignment); untyped NULL literals are
-    pinned to the table type; everything else goes through
-    `_align_append_to_schema`'s conformance guard (safe widenings cast,
-    anything narrower raises before any write). Routed to
-    `append_checked` — the OCC commit loop, so concurrent inserts both
-    land.
+    is the statement's parsed query, analyzed by Catalyst; the column
+    list maps positionally; omitted table columns land NULL (append's
+    additive alignment); untyped NULL literals are pinned to the table
+    type; everything else goes through `_align_append_to_schema`'s
+    conformance guard (safe widenings cast, anything narrower raises
+    before any write). Routed to `append_checked` — the OCC commit
+    loop, so concurrent inserts both land.
 
     ``INSERT OVERWRITE [TABLE] t`` replaces the table's CONTENT in one
     snapshot commit (`overwrite`; history and time travel stay intact).
     The table schema wins: overwrite mode requires the statement to
     supply every table column (a column list that omits some would
     silently shrink the schema on a whole-table replace — refused)."""
+    if mor_position:
+        raise ValueError("mor_position applies to DELETE only")
     if mor_key is not None:
         raise ValueError("mor_key applies to DELETE only; INSERT appends")
-    mode = head.group(1).upper()
-    name, rest = head.group(2), head.group(3).strip().rstrip(";").strip()
+    name = _table_name(plan.table(), "INSERT")
+    for given, form in (
+        (plan.byName(), "BY NAME"),
+        (plan.ifPartitionNotExists(), "IF NOT EXISTS"),
+    ):
+        if given:
+            raise ValueError(f"INSERT ... {form} is not supported")
     static: dict | None = None
-    pm = re.match(r"^PARTITION\s*\(", rest, re.IGNORECASE)
-    if pm:
+    partition = _seq(plan.partitionSpec().toSeq())
+    if partition:
         # static partition overwrite: INSERT OVERWRITE t PARTITION
         # (col=lit, ...) SELECT <non-partition columns>
-        if mode != "OVERWRITE":
+        if not plan.overwrite():
             raise ValueError("PARTITION (...) clause requires INSERT OVERWRITE")
-        end = pm.end() - 1 + _matching_paren(rest[pm.end() - 1 :])
-        if end < pm.end() - 1:
-            raise ValueError("INSERT OVERWRITE: unbalanced PARTITION clause")
         static = {}
-        for item in _split_top_level(rest[pm.end() : end]):
-            am = re.match(r"^\s*(\w+)\s*=\s*(.+?)\s*$", item, re.DOTALL)
-            if not am:
+        for entry in partition:
+            col, value = entry._1(), entry._2()
+            if value.isEmpty():
                 raise ValueError(
-                    f"bad PARTITION entry (expected col = literal): {item!r}"
+                    f"bad PARTITION entry (expected col = literal): {col!r}"
                 )
-            static[am.group(1)] = F.expr(am.group(2))
-        rest = rest[end + 1 :].strip()
-    cols: list[str] | None = None
-    if rest.startswith("("):
-        end = _matching_paren(rest)
-        if end < 0:
-            raise ValueError("INSERT INTO: unbalanced parens in column list")
-        cols = [c.strip() for c in _split_top_level(rest[1:end])]
-        for c in cols:
-            if not re.fullmatch(r"\w+", c):
-                raise ValueError(f"INSERT INTO: bad column name {c!r}")
-        if len(set(cols)) != len(cols):
-            raise ValueError("INSERT INTO: duplicate target column")
-        rest = rest[end + 1 :].strip()
-    if re.match(r"^VALUES\b", rest, re.IGNORECASE):
-        df = spark.sql(f"SELECT * FROM {rest}")
-    elif re.match(r"^SELECT\b", rest, re.IGNORECASE):
-        df = spark.sql(rest)
-        # partition/stat pruning for the INSERT's source SELECT (r15):
-        # `INSERT INTO t2 SELECT ... FROM t WHERE <partition pred>` is
-        # the backfill shape — the source read prunes exactly like a
-        # standalone SELECT (same Catalyst-proven scoping; falls back
-        # to the full plan whenever unprovable)
-        try:
-            from .ddl import materialize_tables
-            from .sqlprune import try_sql_prune
+            # the parser keeps a literal's string form; the cast to the
+            # table type below restores its value
+            static[col] = F.lit(value.get())
+    cols = _seq(plan.userSpecifiedCols()) or None
+    if cols is not None and len(set(cols)) != len(cols):
+        raise ValueError("INSERT INTO: duplicate target column")
+    # partition/stat pruning for the INSERT's source (r15): `INSERT INTO
+    # t2 SELECT ... FROM t WHERE <partition pred>` is the backfill
+    # shape — the source read prunes exactly like a standalone SELECT
+    # (same Catalyst-proven scoping; falls back to the full plan
+    # whenever unprovable)
+    from .ddl import materialize_tables
 
-            reg = materialize_tables(spark, rest, root)
-            pruned = try_sql_prune(spark, df, rest, root, reg)
-            if pruned is not None:
-                df = pruned
-        except Exception:
-            pass
-    else:
-        raise ValueError(
-            f"INSERT INTO expects VALUES (...) or SELECT ...: {rest[:60]!r}"
-        )
+    query = plan.query()
+    registered = materialize_tables(spark, statement, root)
+    df = _dataframe(spark, query)
+    pruned = try_sql_prune(
+        spark, df, lambda: _dataframe(spark, query), root, registered
+    )
+    if pruned is not None:
+        df = pruned
     t = SnapshotTable(spark, name, root)
     cur = t.current_version()
     if cur is None:
@@ -343,7 +227,7 @@ def _execute_insert(
             for c, dt in df.dtypes
         ]
     )
-    if mode == "OVERWRITE":
+    if plan.overwrite():
         spec = t.current_spec()
         if static is not None:
             # static form: the SELECT supplies the non-partition columns
@@ -405,66 +289,22 @@ def _execute_insert(
     return {"op": "insert", "table": name, "version": version, "audit": None}
 
 
-# Optional target alias must not swallow the USING keyword.
-# `MERGE WITH SCHEMA EVOLUTION INTO` (r13, Delta's spelling): the flag
-# auto-ADDs source-only columns through the metadata-only evolve before
-# the clause engine runs; without it the type/column guards stand.
-_MERGE_HEAD = re.compile(
-    r"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+"
-    r"(\w+)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?\s+USING\s+(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_EQ_COND = re.compile(r"^\s*([A-Za-z_]\w*(?:\.\w+)?)\s*=\s*([A-Za-z_]\w*(?:\.\w+)?)\s*$")
 
-
-def _matching_paren(s: str) -> int:
-    """Index of the ``)`` closing the ``(`` that ``s`` starts with
-    (quote-aware), or -1 when unbalanced."""
-    depth, quote = 0, None
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\" and i + 1 < n:
-                i += 2
-                continue
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
-
-
-def _resolve_merge_source(spark: SparkSession, src_part: str, root: str):
-    """Resolve the USING clause: a temp view / catalog table name, a
-    snapshot table name, or a parenthesized subquery (Catalyst-parsed
-    via spark.sql), each with an optional ``[AS] alias`` (required for
-    subqueries). Returns (DataFrame, alias)."""
-    src_part = src_part.strip()
-    if src_part.startswith("("):
-        end = _matching_paren(src_part)
-        if end < 0:
-            raise ValueError("MERGE USING: unbalanced parens in subquery source")
-        df = spark.sql(src_part[1:end])
-        m = re.match(r"^\s*(?:AS\s+)?(\w+)\s*$", src_part[end + 1 :], re.IGNORECASE)
-        if not m:
+def _merge_source(spark: SparkSession, node, root: str):
+    """Resolve the USING relation: a temp view / catalog table name, a
+    snapshot table name, or a subquery (analyzed from its parsed plan),
+    each with an optional ``[AS] alias`` (required for subqueries).
+    Returns (DataFrame, alias)."""
+    alias = None
+    if _kind(node) == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    if _kind(node) != "UnresolvedRelation":
+        if alias is None:
             raise ValueError("MERGE USING: a subquery source requires an alias")
-        return df, m.group(1)
-    m = re.match(r"^(\w+)(?:\s+(?:AS\s+)?(\w+))?\s*$", src_part, re.IGNORECASE | re.DOTALL)
-    if not m:
-        raise ValueError(f"MERGE USING: cannot parse source {src_part[:60]!r}")
-    name, alias = m.group(1), m.group(2) or m.group(1)
-    from pyspark.errors import AnalysisException
-
+        return _dataframe(spark, node), alias
+    name = _table_name(node, "MERGE USING")
     try:
-        return spark.table(name), alias
+        return spark.table(name), alias or name
     except AnalysisException:
         # not a temp view / catalog table: try the snapshot-table
         # namespace, and say so clearly when that misses too (a typo'd
@@ -475,35 +315,32 @@ def _resolve_merge_source(spark: SparkSession, src_part: str, root: str):
                 f"MERGE USING: unknown source {name!r} (no temp view, "
                 f"catalog table, or snapshot table by that name)"
             )
-        return t.read(), alias
+        return t.read(), alias or name
 
 
-def _merge_key(cond: str, target: str, t_alias: str | None, s_alias: str) -> str:
-    """Extract the single shared key column from the ON condition. The
-    engine's merge keys on ONE column name present in both sides, so
-    the condition must be an equality of the same-named column, each
-    side optionally qualified by the target (name or alias) or the
-    source alias."""
-    m = _EQ_COND.match(cond)
-    if not m:
+def _merge_key(cond, t_names: set, s_alias: str) -> str:
+    """Extract the single shared key column from the parsed ON
+    condition. The engine's merge keys on ONE column name present in
+    both sides, so the condition must be an equality of the same-named
+    column, each side optionally qualified by the target (name or
+    alias, ``t_names``) or the source alias."""
+    sides = (cond.left(), cond.right()) if _kind(cond) == "EqualTo" else ()
+    if not sides or not all(
+        _kind(e) == "UnresolvedAttribute" and e.nameParts().size() <= 2
+        for e in sides
+    ):
         raise ValueError(
             "MERGE ON must be a single key equality "
-            f"(t.key = s.key); got {cond[:60]!r}"
+            f"(t.key = s.key); got {cond.sql()[:60]!r}"
         )
-
-    def split(q: str) -> tuple[str | None, str]:
-        parts = q.split(".")
-        return (None, parts[0]) if len(parts) == 1 else (parts[0], parts[1])
-
-    (q1, c1), (q2, c2) = split(m.group(1)), split(m.group(2))
+    (*q1, c1), (*q2, c2) = (_seq(e.nameParts()) for e in sides)
     if c1.lower() != c2.lower():
         raise ValueError(
             f"MERGE ON must equate the SAME column name on both sides "
             f"(the engine keys on one shared column); got {c1!r} = {c2!r}"
         )
-    t_names = {target.lower()} | ({t_alias.lower()} if t_alias else set())
     s_names = {s_alias.lower()}
-    quals = [q.lower() for q in (q1, q2) if q is not None]
+    quals = [q[0].lower() for q in (q1, q2) if q]
     for q in quals:
         if q not in t_names | s_names:
             raise ValueError(f"MERGE ON references unknown qualifier {q!r}")
@@ -513,156 +350,79 @@ def _merge_key(cond: str, target: str, t_alias: str | None, s_alias: str) -> str
     ):
         raise ValueError(
             "MERGE ON must compare a target column to a source column, "
-            f"not two of the same side: {cond[:60]!r}"
+            f"not two of the same side: {cond.sql()[:60]!r}"
         )
     return c1
 
 
-def _find_keyword_outside_case(s: str, kw: str) -> int:
-    """First top-level occurrence of ``kw`` that is NOT inside a
-    CASE ... END expression (a qualifier condition may contain CASE
-    WHEN ... THEN, whose THEN must not terminate the condition)."""
-    i = 0
-    while True:
-        pos = _find_keyword(s, kw, i)
-        if pos < 0:
-            return -1
-        if _case_depth_delta(s[:pos]) == 0:
-            return pos
-        i = pos + len(kw)
-
-
-def _parse_when_clause(text: str) -> tuple[str, dict]:
-    """One WHEN clause (leading WHEN already consumed):
-    ``[NOT] MATCHED [AND <cond>] THEN <action>``. The optional AND
-    qualifier is a raw Spark SQL boolean handed to Catalyst; for
-    MATCHED clauses it may reference both aliases, for NOT MATCHED
-    only the source. Qualifier semantics are SQL MERGE's: the action
-    applies only where the condition is TRUE — a matched row failing
-    it passes through unchanged, a not-matched source row failing it
-    is simply not inserted."""
-    t = text.strip()
-    mm = re.match(
-        r"^(NOT\s+)?MATCHED(?:\s+BY\s+(SOURCE|TARGET))?\b\s*(.*)$",
-        t,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not mm:
-        raise ValueError(f"cannot parse MERGE WHEN clause: {t[:80]!r}")
-    negated, by, rest = (
-        bool(mm.group(1)),
-        (mm.group(2) or "").upper(),
-        mm.group(3).strip(),
-    )
-    if by and not negated:
-        raise ValueError(
-            f"WHEN MATCHED takes no BY qualifier: {t[:80]!r}"
+def _merge_clause(spark: SparkSession, action, t_names: set) -> dict:
+    """One parsed WHEN clause as a `SnapshotTable.merge` clause spec.
+    The optional AND qualifier is a Catalyst boolean; for MATCHED
+    clauses it may reference both aliases, for NOT MATCHED only the
+    source. Qualifier semantics are SQL MERGE's: the action applies
+    only where the condition is TRUE — a matched row failing it passes
+    through unchanged, a not-matched source row failing it is simply
+    not inserted."""
+    kind = _kind(action)
+    cond = _condition(spark, action.condition())
+    if kind == "DeleteAction":
+        return {"action": "delete", "cond": cond}
+    if kind == "UpdateStarAction":
+        return {"action": "update", "set": "*", "cond": cond}
+    if kind == "UpdateAction":
+        assigned = _assignments(
+            spark, action.assignments(), t_names, "MERGE UPDATE SET"
         )
-    by_source = negated and by == "SOURCE"  # BY TARGET = plain NOT MATCHED
-    cond: str | None = None
-    if re.match(r"^AND\b", rest, re.IGNORECASE):
-        rest2 = rest[3:].strip()
-        pos = _find_keyword_outside_case(rest2, "THEN")
-        if pos < 0:
-            raise ValueError(
-                f"WHEN ... AND <cond> clause lacks a THEN: {t[:80]!r}"
-            )
-        cond = rest2[:pos].strip()
-        if not cond:
-            raise ValueError(f"empty WHEN ... AND condition: {t[:80]!r}")
-        action = rest2[pos + 4 :].strip()
-    elif re.match(r"^THEN\b", rest, re.IGNORECASE):
-        action = rest[4:].strip()
-    else:
-        raise ValueError(f"cannot parse MERGE WHEN clause: {t[:80]!r}")
-
-    if not negated or by_source:
-        kind = "not_matched_by_source" if by_source else "matched"
-        label = "WHEN NOT MATCHED BY SOURCE" if by_source else "WHEN MATCHED"
-        m = re.match(r"^UPDATE\s+SET\s+(.+)$", action, re.IGNORECASE | re.DOTALL)
-        if m:
-            body = m.group(1).strip().rstrip(";").strip()
-            if body == "*":
-                if by_source:
-                    raise ValueError(
-                        "WHEN NOT MATCHED BY SOURCE cannot UPDATE SET * — "
-                        "there is no source row to take values from"
-                    )
-                return "matched", {"action": "update", "set": "*", "cond": cond}
-            set_spec, set_quals = _parse_merge_assignments(body)
-            return kind, {"action": "update", "set": set_spec,
-                          "set_quals": set_quals, "cond": cond}
-        if re.match(r"^DELETE\s*;?\s*$", action, re.IGNORECASE):
-            return kind, {"action": "delete", "cond": cond}
-        raise ValueError(f"cannot parse {label} action: {action[:80]!r}")
-
-    if re.match(r"^INSERT\s+\*\s*;?\s*$", action, re.IGNORECASE):
-        return "not_matched", {"action": "insert", "cols": None, "vals": None,
-                               "cond": cond}
-    m = re.match(
-        r"^INSERT\s*\((.*?)\)\s*VALUES\s*\((.*)\)\s*;?\s*$",
-        action,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        cols = [c.strip() for c in _split_top_level(m.group(1))]
-        vals = _split_top_level(m.group(2))
-        if len(cols) != len(vals):
-            raise ValueError(
-                f"MERGE INSERT: {len(cols)} columns but {len(vals)} values"
-            )
-        if len(set(cols)) != len(cols):
-            raise ValueError("MERGE INSERT: duplicate target column")
-        for c in cols:
-            if not re.fullmatch(r"\w+", c):
-                raise ValueError(f"MERGE INSERT: bad column name {c!r}")
-        return "not_matched", {"action": "insert", "cols": cols, "vals": vals,
-                               "cond": cond}
-    raise ValueError(f"cannot parse WHEN NOT MATCHED action: {action[:80]!r}")
+        return {"action": "update", "set": assigned, "cond": cond}
+    if kind == "InsertStarAction":
+        return {"action": "insert", "cols": None, "vals": None, "cond": cond}
+    cols, vals = [], []  # InsertAction: INSERT (cols) VALUES (exprs)
+    for a in _seq(action.assignments()):
+        parts = _seq(a.key().nameParts())
+        if len(parts) != 1:
+            raise ValueError(f"MERGE INSERT: bad column name {'.'.join(parts)!r}")
+        cols.append(parts[0])
+        vals.append(_column(spark, a.value()))
+    if len(set(cols)) != len(cols):
+        raise ValueError("MERGE INSERT: duplicate target column")
+    return {"action": "insert", "cols": cols, "vals": vals, "cond": cond}
 
 
 def _execute_merge(
-    spark: SparkSession, head: "re.Match", root: str, mor_key: str | None
+    spark: SparkSession,
+    plan,
+    root: str,
+    mor_key: str | None,
+    mor_position: bool,
 ) -> dict:
+    if mor_position:
+        raise ValueError("mor_position applies to DELETE only")
     if mor_key is not None:
         raise ValueError("mor_key applies to DELETE only; MERGE routes to the "
                          "pruned copy-on-write merge engine")
-    target, t_alias, rest = head.group(2), head.group(3), head.group(4)
-    evolve = head.group("evolve") is not None
-    src_part, on_rest = _split_at_keyword(rest.rstrip().rstrip(";"), "ON")
-    if on_rest is None:
-        raise ValueError("MERGE requires an ON clause")
-    when_segs = _split_merge_clauses(on_rest)
-    cond = when_segs[0]
-    if len(when_segs) < 2:
-        raise ValueError("MERGE requires at least one WHEN clause")
-    source_df, s_alias = _resolve_merge_source(spark, src_part, root)
-    key = _merge_key(cond, target, t_alias, s_alias)
-    clauses: dict = {
-        "matched": [],
-        "not_matched": [],
-        "not_matched_by_source": [],
-        "target_alias": t_alias or target,
-        "source_alias": s_alias,
-    }
+    node, t_alias = plan.targetTable(), None
+    if _kind(node) == "SubqueryAlias":
+        t_alias, node = node.alias(), node.child()
+    target = _table_name(node, "MERGE INTO")
+    source_df, s_alias = _merge_source(spark, plan.sourceTable(), root)
     t_names = {target.lower(), (t_alias or target).lower()}
-    for seg in when_segs[1:]:
-        kind, spec = _parse_when_clause(seg)
-        for col, qual in spec.pop("set_quals", {}).items():
-            # qualified SET targets (SET t.col = ...) must name the
-            # TARGET; assigning into the source is not a thing
-            if qual.lower() not in t_names:
-                raise ValueError(
-                    f"MERGE UPDATE SET target {qual}.{col} does not name "
-                    f"the target table (expected one of {sorted(t_names)})"
-                )
-        # multiple clauses per side are legal and evaluate
-        # first-match-wins in statement order; the engine enforces that
-        # only the last clause of a side may omit AND <cond>
-        clauses[kind].append(spec)
+    key = _merge_key(plan.mergeCondition(), t_names, s_alias)
+    # multiple clauses per side are legal and evaluate first-match-wins
+    # in statement order; the engine enforces that only the last clause
+    # of a side may omit AND <cond>
+    clauses: dict = {
+        side: [_merge_clause(spark, a, t_names) for a in _seq(actions)]
+        for side, actions in (
+            ("matched", plan.matchedActions()),
+            ("not_matched", plan.notMatchedActions()),
+            ("not_matched_by_source", plan.notMatchedBySourceActions()),
+        )
+    }
+    clauses["target_alias"] = t_alias or target
+    clauses["source_alias"] = s_alias
     t = SnapshotTable(spark, target, root)
     evolved: list[str] = []
-    if evolve:
+    if plan.withSchemaEvolution():
         # WITH SCHEMA EVOLUTION (Delta semantics): every source column
         # absent from the target's committed schema auto-ADDs via the
         # metadata-only evolve — one JSON commit per column, zero data
@@ -697,6 +457,58 @@ def _execute_merge(
     }
 
 
+def _execute_update(
+    spark: SparkSession,
+    plan,
+    root: str,
+    mor_key: str | None,
+    mor_position: bool,
+) -> dict:
+    if mor_key is not None or mor_position:
+        raise ValueError("mor_key/mor_position apply to DELETE only "
+                         "(Iceberg v2 deletes); UPDATE is copy-on-write")
+    name = _table_name(plan.table(), "UPDATE")
+    assignments = _assignments(
+        spark, plan.assignments(), {name.lower()}, "UPDATE SET"
+    )
+    cond = _condition(spark, plan.condition())
+    t = SnapshotTable(spark, name, root)
+    version, audit = t.update_where(
+        F.lit(True) if cond is None else cond, assignments
+    )
+    return {"op": "update", "table": name, "version": version, "audit": audit}
+
+
+def _execute_delete(
+    spark: SparkSession,
+    plan,
+    root: str,
+    mor_key: str | None,
+    mor_position: bool,
+) -> dict:
+    name = _table_name(plan.table(), "DELETE")
+    t = SnapshotTable(spark, name, root)
+    cond = _column(spark, plan.condition())  # TRUE without a WHERE
+    if mor_key is not None and mor_position:
+        raise ValueError(
+            "mor_key and mor_position are mutually exclusive DELETE "
+            "strategies (equality vs position deletes)"
+        )
+    if mor_key is not None:
+        version = t.delete_where_mor(cond, key=mor_key)
+        return {"op": "delete-mor", "table": name, "version": version,
+                "audit": None}
+    if mor_position:
+        # Iceberg v2 position deletes (r14): O(1)-sized delete file
+        # of (file_path, row_index) coordinates — the cheap point-
+        # correction path; see SnapshotTable.delete_where_position
+        version = t.delete_where_position(cond)
+        return {"op": "delete-mor-position", "table": name,
+                "version": version, "audit": None}
+    version, audit = t.delete_where_pruned(cond)
+    return {"op": "delete", "table": name, "version": version, "audit": audit}
+
+
 def execute_dml(
     spark: SparkSession,
     statement: str,
@@ -704,7 +516,8 @@ def execute_dml(
     mor_key: str | None = None,
     mor_position: bool = False,
 ) -> dict:
-    """Execute one UPDATE or DELETE statement against a snapshot table.
+    """Execute one INSERT, UPDATE, DELETE or MERGE statement against a
+    snapshot table.
 
     Returns {"op", "table", "version", "audit"}; ``audit`` carries the
     pruning decision (dirs_rewritten / dirs_reused) for COW paths and
@@ -714,76 +527,40 @@ def execute_dml(
 
     MERGE INTO (r11, VERDICT r10 ask #2)::
 
-        MERGE INTO t [AS a] USING <view|table|(subquery) alias> s
+        MERGE [WITH SCHEMA EVOLUTION] INTO t [AS a]
+        USING <view|table|(subquery) alias> s
         ON t.key = s.key
         [WHEN MATCHED [AND cond] THEN UPDATE SET * | SET col = expr, ...]...
         [WHEN MATCHED [AND cond] THEN DELETE]...
         [WHEN NOT MATCHED [AND cond] THEN INSERT * | INSERT (cols) VALUES (exprs)]...
+        [WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET col = expr, ... | DELETE]...
 
     Clauses repeat; each side evaluates FIRST-MATCH-WINS in statement
     order and only its last clause may omit AND <cond>. Star forms
     follow Delta SET * semantics (source must contain every table
     column; extras such as a CDC op column are ignored), so the
-    canonical CDC apply statement runs verbatim.
+    canonical CDC apply statement runs verbatim. MERGE routes to the
+    proven pruned merge engine (`SnapshotTable.merge` with a clause
+    spec of parsed Columns); the returned audit carries the engine's
+    pruning decision.
 
-    routed to the proven pruned merge engine (`SnapshotTable.merge`
-    with a clause spec): Catalyst parses every assignment/VALUES
-    expression, the scanner only finds clause boundaries, and the
-    returned audit carries the engine's pruning decision."""
-    m = _MERGE_HEAD.match(statement)
-    if m:
-        if mor_position:
-            raise ValueError("mor_position applies to DELETE only")
-        return _execute_merge(spark, m, root, mor_key)
-    m = _INSERT_HEAD.match(statement)
-    if m:
-        if mor_position:
-            raise ValueError("mor_position applies to DELETE only")
-        return _execute_insert(spark, m, root, mor_key)
-    m = _UPDATE_HEAD.match(statement)
-    if m:
-        name, rest = m.group(1), m.group(2)
-        set_clause, where = _split_where(rest)
-        if not set_clause:
-            raise ValueError("UPDATE statement has an empty SET clause")
-        if mor_key is not None or mor_position:
-            raise ValueError("mor_key/mor_position apply to DELETE only "
-                             "(Iceberg v2 deletes); UPDATE is copy-on-write")
-        t = SnapshotTable(spark, name, root)
-        cond = F.expr(where) if where else F.lit(True)
-        assignments = {
-            c: F.expr(rhs) for c, rhs in _parse_assignments(set_clause).items()
-        }
-        version, audit = t.update_where(cond, assignments)
-        return {"op": "update", "table": name, "version": version, "audit": audit}
-    m = _DELETE_HEAD.match(statement)
-    if m:
-        name, rest = m.group(1), m.group(2)
-        before, where = _split_where(rest)
-        if before:
-            raise ValueError(
-                f"unexpected tokens after DELETE FROM {name}: {before[:40]!r}"
-            )
-        t = SnapshotTable(spark, name, root)
-        cond = F.expr(where) if where else F.lit(True)
-        if mor_key is not None and mor_position:
-            raise ValueError(
-                "mor_key and mor_position are mutually exclusive DELETE "
-                "strategies (equality vs position deletes)"
-            )
-        if mor_key is not None:
-            version = t.delete_where_mor(cond, key=mor_key)
-            return {"op": "delete-mor", "table": name, "version": version,
-                    "audit": None}
-        if mor_position:
-            # Iceberg v2 position deletes (r14): O(1)-sized delete file
-            # of (file_path, row_index) coordinates — the cheap point-
-            # correction path; see SnapshotTable.delete_where_position
-            version = t.delete_where_position(cond)
-            return {"op": "delete-mor-position", "table": name,
-                    "version": version, "audit": None}
-        version, audit = t.delete_where_pruned(cond)
-        return {"op": "delete", "table": name, "version": version, "audit": audit}
+    Spark's parser reads the statement, so its grammar errors surface
+    as ``ValueError("cannot parse DML statement: <Spark's message>")``.
+    Forms it parses that no engine here supports raise a ValueError
+    naming the form: a DELETE or UPDATE target alias, a multipart table
+    name, and INSERT ... BY NAME, REPLACE WHERE or IF NOT EXISTS."""
+    plan = _parse(spark, statement)
+    kind = _kind(plan)
+    if kind == "InsertIntoStatement":
+        return _execute_insert(spark, plan, statement, root, mor_key, mor_position)
+    if kind == "UpdateTable":
+        return _execute_update(spark, plan, root, mor_key, mor_position)
+    if kind == "DeleteFromTable":
+        return _execute_delete(spark, plan, root, mor_key, mor_position)
+    if kind == "MergeIntoTable":
+        return _execute_merge(spark, plan, root, mor_key, mor_position)
+    if kind == "OverwriteByExpression":
+        raise ValueError("INSERT ... REPLACE WHERE is not supported")
     raise ValueError(
         f"unsupported DML statement (expected INSERT INTO ..., UPDATE ... "
         f"SET ... [WHERE ...], DELETE FROM ... [WHERE ...], or MERGE INTO "
@@ -846,8 +623,8 @@ def _segment_rollup(t: SnapshotTable, audit: dict) -> DataFrame:
     """,
     doc="Declarative SQL `UPDATE ... SET ... WHERE ...` over a snapshot "
     "table (execute_dml -> pruned copy-on-write update_where). The "
-    "statement's WHERE and both assignment RHSs are Catalyst-parsed "
-    "(F.expr); assignments apply SIMULTANEOUSLY against pre-update "
+    "statement's WHERE and both assignment RHSs come from Spark's SQL "
+    "parser as Columns; assignments apply SIMULTANEOUSLY against pre-update "
     "values (standard SQL UPDATE). The table lands as three key-range "
     "dirs and the predicate is confined to the top third, so the "
     "emitted audit columns (dirs_rewritten=1, dirs_reused=2) hash-check "

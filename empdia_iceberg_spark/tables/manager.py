@@ -1979,11 +1979,11 @@ class SnapshotTable:
              "target_alias": str, "source_alias": str}
 
         where a matched spec is ``{"action": "update", "set": "*" |
-        {col: sql}, "cond": None | sql}`` or ``{"action": "delete",
-        "cond": None | sql}``, and a not-matched spec is ``{"action":
-        "insert", "cols": None | [col, ...], "vals": None | [sql, ...],
-        "cond": None | sql}`` (cols None => INSERT *). An optional
-        ``"not_matched_by_source"`` list (Delta/SQL:2023) holds
+        {col: Column}, "cond": None | Column}`` or ``{"action":
+        "delete", "cond": None | Column}``, and a not-matched spec is
+        ``{"action": "insert", "cols": None | [col, ...], "vals": None |
+        [Column, ...], "cond": None | Column}`` (cols None => INSERT *).
+        An optional ``"not_matched_by_source"`` list (Delta/SQL:2023) holds
         update/delete specs applied to UNMATCHED TARGET rows — SET * is
         illegal there (no source row), assignments/conds may reference
         only the target alias, the empty-source no-op short-circuit is
@@ -2000,8 +2000,9 @@ class SnapshotTable:
         THEN DELETE / WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED
         AND op<>'D' THEN INSERT *).
 
-        Assignment/VALUES expressions are raw Spark SQL strings handed
-        to Catalyst (``F.expr``); in assignments they may reference both
+        Conditions and assignment/VALUES expressions are Columns
+        (``F.expr(...)``, or the parsed expressions the SQL front-end
+        hands over); in assignments they may reference both
         ``target_alias.col`` and ``source_alias.col`` (unqualified
         shared names raise Spark's ambiguity error — qualify them).
         Sources for the *-forms must CONTAIN every table column (Delta
@@ -2407,7 +2408,7 @@ class SnapshotTable:
                 ct = (
                     F.lit(True)
                     if c is None
-                    else F.coalesce(F.expr(c).cast("boolean"), F.lit(False))
+                    else F.coalesce(c.cast("boolean"), F.lit(False))
                 )
                 claimed = claimed | ct
             base_of = {os.path.basename(d): d for d in meta["dirs"]}
@@ -2725,7 +2726,7 @@ class SnapshotTable:
             c = spec.get("cond")
             if c is None:
                 return F.lit(True)
-            return F.coalesce(F.expr(c).cast("boolean"), F.lit(False))
+            return F.coalesce(c.cast("boolean"), F.lit(False))
 
         pieces: list[DataFrame] = []
         target_read = (
@@ -2768,7 +2769,7 @@ class SnapshotTable:
                     if spec["action"] == "update":
                         proj = [
                             (
-                                F.expr(spec["set"][c])
+                                spec["set"][c]
                                 if c in spec["set"]
                                 else F.col(f"{t_a}.{c}")
                             ).alias(c)
@@ -2850,13 +2851,13 @@ class SnapshotTable:
                     applies = remaining & ct
                     if spec["action"] == "update":
                         assign_of = (
-                            {c: f"{s_a}.{c}" for c in tcols}
+                            {c: F.col(f"{s_a}.{c}") for c in tcols}
                             if spec["set"] == "*"
                             else spec["set"]
                         )
                         proj = [
                             (
-                                F.expr(assign_of[c])
+                                assign_of[c]
                                 if c in assign_of
                                 else F.col(f"{t_a}.{c}")
                             ).alias(c)
@@ -2902,7 +2903,7 @@ class SnapshotTable:
                     by_col = dict(zip(spec["cols"], spec["vals"]))
                     proj = [
                         (
-                            F.expr(by_col[c])
+                            by_col[c]
                             if c in by_col
                             else F.lit(None).cast(ttypes[c])
                         ).alias(c)

@@ -43,6 +43,7 @@ from __future__ import annotations
 import datetime
 import re
 import warnings
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -385,16 +386,18 @@ def collect_scan_occurrences(df: DataFrame, table_dirs: dict) -> dict:
 def try_sql_prune(
     spark: SparkSession,
     df: DataFrame,
-    statement: str,
+    analyze: Callable[[], DataFrame],
     root: str,
     registered: list,
 ) -> DataFrame | None:
-    """Attempt partition pruning for an analyzed SELECT/WITH DataFrame
-    over auto-materialized snapshot-table views. Returns the re-planned
-    DataFrame when pruning engaged for at least one table, else None
-    (caller keeps the full-read plan). Never raises: any unexpected
-    failure warns with its reason and falls back — pruning is a
-    physical optimization, the full-read plan is always available."""
+    """Attempt partition pruning for an analyzed query DataFrame over
+    auto-materialized snapshot-table views; ``analyze`` analyzes the
+    same query again (``spark.sql`` on its text, or its parsed plan).
+    Returns the re-planned DataFrame when pruning engaged for at least
+    one table, else None (caller keeps the full-read plan). Never
+    raises: any unexpected failure warns with its reason and falls
+    back — pruning is a physical optimization, the full-read plan is
+    always available."""
     try:
         full_views = dict(registered)
         # ONE version listing and metadata read per table and statement:
@@ -433,7 +436,7 @@ def try_sql_prune(
             return None
         try:
             # re-analysis binds the pruned views into the NEW plan ...
-            out = spark.sql(statement)
+            out = analyze()
         finally:
             # ... and the full views come straight back (a DataFrame
             # keeps the plan it analyzed; later statements re-register

@@ -150,7 +150,7 @@ def test_by_source_discovery_fused_equals_separate(spark):
             "matched": {"action": "update", "set": "*"},
             "not_matched": None,
             "not_matched_by_source": [
-                {"action": "delete", "cond": "t.k >= 2000"},
+                {"action": "delete", "cond": F.expr("t.k >= 2000")},
             ],
             "target_alias": "t",
             "source_alias": "s",

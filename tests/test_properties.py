@@ -622,7 +622,7 @@ def test_tblproperties_pairs_round_trip(pairs):
     TBLPROPERTIES list parses back to exactly the written pairs —
     commas and parens inside VALUES must not split the list."""
     from empdia_iceberg_spark.tables.ddl import _PROP_PAIR
-    from empdia_iceberg_spark.tables.dml import _split_top_level
+    from empdia_iceberg_spark.tables.ddl import _split_top_level
 
     rendered = ", ".join(f"'{k}' = '{v}'" for k, v in pairs)
     items = _split_top_level(rendered)
@@ -653,7 +653,7 @@ def test_call_argument_parsing_round_trips(args, kwargs):
     commas, '=>' and parens — the quote-aware splitter must hold)."""
     import re as _re
 
-    from empdia_iceberg_spark.tables.dml import _split_top_level
+    from empdia_iceberg_spark.tables.ddl import _split_top_level
 
     toks = [str(a) if isinstance(a, int) else f"'{a}'" for a in args]
     toks += [f"{k} => {v}" for k, v in kwargs.items()]

@@ -1291,6 +1291,9 @@ def test_execute_dml_update_assignments_are_simultaneous(spark):
     execute_dml(spark, "UPDATE t_dml_swap_unit SET a = b, b = a WHERE k = 1")
     row = t.read().first()
     assert (row.a, row.b) == (20, 10)
+    execute_dml(spark, "UPDATE t_dml_swap_unit SET `a` = b, `b` = a WHERE k = 1")
+    row = t.read().first()
+    assert (row.a, row.b) == (10, 20)
     t.drop()
 
 
@@ -1321,6 +1324,13 @@ def test_execute_dml_update_without_where_rewrites_all(spark, nation):
     res = execute_dml(spark, "UPDATE t_dml_allrows_unit SET n_regionkey = 9")
     assert res["audit"] == {"dirs_rewritten": 2, "dirs_reused": 0}
     assert t.read().filter(F.col("n_regionkey") != 9).count() == 0
+    # a WHERE inside a comment is no WHERE: every row still updates
+    execute_dml(
+        spark,
+        "UPDATE t_dml_allrows_unit SET n_regionkey = 2 "
+        "-- was: WHERE n_nationkey = 1",
+    )
+    assert t.read().filter(F.col("n_regionkey") != 2).count() == 0
     t.drop()
 
 
@@ -1358,20 +1368,11 @@ def test_execute_dml_delete_pruned_and_mor(spark, nation):
 
 
 def test_execute_dml_parse_and_guard_errors(spark, nation):
-    from empdia_iceberg_spark.tables.dml import (
-        _parse_assignments,
-        _split_top_level,
-        execute_dml,
-    )
+    from empdia_iceberg_spark.tables.ddl import _split_top_level
+    from empdia_iceberg_spark.tables.dml import execute_dml
 
     # splitter respects parens and quotes
     assert _split_top_level("a = f(x, y), b = 'v,w'") == ["a = f(x, y)", "b = 'v,w'"]
-    assert _parse_assignments("a = 1, b = concat(c, ',')") == {
-        "a": "1",
-        "b": "concat(c, ',')",
-    }
-    with pytest.raises(ValueError, match="assigned twice"):
-        _parse_assignments("a = 1, a = 2")
     # r11: MERGE INTO is now a supported statement — it fails on its own
     # grammar (missing WHEN), not as "unsupported DML"
     with pytest.raises(ValueError, match="at least one WHEN"):
@@ -1384,6 +1385,18 @@ def test_execute_dml_parse_and_guard_errors(spark, nation):
     t = SnapshotTable(spark, "t_dml_guard_unit")
     t.drop()
     t.create(nation)
+    # a comma inside a call's parens or a string is not an assignment split
+    execute_dml(
+        spark,
+        "UPDATE t_dml_guard_unit SET n_regionkey = 1, "
+        "n_name = concat(n_name, ',') WHERE n_nationkey = 0",
+    )
+    row = t.read().filter("n_nationkey = 0").first()
+    assert row.n_regionkey == 1 and row.n_name.endswith(",")
+    with pytest.raises(ValueError, match="assigned twice"):
+        execute_dml(
+            spark, "UPDATE t_dml_guard_unit SET n_regionkey = 1, n_regionkey = 2"
+        )
     with pytest.raises(ValueError, match="unknown column"):
         execute_dml(spark, "UPDATE t_dml_guard_unit SET nope = 1 WHERE n_nationkey = 0")
     t.drop()
@@ -1480,6 +1493,18 @@ def test_merge_dml_update_assignments_and_column_list_insert(spark, nation):
     assert rows[999] == ("NEW", None)  # unassigned INSERT column -> NULL
     assert len(rows) == nation.count() + 1
     assert rows[1][0] == nation.filter(F.col("n_nationkey") == 1).first().n_name
+    spark.createDataFrame(
+        [(998, "bq")], "n_nationkey int, tag string"
+    ).createOrReplaceTempView("mrgdml_bq_src_unit")
+    execute_dml(
+        spark,
+        "MERGE INTO t_mrgdml_upd_unit t USING mrgdml_bq_src_unit s "
+        "ON t.n_nationkey = s.n_nationkey "
+        "WHEN NOT MATCHED THEN INSERT (`n_nationkey`, `n_name`) "
+        "VALUES (s.n_nationkey, s.tag)",
+    )
+    rows = {r.n_nationkey: (r.n_name, r.n_regionkey) for r in t.read().collect()}
+    assert rows[998] == ("bq", None)
     t.drop()
 
 
@@ -1561,20 +1586,27 @@ def test_merge_dml_matched_only_update_does_not_insert(spark, nation):
     from empdia_iceberg_spark.tables.dml import execute_dml
 
     t = SnapshotTable(spark, "t_mrgdml_mo_unit")
-    t.drop()
-    t.create(nation.select("n_nationkey", "n_name"))
     spark.createDataFrame(
         [(2, "two"), (555, "ghost")], "n_nationkey int, tag string"
     ).createOrReplaceTempView("mrgdml_mo_src")
-    execute_dml(
-        spark,
-        "MERGE INTO t_mrgdml_mo_unit t USING mrgdml_mo_src s "
-        "ON t.n_nationkey = s.n_nationkey "
+    for when in (
         "WHEN MATCHED THEN UPDATE SET n_name = s.tag",
-    )
-    rows = {r.n_nationkey: r.n_name for r in t.read().collect()}
-    assert rows[2] == "two" and 555 not in rows
-    assert len(rows) == nation.count()
+        # a clause inside a comment between real clauses is a comment
+        "WHEN MATCHED AND s.tag = 'none' THEN DELETE "
+        "/* WHEN NOT MATCHED THEN INSERT (n_nationkey) "
+        "VALUES (s.n_nationkey) */ "
+        "WHEN MATCHED THEN UPDATE SET n_name = s.tag",
+    ):
+        t.drop()
+        t.create(nation.select("n_nationkey", "n_name"))
+        execute_dml(
+            spark,
+            "MERGE INTO t_mrgdml_mo_unit t USING mrgdml_mo_src s "
+            "ON t.n_nationkey = s.n_nationkey " + when,
+        )
+        rows = {r.n_nationkey: r.n_name for r in t.read().collect()}
+        assert rows[2] == "two" and 555 not in rows
+        assert len(rows) == nation.count()
     t.drop()
 
 
@@ -1604,7 +1636,7 @@ def test_merge_dml_subquery_source_and_errors(spark, nation):
     for stmt, msg in [
         (head + "ON t.n_nationkey = s.n_nationkey "
          "WHEN MATCHED AND s.n_regionkey = 1 UPDATE SET n_name = 'x'",
-         "lacks a THEN"),
+         "missing 'THEN'"),
         (head + "ON t.n_nationkey < s.n_nationkey "
          "WHEN MATCHED THEN DELETE", "single key equality"),
         (head + "ON t.n_nationkey = s.n_regionkey "
@@ -1618,7 +1650,7 @@ def test_merge_dml_subquery_source_and_errors(spark, nation):
          "only the LAST WHEN MATCHED"),
         (head + "ON t.n_nationkey = s.n_nationkey "
          "WHEN NOT MATCHED THEN INSERT (n_nationkey) VALUES (s.a, s.b)",
-         "columns but"),
+         "number of inserted values cannot match"),
         (head + "ON t.n_nationkey = s.n_nationkey", "at least one WHEN"),
         ("MERGE INTO t_mrgdml_err_unit USING (SELECT 1 AS n_nationkey) "
          "ON t_mrgdml_err_unit.n_nationkey = n_nationkey "
@@ -1888,7 +1920,7 @@ def test_insert_dml_values_select_and_guards(spark, nation):
         execute_dml(
             spark, "INSERT INTO t_insdml_unit (nope) VALUES (1)"
         )
-    with pytest.raises(ValueError, match="expects VALUES"):
+    with pytest.raises(ValueError, match="near 'SET'"):
         execute_dml(spark, "INSERT INTO t_insdml_unit SET x = 1")
     with pytest.raises(ValueError, match="cannot INSERT before create"):
         execute_dml(spark, "INSERT INTO t_insdml_ghost VALUES (1, 'x', 2)")
@@ -2642,11 +2674,11 @@ def test_merge_by_source_parse_guards(spark, nation):
         "MERGE INTO t_nmbs_guards t USING nmbs_g_src s "
         "ON t.n_nationkey = s.n_nationkey "
     )
-    with pytest.raises(ValueError, match="cannot UPDATE SET \\*"):
+    with pytest.raises(ValueError, match="near '\\*'"):
         execute_dml(spark, head + "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *")
-    with pytest.raises(ValueError, match="no BY qualifier"):
+    with pytest.raises(ValueError, match="near 'BY'"):
         execute_dml(spark, head + "WHEN MATCHED BY SOURCE THEN DELETE")
-    with pytest.raises(ValueError, match="cannot parse WHEN NOT MATCHED BY SOURCE"):
+    with pytest.raises(ValueError, match="near 'INSERT'"):
         execute_dml(
             spark, head + "WHEN NOT MATCHED BY SOURCE THEN INSERT *"
         )
