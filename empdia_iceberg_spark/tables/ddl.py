@@ -2,8 +2,9 @@
 
 - `CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t [PARTITIONED BY] AS
   SELECT` (CTAS; OR REPLACE swaps content, schema AND spec in one
-  commit with history intact) and `TRUNCATE TABLE` (O(1) empty-file-
-  list metadata commit).
+  commit with history intact), the column-list CREATE TABLE that SHOW
+  CREATE TABLE emits, and `TRUNCATE TABLE` (O(1) empty-file-list
+  metadata commit).
 - METADATA-ONLY schema evolution — the Iceberg model, one JSON commit,
   zero data rewrites: `ALTER TABLE ... ADD/DROP COLUMN[S]` (added
   columns surface as typed NULL in old files; dropped columns stop
@@ -23,11 +24,15 @@
 
 Together with `tables/dml.py` (INSERT/UPDATE/DELETE/MERGE) this
 completes the declarative statement surface: a user can stand up,
-evolve, mutate, and retire a snapshot table entirely in SQL strings,
-while every expression inside those statements — the CTAS SELECT, the
-column types, the DML clauses — is parsed by Catalyst/Spark itself;
-the layer here only finds clause boundaries with a quote/paren-aware
-scanner (dml.py leaves even that to Spark's parser).
+evolve, mutate, and retire a snapshot table entirely in SQL strings.
+Spark's own parser (``sessionState().sqlParser().parsePlan``) reads
+every statement once, and `execute_sql` dispatches on the plan node's
+class; the handlers read the node's fields (column definitions,
+partition transforms, property maps, CHECK conditions, CALL arguments,
+query bodies), never the statement text. Only the few extension forms
+Spark's grammar rejects match an anchored regex, one per statement. The
+read-side sugar stays a text rewrite ahead of the parse: rewriting a
+parsed plan from Python would need a JVM-side transform.
 
 Scale posture: CTAS is one Spark job writing the table's initial
 snapshot under the target-file-size policy; ADD COLUMN is O(1) —
@@ -44,8 +49,14 @@ the public Iceberg spec's metadata-evolution model.
 from __future__ import annotations
 
 import re
+import warnings
+from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from typing import Any, Callable, NamedTuple
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JError
+from pyspark.errors import ParseException, PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,226 +65,21 @@ from empdia_iceberg_spark.functions.exact import exact_sum2, sql_sum2
 from empdia_iceberg_spark.operators.layout import morton_spark
 from empdia_iceberg_spark.registry import register
 from empdia_iceberg_spark.sources.tables import load
-from empdia_iceberg_spark.tables.dml import execute_dml
+from empdia_iceberg_spark.tables.dml import (
+    _dataframe,
+    _kind,
+    _parse,
+    _table_name,
+    execute_dml,
+)
 from empdia_iceberg_spark.tables.manager import (
     DEFAULT_ROOT,
     SnapshotTable,
     canonical_transform,
     scratch_root,
+    spec_sources,
 )
-
-_CREATE_HEAD = re.compile(
-    r"^\s*CREATE\s+(?:(OR\s+REPLACE)\s+)?TABLE\s+(?:(IF\s+NOT\s+EXISTS)\s+)?"
-    r"(\w+)\s+(.*?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_TRUNCATE_HEAD = re.compile(
-    r"^\s*TRUNCATE\s+TABLE\s+(\w+)\s*;?\s*$", re.IGNORECASE
-)
-_ALTER_HEAD = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+(.*?)\s*;?\s*$", re.IGNORECASE | re.DOTALL
-)
-_DROP_HEAD = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?:(IF\s+EXISTS)\s+)?(\w+)\s*;?\s*$", re.IGNORECASE
-)
-# Opens the PARTITIONED BY list; the close paren is found by a balanced
-# scan because entries may be transforms with their own parens —
-# `PARTITIONED BY (days(ts), bucket(16, id))` (Iceberg hidden
-# partitioning). _consume_partitioned_by below is the one parser.
-_PART_BY_OPEN = re.compile(r"^PARTITIONED\s+BY\s*\(", re.IGNORECASE)
-_ADD_COLUMNS = re.compile(r"^ADD\s+COLUMNS?\s+(.+)$", re.IGNORECASE | re.DOTALL)
-_DROP_COLUMNS = re.compile(
-    r"^DROP\s+COLUMNS?\s+(\w+(?:\s*,\s*\w+)*)\s*$", re.IGNORECASE
-)
-_RENAME_COLUMN = re.compile(
-    r"^RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$", re.IGNORECASE
-)
-_ALTER_TYPE = re.compile(  # Iceberg/Spark `ALTER COLUMN c TYPE t`; the
-    # DB2/postgres `SET DATA TYPE` spelling is accepted as an alias
-    r"^ALTER\s+COLUMN\s+(\w+)\s+(?:TYPE|SET\s+DATA\s+TYPE)\s+(.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ALTER_NOT_NULL = re.compile(  # r13: Delta/Spark `ALTER COLUMN c SET NOT NULL`
-    r"^ALTER\s+COLUMN\s+(\w+)\s+(SET|DROP)\s+NOT\s+NULL\s*$", re.IGNORECASE
-)
-# `DEFAULT <literal>` suffix of an ADD COLUMN item (r13, Iceberg v3
-# initial/write defaults) — located on the literal-masked copy so a
-# string default containing the word DEFAULT cannot split early.
-_DEFAULT_SPLIT = re.compile(r"\s+DEFAULT\s+", re.IGNORECASE)
-_CREATE_REF = re.compile(
-    r"^CREATE\s+(BRANCH|TAG)\s+(\w+)(?:\s+AS\s+OF\s+VERSION\s+(\d+))?\s*$",
-    re.IGNORECASE,
-)
-_DROP_REF = re.compile(r"^DROP\s+(BRANCH|TAG)\s+(\w+)\s*$", re.IGNORECASE)
-# the field may be a bare column or a transform — days(ts),
-# bucket(16, id), truncate(4, s); canonical_transform validates it
-_ADD_PART_FIELD = re.compile(
-    r"^ADD\s+PARTITION\s+FIELD\s+(.+?)\s*$", re.IGNORECASE
-)
-_DROP_PART_FIELD = re.compile(
-    r"^DROP\s+PARTITION\s+FIELD\s+(.+?)\s*$", re.IGNORECASE
-)
-# Iceberg's one-commit evolution spelling: swap a spec entry in place
-# (position preserved) — e.g. REPLACE PARTITION FIELD days(ts) WITH
-# hours(ts) when an event table's volume outgrows daily dirs
-_REPLACE_PART_FIELD = re.compile(
-    r"^REPLACE\s+PARTITION\s+FIELD\s+(.+?)\s+WITH\s+(.+?)\s*$", re.IGNORECASE
-)
-_OPTIMIZE_HEAD = re.compile(
-    r"^\s*OPTIMIZE\s+(\w+)"
-    r"(?:\s+ZORDER\s+BY\s*\(([^)]*)\))?\s*;?\s*$",
-    re.IGNORECASE,
-)
-_VACUUM_HEAD = re.compile(
-    r"^\s*VACUUM\s+(\w+)(?:\s+RETAIN\s+(\d+)\s+VERSIONS?)?\s*;?\s*$",
-    re.IGNORECASE,
-)
-_DESCRIBE_HEAD = re.compile(
-    r"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?(\w+)\s*;?\s*$", re.IGNORECASE
-)
-_SHOW_TABLES_HEAD = re.compile(r"^\s*SHOW\s+TABLES\s*;?\s*$", re.IGNORECASE)
-_SHOW_CREATE_HEAD = re.compile(
-    r"^\s*SHOW\s+CREATE\s+TABLE\s+(\w+)\s*;?\s*$", re.IGNORECASE
-)
-_RENAME_TABLE = re.compile(r"^RENAME\s+TO\s+(\w+)\s*$", re.IGNORECASE)
-_SET_PROPS = re.compile(
-    r"^SET\s+TBLPROPERTIES\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL
-)
-_UNSET_PROPS = re.compile(
-    r"^UNSET\s+TBLPROPERTIES\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL
-)
-_ADD_CONSTRAINT = re.compile(  # greedy (.+) pairs with the LAST ')', so the
-    # CHECK expression may itself contain parens — Catalyst parses it
-    r"^ADD\s+CONSTRAINT\s+(\w+)\s+CHECK\s*\((.+)\)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_CONSTRAINT = re.compile(r"^DROP\s+CONSTRAINT\s+(\w+)\s*$", re.IGNORECASE)
-_CALL_HEAD = re.compile(
-    r"^\s*CALL\s+(\w+)\s*\((.*)\)\s*;?\s*$", re.IGNORECASE | re.DOTALL
-)
-_ANALYZE_HEAD = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+(\w+)\s+COMPUTE\s+STATISTICS"
-    r"(?:\s+FOR\s+COLUMNS\b(.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_CREATE_VIEW = re.compile(
-    r"^\s*CREATE\s+(?:(OR\s+REPLACE)\s+)?VIEW\s+(\w+)\s+AS\s+(.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_VIEW = re.compile(
-    r"^\s*DROP\s+VIEW\s+(?:(IF\s+EXISTS)\s+)?(\w+)\s*;?\s*$", re.IGNORECASE
-)
-_SHOW_CREATE_VIEW = re.compile(
-    r"^\s*SHOW\s+CREATE\s+VIEW\s+(\w+)\s*;?\s*$", re.IGNORECASE
-)
-_SHOW_VIEWS_HEAD = re.compile(r"^\s*SHOW\s+VIEWS\s*;?\s*$", re.IGNORECASE)
-_SHOW_PROPS_HEAD = re.compile(
-    r"^\s*SHOW\s+TBLPROPERTIES\s+(\w+)\s*;?\s*$", re.IGNORECASE
-)
-# '' is the SQL escape for a quote INSIDE a quoted key/value (SHOW
-# CREATE emits it for constraints carrying string literals — r13, so
-# its TBLPROPERTIES block round-trips); _prop_unescape folds it back.
-_PROP_PAIR = re.compile(
-    r"^\s*'((?:[^']|'')+)'\s*=\s*'((?:[^']|'')*)'\s*$"
-)
-_PROP_KEY = re.compile(r"^\s*'((?:[^']|'')+)'\s*$")
-
-
-def _prop_unescape(s: str) -> str:
-    return s.replace("''", "'")
-
-
-def describe_table(spark: SparkSession, name: str, root: str = DEFAULT_ROOT) -> DataFrame:
-    """`DESCRIBE TABLE t` as a frame: one row per column of the
-    COMMITTED schema (current logical names — a renamed column shows
-    its new name) plus whether it is a partition field. Metadata-sized:
-    one snapshot JSON read, no scan."""
-    t = SnapshotTable(spark, name, root)
-    cur = t.current_version()
-    if cur is None:
-        raise ValueError(f"table {name} does not exist")
-    import json as _json
-
-    meta = t._read_meta(cur)
-    stored = T.StructType.fromJson(_json.loads(meta["schema"]))
-    spec = set(meta.get("spec", []))
-    rows = [
-        (f.name, f.dataType.simpleString(), f.name in spec)
-        for f in stored.fields
-    ]
-    return spark.createDataFrame(
-        rows, "col_name string, data_type string, is_partition_field boolean"
-    )
-
-
-def show_tables(spark: SparkSession, root: str = DEFAULT_ROOT) -> DataFrame:
-    """`SHOW TABLES`: every snapshot table under the catalog root (a
-    dir with a _meta log), with its current version. Listing-order
-    independent (sorted)."""
-    import os as _os
-
-    rows = []
-    if _os.path.isdir(root):
-        for d in sorted(_os.listdir(root)):
-            meta_dir = _os.path.join(root, d, "_meta")
-            if _os.path.isdir(meta_dir):
-                t = SnapshotTable(spark, d, root)
-                v = t.current_version()
-                if v is not None:
-                    rows.append((d, v))
-    return spark.createDataFrame(rows, "table_name string, version int")
-
-
-def show_create_table(
-    spark: SparkSession, name: str, root: str = DEFAULT_ROOT
-) -> DataFrame:
-    """`SHOW CREATE TABLE t`: one row (`createtab_stmt`) with the
-    canonical statement for the CURRENT committed state — logical
-    column names and types (a renamed column shows its new name, a
-    widened column its promoted type) and the partition spec, mirroring
-    DESCRIBE's partition-field flags. Metadata-sized: one snapshot JSON
-    read. The engine creates tables via CTAS, so the emitted column
-    list is documentation of the committed schema in standard CREATE
-    syntax (the Iceberg/Spark `SHOW CREATE TABLE` shape)."""
-    t = SnapshotTable(spark, name, root)
-    cur = t.current_version()
-    if cur is None:
-        raise ValueError(f"table {name} does not exist")
-    import json as _json
-
-    meta = t._read_meta(cur)
-    stored = T.StructType.fromJson(_json.loads(meta["schema"]))
-    nn = set(meta.get("not_null", []))
-
-    def _coldef(f) -> str:
-        s = f"  {f.name} {f.dataType.simpleString()}"
-        if f.name in nn:
-            s += " NOT NULL"
-        if "default" in (f.metadata or {}):
-            s += f" DEFAULT {f.metadata['default']}"
-        return s
-
-    cols = ",\n".join(_coldef(f) for f in stored.fields)
-    stmt = f"CREATE TABLE {name} (\n{cols})\nUSING snapshot"
-    spec = meta.get("spec", [])
-    if spec:
-        stmt += f"\nPARTITIONED BY ({', '.join(spec)})"
-    # TBLPROPERTIES block carries the user properties plus the CHECK
-    # constraints rendered Delta-style (`delta.constraints.<name>` is
-    # the public model this mirrors), sorted for determinism
-    props = dict(meta.get("properties", {}))
-    for cname, cexpr in meta.get("constraints", {}).items():
-        props[f"constraint.{cname}"] = f"CHECK ({cexpr})"
-    if props:
-        # SQL-escape single quotes (ADVICE r12): a CHECK constraint with a
-        # string literal (CHECK (seg = 'BLD')) must render as a valid
-        # quoted property value, not nested bare quotes
-        esc = lambda s: str(s).replace("'", "''")  # noqa: E731
-        lines = ",\n".join(
-            f"  '{esc(k)}' = '{esc(v)}'" for k, v in sorted(props.items())
-        )
-        stmt += f"\nTBLPROPERTIES (\n{lines})"
-    return spark.createDataFrame([(stmt,)], "createtab_stmt string")
+from empdia_iceberg_spark.tables.sqlprune import _seq, try_sql_prune
 
 
 def _split_top_level(s: str, sep: str = ",") -> list[str]:
@@ -308,243 +114,6 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
         i += 1
     parts.append("".join(buf))
     return [p.strip() for p in parts if p.strip()]
-
-
-def _find_keyword(s: str, kw: str) -> int:
-    """Index of the first TOP-LEVEL occurrence of keyword ``kw`` —
-    outside quotes and parens, on word boundaries — or -1."""
-    depth, quote = 0, None
-    k = len(kw)
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\" and i + 1 < n:
-                i += 2
-                continue
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and s[i : i + k].upper() == kw
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (i + k >= n or not (s[i + k].isalnum() or s[i + k] == "_"))
-        ):
-            return i
-        i += 1
-    return -1
-
-
-def _split_columns(s: str) -> list[str]:
-    """Split an ADD COLUMNS list on commas at paren AND angle-bracket
-    depth 0 — `a decimal(12,2), b map<string,int>` must yield two
-    column definitions. _split_top_level tracks only parens and
-    quotes; type lists do not contain string literals, so a plain depth
-    counter suffices."""
-    parts, buf, depth = [], [], 0
-    for ch in s:
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
-
-
-_NOT_NULL_IN_DEF = re.compile(r"\s+NOT\s+NULL\b", re.IGNORECASE)
-_USING_CLAUSE = re.compile(r"^USING\s+(\w+)\s*", re.IGNORECASE)
-_PROPS_CLAUSE = re.compile(r"^TBLPROPERTIES\s*\(", re.IGNORECASE)
-
-
-def _consume_partitioned_by(tail: str) -> tuple[list[str] | None, str]:
-    """If ``tail`` starts with PARTITIONED BY (...), parse the spec list
-    (top-level comma split + canonical transform spelling, so
-    `bucket(16, id)` survives both its inner comma and its inner parens)
-    and return (spec, rest-after-close-paren); else (None, tail)."""
-    m = _PART_BY_OPEN.match(tail)
-    if not m:
-        return None, tail
-    depth, close = 1, -1
-    for idx in range(m.end(), len(tail)):
-        if tail[idx] == "(":
-            depth += 1
-        elif tail[idx] == ")":
-            depth -= 1
-            if depth == 0:
-                close = idx
-                break
-    if close < 0:
-        raise ValueError("PARTITIONED BY: unbalanced parens")
-    spec = [
-        canonical_transform(e)
-        for e in _split_columns(tail[m.end() : close])
-    ]
-    return spec, tail[close + 1 :].strip()
-
-
-def _create_schema_only(
-    spark: SparkSession,
-    name: str,
-    rest: str,
-    root: str,
-    or_replace: bool,
-    if_not_exists: bool,
-) -> dict:
-    """CREATE TABLE with an explicit column list: an EMPTY v1 with the
-    declared schema, NOT NULL markers, Iceberg-v3 column defaults,
-    partition spec, and properties (constraint.* properties re-enter as
-    CHECK constraints) — the exact surface SHOW CREATE TABLE renders,
-    closing the emit↔execute round trip. Metadata-sized: the only data
-    write is one empty dir."""
-    masked = _mask_literals(rest)
-    depth, end = 0, -1
-    for idx, ch in enumerate(masked):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                end = idx
-                break
-    if end < 0:
-        raise ValueError(f"CREATE TABLE {name}: unbalanced column list")
-    cols_src, tail = rest[1:end], rest[end + 1 :].strip().rstrip(";").strip()
-    if _find_keyword(tail, "AS") >= 0:
-        raise ValueError(
-            "CREATE TABLE: a column list and AS SELECT are mutually "
-            "exclusive (the column list declares an empty table)"
-        )
-    # tail clauses in any sane order: USING x, PARTITIONED BY, TBLPROPERTIES
-    spec: list[str] = []
-    props: dict[str, str] = {}
-    while tail:
-        um = _USING_CLAUSE.match(tail)
-        if um:
-            if um.group(1).lower() not in ("snapshot", "parquet"):
-                raise ValueError(
-                    f"CREATE TABLE {name}: unsupported USING {um.group(1)!r}"
-                )
-            tail = tail[um.end() :].strip()
-            continue
-        parsed_spec, rest = _consume_partitioned_by(tail)
-        if parsed_spec is not None:
-            spec = parsed_spec
-            tail = rest
-            continue
-        tm = _PROPS_CLAUSE.match(tail)
-        if tm:
-            tmask = _mask_literals(tail)
-            d, close = 0, -1
-            for idx in range(tm.end() - 1, len(tail)):
-                if tmask[idx] == "(":
-                    d += 1
-                elif tmask[idx] == ")":
-                    d -= 1
-                    if d == 0:
-                        close = idx
-                        break
-            if close < 0:
-                raise ValueError("TBLPROPERTIES: unbalanced parens")
-            for item in _split_top_level(tail[tm.end() : close]):
-                pm2 = _PROP_PAIR.match(item)
-                if not pm2:
-                    raise ValueError(
-                        f"bad TBLPROPERTIES entry (expected 'k' = 'v'): {item!r}"
-                    )
-                props[_prop_unescape(pm2.group(1))] = _prop_unescape(pm2.group(2))
-            tail = tail[close + 1 :].strip()
-            continue
-        raise ValueError(
-            f"CREATE TABLE {name}: unexpected tokens after column list: "
-            f"{tail[:60]!r}"
-        )
-    # column definitions: name type [NOT NULL] [DEFAULT lit] (either order)
-    fields, not_null, defaults = [], [], {}
-    for item in _split_columns(cols_src):
-        imask = _mask_literals(item)
-        nn = _NOT_NULL_IN_DEF.search(imask)
-        if nn:
-            item = item[: nn.start()] + item[nn.end() :]
-            imask = imask[: nn.start()] + imask[nn.end() :]
-        default = None
-        dm_ = _DEFAULT_SPLIT.search(imask)
-        if dm_:
-            default = item[dm_.end() :].strip()
-            item = item[: dm_.start()].strip()
-        cm = re.match(r"^(\w+)\s+(.+)$", item.strip(), re.DOTALL)
-        if not cm:
-            raise ValueError(f"bad column definition: {item!r}")
-        col, sql_type = cm.group(1), cm.group(2).strip()
-        field = spark.createDataFrame([], f"`{col}` {sql_type}").schema[0]
-        if default is not None:
-            spark.createDataFrame([], "dummy int").select(
-                F.expr(default).cast(field.dataType)
-            )  # Catalyst validates the literal; driver-only
-            field = T.StructField(
-                field.name, field.dataType, True,
-                {"default": default, "default_pre_dirs": []},
-            )
-            defaults[col] = default
-        fields.append(field)
-        if nn:
-            not_null.append(col)
-    names_ = [f.name for f in fields]
-    if len(set(names_)) != len(names_):
-        raise ValueError(f"duplicate column names in CREATE TABLE: {names_}")
-    for c in spec:
-        if c not in names_:
-            raise ValueError(f"partition column {c!r} is not in the column list")
-    if _view_versions(root, name):
-        raise ValueError(f"cannot CREATE TABLE {name}: a VIEW of that name exists")
-    t = SnapshotTable(spark, name, root)
-    if t.current_version() is not None:
-        if if_not_exists:
-            return {"op": "create-noop", "table": name,
-                    "version": t.current_version(), "audit": None}
-        if not or_replace:
-            raise ValueError(f"table {name} already exists")
-        t.drop()
-    empty = spark.createDataFrame([], T.StructType(fields))
-    t.create(empty, partition_by=spec or None)
-    # governance riders: each a metadata-only commit on the empty table
-    # (validation scans are trivially empty); constraint.* properties
-    # re-enter as real enforced CHECK constraints, the inverse of SHOW
-    # CREATE's rendering
-    for c in not_null:
-        t.set_not_null(c)
-    cons = {
-        k[len("constraint."):]: v[len("CHECK ("):-1]
-        for k, v in props.items()
-        if k.startswith("constraint.") and v.upper().startswith("CHECK (")
-        and v.endswith(")")
-    }
-    plain = {k: v for k, v in props.items() if not k.startswith("constraint.")}
-    for cname, cexpr in sorted(cons.items()):
-        t.add_constraint(cname, cexpr)
-    if plain:
-        t.set_properties(plain)
-    return {
-        "op": "create",
-        "table": name,
-        "version": t.current_version(),
-        "audit": {
-            "rows": 0,
-            "not_null": not_null,
-            "defaults": sorted(defaults),
-            "constraints": sorted(cons),
-        },
-    }
 
 
 # --------------------------------------------------------------- SQL views
@@ -711,570 +280,717 @@ def materialize_tables(
     return registered
 
 
-def show_create_view(spark: SparkSession, name: str, root: str) -> DataFrame:
-    sql = _view_sql(root, name)
-    if sql is None:
-        raise ValueError(f"view {name} does not exist")
-    return spark.createDataFrame(
-        [(f"CREATE VIEW {name} AS\n{sql}",)], "createview_stmt string"
+# ------------------------------------------------------ statement handlers
+# Each handler takes one _Statement and reads the fields of the plan node
+# Spark's parser built for it, or, for an engine extension Spark's grammar
+# rejects, the groups of its anchored regex. `_NODES` and `_EXTENSIONS`
+# below map statements to handlers.
+
+
+@dataclass
+class _Statement:
+    """One statement as its handler sees it."""
+
+    spark: SparkSession
+    root: str
+    text: str
+    node: Any  # the parsed plan node, or an extension statement's match
+    props: Any = None  # TBLPROPERTIES read with Spark's reserved keys kept
+    mor_key: str | None = None
+    registered: list = field(default_factory=list)
+
+    def table(self, node, what: str) -> SnapshotTable:
+        return SnapshotTable(self.spark, _table_name(node, what), self.root)
+
+
+def _refuse(what: str, clauses: dict) -> None:
+    """Refuse the clauses Spark parsed that the engine does not implement."""
+    given = [clause for clause, present in clauses.items() if present]
+    if given:
+        raise ValueError(f"{what}: {', '.join(given)} is not supported")
+
+
+def _map(jmap) -> dict:
+    return {e._1(): e._2() for e in _seq(jmap.toSeq())}
+
+
+def _column_name(field_name) -> str:
+    """The one-part column an ALTER TABLE node names."""
+    parts = _seq(field_name.name())
+    if len(parts) != 1:
+        raise ValueError(f"nested column {'.'.join(parts)!r} is not supported")
+    return parts[0]
+
+
+def _transform(tr) -> str:
+    """A parsed partition transform in the spec's canonical spelling;
+    Spark prints an identity field as identity(col)."""
+    text = tr.toString()
+    if tr.name() == "identity":
+        text = text[len("identity(") : -1]
+    return canonical_transform(text)
+
+
+def _metadata_commit(t: SnapshotTable, op: str, commit: Callable[[], int]) -> dict:
+    """Run a schema-evolution commit; the audit PROVES it metadata-only
+    by comparing the parent's and the new snapshot's dir lists."""
+    parent = t.current_version()
+    parent_dirs = set(t._read_meta(parent)["dirs"]) if parent else set()
+    version = commit()
+    new_dirs = t._read_meta(version)["dirs"]
+    return {"op": op, "table": t.name, "version": version,
+            "audit": {"dirs_rewritten": len(set(new_dirs) - parent_dirs),
+                      "dirs_reused": len(new_dirs)}}
+
+
+def _create_table(s: _Statement) -> dict:
+    """CREATE [OR REPLACE] TABLE [IF NOT EXISTS] from a column list
+    (CreateTable, ReplaceTable) or AS SELECT (CreateTableAsSelect,
+    ReplaceTableAsSelect).
+
+    The column-list form commits an EMPTY v1 with the declared schema,
+    NOT NULL markers, Iceberg-v3 column defaults, partition spec and
+    properties: the exact surface SHOW CREATE TABLE renders, so its
+    output round-trips (constraints ride back in as
+    'constraint.<name>' = 'CHECK (...)' properties). CTAS writes the
+    body's rows; OR REPLACE of an existing table swaps content, schema
+    AND spec in one snapshot commit with history intact."""
+    n, spark, root = s.node, s.spark, s.root
+    kind = _kind(n)
+    name = _table_name(n.name(), "CREATE TABLE")
+    tspec = n.tableSpec()
+    provider = tspec.provider()
+    if provider.isDefined() and provider.get().lower() not in ("snapshot", "parquet"):
+        raise ValueError(f"CREATE TABLE {name}: unsupported USING {provider.get()!r}")
+    _refuse(f"CREATE TABLE {name}", {
+        "LOCATION": tspec.location().isDefined(),
+        "COMMENT": tspec.comment().isDefined(),
+        "OPTIONS": tspec.optionExpression().options().nonEmpty(),
+        "ROW FORMAT/STORED AS": tspec.serde().isDefined(),
+        "EXTERNAL": tspec.external(),
+        "DEFAULT COLLATION": tspec.collation().isDefined(),
+        "a table constraint": tspec.constraints().nonEmpty(),
+    })
+    spec = [_transform(tr) for tr in _seq(n.partitioning())]
+    props = s.props if s.props is not None else _map(tspec.properties())
+    replace, ctas = kind.startswith("Replace"), kind.endswith("AsSelect")
+    fields, not_null, defaults = [], [], []
+    if not ctas:
+        cols = _seq(n.columns())
+        if not cols:
+            raise ValueError(
+                "CREATE TABLE requires an AS SELECT clause or a column "
+                f"list (CREATE TABLE t (col type, ...)): {s.text[:60]!r}"
+            )
+        names = [c.name() for c in cols]
+        if len(set(names)) != len(names):
+            raise ValueError(f"duplicate column names in CREATE TABLE: {names}")
+        for c in cols:
+            _refuse(f"column {c.name()}", {
+                "COMMENT": c.comment().isDefined(),
+                "GENERATED": c.generationExpression().isDefined()
+                or c.identityColumnSpec().isDefined(),
+            })
+            f = spark.createDataFrame([], f"`{c.name()}` {c.dataType().sql()}").schema[0]
+            if c.defaultValue().isDefined():
+                default = c.defaultValue().get().originalSQL()
+                spark.createDataFrame([], "dummy int").select(
+                    F.expr(default).cast(f.dataType)
+                )  # Catalyst validates the literal; driver-only
+                f = T.StructField(f.name, f.dataType, True,
+                                  {"default": default, "default_pre_dirs": []})
+                defaults.append(f.name)
+            fields.append(f)
+            if not c.nullable():
+                not_null.append(f.name)
+        for c in spec_sources(spec):
+            if c not in names:
+                raise ValueError(f"partition column {c!r} is not in the column list")
+    if _view_versions(root, name):
+        raise ValueError(f"cannot CREATE TABLE {name}: a VIEW of that name exists")
+    t = SnapshotTable(spark, name, root)
+    cur = t.current_version()
+    if cur is None and replace and not n.orCreate():
+        raise ValueError(f"table {name} does not exist")
+    if cur is not None and not replace:
+        if n.ignoreIfExists():
+            return {"op": "create-noop", "table": name, "version": cur, "audit": None}
+        raise ValueError(f"table {name} already exists")
+    op, audit = "create", None
+    if not ctas:
+        if cur is not None:
+            t.drop()
+        t.create(spark.createDataFrame([], T.StructType(fields)), partition_by=spec or None)
+    elif cur is None:
+        t.create(_dataframe(spark, n.query()), partition_by=spec or None)
+    else:
+        op = "replace"
+        t.overwrite(_dataframe(spark, n.query()), op="replace", spec=spec)
+    # governance riders, each a metadata-only commit; constraint.*
+    # properties re-enter as real enforced CHECK constraints, the inverse
+    # of SHOW CREATE's rendering
+    for c in not_null:
+        t.set_not_null(c)
+    cons = {
+        k[len("constraint."):]: v[len("CHECK ("):-1]
+        for k, v in props.items()
+        if k.startswith("constraint.") and v.upper().startswith("CHECK (")
+        and v.endswith(")")
+    }
+    for cname, cexpr in sorted(cons.items()):
+        t.add_constraint(cname, cexpr)
+    plain = {k: v for k, v in props.items() if not k.startswith("constraint.")}
+    if plain:
+        t.set_properties(plain)
+    if not ctas:
+        audit = {"rows": 0, "not_null": not_null, "defaults": sorted(defaults),
+                 "constraints": sorted(cons)}
+    return {"op": op, "table": name, "version": t.current_version(), "audit": audit}
+
+
+def _truncate(s: _Statement) -> dict:
+    t = s.table(s.node.table(), "TRUNCATE TABLE")
+    return {"op": "truncate", "table": t.name, "version": t.truncate(),
+            "audit": {"dirs_rewritten": 0}}
+
+
+def _drop_table(s: _Statement) -> dict:
+    t = s.table(s.node.child(), "DROP TABLE")
+    if t.current_version() is None and not s.node.ifExists():
+        raise ValueError(f"table {t.name} does not exist")
+    t.drop()
+    return {"op": "drop", "table": t.name, "version": None, "audit": None}
+
+
+def _add_columns(s: _Statement) -> dict:
+    t = s.table(s.node.table(), "ALTER TABLE")
+    defs = []
+    for c in _seq(s.node.columnsToAdd()):
+        _refuse(f"ADD COLUMN {c.colName()}", {
+            "a nested field": c.path().isDefined(),
+            "NOT NULL": not c.nullable(),
+            "COMMENT": c.comment().isDefined(),
+            "FIRST/AFTER": c.position().isDefined(),
+        })
+        default = c.default()
+        defs.append((c.colName(), c.dataType().sql(),
+                     default.get().originalSQL() if default.isDefined() else None))
+    # refuse in-list duplicates BEFORE the first commit, so a multi-column
+    # statement is never half-applied (Spark's parser already refused any
+    # unknown type); per-column guards (exists / was dropped) run inside
+    # add_column under its OCC loop
+    names = [col for col, _type, _default in defs]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate column names in ADD COLUMNS: {names}")
+
+    def commit() -> int:
+        for col, sql_type, default in defs:
+            version = t.add_column(col, sql_type, default=default)
+        return version
+
+    return _metadata_commit(t, "add-column", commit)
+
+
+def _drop_columns(s: _Statement) -> dict:
+    t = s.table(s.node.table(), "ALTER TABLE")
+    _refuse("DROP COLUMNS", {"IF EXISTS": s.node.ifExists()})
+    cols = [_column_name(c) for c in _seq(s.node.columnsToDrop())]
+    if len(set(cols)) != len(cols):
+        raise ValueError(f"duplicate column names in DROP COLUMNS: {cols}")
+
+    def commit() -> int:
+        for col in cols:
+            version = t.drop_column(col)
+        return version
+
+    return _metadata_commit(t, "drop-column", commit)
+
+
+def _rename_column(s: _Statement) -> dict:
+    t = s.table(s.node.table(), "ALTER TABLE")
+    old = _column_name(s.node.column())
+    return _metadata_commit(
+        t, "rename-column", lambda: t.rename_column(old, s.node.newName())
     )
 
 
-def show_views(spark: SparkSession, root: str) -> DataFrame:
-    rows = [(n, _view_versions(root, n)[-1]) for n in _view_names(root)]
-    return spark.createDataFrame(rows, "view_name string, version int")
+def _alter_type(t: SnapshotTable, col: str, sql_type: str) -> dict:
+    """Safe type promotion; the type is parsed by Spark."""
+    return _metadata_commit(
+        t, "alter-column-type", lambda: t.alter_column_type(col, sql_type)
+    )
 
 
-def _call_procedure(spark: SparkSession, name: str, raw_args: str, root: str) -> dict:
-    """`CALL proc(arg, ...)` — the Iceberg stored-procedure surface
-    (spark_catalog.system.* in the real runtime) over the maintenance
-    methods that already exist: rollback_to_version(table, version),
-    expire_snapshots(table [, keep_last]), compact(table). Arguments
-    are positional or `key => value` (Iceberg named-argument syntax);
-    strings quoted, integers bare."""
+def _alter_columns(s: _Statement) -> dict:
+    """ALTER COLUMN c TYPE t | SET NOT NULL (validated + enforced) |
+    DROP NOT NULL, one column per statement."""
+    t = s.table(s.node.table(), "ALTER TABLE")
+    specs = _seq(s.node.specs())
+    if len(specs) != 1:
+        raise ValueError("ALTER TABLE ... ALTER COLUMN takes one column per statement")
+    spec = specs[0]
+    col = _column_name(spec.column())
+    _refuse(f"ALTER COLUMN {col}", {
+        "COMMENT": spec.newComment().isDefined(),
+        "FIRST/AFTER": spec.newPosition().isDefined(),
+        "SET/DROP DEFAULT": spec.newDefaultExpression().isDefined() or spec.dropDefault(),
+    })
+    if spec.newDataType().isDefined():
+        return _alter_type(t, col, spec.newDataType().get().sql())
+    verb = "drop" if spec.newNullability().get() else "set"
+    version = t.drop_not_null(col) if verb == "drop" else t.set_not_null(col)
+    return {"op": f"{verb}-not-null", "table": t.name, "version": version,
+            "audit": {"column": col, "dirs_rewritten": 0}}
 
-    def _parse(tok: str):
-        tok = tok.strip()
-        sm = re.match(r"^'([^']*)'$", tok)
-        if sm:
-            return sm.group(1)
-        if re.match(r"^-?\d+$", tok):
-            return int(tok)
-        raise ValueError(f"CALL argument must be a 'string' or integer: {tok!r}")
 
+def _rename_table(s: _Statement) -> dict:
+    """RENAME TO: a catalog move; history, refs and deletes travel."""
+    _refuse("ALTER VIEW", {"RENAME TO": s.node.isView()})
+    t = s.table(s.node.child(), "ALTER TABLE")
+    moved = t.rename_to(".".join(_seq(s.node.newName())))
+    return {"op": "rename-table", "table": moved.name,
+            "version": moved.current_version(), "audit": {"renamed_from": t.name}}
+
+
+def _set_properties(s: _Statement) -> dict:
+    """SET TBLPROPERTIES merges over the current properties."""
+    t = s.table(s.node.table(), "ALTER TABLE")
+    props = s.props if s.props is not None else _map(s.node.properties())
+    version = t.set_properties(props)
+    return {"op": "set-properties", "table": t.name, "version": version,
+            "audit": {"properties": t.properties(), "dirs_rewritten": 0}}
+
+
+def _unset_properties(s: _Statement) -> dict:
+    t = s.table(s.node.table(), "ALTER TABLE")
+    _refuse("UNSET TBLPROPERTIES", {"IF EXISTS": s.node.ifExists()})
+    keys = s.props if s.props is not None else _seq(s.node.propertyKeys())
+    version = t.unset_properties(keys)
+    return {"op": "unset-properties", "table": t.name, "version": version,
+            "audit": {"properties": t.properties(), "dirs_rewritten": 0}}
+
+
+def _add_constraint(s: _Statement) -> dict:
+    """ADD CONSTRAINT name CHECK (cond): validated against existing rows,
+    then enforced on every write. The stored condition is the text the
+    user wrote, as Spark's parser kept it."""
+    check = s.node.checkConstraint()
+    t = s.table(s.node.child().child(), "ALTER TABLE")
+    cname, cexpr = check.userProvidedName(), check.condition()
+    if cname is None:
+        raise ValueError("ADD CONSTRAINT ... CHECK needs a constraint name")
+    version = t.add_constraint(cname, cexpr)
+    return {"op": "add-constraint", "table": t.name, "version": version,
+            "audit": {"constraint": cname, "check": cexpr, "dirs_rewritten": 0}}
+
+
+def _drop_constraint(s: _Statement) -> dict:
+    n = s.node
+    t = s.table(n.table(), "ALTER TABLE")
+    _refuse("DROP CONSTRAINT", {"IF EXISTS": n.ifExists(), "CASCADE": n.cascade()})
+    version = t.drop_constraint(n.name())
+    return {"op": "drop-constraint", "table": t.name, "version": version,
+            "audit": {"constraint": n.name(), "dirs_rewritten": 0}}
+
+
+def _analyze(s: _Statement) -> dict:
+    """ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c, ...] -> t.stats"""
+    n = s.node
+    t = s.table(n.child(), "ANALYZE TABLE")
+    if _kind(n) == "AnalyzeTable":
+        _refuse("ANALYZE TABLE", {"PARTITION": n.partitionSpec().nonEmpty(),
+                                  "NOSCAN": n.noScan()})
+        cols = None
+    else:
+        _refuse("ANALYZE TABLE", {"FOR ALL COLUMNS": n.allColumns()})
+        cols = _seq(n.columnNames().get())
+    version = t.analyze(cols)
+    return {"op": "analyze", "table": t.name, "version": version,
+            "audit": {"stats": t._read_meta(version)["stats"], "dirs_rewritten": 0}}
+
+
+# ------------------------------------------------------------ CALL procedures
+# The Iceberg stored-procedure surface (spark_catalog.system.* in the real
+# runtime) over the maintenance methods that already exist. Each runner
+# takes the table and the bound arguments and returns the result's
+# version and audit.
+
+
+def _rollback_to_version(t: SnapshotTable, b: dict) -> dict:
+    return {"version": t.rollback(int(b["version"])),
+            "audit": {"rolled_back_to": int(b["version"])}}
+
+
+def _expire_snapshots(t: SnapshotTable, b: dict) -> dict:
+    # older_than_ts is an absolute epoch timestamp (Iceberg's older_than),
+    # deliberately NOT named older_than_sec: the sibling
+    # remove_orphan_files takes an AGE in seconds, and one spelling for
+    # two meanings invites expiring nothing
+    older = b["older_than_ts"]
+    expired = t.expire_snapshots(
+        keep_last=int(b["keep_last"]),
+        older_than=float(older) if older is not None else None,
+    )
+    return {"version": t.current_version(),
+            "audit": {"versions_expired": len(expired),
+                      "versions_left": len(t._versions())}}
+
+
+def _compact(t: SnapshotTable, b: dict) -> dict:
+    return {"version": t.compact(), "audit": None}
+
+
+def _compact_minor(t: SnapshotTable, b: dict) -> dict:
+    # small-file sweep: merge only the sub-threshold dirs a per-trigger
+    # streaming sink lands; O(small bytes), never O(table)
+    v, audit = t.compact_minor(small_bytes=int(b["small_bytes"]))
+    return {"version": v if v is not None else t.current_version(), "audit": audit}
+
+
+def _compute_file_stats(t: SnapshotTable, b: dict) -> dict:
+    # prebuild the footer-stat sidecars for every data dir of the CURRENT
+    # snapshot: the write-time half of the manifest model, done eagerly
+    # here, lazily on first consult otherwise
+    cur = t.current_version()
+    n_files = n_cols = 0
+    for d in t._read_meta(cur)["dirs"]:
+        stats = t._dir_file_stats(d)
+        n_files += len(stats["files"])
+        n_cols += sum(len(e["cols"]) for e in stats["files"].values())
+    return {"version": cur,
+            "audit": {"files_profiled": n_files, "column_entries": n_cols}}
+
+
+def _rewrite_position_deletes(t: SnapshotTable, b: dict) -> dict:
+    # Iceberg's rewrite_position_delete_files: fold many small position-
+    # delete files into one, data untouched, CDC-neutral
+    n_before = sum(
+        dd.get("kind") == "position"
+        for dd in t._read_meta(t.current_version()).get("delete_dirs", [])
+    )
+    return {"version": t.rewrite_position_deletes(),
+            "audit": {"position_delete_files_before": n_before,
+                      "position_delete_files_after": min(n_before, 1)}}
+
+
+def _remove_orphan_files(t: SnapshotTable, b: dict) -> dict:
+    removed = t.remove_orphan_files(older_than_sec=float(b["older_than_sec"]))
+    return {"version": t.current_version(),
+            "audit": {"orphans_removed": len(removed)}}
+
+
+# name -> (required parameters, optional parameters with defaults, runner)
+_PROCEDURES: dict[str, tuple[list, dict, Callable[[SnapshotTable, dict], dict]]] = {
+    "rollback_to_version": (["table", "version"], {}, _rollback_to_version),
+    "expire_snapshots": (["table"], {"keep_last": 1, "older_than_ts": None}, _expire_snapshots),
+    "compact": (["table"], {}, _compact),
+    "compact_minor": (["table"], {"small_bytes": 32 * 1024 * 1024}, _compact_minor),
+    "compute_file_stats": (["table"], {}, _compute_file_stats),
+    "rewrite_position_deletes": (["table"], {}, _rewrite_position_deletes),
+    "remove_orphan_files": (["table"], {"older_than_sec": 3 * 24 * 3600}, _remove_orphan_files),
+}
+
+
+def _procedure_grammar() -> str:
+    """One `CALL proc(...)` line per procedure, from _PROCEDURES."""
+    return "\n".join(
+        f"CALL {name}({', '.join(params)}"
+        + "".join(f" [, {k} => ...]" for k in optional)
+        + ")"
+        for name, (params, optional, _run) in _PROCEDURES.items()
+    )
+
+
+def _call_argument(expr):
+    if _kind(expr) == "Literal":
+        type_name = expr.dataType().typeName()
+        if type_name == "string":
+            return expr.value().toString()
+        if type_name in ("integer", "long"):
+            return int(expr.value())
+    raise ValueError(f"CALL argument must be a 'string' or integer: {expr.sql()!r}")
+
+
+def _call_arguments(node) -> tuple[list, dict]:
+    """A parsed CALL's arguments: positional, then `key => value`
+    (Iceberg named-argument syntax), each a string or integer literal."""
     args: list = []
     kwargs: dict = {}
-    for item in _split_top_level(raw_args):
-        km = re.match(r"^\s*(\w+)\s*=>\s*(.+)$", item, re.DOTALL)
-        if km:
-            kwargs[km.group(1).lower()] = _parse(km.group(2))
+    for a in _seq(node.args()):
+        if _kind(a) == "NamedArgumentExpression":
+            kwargs[a.key().lower()] = _call_argument(a.value())
         elif kwargs:
             raise ValueError("positional CALL argument after a named one")
         else:
-            args.append(_parse(item))
+            args.append(_call_argument(a))
+    return args, kwargs
 
-    def _bind(names: list[str], defaults: dict | None = None):
-        bound = dict(zip(names, args))
-        overlap = set(bound) & set(kwargs)
-        if overlap or len(args) > len(names):
-            raise ValueError(f"CALL {name}: bad arguments {args} {kwargs}")
-        bound.update(kwargs)
-        for k, v in (defaults or {}).items():
-            bound.setdefault(k, v)
-        missing = [n for n in names if n not in bound]
-        if missing:
-            raise ValueError(f"CALL {name}: missing argument(s) {missing}")
-        return bound
 
-    if name == "rollback_to_version":
-        b = _bind(["table", "version"])
-        t = SnapshotTable(spark, str(b["table"]), root)
-        v = t.rollback(int(b["version"]))
-        return {"op": "call-rollback_to_version", "table": b["table"],
-                "version": v, "audit": {"rolled_back_to": int(b["version"])}}
-    if name == "expire_snapshots":
-        # older_than_TS is an absolute epoch timestamp (Iceberg's
-        # older_than), deliberately NOT named older_than_sec — the
-        # sibling remove_orphan_files takes an AGE in seconds, and one
-        # spelling for two meanings invites expiring nothing (r13 review)
-        b = _bind(["table"], {"keep_last": 1, "older_than_ts": None})
-        t = SnapshotTable(spark, str(b["table"]), root)
-        if t.current_version() is None:
-            raise ValueError(f"table {b['table']} does not exist")
-        expired = t.expire_snapshots(
-            keep_last=int(b["keep_last"]),
-            older_than=(
-                float(b["older_than_ts"])
-                if b["older_than_ts"] is not None
-                else None
-            ),
+def _call(s: _Statement) -> dict:
+    proc = ".".join(_seq(s.node.procedure().nameParts())).lower()
+    if proc not in _PROCEDURES:
+        raise ValueError(
+            f"unknown procedure {proc!r} (expected one of {', '.join(_PROCEDURES)})"
         )
-        return {"op": "call-expire_snapshots", "table": b["table"],
-                "version": t.current_version(),
-                "audit": {"versions_expired": len(expired),
-                          "versions_left": len(t._versions())}}
-    if name == "compact":
-        b = _bind(["table"])
-        t = SnapshotTable(spark, str(b["table"]), root)
-        if t.current_version() is None:
-            raise ValueError(f"table {b['table']} does not exist")
-        v = t.compact()
-        return {"op": "call-compact", "table": b["table"], "version": v,
-                "audit": None}
-    if name == "compact_minor":
-        # small-file sweep (r14): merge only the sub-threshold dirs a
-        # per-trigger streaming sink lands; O(small bytes), never O(table)
-        b = _bind(["table"], {"small_bytes": 32 * 1024 * 1024})
-        t = SnapshotTable(spark, str(b["table"]), root)
-        if t.current_version() is None:
-            raise ValueError(f"table {b['table']} does not exist")
-        v, audit = t.compact_minor(small_bytes=int(b["small_bytes"]))
-        return {"op": "call-compact_minor", "table": b["table"],
-                "version": v if v is not None else t.current_version(),
-                "audit": audit}
-    if name == "compute_file_stats":
-        # prebuild the footer-stat sidecars for every data dir of the
-        # CURRENT snapshot (r15): the write-time half of the manifest
-        # model — done eagerly here, lazily on first consult otherwise
-        b = _bind(["table"])
-        t = SnapshotTable(spark, str(b["table"]), root)
-        cur = t.current_version()
-        if cur is None:
-            raise ValueError(f"table {b['table']} does not exist")
-        meta = t._read_meta(cur)
-        n_files = n_cols = 0
-        for d in meta["dirs"]:
-            stats = t._dir_file_stats(d)
-            n_files += len(stats["files"])
-            n_cols += sum(len(e["cols"]) for e in stats["files"].values())
-        return {"op": "call-compute_file_stats", "table": b["table"],
-                "version": cur,
-                "audit": {"files_profiled": n_files,
-                          "column_entries": n_cols}}
-    if name == "rewrite_position_deletes":
-        # Iceberg's rewrite_position_delete_files maintenance twin
-        # (r15): fold many small position-delete files into one, data
-        # untouched, CDC-neutral
-        b = _bind(["table"])
-        t = SnapshotTable(spark, str(b["table"]), root)
-        cur = t.current_version()
-        if cur is None:
-            raise ValueError(f"table {b['table']} does not exist")
-        n_before = len(
-            [
-                dd
-                for dd in t._read_meta(cur).get("delete_dirs", [])
-                if dd.get("kind") == "position"
-            ]
-        )
-        v = t.rewrite_position_deletes()
-        return {"op": "call-rewrite_position_deletes", "table": b["table"],
-                "version": v,
-                "audit": {"position_delete_files_before": n_before,
-                          "position_delete_files_after": min(n_before, 1)}}
-    if name == "remove_orphan_files":
-        # Iceberg's remove_orphan_files(table, older_than) — r13
-        b = _bind(["table"], {"older_than_sec": 3 * 24 * 3600})
-        t = SnapshotTable(spark, str(b["table"]), root)
-        if t.current_version() is None:
-            raise ValueError(f"table {b['table']} does not exist")
-        removed = t.remove_orphan_files(
-            older_than_sec=float(b["older_than_sec"])
-        )
-        return {"op": "call-remove_orphan_files", "table": b["table"],
-                "version": t.current_version(),
-                "audit": {"orphans_removed": len(removed)}}
-    raise ValueError(
-        f"unknown procedure {name!r} (expected rollback_to_version, "
-        "expire_snapshots, compact, or remove_orphan_files)"
+    params, optional, run = _PROCEDURES[proc]
+    args, kwargs = _call_arguments(s.node)
+    bound = dict(zip(params, args))
+    if set(bound) & set(kwargs) or len(args) > len(params):
+        raise ValueError(f"CALL {proc}: bad arguments {args} {kwargs}")
+    bound = {**optional, **bound, **kwargs}
+    missing = [p for p in params if p not in bound]
+    if missing:
+        raise ValueError(f"CALL {proc}: missing argument(s) {missing}")
+    t = SnapshotTable(s.spark, str(bound["table"]), s.root)
+    _current(t)
+    return {"op": f"call-{proc}", "table": bound["table"], **run(t, bound)}
+
+
+# ------------------------------------------------------------------- views
+
+
+def _create_view(s: _Statement) -> dict:
+    """CREATE [OR REPLACE] VIEW v AS <query>: stores the query's text as
+    Spark's parser kept it; OR REPLACE appends a view version."""
+    import json as _json
+    import os as _os
+
+    n, root = s.node, s.root
+    name = _table_name(n.child(), "CREATE VIEW")
+    _refuse(f"CREATE VIEW {name}", {
+        "IF NOT EXISTS": n.allowExisting(),
+        "a column list": n.userSpecifiedColumns().nonEmpty(),
+        "COMMENT": n.comment().isDefined(),
+        "TBLPROPERTIES": n.properties().nonEmpty(),
+    })
+    body = n.originalText().get()
+    if re.search(rf"\b{re.escape(name)}\b", _mask_literals(body)):
+        raise ValueError(f"view {name} cannot reference itself")
+    if SnapshotTable(s.spark, name, root).current_version() is not None:
+        raise ValueError(f"cannot CREATE VIEW {name}: a TABLE of that name exists")
+    vs = _view_versions(root, name)
+    if vs and not n.replace():
+        raise ValueError(f"view {name} already exists (use OR REPLACE)")
+    # validate the body resolves NOW (analyzer errors surface here, not
+    # at first read); the stored text stays lazy
+    _materialize(s.spark, body, root)
+    _dataframe(s.spark, n.query()).limit(0).collect()
+    d = _views_dir(root, name)
+    _os.makedirs(d, exist_ok=True)
+    v = (vs[-1] + 1) if vs else 1
+    with open(_os.path.join(d, f"v{v:05d}.json"), "w") as f:
+        _json.dump({"name": name, "sql": body, "version": v}, f)
+    return {"op": "create-view" if v == 1 else "replace-view",
+            "table": name, "version": v, "audit": None}
+
+
+def _drop_view(s: _Statement) -> dict:
+    import shutil as _shutil
+
+    name = _table_name(s.node.child(), "DROP VIEW")
+    if not _view_versions(s.root, name):
+        if s.node.ifExists():
+            return {"op": "drop-view-noop", "table": name, "version": None,
+                    "audit": None}
+        raise ValueError(f"view {name} does not exist")
+    _shutil.rmtree(_views_dir(s.root, name), ignore_errors=True)
+    return {"op": "drop-view", "table": name, "version": None, "audit": None}
+
+
+# ------------------------------------------------------- SHOW and DESCRIBE
+# Metadata-sized: each reads one snapshot JSON or lists the catalog root.
+
+
+def _current(t: SnapshotTable) -> int:
+    cur = t.current_version()
+    if cur is None:
+        raise ValueError(f"table {t.name} does not exist")
+    return cur
+
+
+def _describe(s: _Statement) -> DataFrame:
+    """`DESCRIBE [TABLE] t`: one row per column of the COMMITTED schema
+    (current logical names — a renamed column shows its new name) plus
+    whether it is a partition field."""
+    import json as _json
+
+    n = s.node
+    _refuse("DESCRIBE", {"EXTENDED": n.isExtended(),
+                         "PARTITION": n.partitionSpec().nonEmpty()})
+    t = s.table(n.relation(), "DESCRIBE")
+    meta = t._read_meta(_current(t))
+    spec = set(meta.get("spec", []))
+    rows = [
+        (f.name, f.dataType.simpleString(), f.name in spec)
+        for f in T.StructType.fromJson(_json.loads(meta["schema"])).fields
+    ]
+    return s.spark.createDataFrame(
+        rows, "col_name string, data_type string, is_partition_field boolean"
     )
 
 
-def execute_ddl(spark: SparkSession, statement: str, root: str = DEFAULT_ROOT) -> dict:
-    """Execute one DDL statement against the snapshot-table catalog.
+def _show_catalog(s: _Statement) -> DataFrame:
+    """`SHOW TABLES`: every snapshot table under the catalog root (a dir
+    with a _meta log) with its current version; `SHOW VIEWS`: every
+    persisted view with its latest version. Sorted by name."""
+    import os as _os
 
-    Supported grammar (everything inside the SELECT and every column
-    type is parsed by Spark itself)::
+    n, root = s.node, s.root
+    what = "SHOW TABLES" if _kind(n) == "ShowTables" else "SHOW VIEWS"
+    _refuse(what, {"IN <namespace>": _kind(n.namespace()) != "CurrentNamespace$",
+                   "LIKE": n.pattern().isDefined()})
+    if what == "SHOW VIEWS":
+        rows = [(v, _view_versions(root, v)[-1]) for v in _view_names(root)]
+        return s.spark.createDataFrame(rows, "view_name string, version int")
+    rows = []
+    for d in sorted(_os.listdir(root)) if _os.path.isdir(root) else []:
+        if _os.path.isdir(_os.path.join(root, d, "_meta")):
+            v = SnapshotTable(s.spark, d, root).current_version()
+            if v is not None:
+                rows.append((d, v))
+    return s.spark.createDataFrame(rows, "table_name string, version int")
 
-        CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t [PARTITIONED BY (...)] AS SELECT ...
-        TRUNCATE TABLE t
-        ALTER TABLE t ADD COLUMN[S] name type [, name type ...]
-        ALTER TABLE t DROP COLUMN[S] name [, name ...]
-        ALTER TABLE t RENAME COLUMN old TO new
-        ALTER TABLE t ALTER COLUMN c TYPE t  (safe promotion; SET DATA TYPE alias)
-        ALTER TABLE t ALTER COLUMN c SET NOT NULL   (validated + enforced)
-        ALTER TABLE t ALTER COLUMN c DROP NOT NULL
-        ALTER TABLE t ADD COLUMN c type DEFAULT <literal>  (Iceberg-v3 defaults)
-        ALTER TABLE t RENAME TO t2           (catalog move; history travels)
-        ALTER TABLE t SET TBLPROPERTIES ('k' = 'v', ...)   (merge-over)
-        ALTER TABLE t UNSET TBLPROPERTIES ('k', ...)
-        ALTER TABLE t ADD CONSTRAINT name CHECK (expr)     (validated + enforced)
-        ALTER TABLE t DROP CONSTRAINT name
-        ALTER TABLE t CREATE BRANCH|TAG name [AS OF VERSION n]
-        CALL rollback_to_version('t', n)
-        CALL expire_snapshots('t' [, keep_last => k] [, older_than_ts => epoch])
-        CALL compact('t') | remove_orphan_files('t' [, older_than_sec => age])
-             | compact('t')
-        ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c1, c2]  (-> t.stats)
-        ALTER TABLE t DROP BRANCH|TAG name
-        ALTER TABLE t ADD PARTITION FIELD col|transform(col)
-        ALTER TABLE t DROP PARTITION FIELD col|transform(col)
-        ALTER TABLE t REPLACE PARTITION FIELD old WITH new  (in place)
-        DROP TABLE [IF EXISTS] t
-        OPTIMIZE t [ZORDER BY (c1, c2)]
-        VACUUM t [RETAIN k VERSIONS]
 
-    Returns {"op", "table", "version", "audit"}; for ADD/DROP COLUMN
-    the audit PROVES the commit was metadata-only (dirs_rewritten
-    pinned to 0 by comparing the parent's and the new snapshot's dir
-    lists).
-    """
-    m = _CALL_HEAD.match(statement)
-    if m:
-        return _call_procedure(spark, m.group(1).lower(), m.group(2), root)
-    m = _CREATE_VIEW.match(statement)
-    if m:
-        import json as _json
-        import os as _os
+def _show_create_table(s: _Statement) -> DataFrame:
+    """`SHOW CREATE TABLE t`: one row (`createtab_stmt`) with the
+    canonical statement for the CURRENT committed state — logical
+    column names and types (a renamed column shows its new name, a
+    widened column its promoted type) and the partition spec, mirroring
+    DESCRIBE's partition-field flags. It is the column-list CREATE TABLE
+    this module executes, so the output round-trips."""
+    import json as _json
 
-        or_replace, name, body = m.group(1), m.group(2), m.group(3).strip()
-        first = body.lstrip("(").split(None, 1)[0].upper() if body else ""
-        if first not in ("SELECT", "WITH"):
-            raise ValueError(f"view body must be a SELECT: {body[:60]!r}")
-        if re.search(rf"\b{re.escape(name)}\b", _mask_literals(body)):
-            raise ValueError(f"view {name} cannot reference itself")
-        if SnapshotTable(spark, name, root).current_version() is not None:
-            raise ValueError(
-                f"cannot CREATE VIEW {name}: a TABLE of that name exists"
-            )
-        vs = _view_versions(root, name)
-        if vs and not or_replace:
-            raise ValueError(f"view {name} already exists (use OR REPLACE)")
-        # validate the body resolves NOW (analyzer errors surface here,
-        # not at first read) — the stored text stays lazy
-        execute_sql(spark, body, root).limit(0).collect()
-        d = _views_dir(root, name)
-        _os.makedirs(d, exist_ok=True)
-        v = (vs[-1] + 1) if vs else 1
-        with open(_os.path.join(d, f"v{v:05d}.json"), "w") as f:
-            _json.dump({"name": name, "sql": body, "version": v}, f)
-        return {"op": "create-view" if v == 1 else "replace-view",
-                "table": name, "version": v, "audit": None}
-    m = _DROP_VIEW.match(statement)
-    if m:
-        import shutil as _shutil
+    _refuse("SHOW CREATE TABLE", {"AS SERDE": s.node.asSerde()})
+    t = s.table(s.node.child(), "SHOW CREATE TABLE")
+    meta = t._read_meta(_current(t))
+    nn = set(meta.get("not_null", []))
 
-        if_exists, name = m.group(1), m.group(2)
-        if not _view_versions(root, name):
-            if if_exists:
-                return {"op": "drop-view-noop", "table": name,
-                        "version": None, "audit": None}
-            raise ValueError(f"view {name} does not exist")
-        _shutil.rmtree(_views_dir(root, name), ignore_errors=True)
-        return {"op": "drop-view", "table": name, "version": None, "audit": None}
-    m = _ANALYZE_HEAD.match(statement)
-    if m:
-        name, collist = m.group(1), m.group(2)
-        t = SnapshotTable(spark, name, root)
-        cols = [c.strip() for c in (collist or "").split(",") if c.strip()]
-        if collist is not None and not cols:
-            raise ValueError("ANALYZE ... FOR COLUMNS names no columns")
-        version = t.analyze(cols or None)
-        return {"op": "analyze", "table": name, "version": version,
-                "audit": {"stats": t._read_meta(version)["stats"],
-                          "dirs_rewritten": 0}}
-    m = _CREATE_HEAD.match(statement)
-    if m:
-        or_replace, if_not_exists, name, rest = (
-            m.group(1), m.group(2), m.group(3), m.group(4),
+    def _coldef(f) -> str:
+        col = f"  {f.name} {f.dataType.simpleString()}"
+        if f.name in nn:
+            col += " NOT NULL"
+        if "default" in (f.metadata or {}):
+            col += f" DEFAULT {f.metadata['default']}"
+        return col
+
+    stored = T.StructType.fromJson(_json.loads(meta["schema"]))
+    cols = ",\n".join(_coldef(f) for f in stored.fields)
+    stmt = f"CREATE TABLE {t.name} (\n{cols})\nUSING snapshot"
+    spec = meta.get("spec", [])
+    if spec:
+        stmt += f"\nPARTITIONED BY ({', '.join(spec)})"
+    # TBLPROPERTIES block carries the user properties plus the CHECK
+    # constraints rendered Delta-style (`delta.constraints.<name>` is
+    # the public model this mirrors), sorted for determinism
+    props = dict(meta.get("properties", {}))
+    for cname, cexpr in meta.get("constraints", {}).items():
+        props[f"constraint.{cname}"] = f"CHECK ({cexpr})"
+    if props:
+        # SQL-escape single quotes (ADVICE r12): a CHECK constraint with a
+        # string literal (CHECK (seg = 'BLD')) must render as a valid
+        # quoted property value, not nested bare quotes
+        esc = lambda v: str(v).replace("'", "''")  # noqa: E731
+        lines = ",\n".join(
+            f"  '{esc(k)}' = '{esc(v)}'" for k, v in sorted(props.items())
         )
-        if or_replace and if_not_exists:
-            raise ValueError(
-                "CREATE OR REPLACE and IF NOT EXISTS are mutually exclusive"
-            )
-        if rest.lstrip().startswith("("):
-            # schema-only CREATE TABLE t (col type [NOT NULL] [DEFAULT lit],
-            # ...) [USING snapshot] [PARTITIONED BY (...)] [TBLPROPERTIES
-            # (...)] — r13: the column-list form SHOW CREATE TABLE emits,
-            # so its output ROUND-TRIPS through execute_sql (constraints
-            # ride back in as 'constraint.<name>' = 'CHECK (...)'
-            # properties). Mutually exclusive with CTAS: a column list
-            # declares an EMPTY v1.
-            return _create_schema_only(
-                spark, name, rest.lstrip(), root,
-                or_replace=bool(or_replace), if_not_exists=bool(if_not_exists),
-            )
-        i = _find_keyword(rest, "AS")
-        if i < 0:
-            raise ValueError(
-                "CREATE TABLE requires an AS SELECT clause or a column "
-                f"list (CREATE TABLE t (col type, ...)): {statement[:60]!r}"
-            )
-        head, select = rest[:i].strip(), rest[i + 2 :].strip()
-        spec: list[str] = []
-        if head:
-            parsed_spec, remainder = _consume_partitioned_by(head)
-            if parsed_spec is None or remainder:
-                raise ValueError(
-                    f"unexpected tokens between table name and AS: {head[:60]!r}"
-                )
-            spec = parsed_spec
-        first = select.lstrip("(").split(None, 1)[0].upper() if select else ""
-        if first not in ("SELECT", "WITH"):
-            raise ValueError(f"CTAS body must be a SELECT: {select[:60]!r}")
-        if _view_versions(root, name):
-            raise ValueError(
-                f"cannot CREATE TABLE {name}: a VIEW of that name exists"
-            )
-        t = SnapshotTable(spark, name, root)
-        if t.current_version() is not None:
-            if if_not_exists:
-                return {"op": "create-noop", "table": name,
-                        "version": t.current_version(), "audit": None}
-            if or_replace:
-                # Iceberg CREATE OR REPLACE: one snapshot commit replaces
-                # content, schema AND partition spec; history + time
-                # travel to the pre-replace versions stay intact
-                version = t.overwrite(spark.sql(select), op="replace", spec=spec)
-                return {"op": "replace", "table": name, "version": version,
-                        "audit": None}
-            raise ValueError(f"table {name} already exists")
-        version = t.create(spark.sql(select), partition_by=spec or None)
-        return {"op": "create", "table": name, "version": version, "audit": None}
-    m = _TRUNCATE_HEAD.match(statement)
-    if m:
-        name = m.group(1)
-        t = SnapshotTable(spark, name, root)
-        version = t.truncate()
-        return {"op": "truncate", "table": name, "version": version,
-                "audit": {"dirs_rewritten": 0}}
-    m = _ALTER_HEAD.match(statement)
-    if m:
-        name, action = m.group(1), m.group(2).strip()
-        t = SnapshotTable(spark, name, root)
-        am = _ADD_COLUMNS.match(action)
-        if am:
-            defs = []
-            for item in _split_columns(am.group(1)):
-                cm = re.match(r"^(\w+)\s+(.+)$", item, re.DOTALL)
-                if not cm:
-                    raise ValueError(f"bad column definition: {item!r}")
-                type_part, default = cm.group(2).strip(), None
-                dm_ = _DEFAULT_SPLIT.search(_mask_literals(type_part))
-                if dm_:
-                    default = type_part[dm_.end() :].strip()
-                    type_part = type_part[: dm_.start()].strip()
-                defs.append((cm.group(1), type_part, default))
-            # Fail fast BEFORE the first commit so a bad later item
-            # cannot leave a multi-column statement half-applied: parse
-            # every type (Spark raises on nonsense) and reject in-list
-            # duplicates up front. Per-column guards (exists / was
-            # dropped) still run inside add_column under its OCC loop.
-            names = [c for c, _t, _d in defs]
-            if len(set(names)) != len(names):
-                raise ValueError(f"duplicate column names in ADD COLUMNS: {names}")
-            for col, sql_type, _d in defs:
-                spark.createDataFrame([], f"`{col}` {sql_type}")
-            parent = t.current_version()
-            parent_dirs = t._read_meta(parent)["dirs"] if parent else None
-            version = parent
-            for col, sql_type, default in defs:
-                version = t.add_column(col, sql_type, default=default)
-            new_dirs = t._read_meta(version)["dirs"]
-            audit = {
-                "dirs_rewritten": len(set(new_dirs) - set(parent_dirs or [])),
-                "dirs_reused": len(new_dirs),
-            }
-            return {"op": "add-column", "table": name, "version": version,
-                    "audit": audit}
-        dm = _DROP_COLUMNS.match(action)
-        if dm:
-            cols = [c.strip() for c in dm.group(1).split(",")]
-            if len(set(cols)) != len(cols):
-                raise ValueError(f"duplicate column names in DROP COLUMNS: {cols}")
-            parent = t.current_version()
-            parent_dirs = t._read_meta(parent)["dirs"] if parent else None
-            version = parent
-            for col in cols:
-                version = t.drop_column(col)
-            new_dirs = t._read_meta(version)["dirs"]
-            audit = {
-                "dirs_rewritten": len(set(new_dirs) - set(parent_dirs or [])),
-                "dirs_reused": len(new_dirs),
-            }
-            return {"op": "drop-column", "table": name, "version": version,
-                    "audit": audit}
-        cm = _CREATE_REF.match(action)
-        if cm:
-            kind, ref, at = cm.group(1).lower(), cm.group(2), cm.group(3)
-            version = int(at) if at else t.current_version()
-            if version is None:
-                raise ValueError(f"table {name} has no snapshots")
-            from empdia_iceberg_spark.tables.manager import CommitConflictError
+        stmt += f"\nTBLPROPERTIES (\n{lines})"
+    return s.spark.createDataFrame([(stmt,)], "createtab_stmt string")
 
-            try:
-                # CAS against absence: CREATE must not move an existing ref
-                t.set_ref(ref, version, expect=None)
-            except CommitConflictError:
-                raise ValueError(
-                    f"table {name}: ref {ref!r} already exists "
-                    f"(use set_ref to move it)"
-                )
-            return {"op": f"create-{kind}", "table": name,
-                    "version": version, "audit": {"ref": ref}}
-        dm2 = _DROP_REF.match(action)
-        if dm2:
-            kind, ref = dm2.group(1).lower(), dm2.group(2)
-            try:
-                t.drop_ref(ref)
-            except KeyError as e:
-                raise ValueError(str(e))
-            return {"op": f"drop-{kind}", "table": name,
-                    "version": t.current_version(), "audit": {"ref": ref}}
-        rt = _RENAME_TABLE.match(action)
-        if rt:
-            new_name = rt.group(1)
-            t.rename_to(new_name)
-            t2 = SnapshotTable(spark, new_name, root)
-            return {"op": "rename-table", "table": new_name,
-                    "version": t2.current_version(),
-                    "audit": {"renamed_from": name}}
-        sp = _SET_PROPS.match(action)
-        if sp:
-            props = {}
-            for item in _split_top_level(sp.group(1)):
-                pm2 = _PROP_PAIR.match(item)
-                if not pm2:
-                    raise ValueError(
-                        f"bad TBLPROPERTIES entry (expected 'k' = 'v'): {item!r}"
-                    )
-                props[_prop_unescape(pm2.group(1))] = _prop_unescape(pm2.group(2))
-            version = t.set_properties(props)
-            return {"op": "set-properties", "table": name, "version": version,
-                    "audit": {"properties": t.properties(),
-                              "dirs_rewritten": 0}}
-        up = _UNSET_PROPS.match(action)
-        if up:
-            keys = []
-            for item in _split_top_level(up.group(1)):
-                km = _PROP_KEY.match(item)
-                if not km:
-                    raise ValueError(
-                        f"bad UNSET TBLPROPERTIES entry (expected 'k'): {item!r}"
-                    )
-                keys.append(_prop_unescape(km.group(1)))
-            version = t.unset_properties(keys)
-            return {"op": "unset-properties", "table": name, "version": version,
-                    "audit": {"properties": t.properties(),
-                              "dirs_rewritten": 0}}
-        ac = _ADD_CONSTRAINT.match(action)
-        if ac:
-            cname, cexpr = ac.group(1), ac.group(2).strip()
-            version = t.add_constraint(cname, cexpr)
-            return {"op": "add-constraint", "table": name, "version": version,
-                    "audit": {"constraint": cname, "check": cexpr,
-                              "dirs_rewritten": 0}}
-        dc = _DROP_CONSTRAINT.match(action)
-        if dc:
-            version = t.drop_constraint(dc.group(1))
-            return {"op": "drop-constraint", "table": name, "version": version,
-                    "audit": {"constraint": dc.group(1), "dirs_rewritten": 0}}
-        nn = _ALTER_NOT_NULL.match(action)
-        if nn:
-            col, verb = nn.group(1), nn.group(2).upper()
-            version = (
-                t.set_not_null(col) if verb == "SET" else t.drop_not_null(col)
-            )
-            return {"op": f"{verb.lower()}-not-null", "table": name,
-                    "version": version,
-                    "audit": {"column": col, "dirs_rewritten": 0}}
-        tm = _ALTER_TYPE.match(action)
-        if tm:
-            col, sql_type = tm.group(1), tm.group(2).strip()
-            parent = t.current_version()
-            parent_dirs = t._read_meta(parent)["dirs"] if parent else None
-            version = t.alter_column_type(col, sql_type)
-            new_dirs = t._read_meta(version)["dirs"]
-            audit = {
-                "dirs_rewritten": len(set(new_dirs) - set(parent_dirs or [])),
-                "dirs_reused": len(new_dirs),
-            }
-            return {"op": "alter-column-type", "table": name,
-                    "version": version, "audit": audit}
-        rm = _RENAME_COLUMN.match(action)
-        if rm:
-            old, new = rm.group(1), rm.group(2)
-            parent = t.current_version()
-            parent_dirs = t._read_meta(parent)["dirs"] if parent else None
-            version = t.rename_column(old, new)
-            new_dirs = t._read_meta(version)["dirs"]
-            audit = {
-                "dirs_rewritten": len(set(new_dirs) - set(parent_dirs or [])),
-                "dirs_reused": len(new_dirs),
-            }
-            return {"op": "rename-column", "table": name, "version": version,
-                    "audit": audit}
-        pm = _ADD_PART_FIELD.match(action)
-        if pm:
-            entry = canonical_transform(pm.group(1))
-            spec = t.current_spec()
-            if entry in spec:
-                raise ValueError(f"{entry!r} is already a partition field")
-            version = t.evolve_partitioning(spec + [entry])
-            return {"op": "evolve-partitioning", "table": name,
-                    "version": version, "audit": None}
-        pm = _REPLACE_PART_FIELD.match(action)
-        if pm:
-            old = canonical_transform(pm.group(1))
-            new = canonical_transform(pm.group(2))
-            spec = t.current_spec()
-            if old not in spec:
-                raise ValueError(f"{old!r} is not a partition field of {name}")
-            if new in spec:
-                raise ValueError(f"{new!r} is already a partition field")
-            version = t.evolve_partitioning(
-                [new if c == old else c for c in spec]
-            )
-            return {"op": "evolve-partitioning", "table": name,
-                    "version": version,
-                    "audit": {"replaced": old, "with": new}}
-        pm = _DROP_PART_FIELD.match(action)
-        if pm:
-            entry = canonical_transform(pm.group(1))
-            spec = t.current_spec()
-            if entry not in spec:
-                raise ValueError(f"{entry!r} is not a partition field of {name}")
-            version = t.evolve_partitioning([c for c in spec if c != entry])
-            return {"op": "evolve-partitioning", "table": name,
-                    "version": version, "audit": None}
-        raise ValueError(f"unsupported ALTER TABLE action: {action[:60]!r}")
-    m = _DROP_HEAD.match(statement)
-    if m:
-        if_exists, name = m.group(1), m.group(2)
-        t = SnapshotTable(spark, name, root)
-        if t.current_version() is None and not if_exists:
-            raise ValueError(f"table {name} does not exist")
-        t.drop()
-        return {"op": "drop", "table": name, "version": None, "audit": None}
-    m = _OPTIMIZE_HEAD.match(statement)
-    if m:
-        name, zcols = m.group(1), m.group(2)
-        t = SnapshotTable(spark, name, root)
-        if t.current_version() is None:
-            raise ValueError(f"table {name} does not exist")
-        cols = [c.strip() for c in (zcols or "").split(",") if c.strip()]
-        if zcols is not None and not cols:
-            raise ValueError(
-                "OPTIMIZE ... ZORDER BY () names no columns — drop the "
-                "clause for plain compaction or list exactly 2 columns"
-            )
-        return _optimize(spark, t, cols)
-    m = _VACUUM_HEAD.match(statement)
-    if m:
-        name, keep = m.group(1), int(m.group(2) or 1)
-        t = SnapshotTable(spark, name, root)
-        if t.current_version() is None:
-            raise ValueError(f"table {name} does not exist")
-        if keep < 1:
-            raise ValueError("VACUUM must retain at least 1 version")
-        expired = t.expire_snapshots(keep_last=keep)
-        return {
-            "op": "vacuum",
-            "table": name,
-            "version": t.current_version(),
-            "audit": {
-                "versions_expired": len(expired),
-                "versions_left": len(t._versions()),
-            },
-        }
-    raise ValueError(
-        f"unsupported DDL statement (expected CREATE [OR REPLACE] TABLE ... "
-        f"AS SELECT, TRUNCATE TABLE, ALTER TABLE ... ADD/DROP/RENAME "
-        f"COLUMN[S] / ALTER COLUMN ... TYPE / ADD|DROP PARTITION FIELD / "
-        f"CREATE|DROP BRANCH|TAG, "
-        f"DROP TABLE, OPTIMIZE [ZORDER BY], VACUUM, CALL <proc>(...), "
-        f"ANALYZE TABLE ... COMPUTE STATISTICS, or CREATE/DROP VIEW): "
-        f"{statement[:80]!r}"
+
+def _show_properties(s: _Statement) -> DataFrame:
+    _refuse("SHOW TBLPROPERTIES", {"a property key": s.node.propertyKey().isDefined()})
+    t = s.table(s.node.table(), "SHOW TBLPROPERTIES")
+    _current(t)
+    return s.spark.createDataFrame(
+        sorted(t.properties().items()), "key string, value string"
+    )
+
+
+# ------------------------------------- extensions Spark's grammar rejects
+# Each takes its anchored regex match (s.node).
+
+
+def _ref(s: _Statement) -> dict:
+    """ALTER TABLE t CREATE BRANCH|TAG name [AS OF VERSION n] (a CAS
+    against absence: CREATE never moves an existing ref), and ALTER
+    TABLE t DROP BRANCH|TAG name"""
+    from empdia_iceberg_spark.tables.manager import CommitConflictError
+
+    name, verb, kind, ref, at = s.node.groups()
+    t, op = SnapshotTable(s.spark, name, s.root), f"{verb}-{kind}".lower()
+    if verb.upper() == "DROP":
+        if at:
+            raise ValueError("DROP BRANCH|TAG takes no AS OF VERSION")
+        try:
+            t.drop_ref(ref)
+        except KeyError as e:
+            raise ValueError(str(e))
+        return {"op": op, "table": name, "version": t.current_version(),
+                "audit": {"ref": ref}}
+    version = int(at) if at else t.current_version()
+    if version is None:
+        raise ValueError(f"table {name} has no snapshots")
+    try:
+        t.set_ref(ref, version, expect=None)
+    except CommitConflictError:
+        raise ValueError(
+            f"table {name}: ref {ref!r} already exists (use set_ref to move it)"
+        )
+    return {"op": op, "table": name, "version": version, "audit": {"ref": ref}}
+
+
+def _partition_field(s: _Statement) -> dict:
+    """ALTER TABLE t ADD|DROP PARTITION FIELD col|transform(col), and
+    REPLACE PARTITION FIELD old WITH new (Iceberg's one-commit swap,
+    position kept). Spec evolution affects future writes only."""
+    name, verb, field_, new = s.node.groups()
+    t = SnapshotTable(s.spark, name, s.root)
+    entry, spec = canonical_transform(field_), t.current_spec()
+    if verb.upper() != "ADD" and entry not in spec:
+        raise ValueError(f"{entry!r} is not a partition field of {name}")
+    audit = None
+    if verb.upper() == "ADD":
+        if entry in spec:
+            raise ValueError(f"{entry!r} is already a partition field")
+        spec = spec + [entry]
+    elif verb.upper() == "DROP":
+        spec = [c for c in spec if c != entry]
+    else:
+        new = canonical_transform(new)
+        if new in spec:
+            raise ValueError(f"{new!r} is already a partition field")
+        spec = [new if c == entry else c for c in spec]
+        audit = {"replaced": entry, "with": new}
+    return {"op": "evolve-partitioning", "table": name,
+            "version": t.evolve_partitioning(spec), "audit": audit}
+
+
+def _set_data_type(s: _Statement) -> dict:
+    """ALTER TABLE t ALTER COLUMN c SET DATA TYPE t, the DB2/PostgreSQL
+    spelling of ALTER COLUMN c TYPE t"""
+    name, col, sql_type = s.node.groups()
+    return _alter_type(SnapshotTable(s.spark, name, s.root), col, sql_type)
+
+
+def _vacuum(s: _Statement) -> dict:
+    """VACUUM t [RETAIN k VERSIONS]: CALL expire_snapshots by keep_last"""
+    name, keep = s.node.group(1), int(s.node.group(2) or 1)
+    t = SnapshotTable(s.spark, name, s.root)
+    _current(t)
+    if keep < 1:
+        raise ValueError("VACUUM must retain at least 1 version")
+    return {"op": "vacuum", "table": name,
+            **_expire_snapshots(t, {"keep_last": keep, "older_than_ts": None})}
+
+
+def _show_create_view(s: _Statement) -> DataFrame:
+    """SHOW CREATE VIEW v"""
+    name = s.node.group(1)
+    sql = _view_sql(s.root, name)
+    if sql is None:
+        raise ValueError(f"view {name} does not exist")
+    return s.spark.createDataFrame(
+        [(f"CREATE VIEW {name} AS\n{sql}",)], "createview_stmt string"
     )
 
 
@@ -1298,22 +1014,26 @@ def _curve_dim(df: DataFrame, col: str):
     )
 
 
+
 def _target_file_count(df: DataFrame) -> int:
     """File count under the target-file-size policy, from Catalyst's
-    plan-size estimate (same policy as SnapshotTable._write_data)."""
+    plan-size estimate (same policy as SnapshotTable._write_data). When
+    the JVM cannot estimate the plan, OPTIMIZE writes one file and says
+    why."""
     from empdia_iceberg_spark.tables import manager as _mgr
 
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        return max(1, min(4096, -(-size // _mgr.TARGET_FILE_BYTES)))
-    except Exception:
+    except (Py4JError, PySparkException) as e:
+        warnings.warn(f"OPTIMIZE: no plan-size estimate, writing one file: {e}")
         return 1
+    return max(1, min(4096, -(-size // _mgr.TARGET_FILE_BYTES)))
 
 
-def _optimize(spark: SparkSession, t: SnapshotTable, zorder_cols: list[str]) -> dict:
-    """OPTIMIZE engine: rewrite the current file set to target-size
-    files, optionally Z-ORDER clustered (Delta `OPTIMIZE ... ZORDER BY`
-    / Iceberg rewrite_data_files with sort order).
+def _optimize(s: _Statement) -> dict:
+    """OPTIMIZE t [ZORDER BY (c1, c2)]: rewrite the current file set to
+    target-size files, optionally Z-ORDER clustered (Delta `OPTIMIZE ...
+    ZORDER BY` / Iceberg rewrite_data_files with sort order).
 
     Scale shape: ONE range shuffle on the Morton key (repartitionByRange
     gives disjoint key ranges per output file — the file-skipping
@@ -1323,7 +1043,15 @@ def _optimize(spark: SparkSession, t: SnapshotTable, zorder_cols: list[str]) -> 
     dim wider than 2^21 cells is never silently masked into collisions.
     MOR delete files fold in (the read applies them; the rewrite commits
     clean files and drops the delete set)."""
-    before = t._read_meta(t.current_version())
+    name, zcols = s.node.groups()
+    t = SnapshotTable(s.spark, name, s.root)
+    before = t._read_meta(_current(t))
+    zorder_cols = [c.strip() for c in (zcols or "").split(",") if c.strip()]
+    if zcols is not None and not zorder_cols:
+        raise ValueError(
+            "OPTIMIZE ... ZORDER BY () names no columns — drop the "
+            "clause for plain compaction or list exactly 2 columns"
+        )
     df = t.read()
     if zorder_cols:
         if len(zorder_cols) != 2:
@@ -1763,13 +1491,273 @@ def execute_sql_script(
     return results
 
 
-# execute_sql dispatches on a statement's first keyword. Only statements
-# whose body spark.sql evaluates (reads, DML bodies, CTAS and CREATE VIEW
-# bodies) resolve persisted views and snapshot tables as temp views first.
-_READ_KEYWORDS = frozenset({"SELECT", "WITH"})
-_DML_KEYWORDS = frozenset({"INSERT", "UPDATE", "DELETE", "MERGE"})
-_DDL_KEYWORDS = frozenset({"CREATE", "ALTER", "DROP", "OPTIMIZE", "VACUUM", "TRUNCATE", "CALL", "ANALYZE"})
-_BODY_KEYWORDS = _READ_KEYWORDS | _DML_KEYWORDS | {"CREATE"}
+# ------------------------------------------------------ statement front-end
+# execute_sql parses each statement once with Spark's parser and
+# dispatches on the plan node's class through `_NODES`: one entry per kind
+# of statement, giving its handler and whether the statement's body is
+# evaluated through Spark (reads, DML, CTAS), which is what the view- and
+# table-materialization gate needs. Query nodes take the read path. The
+# few forms Spark's grammar rejects match one anchored regex each in
+# `_EXTENSIONS`, and none of them has a body.
+
+
+class _Entry(NamedTuple):
+    handler: Callable[[_Statement], Any]
+    body: bool = False  # the statement's body is evaluated through Spark
+    ddl: bool = True  # execute_ddl runs it
+
+
+def _read(s: _Statement) -> DataFrame:
+    """A query, analyzed from its parsed plan as ``spark.sql`` would."""
+    df = _dataframe(s.spark, s.node)
+    if s.registered:
+        # partition pruning for the SQL read path: if Catalyst pushed
+        # partition-source predicates onto a table's scan, re-bind that
+        # table's temp view to the dir-pruned read and re-analyze
+        # (sqlprune module; falls back to the full plan whenever scoping
+        # or bounds can't be PROVEN)
+        pruned = try_sql_prune(
+            s.spark, df, lambda: _dataframe(s.spark, s.node), s.root, s.registered
+        )
+        if pruned is not None:
+            return pruned
+    return df
+
+
+def _dml(s: _Statement) -> dict:
+    return execute_dml(s.spark, s.text, s.root, s.mor_key, plan=s.node)
+
+
+_READ = _Entry(_read, body=True, ddl=False)
+_DML = _Entry(_dml, body=True, ddl=False)
+
+_NODES: dict[str, _Entry] = {
+    "InsertIntoStatement": _DML,
+    "UpdateTable": _DML,
+    "DeleteFromTable": _DML,
+    "MergeIntoTable": _DML,
+    "OverwriteByExpression": _DML,  # INSERT ... REPLACE WHERE, which it refuses
+    "CreateTableAsSelect": _Entry(_create_table, body=True),
+    "ReplaceTableAsSelect": _Entry(_create_table, body=True),
+    "CreateTable": _Entry(_create_table),
+    "ReplaceTable": _Entry(_create_table),
+    "TruncateTable": _Entry(_truncate),
+    "DropTable": _Entry(_drop_table),
+    "AddColumns": _Entry(_add_columns),
+    "DropColumns": _Entry(_drop_columns),
+    "RenameColumn": _Entry(_rename_column),
+    "AlterColumns": _Entry(_alter_columns),
+    "RenameTable": _Entry(_rename_table),
+    "SetTableProperties": _Entry(_set_properties),
+    "UnsetTableProperties": _Entry(_unset_properties),
+    "AddCheckConstraint": _Entry(_add_constraint),
+    "DropConstraint": _Entry(_drop_constraint),
+    "Call": _Entry(_call),
+    "AnalyzeTable": _Entry(_analyze),
+    "AnalyzeColumn": _Entry(_analyze),
+    "CreateView": _Entry(_create_view),
+    "DropView": _Entry(_drop_view),
+    "DescribeRelation": _Entry(_describe, ddl=False),
+    "ShowTables": _Entry(_show_catalog, ddl=False),
+    "ShowViews": _Entry(_show_catalog, ddl=False),
+    "ShowCreateTable": _Entry(_show_create_table, ddl=False),
+    "ShowTableProperties": _Entry(_show_properties, ddl=False),
+}
+
+_EXTENSIONS: list[tuple[re.Pattern, _Entry]] = [
+    (re.compile(pattern, re.IGNORECASE | re.DOTALL), entry)
+    for pattern, entry in (
+        (r"^\s*ALTER\s+TABLE\s+(\w+)\s+(CREATE|DROP)\s+(BRANCH|TAG)\s+(\w+)"
+         r"(?:\s+AS\s+OF\s+VERSION\s+(\d+))?\s*;?\s*$", _Entry(_ref)),
+        (r"^\s*ALTER\s+TABLE\s+(\w+)\s+(ADD|DROP|REPLACE)\s+PARTITION\s+FIELD\s+"
+         r"(.+?)(?:\s+WITH\s+(.+?))?\s*;?\s*$", _Entry(_partition_field)),
+        (r"^\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+SET\s+DATA\s+TYPE\s+"
+         r"(.+?)\s*;?\s*$", _Entry(_set_data_type)),
+        (r"^\s*OPTIMIZE\s+(\w+)(?:\s+ZORDER\s+BY\s*\(([^)]*)\))?\s*;?\s*$",
+         _Entry(_optimize)),
+        (r"^\s*VACUUM\s+(\w+)(?:\s+RETAIN\s+(\d+)\s+VERSIONS?)?\s*;?\s*$",
+         _Entry(_vacuum)),
+        (r"^\s*SHOW\s+CREATE\s+VIEW\s+(\w+)\s*;?\s*$",
+         _Entry(_show_create_view, ddl=False)),
+    )
+]
+
+
+def _is_query(spark: SparkSession, node) -> bool:
+    """Whether a parsed node is a query, the only kind ``spark.sql`` may
+    evaluate: a command run over the auto-registered temp views would
+    write straight into a committed snapshot's files. The grammar nests
+    a statement under a query-shaped node only as the body of a CTE
+    (`WITH ... INSERT`) or as the branches of a multi-insert (`FROM s
+    INSERT ... INSERT ...`), so the check looks no deeper than those."""
+    kind = _kind(node)
+    if kind in ("UnresolvedWith", "Union"):
+        return all(_is_query(spark, c) for c in _seq(node.children()))
+    gateway = spark.sparkContext._gateway
+    logical = "org.apache.spark.sql.catalyst.plans.logical."
+    return kind not in ("UnresolvedExecuteImmediate", "InsertIntoDir") and not any(
+        is_instance_of(gateway, node, logical + trait)
+        for trait in ("Command", "ParsedStatement")
+    )
+
+
+def _parse_with_reserved_keys(spark: SparkSession, text: str) -> tuple:
+    """Parse a statement whose TBLPROPERTIES name a key Spark reserves
+    (owner, location, provider). Spark's parser refuses those keys, and
+    with spark.sql.legacy.notReserveProperties it drops them silently,
+    but the engine's properties are user metadata. So this parses
+    Spark's own ANTLR tree once: Spark's AST builder builds the plan
+    under a clone of the session with that conf set, and reads the
+    property list from the same tree with every key kept. AstBuilder
+    reads SQLConf.get, which follows the thread's active session, so the
+    clone is made active on this thread for the one call only; the
+    user's session, its conf and its active session are unchanged.
+    Returns (plan node, the TBLPROPERTIES map, or key list for UNSET)."""
+    jvm = spark._jvm
+    antlr, grammar = jvm.org.antlr.v4.runtime, jvm.org.apache.spark.sql.catalyst.parser
+    parser = grammar.SqlBaseParser(antlr.CommonTokenStream(grammar.SqlBaseLexer(
+        grammar.UpperCaseCharStream(antlr.CharStreams.fromString(text))
+    )))
+    tree = parser.singleStatement()
+    builder = jvm.org.apache.spark.sql.execution.SparkSqlAstBuilder()
+    clone = spark._jsparkSession.cloneSession()
+    clone.conf().set("spark.sql.legacy.notReserveProperties", "true")
+    sessions = jvm.org.apache.spark.sql.SparkSession
+    active = sessions.getActiveSession()
+    sessions.setActiveSession(clone)
+    try:
+        plan = builder.visitSingleStatement(tree)
+    finally:
+        if active.isDefined():
+            sessions.setActiveSession(active.get())
+        else:
+            sessions.clearActiveSession()
+    (props,) = antlr.tree.xpath.XPath.findAll(tree, "//propertyList", parser)
+    if _kind(plan) == "UnsetTableProperties":
+        return plan, _seq(builder.visitPropertyKeys(props))
+    return plan, _map(builder.visitPropertyKeyValues(props))
+
+
+def _statement(spark: SparkSession, text: str, root: str) -> tuple[_Entry, _Statement]:
+    """Find the entry for one statement, parsing it once."""
+    for pattern, entry in _EXTENSIONS:
+        m = pattern.match(text)
+        if m:
+            return entry, _Statement(spark, root, text, m)
+    try:
+        node, props = _parse(spark, text), None
+    except ValueError as ex:
+        cause = ex.__cause__
+        if not (isinstance(cause, ParseException)
+                and cause.getCondition() == "UNSUPPORTED_FEATURE.SET_TABLE_PROPERTY"):
+            raise
+        node, props = _parse_with_reserved_keys(spark, text)
+    kind = _kind(node)
+    entry = _NODES.get(kind)
+    if entry is None:
+        if not _is_query(spark, node):
+            if kind == "UnresolvedWith" and _kind(node.child()) == "InsertIntoStatement":
+                raise ValueError(
+                    "a WITH clause ahead of INSERT is not supported; put it "
+                    "after the target: INSERT INTO t WITH q AS (...) SELECT ..."
+                )
+            raise ValueError(
+                f"unsupported SQL statement: Spark parses it as {kind}, which "
+                f"the engine does not handle: {text[:80]!r}"
+            )
+        entry = _READ
+    return entry, _Statement(spark, root, text, node, props)
+
+
+def _materialize(spark: SparkSession, text: str, root: str, depth: int = 0) -> list:
+    """Resolve the persisted views and snapshot tables a body reads as
+    temp views; returns the tables registered (see materialize_tables)."""
+    materialize_views(spark, text, root, depth=depth)
+    return materialize_tables(spark, text, root)
+
+
+def _run(
+    spark: SparkSession,
+    statement: str,
+    root: str,
+    ddl_only: bool,
+    mor_key: str | None = None,
+    view_depth: int = 0,
+):
+    # read-side sugar, rewritten to temp views before parsing
+    statement = materialize_time_travel(spark, statement, root)
+    statement = materialize_table_changes(spark, statement, root)
+    statement = materialize_metadata_tables(spark, statement, root)
+    entry, s = _statement(spark, statement, root)
+    if ddl_only and not entry.ddl:
+        raise ValueError(f"not a DDL statement (use execute_sql): {statement[:80]!r}")
+    if mor_key is not None and entry is not _DML:
+        raise ValueError("mor_key applies to DML DELETE only")
+    s.mor_key = mor_key
+    # Only a statement with a body resolves the temp-view namespace;
+    # refreshing every view for pure metadata statements cost
+    # O(tables·py4j) per statement. A DROP's stale auto-view is harmless:
+    # the next reading statement's materialize_tables drops it first.
+    if entry.body:
+        s.registered = _materialize(spark, statement, root, view_depth)
+    return entry.handler(s)
+
+
+def execute_ddl(spark: SparkSession, statement: str, root: str = DEFAULT_ROOT) -> dict:
+    """Execute one DDL statement against the snapshot-table catalog.
+
+    Spark's parser reads the statement, so every column type, default,
+    CHECK condition and CTAS body is Spark's own parse. Grammar::
+
+        CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t [USING snapshot|parquet]
+            [PARTITIONED BY (col|transform(col), ...)] [TBLPROPERTIES (...)]
+            AS <query>                 (OR REPLACE keeps history)
+        CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t
+            (c type [NOT NULL] [DEFAULT <literal>], ...) [USING ...]
+            [PARTITIONED BY (...)] [TBLPROPERTIES (...)]   (an empty v1)
+        TRUNCATE TABLE t
+        DROP TABLE [IF EXISTS] t
+        ALTER TABLE t ADD COLUMN[S] c type [DEFAULT <literal>] [, ...]
+        ALTER TABLE t DROP COLUMN[S] c [, ...]
+        ALTER TABLE t RENAME COLUMN old TO new
+        ALTER TABLE t ALTER COLUMN c TYPE type   (safe promotion)
+        ALTER TABLE t ALTER COLUMN c SET|DROP NOT NULL
+        ALTER TABLE t RENAME TO t2           (catalog move; history travels)
+        ALTER TABLE t SET TBLPROPERTIES ('k' = 'v', ...)   (merge-over)
+        ALTER TABLE t UNSET TBLPROPERTIES ('k', ...)
+        ALTER TABLE t ADD CONSTRAINT name CHECK (cond)     (validated + enforced)
+        ALTER TABLE t DROP CONSTRAINT name
+        ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c, ...]  (-> t.stats)
+        CREATE [OR REPLACE] VIEW v AS <query>
+        DROP VIEW [IF EXISTS] v
+    @PROCEDURES@
+
+    and the engine extensions Spark's grammar rejects::
+
+        ALTER TABLE t CREATE BRANCH|TAG name [AS OF VERSION n]
+        ALTER TABLE t DROP BRANCH|TAG name
+        ALTER TABLE t ADD|DROP PARTITION FIELD col|transform(col)
+        ALTER TABLE t REPLACE PARTITION FIELD old WITH new  (in place)
+        ALTER TABLE t ALTER COLUMN c SET DATA TYPE type
+        OPTIMIZE t [ZORDER BY (c1, c2)]
+        VACUUM t [RETAIN k VERSIONS]
+
+    CALL arguments are positional or `name => value`, each a string or
+    integer literal. Returns {"op", "table", "version", "audit"}; for
+    schema evolution the audit PROVES the commit was metadata-only
+    (dirs_rewritten is 0 by comparing the parent's and the new
+    snapshot's dir lists). A statement Spark cannot parse raises
+    ValueError with Spark's message; one that parses to a node the
+    engine does not handle raises ValueError naming the node's class,
+    and a clause it parses but the engine does not implement raises
+    ValueError naming the clause.
+    """
+    return _run(spark, statement, root, ddl_only=True)
+
+
+execute_ddl.__doc__ = execute_ddl.__doc__.replace(
+    "@PROCEDURES@", _procedure_grammar().replace("\n", "\n        ")
+)
 
 
 def execute_sql(
@@ -1779,90 +1767,23 @@ def execute_sql(
     mor_key: str | None = None,
     _view_depth: int = 0,
 ):
-    """One entry point for the whole declarative surface, dispatched on
-    the statement's first keyword: SELECT/WITH run through ``spark.sql``
-    verbatim and return a DataFrame (register snapshot tables as temp
-    views via ``SnapshotTable.read().createOrReplaceTempView`` first);
-    INSERT/UPDATE/DELETE/MERGE route to :func:`tables.dml.execute_dml`;
-    CREATE/ALTER/DROP TABLE route to :func:`execute_ddl` (both return
-    the result dict). ``mor_key`` is the DML DELETE routing knob and is
+    """One entry point for the whole declarative surface. Spark's parser
+    reads the statement once and the engine dispatches on the plan
+    node's class: a query returns a DataFrame analyzed from its parsed
+    plan (snapshot tables and persisted views it names resolve as temp
+    views first); INSERT/UPDATE/DELETE/MERGE go to
+    :func:`tables.dml.execute_dml` with the parsed node; DESCRIBE, SHOW
+    TABLES|VIEWS, SHOW CREATE TABLE|VIEW and SHOW TBLPROPERTIES return
+    DataFrames; everything in :func:`execute_ddl`'s grammar returns its
+    result dict. ``mor_key`` is the DML DELETE routing knob and is
     rejected elsewhere. Read-side time travel (`t [FOR] VERSION|
-    TIMESTAMP AS OF <literal>`) is materialized BEFORE dispatch, so it
-    works anywhere a read ref appears — a SELECT, an INSERT body, a
-    MERGE source."""
-    statement = materialize_time_travel(spark, statement, root)
-    statement = materialize_table_changes(spark, statement, root)
-    statement = materialize_metadata_tables(spark, statement, root)
-    head = statement.lstrip().lstrip("(").split(None, 1)
-    kw = head[0].upper() if head else ""
-    # Pure metadata statements never resolve the temp-view namespace;
-    # refreshing every view for them cost O(tables·py4j) per statement
-    # (r16). A DROP's stale auto-view is harmless: the next reading
-    # statement's materialize_tables drops it before spark.sql runs.
-    registered: list = []
-    if kw in _BODY_KEYWORDS:
-        # persisted views resolve for every READING statement; CREATE/
-        # DROP VIEW manage the catalog and must not resolve their own
-        # target
-        if not (_CREATE_VIEW.match(statement) or _DROP_VIEW.match(statement)):
-            materialize_views(spark, statement, root, depth=_view_depth)
-        registered = materialize_tables(spark, statement, root)
-    if kw in _READ_KEYWORDS:
-        df = spark.sql(statement)
-        if registered:
-            # partition pruning for the SQL read path: if Catalyst
-            # pushed partition-source predicates onto a table's scan,
-            # re-bind that table's temp view to the dir-pruned read and
-            # re-analyze (sqlprune module; falls back to the full plan
-            # whenever scoping or bounds can't be PROVEN)
-            from .sqlprune import try_sql_prune
-
-            pruned = try_sql_prune(
-                spark, df, lambda: spark.sql(statement), root, registered
-            )
-            if pruned is not None:
-                return pruned
-        return df
-    if kw in _DML_KEYWORDS:
-        return execute_dml(spark, statement, root, mor_key)
-    if kw in ("DESCRIBE", "DESC"):
-        m = _DESCRIBE_HEAD.match(statement)
-        if not m:
-            raise ValueError(f"cannot parse DESCRIBE statement: {statement[:60]!r}")
-        return describe_table(spark, m.group(1), root)
-    if kw == "SHOW":
-        sm = _SHOW_PROPS_HEAD.match(statement)
-        if sm:
-            t = SnapshotTable(spark, sm.group(1), root)
-            if t.current_version() is None:
-                raise ValueError(f"table {sm.group(1)} does not exist")
-            return spark.createDataFrame(
-                sorted(t.properties().items()), "key string, value string"
-            )
-        sm = _SHOW_CREATE_VIEW.match(statement)
-        if sm:
-            return show_create_view(spark, sm.group(1), root)
-        if _SHOW_VIEWS_HEAD.match(statement):
-            return show_views(spark, root)
-        sm = _SHOW_CREATE_HEAD.match(statement)
-        if sm:
-            return show_create_table(spark, sm.group(1), root)
-        if not _SHOW_TABLES_HEAD.match(statement):
-            raise ValueError(
-                f"unsupported SHOW statement (expected SHOW TABLES, SHOW "
-                f"VIEWS, SHOW CREATE TABLE|VIEW t, or SHOW TBLPROPERTIES "
-                f"t): {statement[:60]!r}"
-            )
-        return show_tables(spark, root)
-    if kw in _DDL_KEYWORDS:
-        if mor_key is not None:
-            raise ValueError("mor_key applies to DML DELETE only")
-        return execute_ddl(spark, statement, root)
-    raise ValueError(
-        f"unsupported SQL statement (expected one of "
-        f"{'/'.join(sorted(_READ_KEYWORDS | _DML_KEYWORDS | _DDL_KEYWORDS))}"
-        f"/DESCRIBE/DESC/SHOW): {statement[:80]!r}"
-    )
+    TIMESTAMP AS OF <literal>`), `table_changes(...)` and metadata
+    tables (`t.snapshots`, ...) are rewritten to temp views BEFORE the
+    parse, so they work anywhere a read ref appears: a SELECT, an
+    INSERT body, a MERGE source. Only query nodes reach Spark's
+    evaluation directly; `WITH ... INSERT` is refused, since its insert
+    would write into the table's committed files."""
+    return _run(spark, statement, root, False, mor_key, _view_depth)
 
 
 @register(

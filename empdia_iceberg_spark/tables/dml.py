@@ -58,6 +58,7 @@ _LAST_CLAUSE_SIDES = {
 
 
 def _parse(spark: SparkSession, statement: str):
+    """The one parse of a statement, shared with `ddl.execute_sql`."""
     try:
         return spark._jsparkSession.sessionState().sqlParser().parsePlan(statement)
     except ParseException as ex:
@@ -67,7 +68,7 @@ def _parse(spark: SparkSession, statement: str):
                 f"only the LAST WHEN {side} clause may omit AND <cond> "
                 "(first-match-wins makes later clauses unreachable)"
             ) from ex
-        raise ValueError(f"cannot parse DML statement: {str(ex).strip()}") from ex
+        raise ValueError(f"cannot parse SQL statement: {str(ex).strip()}") from ex
 
 
 def _kind(node) -> str:
@@ -93,10 +94,14 @@ def _dataframe(spark: SparkSession, plan) -> DataFrame:
 
 
 def _table_name(node, what: str) -> str:
-    """The one-part name a statement's relation node refers to."""
-    if _kind(node) == "SubqueryAlias":
+    """The one-part name a statement's relation or identifier node
+    refers to."""
+    kind = _kind(node)
+    if kind == "SubqueryAlias":
         raise ValueError(f"{what}: a target alias is not supported")
-    parts = _seq(node.multipartIdentifier())
+    parts = _seq(
+        node.nameParts() if kind == "UnresolvedIdentifier" else node.multipartIdentifier()
+    )
     if len(parts) != 1:
         raise ValueError(
             f"{what}: multipart table name {'.'.join(parts)!r} is not "
@@ -515,9 +520,12 @@ def execute_dml(
     root: str = DEFAULT_ROOT,
     mor_key: str | None = None,
     mor_position: bool = False,
+    plan=None,
 ) -> dict:
     """Execute one INSERT, UPDATE, DELETE or MERGE statement against a
-    snapshot table.
+    snapshot table. ``plan`` is the statement's node when the caller
+    already parsed it (`ddl.execute_sql` does), so no statement is
+    parsed twice.
 
     Returns {"op", "table", "version", "audit"}; ``audit`` carries the
     pruning decision (dirs_rewritten / dirs_reused) for COW paths and
@@ -545,11 +553,12 @@ def execute_dml(
     pruning decision.
 
     Spark's parser reads the statement, so its grammar errors surface
-    as ``ValueError("cannot parse DML statement: <Spark's message>")``.
+    as ``ValueError("cannot parse SQL statement: <Spark's message>")``.
     Forms it parses that no engine here supports raise a ValueError
     naming the form: a DELETE or UPDATE target alias, a multipart table
     name, and INSERT ... BY NAME, REPLACE WHERE or IF NOT EXISTS."""
-    plan = _parse(spark, statement)
+    if plan is None:
+        plan = _parse(spark, statement)
     kind = _kind(plan)
     if kind == "InsertIntoStatement":
         return _execute_insert(spark, plan, statement, root, mor_key, mor_position)

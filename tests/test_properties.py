@@ -599,14 +599,45 @@ def test_as_of_rewrite_never_fires_inside_literals(s):
         assert not (8 <= m.start() < len(stmt) - 6)
 
 
-@given(st.lists(st.sampled_from(
-    ["a int", "b decimal(12,2)", "c map<string,int>",
-     "d array<struct<x:int,y:string>>", "e string"]), min_size=1, max_size=5))
-@_scanner_settings
-def test_split_columns_round_trips_type_lists(defs):
-    from empdia_iceberg_spark.tables.ddl import _split_columns
+_decimal_types = st.builds(
+    lambda p, s: f"decimal({p},{s})",
+    st.integers(min_value=1, max_value=38), st.integers(min_value=0, max_value=38),
+).filter(lambda t: int(t.split(",")[1][:-1]) <= int(t.split("(")[1].split(",")[0]))
+_map_types = st.builds(
+    lambda k, v: f"map<{k},{v}>",
+    st.sampled_from(["string", "int", "bigint"]),
+    st.one_of(_decimal_types, st.sampled_from(["int", "string", "array<double>"])),
+)
 
-    assert _split_columns(", ".join(defs)) == defs
+
+@given(st.lists(st.one_of(_decimal_types, _map_types, st.sampled_from(
+    ["int", "string", "array<struct<x:int,y:string>>"])), min_size=1, max_size=4))
+@settings(max_examples=25, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_add_columns_type_lists_round_trip_through_describe(spark, types):
+    """Type lists whose types carry commas (decimal(p,s), map<k,v>) go
+    through ALTER TABLE ... ADD COLUMNS and come back unchanged from
+    DESCRIBE: Spark's parser, not a splitter, finds each column."""
+    from empdia_iceberg_spark.tables.ddl import execute_sql
+    from empdia_iceberg_spark.tables.manager import SnapshotTable, scratch_root
+
+    root = scratch_root()
+    t = SnapshotTable(spark, "t_prop_add_types", root)
+    t.drop()
+    t.create(spark.range(1).selectExpr("id AS k"))
+    cols = ", ".join(f"c{i} {typ}" for i, typ in enumerate(types))
+    execute_sql(spark, f"ALTER TABLE t_prop_add_types ADD COLUMNS {cols}", root)
+    described = execute_sql(spark, "DESCRIBE t_prop_add_types", root).collect()
+    assert [(r.col_name, r.data_type) for r in described[1:]] == [
+        (f"c{i}", typ) for i, typ in enumerate(types)
+    ]
+    t.drop()
+
+
+_parser_settings = settings(
+    max_examples=200, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
 
 
 @given(st.lists(
@@ -616,20 +647,24 @@ def test_split_columns_round_trips_type_lists(defs):
     ),
     min_size=1, max_size=5,
 ))
-@_scanner_settings
-def test_tblproperties_pairs_round_trip(pairs):
+@_parser_settings
+def test_tblproperties_pairs_round_trip(spark, pairs):
     """Whatever the keys/values (no quotes inside), a rendered
     TBLPROPERTIES list parses back to exactly the written pairs —
-    commas and parens inside VALUES must not split the list."""
-    from empdia_iceberg_spark.tables.ddl import _PROP_PAIR
-    from empdia_iceberg_spark.tables.ddl import _split_top_level
+    commas and parens inside VALUES must not split the list. Spark's
+    parser refuses a repeated key."""
+    import pytest
+
+    from empdia_iceberg_spark.tables.ddl import _map
+    from empdia_iceberg_spark.tables.dml import _parse
 
     rendered = ", ".join(f"'{k}' = '{v}'" for k, v in pairs)
-    items = _split_top_level(rendered)
-    assert len(items) == len(pairs)
-    for item, (k, v) in zip(items, pairs):
-        m = _PROP_PAIR.match(item)
-        assert m and m.group(1) == k and m.group(2) == v
+    statement = f"ALTER TABLE t SET TBLPROPERTIES ({rendered})"
+    if len({k for k, _v in pairs}) < len(pairs):
+        with pytest.raises(ValueError, match="DUPLICATE_KEY|INVALID_ATTRIBUTE_NAME"):
+            _parse(spark, statement)
+        return
+    assert _map(_parse(spark, statement).properties()) == dict(pairs)
 
 
 @given(
@@ -646,28 +681,19 @@ def test_tblproperties_pairs_round_trip(pairs):
         max_size=2,
     ),
 )
-@_scanner_settings
-def test_call_argument_parsing_round_trips(args, kwargs):
+@_parser_settings
+def test_call_argument_parsing_round_trips(spark, args, kwargs):
     """CALL argument rendering → parsing is the identity for any mix of
     positional ints/strings and named => ints (strings may contain
-    commas, '=>' and parens — the quote-aware splitter must hold)."""
-    import re as _re
-
-    from empdia_iceberg_spark.tables.ddl import _split_top_level
+    commas, '=>' and parens — Spark's parser must keep each literal
+    whole)."""
+    from empdia_iceberg_spark.tables.ddl import _call_arguments
+    from empdia_iceberg_spark.tables.dml import _parse
 
     toks = [str(a) if isinstance(a, int) else f"'{a}'" for a in args]
     toks += [f"{k} => {v}" for k, v in kwargs.items()]
-    raw = ", ".join(toks)
-    got_args, got_kwargs = [], {}
-    for item in (_split_top_level(raw) if raw.strip() else []):
-        km = _re.match(r"^\s*(\w+)\s*=>\s*(.+)$", item, _re.DOTALL)
-        if km:
-            got_kwargs[km.group(1)] = int(km.group(2))
-        else:
-            t = item.strip()
-            got_args.append(int(t) if _re.match(r"^-?\d+$", t) else t[1:-1])
-    assert got_args == list(args)
-    assert got_kwargs == kwargs
+    node = _parse(spark, f"CALL compact({', '.join(toks)})")
+    assert _call_arguments(node) == (list(args), kwargs)
 
 
 @given(st.text(alphabet=st.sampled_from(list("abcz _.,()'\"=<>0")), max_size=50))
