@@ -54,7 +54,6 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any, Callable, NamedTuple
 
-from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JError
 from pyspark.errors import ParseException, PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1583,20 +1582,20 @@ _EXTENSIONS: list[tuple[re.Pattern, _Entry]] = [
 ]
 
 
-def _is_query(spark: SparkSession, node) -> bool:
-    """Whether a parsed node is a query, the only kind ``spark.sql`` may
-    evaluate: a command run over the auto-registered temp views would
-    write straight into a committed snapshot's files. The grammar nests
-    a statement under a query-shaped node only as the body of a CTE
-    (`WITH ... INSERT`) or as the branches of a multi-insert (`FROM s
-    INSERT ... INSERT ...`), so the check looks no deeper than those."""
-    kind = _kind(node)
+def _is_query(spark: SparkSession, node, kind: str) -> bool:
+    """Whether a parsed node (of class ``kind``) is a query, the only kind
+    ``spark.sql`` may evaluate: a command run over the auto-registered
+    temp views would write straight into a committed snapshot's files.
+    The grammar nests a statement under a query-shaped node only as the
+    body of a CTE (`WITH ... INSERT`) or as the branches of a
+    multi-insert (`FROM s INSERT ... INSERT ...`), so the check looks no
+    deeper than those."""
     if kind in ("UnresolvedWith", "Union"):
-        return all(_is_query(spark, c) for c in _seq(node.children()))
-    gateway = spark.sparkContext._gateway
+        return all(_is_query(spark, c, _kind(c)) for c in _seq(node.children()))
+    type_util = getattr(spark._jvm, "py4j.reflection.TypeUtil")
     logical = "org.apache.spark.sql.catalyst.plans.logical."
     return kind not in ("UnresolvedExecuteImmediate", "InsertIntoDir") and not any(
-        is_instance_of(gateway, node, logical + trait)
+        type_util.isInstanceOf(logical + trait, node)
         for trait in ("Command", "ParsedStatement")
     )
 
@@ -1655,7 +1654,7 @@ def _statement(spark: SparkSession, text: str, root: str) -> tuple[_Entry, _Stat
     kind = _kind(node)
     entry = _NODES.get(kind)
     if entry is None:
-        if not _is_query(spark, node):
+        if not _is_query(spark, node, kind):
             if kind == "UnresolvedWith" and _kind(node.child()) == "InsertIntoStatement":
                 raise ValueError(
                     "a WITH clause ahead of INSERT is not supported; put it "

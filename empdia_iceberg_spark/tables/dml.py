@@ -88,9 +88,11 @@ def _condition(spark: SparkSession, opt) -> Column | None:
 
 
 def _dataframe(spark: SparkSession, plan) -> DataFrame:
-    """Analyze a parsed query node, as ``spark.sql`` does its text."""
-    sql = spark._jvm.org.apache.spark.sql
-    return DataFrame(sql.classic.Dataset.ofRows(spark._jsparkSession, plan), spark)
+    """Analyze a parsed query node, as ``spark.sql`` does its text. The
+    class is looked up by its full name: walking ``spark._jvm`` one
+    package at a time costs a py4j round trip per step."""
+    dataset = getattr(spark._jvm, "org.apache.spark.sql.classic.Dataset")
+    return DataFrame(dataset.ofRows(spark._jsparkSession, plan), spark)
 
 
 def _table_name(node, what: str) -> str:
