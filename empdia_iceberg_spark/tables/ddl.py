@@ -1729,7 +1729,7 @@ def execute_ddl(spark: SparkSession, statement: str, root: str = DEFAULT_ROOT) -
         ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c, ...]  (-> t.stats)
         CREATE [OR REPLACE] VIEW v AS <query>
         DROP VIEW [IF EXISTS] v
-    @PROCEDURES@
+        @PROCEDURES@
 
     and the engine extensions Spark's grammar rejects::
 
