@@ -19,7 +19,7 @@ ids to one checkpoint lineage, exactly like additive_upsert's guard.
 Scale shape: `write()` runs ON THE EXECUTORS — each task streams its
 partition's rows into one parquet file (chunked through Arrow, bounded
 memory) under a staging dir; only file PATHS travel to the driver,
-whose `commit()` is a metadata-sized rename + one snapshot JSON
+whose `commit()` is a metadata-sized link per file + one snapshot JSON
 publish. The sink scales out exactly like a parquet write.
 
 The op stamp starts with `append@`, which `snapshot_tail` already
@@ -172,7 +172,7 @@ class SnapshotStreamWriter(DataSourceStreamWriter):
         # commit/abort clean per-batch, nothing cleans a dead lineage).
         # Same posture as the IVF build-staging sweep: idle-age bound,
         # env-tunable for clock-skewed shared filesystems. Never touches
-        # THIS lineage's dir — a concurrent commit may be mid-rename.
+        # THIS lineage's dir — a concurrent commit may be mid-link.
         import time
 
         idle = float(os.environ.get("EMPDIA_SINK_STAGE_IDLE_SEC", 24 * 3600))
@@ -274,72 +274,35 @@ class SnapshotStreamWriter(DataSourceStreamWriter):
                 except OSError:
                     pass
             return
-        if not files:
-            # empty batch: stamp a metadata-only commit so the lineage
-            # stays monotonic through quiet triggers
-            for _ in range(4):
-                cur = t.current_version()
-                meta = t._read_meta(cur)
-                try:
-                    t._commit(
-                        stamp, meta["dirs"], cur, meta["schema"],
-                        spec=meta.get("spec", []),
-                        dir_specs=t._dir_specs(meta),
-                        expect_parent=cur,
-                        delete_dirs=meta.get("delete_dirs", []),
-                    )
-                    self._last_cache = batchId
-                    return
-                except CommitConflictError:
-                    continue
-            raise CommitConflictError(
-                f"snapshot_write: empty-batch stamp for {self.table} lost "
-                "the commit race 4 times"
-            )
-        # move staged files into one new data dir, then append-commit it
-        # (same dir naming as _write_data; rename is same-filesystem)
-        for _ in range(4):
-            cur = t.current_version()
-            meta = t._read_meta(cur)
-            d = os.path.join(
-                t.data_dir, f"s{cur + 1:05d}-{uuid.uuid4().hex[:8]}"
-            )
-            os.makedirs(d, exist_ok=True)
-            moved = []
+
+        def publish(cur: int, meta: dict, staged: list) -> int:
+            if not files:
+                # empty batch: stamp a metadata-only commit so the
+                # lineage stays monotonic through quiet triggers
+                return t._carry(stamp, cur, meta)
+            # link the staged files into one new data dir (same dir
+            # naming as _write_data; same filesystem). Links, not
+            # renames: a conflicted attempt's dir is removed whole and
+            # the staged files stay put for the rebuild.
+            d = os.path.join(t.data_dir, f"s{cur + 1:05d}-{uuid.uuid4().hex[:8]}")
+            staged.append(d)
+            os.makedirs(d)
             for f in files:
-                dst = os.path.join(d, os.path.basename(f))
-                os.rename(f, dst)
-                moved.append(dst)
-            try:
-                t._commit(
-                    stamp, meta["dirs"] + [d], cur, meta["schema"],
-                    spec=meta.get("spec", []),
-                    # the sink stages FLAT files (one per task, no hive
-                    # subdirs), so its dir honestly records an EMPTY
-                    # dir-spec — claiming the table spec here made
-                    # read_pruned look for hive subdirs that don't exist
-                    # and silently drop the dir from pruned listings
-                    # (r14 review). compact_minor/compact restore the
-                    # prunable layout later.
-                    dir_specs=t._dir_specs(meta) + [[]],
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-                self._last_cache = batchId
-                self._maybe_auto_compact(batchId)
-                return
-            except CommitConflictError:
-                # lost the race: move files BACK to staging and rebuild
-                # against the fresh head (files are the batch's truth;
-                # only the dir name / parent pointer were stale)
-                for dst in moved:
-                    os.rename(dst, os.path.join(self.stage, os.path.basename(dst)))
-                shutil.rmtree(d, ignore_errors=True)
-                continue
-        raise CommitConflictError(
-            f"snapshot_write: batch {batchId} for {self.table} lost the "
-            "commit race 4 times"
-        )
+                os.link(f, os.path.join(d, os.path.basename(f)))
+            # the sink stages FLAT files (one per task, no hive subdirs),
+            # so its dir honestly records an EMPTY dir-spec — claiming
+            # the table spec here made read_pruned look for hive subdirs
+            # that don't exist and silently drop the dir from pruned
+            # listings (r14 review). compact_minor/compact restore the
+            # prunable layout later.
+            return t._carry(stamp, cur, meta, [d], [[]])
+
+        t._commit_loop("append", publish, what=f"snapshot_write batch {batchId}")
+        self._last_cache = batchId
+        for f in files:
+            os.remove(f)
+        if files:
+            self._maybe_auto_compact(batchId)
 
     def _maybe_auto_compact(self, batchId: int) -> None:
         """Every `auto_compact_every` batches, sweep the trickle dirs.

@@ -297,6 +297,8 @@ class _Statement:
     props: Any = None  # TBLPROPERTIES read with Spark's reserved keys kept
     mor_key: str | None = None
     registered: list = field(default_factory=list)
+    # the statement as written, before the read-side rewrites to temp views
+    written: str = ""
 
     def table(self, node, what: str) -> SnapshotTable:
         return SnapshotTable(self.spark, _table_name(node, what), self.root)
@@ -763,6 +765,11 @@ def _create_view(s: _Statement) -> dict:
         "TBLPROPERTIES": n.properties().nonEmpty(),
     })
     body = n.originalText().get()
+    if s.written != s.text:
+        # store the body as written: time travel, table_changes() and
+        # metadata tables were rewritten to this session's temp views,
+        # and every read of the view applies those rewrites again
+        body = _parse(s.spark, s.written).originalText().get()
     if re.search(rf"\b{re.escape(name)}\b", _mask_literals(body)):
         raise ValueError(f"view {name} cannot reference itself")
     if SnapshotTable(s.spark, name, root).current_version() is not None:
@@ -1684,10 +1691,12 @@ def _run(
     view_depth: int = 0,
 ):
     # read-side sugar, rewritten to temp views before parsing
+    written = statement
     statement = materialize_time_travel(spark, statement, root)
     statement = materialize_table_changes(spark, statement, root)
     statement = materialize_metadata_tables(spark, statement, root)
     entry, s = _statement(spark, statement, root)
+    s.written = written
     if ddl_only and not entry.ddl:
         raise ValueError(f"not a DDL statement (use execute_sql): {statement[:80]!r}")
     if mor_key is not None and entry is not _DML:

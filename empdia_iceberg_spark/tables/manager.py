@@ -422,6 +422,7 @@ class SnapshotTable:
         delete_dirs: list[dict] | None = None,
         retry_on_race: bool = False,
         extra: dict | None = None,
+        parent_meta: dict | None = None,
     ) -> int:
         # Table-level governance metadata (TBLPROPERTIES, CHECK
         # constraints) rides every commit: inherited from the parent
@@ -429,19 +430,20 @@ class SnapshotTable:
         # carry it forward untouched and time travel shows the
         # properties/constraints AS OF that version (Iceberg's
         # properties model; Delta's constraints-in-metadata model).
-        carried: dict = {}
-        parent_tz = None
-        if parent is not None:
+        # ``parent_meta`` is the parent's JSON when the caller already
+        # read it.
+        pmeta = parent_meta or {}
+        if parent_meta is None and parent is not None:
             try:
                 pmeta = self._read_meta(parent)
-                carried = {
-                    k: pmeta[k]
-                    for k in ("properties", "constraints", "stats", "not_null")
-                    if pmeta.get(k)
-                }
-                parent_tz = pmeta.get("tz")
             except FileNotFoundError:
                 pass
+        carried = {
+            k: pmeta[k]
+            for k in ("properties", "constraints", "stats", "not_null")
+            if pmeta.get(k)
+        }
+        parent_tz = pmeta.get("tz")
         if extra:
             carried.update(extra)
         carried = {k: v for k, v in carried.items() if v}
@@ -477,7 +479,7 @@ class SnapshotTable:
         # slot is taken (POSIX-atomic), so exactly one writer wins each
         # version number — the Iceberg catalog swap.
         while True:
-            latest = self._versions()[-1] if self._versions() else None
+            latest = self.current_version()
             if expect_parent is not None and latest != expect_parent:
                 # Optimistic concurrency (Iceberg commit semantics): the
                 # caller built its file list against `expect_parent`; if the
@@ -536,6 +538,62 @@ class SnapshotTable:
                 if os.path.exists(tmp):
                     os.unlink(tmp)
 
+    def _commit_loop(
+        self, verb: str, build, max_retries: int = 3, what: str | None = None
+    ):
+        """The optimistic commit (Iceberg's commit loop), the one copy
+        every writer that builds on the head goes through. Each attempt
+        reads the head, refuses a table never created (``cannot <verb>
+        before create``) and returns ``build(cur, meta, staged)``, which
+        builds against snapshot ``cur`` (JSON ``meta``) and publishes
+        with ``expect_parent=cur``. A CommitConflictError means another
+        writer moved the head first: the dirs the attempt listed in
+        ``staged`` belong to no snapshot, so they are removed and the
+        next attempt rebuilds against the fresh head. Session-free (the
+        snapshot_write sink commits from the Python worker). ``what``
+        names the op in the gave-up error (default ``verb``)."""
+        for _ in range(max_retries + 1):
+            cur = self.current_version()
+            if cur is None:
+                raise ValueError(f"table {self.name}: cannot {verb} before create")
+            staged: list[str] = []
+            try:
+                return build(cur, self._read_meta(cur), staged)
+            except CommitConflictError:
+                for d in staged:
+                    shutil.rmtree(d, ignore_errors=True)
+        what = verb if what is None else what
+        raise CommitConflictError(
+            f"table {self.name}: {what + ' ' if what else ''}gave up after "
+            f"{max_retries} retries"
+        )
+
+    def _carry(
+        self, op: str, cur: int, meta: dict, add=(), add_specs=(), **kw
+    ) -> int:
+        """Publish ``op`` on snapshot ``cur`` (JSON ``meta``) carrying its
+        dirs, dir specs, spec, schema and delete files by reference, plus
+        the dirs ``add`` written under ``add_specs``; ``kw`` overrides
+        any of the carried values. A snapshot that keeps its parent's
+        dirs must keep the parent's delete files too, or every MOR-
+        deleted row would come back. Conflicts if the head moved past
+        ``cur``."""
+        kw = {
+            "spec": meta.get("spec", []),
+            "delete_dirs": meta.get("delete_dirs", []),
+            "expect_parent": cur,
+            **kw,
+        }
+        return self._commit(
+            op,
+            meta["dirs"] + list(add),
+            cur,
+            kw.pop("schema", meta["schema"]),
+            dir_specs=self._dir_specs(meta) + list(add_specs),
+            parent_meta=meta,
+            **kw,
+        )
+
     def snapshots(self) -> list[dict]:
         return [self._read_meta(v) for v in self._versions()]
 
@@ -566,7 +624,7 @@ class SnapshotTable:
     # ------------------------------------------------------------ write ops
 
     def _write_data(self, df: DataFrame, spec: list[str] | None = None) -> str:
-        version = (self._versions()[-1] + 1) if self._versions() else 1
+        version = (self.current_version() or 0) + 1
         # uuid suffix (Iceberg file-UUID pattern): racing writers that both
         # derive `version` from the same stale read still write DISJOINT
         # dirs, so a loser's cleanup (rmtree on conflict) can never delete
@@ -593,7 +651,7 @@ class SnapshotTable:
                 )
                 target = max(1, min(4096, -(-size // TARGET_FILE_BYTES)))
                 df = df.coalesce(target)
-            except Exception:
+            except _SPARK_ERRORS:
                 pass  # stats unavailable: write with the plan's partitioning
         # Write timestamps as INT64 micros, not Spark's INT96 default:
         # INT96 column chunks carry NO footer statistics, so time
@@ -601,12 +659,11 @@ class SnapshotTable:
         # mandates int64 micros). Set-and-restore around the write —
         # the engine must not leak a conf change into the user's own
         # writes. Micros is also what the committed schemas declare, so
-        # reads are byte-compatible either way.
+        # reads are byte-compatible either way. The key has a default, so
+        # a bare get() would return it and the finally would pin it as a
+        # session setting; None means "never set", restored by unset.
         _TS_KEY = "spark.sql.parquet.outputTimestampType"
-        try:
-            prior_ts = self.spark.conf.get(_TS_KEY)
-        except Exception:
-            prior_ts = None
+        prior_ts = self.spark.conf.get(_TS_KEY, None)
         self.spark.conf.set(_TS_KEY, "TIMESTAMP_MICROS")
         try:
             return self._write_data_inner(df, spec, out)
@@ -645,14 +702,9 @@ class SnapshotTable:
             # coalescing of small partitions respects parallelism
             # (spark.sql.adaptive.coalescePartitions.parallelismFirst,
             # default true).
-            # get with an explicit default: this key HAS a config
-            # default, so a bare get() never raises — it would return
-            # the default and the finally below would PIN it as an
-            # explicit session value, severing the documented fallback
-            # chain. None here means "was never explicitly set" and
-            # restores the pristine state via unset. (Session-global
-            # like the timestamp conf above: a concurrent writer thread
-            # would see the pinned value for the write's duration.)
+            # Read with an explicit default, like the timestamp conf
+            # above (and session-global like it: a concurrent writer
+            # thread would see the pinned value for the write's duration).
             _ADV_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
             prior_adv = self.spark.conf.get(_ADV_KEY, None)
             self.spark.conf.set(_ADV_KEY, str(TARGET_FILE_BYTES))
@@ -704,30 +756,33 @@ class SnapshotTable:
             retry_on_race=True,
         )
 
+    def _append_on(
+        self, op: str, cur: int, meta: dict, df: DataFrame, staged: list, **kw
+    ) -> int:
+        """Write ``df`` conformed to snapshot ``cur``'s schema and checked
+        against its constraints, then publish it on top of ``cur``."""
+        spec = meta.get("spec", [])
+        aligned, schema_json = self._align_append_to_schema(df, meta["schema"])
+        self._enforce_constraints(aligned, meta)
+        d = self._write_data(self._to_physical(aligned, schema_json), spec)
+        staged.append(d)
+        return self._carry(op, cur, meta, [d], [spec], schema=schema_json, **kw)
+
     def append(self, df: DataFrame) -> int:
+        """Append without retrying: a concurrent writer that moved the
+        head first makes this raise CommitConflictError (append_checked
+        rebuilds instead)."""
         cur = self.current_version()
         if cur is None:
             return self.create(df)
-        meta = self._read_meta(cur)
-        spec = meta.get("spec", [])
-        df, schema_json = self._align_append_to_schema(df, meta["schema"])
-        self._enforce_constraints(df, meta)
-        d = self._write_data(self._to_physical(df, schema_json), spec)
+        staged: list[str] = []
         try:
-            return self._commit(
-                "append",
-                meta["dirs"] + [d],
-                cur,
-                schema_json,
-                spec=spec,
-                dir_specs=self._dir_specs(meta) + [spec],
-                delete_dirs=meta.get("delete_dirs", []),
-            )
+            return self._append_on("append", cur, self._read_meta(cur), df, staged)
         except CommitConflictError:
-            # lost the publish race: the new dir is in no snapshot, so
-            # expire/GC would never reclaim it — clean up before
-            # surfacing the conflict (mirrors append_checked)
-            shutil.rmtree(d, ignore_errors=True)
+            # the new dir is in no snapshot, so expire/GC would never
+            # reclaim it — clean up before surfacing the conflict
+            for d in staged:
+                shutil.rmtree(d, ignore_errors=True)
             raise
 
     def append_checked(self, df: DataFrame, max_retries: int = 3) -> int:
@@ -737,72 +792,28 @@ class SnapshotTable:
         fires and the append is REBUILT against the fresh state (data
         is rewritten under the new version — file lists are immutable).
         This is the Iceberg commit loop."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                return self.create(df)
-            meta = self._read_meta(cur)
-            spec = meta.get("spec", [])
-            aligned, schema_json = self._align_append_to_schema(df, meta["schema"])
-            self._enforce_constraints(aligned, meta)
-            d = self._write_data(self._to_physical(aligned, schema_json), spec)
-            try:
-                return self._commit(
-                    "append",
-                    meta["dirs"] + [d],
-                    cur,
-                    schema_json,
-                    spec=spec,
-                    dir_specs=self._dir_specs(meta) + [spec],
-                    # parent dirs ride by reference ⇒ so must the
-                    # parent's MOR delete files (plain append() does this;
-                    # omitting them here would resurrect deleted rows)
-                    delete_dirs=meta.get("delete_dirs", []),
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(d, ignore_errors=True)  # orphaned write
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: gave up after {max_retries} retries"
+        if self.current_version() is None:
+            return self.create(df)
+        return self._commit_loop(
+            "append",
+            lambda cur, meta, staged: self._append_on(
+                "append", cur, meta, df, staged
+            ),
+            max_retries,
+            what="",
         )
 
     def evolve_partitioning(self, partition_by: list[str], max_retries: int = 3) -> int:
         """Iceberg partition-spec evolution: change the partitioning of
         FUTURE writes only. Existing data dirs keep their layout (their
-        spec stays recorded in dir_specs); no data is rewritten.
+        spec stays recorded in dir_specs); no data is rewritten."""
 
-        Append-shaped OCC (same window as merge): the commit carries the
-        parent's dirs by reference, so it declares expect_parent and
-        rebuilds against the fresh head on conflict — republishing a
-        stale dirs list would drop a concurrent writer's files."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"table {self.name}: cannot evolve before create")
-            meta = self._read_meta(cur)
-            partition_by = self._validate_spec(
-                partition_by, T.StructType.fromJson(json.loads(meta["schema"]))
-            )
-            try:
-                return self._commit(
-                    "evolve-partitioning",
-                    meta["dirs"],
-                    cur,
-                    meta["schema"],
-                    spec=partition_by,
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    # dirs are carried by reference, so the parent's MOR
-                    # delete files must ride along — dropping them here
-                    # would resurrect every MOR-deleted row at next read
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: evolve gave up after {max_retries} retries"
-        )
+        def build(cur: int, meta: dict, staged: list) -> int:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            spec = self._validate_spec(partition_by, schema)
+            return self._carry("evolve-partitioning", cur, meta, spec=spec)
+
+        return self._commit_loop("evolve", build, max_retries)
 
     def add_column(
         self,
@@ -821,9 +832,7 @@ class SnapshotTable:
 
         ``sql_type`` is a DDL type string (``string``, ``decimal(12,2)``,
         ``array<double>``, ...) parsed by Spark itself via an empty
-        createDataFrame — no hand-rolled type grammar. Append-shaped OCC
-        like evolve_partitioning: dirs ride by reference, so the commit
-        declares expect_parent and retries against the fresh head.
+        createDataFrame — no hand-rolled type grammar.
 
         ``default`` (r13, the Iceberg-v3 initial-default model): a SQL
         literal expression. Files written BEFORE the evolve surface the
@@ -844,13 +853,8 @@ class SnapshotTable:
             self.spark.createDataFrame([], "dummy int").select(
                 F.expr(default).cast(field.dataType)
             )
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot add a column before create"
-                )
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> int:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             if col in schema.fieldNames():
                 raise ValueError(
@@ -888,8 +892,9 @@ class SnapshotTable:
                         "re-adding the name would resurrect them; use a new "
                         "name or rewrite the table"
                     )
+            added = field
             if default is not None:
-                field = T.StructField(
+                added = T.StructField(
                     field.name,
                     field.dataType,
                     True,
@@ -902,23 +907,30 @@ class SnapshotTable:
                         "default_pre_dirs": list(meta["dirs"]),
                     },
                 )
-            evolved = T.StructType(list(schema.fields) + [field])
-            try:
-                return self._commit(
-                    "add-column",
-                    meta["dirs"],
-                    cur,
-                    evolved.json(),
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: add_column gave up after {max_retries} retries"
-        )
+            evolved = T.StructType(list(schema.fields) + [added])
+            return self._carry("add-column", cur, meta, schema=evolved.json())
+
+        return self._commit_loop("add a column", build, max_retries, "add_column")
+
+    def _alterable(self, meta: dict, col: str) -> T.StructType:
+        """The committed schema, after refusing a column change that data
+        layout or live delete files depend on."""
+        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        if col not in schema.fieldNames():
+            raise ValueError(f"table {self.name}: no column {col!r}")
+        if col in spec_sources(meta.get("spec", [])) or any(
+            col in spec_sources(ds) for ds in self._dir_specs(meta)
+        ):
+            raise ValueError(
+                f"table {self.name}: {col!r} is a partition field — "
+                "evolve the partition spec first"
+            )
+        if any(dd.get("key") == col for dd in meta.get("delete_dirs", [])):
+            raise ValueError(
+                f"table {self.name}: {col!r} keys live merge-on-read "
+                "delete files — compact them in first"
+            )
+        return schema
 
     def drop_column(self, col: str, max_retries: int = 3) -> int:
         """Iceberg `ALTER TABLE ... DROP COLUMN`: METADATA-ONLY — the
@@ -936,49 +948,18 @@ class SnapshotTable:
         later APPEND whose frame carries the dropped name re-evolves it
         additively (new files carry values, old files' bytes become
         visible again); avoid reusing dropped names without a rewrite."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot drop a column before create"
-                )
-            meta = self._read_meta(cur)
-            schema = T.StructType.fromJson(json.loads(meta["schema"]))
-            if col not in schema.fieldNames():
-                raise ValueError(f"table {self.name}: no column {col!r}")
-            if col in spec_sources(meta.get("spec", [])) or any(
-                col in spec_sources(ds) for ds in self._dir_specs(meta)
-            ):
-                raise ValueError(
-                    f"table {self.name}: {col!r} is a partition field — "
-                    "evolve the partition spec first"
-                )
-            if any(dd.get("key") == col for dd in meta.get("delete_dirs", [])):
-                raise ValueError(
-                    f"table {self.name}: {col!r} keys live merge-on-read "
-                    "delete files — compact them in first"
-                )
-            kept = [f for f in schema.fields if f.name != col]
+
+        def build(cur: int, meta: dict, staged: list) -> int:
+            kept = [f for f in self._alterable(meta, col).fields if f.name != col]
             if not kept:
                 raise ValueError(
                     f"table {self.name}: cannot drop the last column"
                 )
-            try:
-                return self._commit(
-                    "drop-column",
-                    meta["dirs"],
-                    cur,
-                    T.StructType(kept).json(),
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: drop_column gave up after {max_retries} retries"
-        )
+            return self._carry(
+                "drop-column", cur, meta, schema=T.StructType(kept).json()
+            )
+
+        return self._commit_loop("drop a column", build, max_retries, "drop_column")
 
     def rename_column(self, old: str, new: str, max_retries: int = 3) -> int:
         """Iceberg `ALTER TABLE ... RENAME COLUMN`: METADATA-ONLY — the
@@ -1002,16 +983,9 @@ class SnapshotTable:
         collision-free)."""
         if not re.match(r"^\w+$", new):
             raise ValueError(f"invalid column name: {new!r}")
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot rename a column before create"
-                )
-            meta = self._read_meta(cur)
-            schema = T.StructType.fromJson(json.loads(meta["schema"]))
-            if old not in schema.fieldNames():
-                raise ValueError(f"table {self.name}: no column {old!r}")
+
+        def build(cur: int, meta: dict, staged: list) -> int:
+            schema = self._alterable(meta, old)
             taken = set(schema.fieldNames()) | set(
                 self._physical_map(meta["schema"]).values()
             )
@@ -1019,18 +993,6 @@ class SnapshotTable:
                 raise ValueError(
                     f"table {self.name}: name {new!r} collides with a "
                     "current logical or physical column name"
-                )
-            if old in spec_sources(meta.get("spec", [])) or any(
-                old in spec_sources(ds) for ds in self._dir_specs(meta)
-            ):
-                raise ValueError(
-                    f"table {self.name}: {old!r} is a partition field — "
-                    "evolve the partition spec first"
-                )
-            if any(dd.get("key") == old for dd in meta.get("delete_dirs", [])):
-                raise ValueError(
-                    f"table {self.name}: {old!r} keys live merge-on-read "
-                    "delete files — compact them in first"
                 )
             fields = []
             for f in schema.fields:
@@ -1040,21 +1002,12 @@ class SnapshotTable:
                     fields.append(T.StructField(new, f.dataType, f.nullable, md))
                 else:
                     fields.append(f)
-            try:
-                return self._commit(
-                    "rename-column",
-                    meta["dirs"],
-                    cur,
-                    T.StructType(fields).json(),
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: rename_column gave up after {max_retries} retries"
+            return self._carry(
+                "rename-column", cur, meta, schema=T.StructType(fields).json()
+            )
+
+        return self._commit_loop(
+            "rename a column", build, max_retries, "rename_column"
         )
 
     # Safe type promotions (the Iceberg spec's schema-evolution table,
@@ -1095,37 +1048,18 @@ class SnapshotTable:
         (spec + shadow-dir values key on the column), and live MOR
         delete keys (delete files recorded the key under the old type)."""
         field = self.spark.createDataFrame([], f"`{col}` {sql_type}").schema[0]
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot alter a column before create"
-                )
-            meta = self._read_meta(cur)
-            schema = T.StructType.fromJson(json.loads(meta["schema"]))
-            if col not in schema.fieldNames():
-                raise ValueError(f"table {self.name}: no column {col!r}")
-            old_field = schema[col]
-            if not self._is_safe_promotion(old_field.dataType, field.dataType):
+
+        def build(cur: int, meta: dict, staged: list) -> int:
+            schema = self._alterable(meta, col)
+            old_type = schema[col].dataType
+            if not self._is_safe_promotion(old_type, field.dataType):
                 raise ValueError(
                     f"table {self.name}: cannot promote {col!r} from "
-                    f"{old_field.dataType.simpleString()} to "
+                    f"{old_type.simpleString()} to "
                     f"{field.dataType.simpleString()} — only value-preserving "
                     "widenings (byte/short/int→wider integral, float→double, "
                     "decimal precision growth at the same scale) are "
                     "metadata-only; anything else needs a table rewrite"
-                )
-            if col in spec_sources(meta.get("spec", [])) or any(
-                col in spec_sources(ds) for ds in self._dir_specs(meta)
-            ):
-                raise ValueError(
-                    f"table {self.name}: {col!r} is a partition field — "
-                    "evolve the partition spec first"
-                )
-            if any(dd.get("key") == col for dd in meta.get("delete_dirs", [])):
-                raise ValueError(
-                    f"table {self.name}: {col!r} keys live merge-on-read "
-                    "delete files — compact them in first"
                 )
             fields = [
                 T.StructField(f.name, field.dataType, f.nullable, f.metadata)
@@ -1133,22 +1067,12 @@ class SnapshotTable:
                 else f
                 for f in schema.fields
             ]
-            try:
-                return self._commit(
-                    "alter-column-type",
-                    meta["dirs"],
-                    cur,
-                    T.StructType(fields).json(),
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: alter_column_type gave up after "
-            f"{max_retries} retries"
+            return self._carry(
+                "alter-column-type", cur, meta, schema=T.StructType(fields).json()
+            )
+
+        return self._commit_loop(
+            "alter a column", build, max_retries, "alter_column_type"
         )
 
     # ------------------------------------------- governance (r12): properties
@@ -1169,35 +1093,19 @@ class SnapshotTable:
             isinstance(k, str) and isinstance(v, str) for k, v in props.items()
         ):
             raise ValueError("TBLPROPERTIES must be a non-empty str->str map")
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot set properties before create"
-                )
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> int:
             merged = {**meta.get("properties", {}), **props}
-            try:
-                return self._commit(
-                    "set-properties", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"properties": merged},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: set_properties gave up after {max_retries} retries"
+            return self._carry(
+                "set-properties", cur, meta, extra={"properties": merged}
+            )
+
+        return self._commit_loop(
+            "set properties", build, max_retries, "set_properties"
         )
 
     def unset_properties(self, keys: list[str], max_retries: int = 3) -> int:
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot unset properties before create"
-                )
-            meta = self._read_meta(cur)
+        def build(cur: int, meta: dict, staged: list) -> int:
             props = dict(meta.get("properties", {}))
             missing = [k for k in keys if k not in props]
             if missing:
@@ -1207,17 +1115,12 @@ class SnapshotTable:
                 )
             for k in keys:
                 props.pop(k)
-            try:
-                return self._commit(
-                    "unset-properties", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"properties": props},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: unset_properties gave up after {max_retries} retries"
+            return self._carry(
+                "unset-properties", cur, meta, extra={"properties": props}
+            )
+
+        return self._commit_loop(
+            "unset properties", build, max_retries, "unset_properties"
         )
 
     # --------------------------------------------- governance: CHECK constraints
@@ -1235,13 +1138,8 @@ class SnapshotTable:
         matching the SQL-standard CHECK."""
         if not re.match(r"^\w+$", name):
             raise ValueError(f"invalid constraint name: {name!r}")
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot add a constraint before create"
-                )
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> int:
             cons = dict(meta.get("constraints", {}))
             if name in cons:
                 raise ValueError(
@@ -1249,8 +1147,7 @@ class SnapshotTable:
                 )
             # Catalyst parses/analyzes the expression against the real
             # schema (raises on nonsense), then existing data validates
-            snap = self.read(version=cur)
-            bad = snap.filter(~F.expr(expr)).limit(1).collect()
+            bad = self.read(version=cur).filter(~F.expr(expr)).limit(1).collect()
             if bad:
                 raise ValueError(
                     f"table {self.name}: existing rows violate CHECK "
@@ -1258,17 +1155,12 @@ class SnapshotTable:
                     "before adding the constraint"
                 )
             cons[name] = expr
-            try:
-                return self._commit(
-                    "add-constraint", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"constraints": cons},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: add_constraint gave up after {max_retries} retries"
+            return self._carry(
+                "add-constraint", cur, meta, extra={"constraints": cons}
+            )
+
+        return self._commit_loop(
+            "add a constraint", build, max_retries, "add_constraint"
         )
 
     def set_not_null(self, col: str, max_retries: int = 3) -> int:
@@ -1283,13 +1175,8 @@ class SnapshotTable:
         file-history safety) — the list survives every commit the way
         properties/constraints do, and time travel shows it AS OF each
         version."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot SET NOT NULL before create"
-                )
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> int:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             if col not in schema.fieldNames():
                 raise ValueError(f"table {self.name}: no column {col!r}")
@@ -1298,80 +1185,47 @@ class SnapshotTable:
                 raise ValueError(
                     f"table {self.name}: column {col!r} is already NOT NULL"
                 )
-            bad = (
-                self.read(version=cur)
-                .filter(F.col(col).isNull())
-                .limit(1)
-                .collect()
-            )
-            if bad:
+            if self.read(version=cur).filter(F.col(col).isNull()).limit(1).collect():
                 raise ValueError(
                     f"table {self.name}: existing rows hold NULL in "
                     f"{col!r} — clean the data before SET NOT NULL"
                 )
-            try:
-                return self._commit(
-                    "set-not-null", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"not_null": nn + [col]},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: set_not_null gave up after {max_retries} retries"
-        )
+            return self._carry(
+                "set-not-null", cur, meta, extra={"not_null": nn + [col]}
+            )
+
+        return self._commit_loop("SET NOT NULL", build, max_retries, "set_not_null")
 
     def drop_not_null(self, col: str, max_retries: int = 3) -> int:
         """`ALTER COLUMN col DROP NOT NULL`: metadata-only removal."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot DROP NOT NULL before create"
-                )
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> int:
             nn = list(meta.get("not_null", []))
             if col not in nn:
                 raise ValueError(
                     f"table {self.name}: column {col!r} is not NOT NULL"
                 )
-            try:
-                return self._commit(
-                    "drop-not-null", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"not_null": [c for c in nn if c != col]},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: drop_not_null gave up after {max_retries} retries"
+            return self._carry(
+                "drop-not-null", cur, meta,
+                extra={"not_null": [c for c in nn if c != col]},
+            )
+
+        return self._commit_loop(
+            "DROP NOT NULL", build, max_retries, "drop_not_null"
         )
 
     def drop_constraint(self, name: str, max_retries: int = 3) -> int:
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot drop a constraint before create"
-                )
-            meta = self._read_meta(cur)
+        def build(cur: int, meta: dict, staged: list) -> int:
             cons = dict(meta.get("constraints", {}))
             if name not in cons:
                 raise ValueError(f"table {self.name}: no constraint {name!r}")
             cons.pop(name)
-            try:
-                return self._commit(
-                    "drop-constraint", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"constraints": cons},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: drop_constraint gave up after {max_retries} retries"
+            return self._carry(
+                "drop-constraint", cur, meta, extra={"constraints": cons}
+            )
+
+        return self._commit_loop(
+            "drop a constraint", build, max_retries, "drop_constraint"
         )
 
     def analyze(self, columns: list[str] | None = None, max_retries: int = 3) -> int:
@@ -1386,13 +1240,8 @@ class SnapshotTable:
         Scale shape: one shuffle-light agg job (count-distinct is the
         only exchange); nothing driver-side but the 1-row result."""
         cols = list(columns or [])
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot ANALYZE before create"
-                )
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> int:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             missing = [c for c in cols if c not in schema.fieldNames()]
             if missing:
@@ -1400,7 +1249,6 @@ class SnapshotTable:
                     f"table {self.name}: ANALYZE FOR COLUMNS names unknown "
                     f"column(s) {missing}"
                 )
-            snap = self.read(version=cur)
             aggs = [F.count(F.lit(1)).alias("__rows")]
             for c in cols:
                 aggs += [
@@ -1409,7 +1257,7 @@ class SnapshotTable:
                     F.min(c).cast("string").alias(f"__min_{c}"),
                     F.max(c).cast("string").alias(f"__max_{c}"),
                 ]
-            row = snap.agg(*aggs).first()
+            row = self.read(version=cur).agg(*aggs).first()
             stats = {
                 "as_of_version": cur,
                 "row_count": int(row["__rows"]),
@@ -1423,18 +1271,9 @@ class SnapshotTable:
                     for c in cols
                 },
             }
-            try:
-                return self._commit(
-                    "analyze", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"stats": stats},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: analyze gave up after {max_retries} retries"
-        )
+            return self._carry("analyze", cur, meta, extra={"stats": stats})
+
+        return self._commit_loop("ANALYZE", build, max_retries, "analyze")
 
     def _enforce_constraints(self, df: DataFrame, meta: dict) -> None:
         """Validate an incoming LOGICAL frame against the snapshot's
@@ -1552,7 +1391,9 @@ class SnapshotTable:
         get one broadcast semi-join containment probe, ride whole by
         reference when they hold none of the replaced partitions, and
         otherwise rewrite their survivors (folding deletes in — the
-        merge engine's force-rewrite rule).
+        merge engine's force-rewrite rule). A conflicting commit
+        rebuilds all of it, the incoming write included, against the
+        fresh head.
 
         ``static`` ({col: Column literal}) is the `PARTITION (col=val)`
         static form: the named partition is replaced even when the
@@ -1563,84 +1404,68 @@ class SnapshotTable:
         subdirs_carried / dirs_carried / dirs_rewritten."""
         import glob as _glob
 
-        cur = self.current_version()
-        if cur is None:
-            raise ValueError(f"table {self.name}: cannot OVERWRITE before create")
-        meta0 = self._read_meta(cur)
-        spec = meta0.get("spec", [])
-        if not spec:
-            raise ValueError(
-                f"table {self.name}: overwrite_partitions needs a "
-                "partitioned table (use overwrite() for full replace)"
-            )
-        aligned, schema_json = self._align_append_to_schema(df, meta0["schema"])
-        self._enforce_constraints(aligned, meta0)
-        new_dir = self._write_data(self._to_physical(aligned, schema_json), spec)
-        pat = [f"_p_{transform_slug(c)}=*" for c in spec]
-        replaced = {
-            os.path.relpath(p, new_dir)
-            for p in _glob.glob(os.path.join(new_dir, *pat))
-        }
-        if static:
-            # the static partition is replaced even with zero incoming
-            # rows: derive its exact hive relpath from the same writer
-            probe_dir = new_dir + ".static_probe"
-            for c in spec:
-                if transform_source(c) not in static:
-                    raise ValueError(
-                        f"static PARTITION clause must pin every partition "
-                        f"source column (missing {transform_source(c)!r})"
-                    )
-            row = self.spark.range(1).select(
-                *[v.alias(c) for c, v in static.items()]
-            )
-            # transform-aware: the probe derives the hive value through
-            # the same writer expressions (PARTITION (ts='2024-03-01...')
-            # on a days(ts) spec pins that day's dir)
-            aug, shadows = with_transform_cols(row, spec, "_p_")
-            aug.coalesce(1).write.mode("overwrite").partitionBy(
-                *shadows
-            ).parquet(probe_dir)
-            probed = {
-                os.path.relpath(p, probe_dir)
-                for p in _glob.glob(os.path.join(probe_dir, *pat))
-            }
-            shutil.rmtree(probe_dir, ignore_errors=True)
-            replaced |= probed
-        if not replaced:
-            # dynamic overwrite with an empty source replaces nothing
-            shutil.rmtree(new_dir, ignore_errors=True)
-            return cur, {
-                "partitions_replaced": 0, "subdirs_carried": 0,
-                "dirs_carried": 0, "dirs_rewritten": 0,
-            }
-        # replaced-partition VALUES in transform space: probes join on the
-        # computed partition values (_pt_<slug>), so a days(ts) spec
-        # compares days, not raw timestamps
-        aug_vals, probe_cols = with_transform_cols(aligned, spec, "_pt_")
-        vals_df = aug_vals.select(*probe_cols).distinct()
-        if static:
-            row = self.spark.range(1).select(
-                *[v.alias(c) for c, v in static.items()]
-            )
-            row_t, _ = with_transform_cols(row, spec, "_pt_")
-            vals_df = vals_df.unionByName(row_t.select(*probe_cols)).distinct()
-        new_has_files = bool(_glob.glob(os.path.join(new_dir, *pat)))
-        if not new_has_files:
-            # static clear with an empty source: nothing to reference
-            shutil.rmtree(new_dir, ignore_errors=True)
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            meta = self._read_meta(cur)
-            if meta.get("spec", []) != spec:
-                shutil.rmtree(new_dir, ignore_errors=True)
-                raise CommitConflictError(
-                    f"table {self.name}: partition spec changed mid-overwrite"
+        def build(cur: int, meta: dict, staged: list) -> tuple[int, dict]:
+            spec = meta.get("spec", [])
+            if not spec:
+                raise ValueError(
+                    f"table {self.name}: overwrite_partitions needs a "
+                    "partitioned table (use overwrite() for full replace)"
                 )
+            aligned, schema_json = self._align_append_to_schema(df, meta["schema"])
+            self._enforce_constraints(aligned, meta)
+            new_dir = self._write_data(self._to_physical(aligned, schema_json), spec)
+            staged.append(new_dir)
+            pat = [f"_p_{transform_slug(c)}=*" for c in spec]
+            replaced = {
+                os.path.relpath(p, new_dir)
+                for p in _glob.glob(os.path.join(new_dir, *pat))
+            }
+            new_has_files = bool(replaced)
+            if static:
+                # the static partition is replaced even with zero incoming
+                # rows: derive its exact hive relpath from the same writer
+                probe_dir = new_dir + ".static_probe"
+                for c in spec:
+                    if transform_source(c) not in static:
+                        raise ValueError(
+                            f"static PARTITION clause must pin every partition "
+                            f"source column (missing {transform_source(c)!r})"
+                        )
+                row = self.spark.range(1).select(
+                    *[v.alias(c) for c, v in static.items()]
+                )
+                # transform-aware: the probe derives the hive value through
+                # the same writer expressions (PARTITION (ts='2024-03-01...')
+                # on a days(ts) spec pins that day's dir)
+                aug, shadows = with_transform_cols(row, spec, "_p_")
+                aug.coalesce(1).write.mode("overwrite").partitionBy(
+                    *shadows
+                ).parquet(probe_dir)
+                replaced |= {
+                    os.path.relpath(p, probe_dir)
+                    for p in _glob.glob(os.path.join(probe_dir, *pat))
+                }
+                shutil.rmtree(probe_dir, ignore_errors=True)
+            if not new_has_files:
+                # empty source: nothing of the new dir to reference
+                shutil.rmtree(new_dir, ignore_errors=True)
+            if not replaced:
+                # dynamic overwrite with an empty source replaces nothing
+                return cur, {
+                    "partitions_replaced": 0, "subdirs_carried": 0,
+                    "dirs_carried": 0, "dirs_rewritten": 0,
+                }
+            # replaced-partition VALUES in transform space: probes join on
+            # the computed partition values (_pt_<slug>), so a days(ts)
+            # spec compares days, not raw timestamps
+            aug_vals, probe_cols = with_transform_cols(aligned, spec, "_pt_")
+            vals_df = aug_vals.select(*probe_cols).distinct()
+            if static:
+                row_t, _ = with_transform_cols(row, spec, "_pt_")
+                vals_df = vals_df.unionByName(row_t.select(*probe_cols)).distinct()
             deletes = meta.get("delete_dirs", [])
             dirs_out: list[str] = [new_dir] if new_has_files else []
             specs_out: list[list[str]] = [spec] if new_has_files else []
-            scratch_dirs: list[str] = []
             subdirs_carried = dirs_carried = dirs_rewritten = 0
             for d, dspec in zip(meta["dirs"], self._dir_specs(meta)):
                 has_del = any(
@@ -1672,34 +1497,27 @@ class SnapshotTable:
                 survivors = part_t.join(
                     F.broadcast(vals_df), probe_cols, "left_anti"
                 ).drop(*probe_cols)
+                dirs_rewritten += 1
                 if not survivors.limit(1).collect():
-                    dirs_rewritten += 1  # fully-replaced dir: just dropped
-                    continue
+                    continue  # fully-replaced dir: just dropped
                 sd = self._write_data(self._to_physical(survivors, schema_json), spec)
-                scratch_dirs.append(sd)
+                staged.append(sd)
                 dirs_out.append(sd)
                 specs_out.append(spec)
-                dirs_rewritten += 1
-            try:
-                v = self._commit(
-                    "overwrite-partitions", dirs_out, cur, schema_json,
-                    spec=spec, dir_specs=specs_out, expect_parent=cur,
-                    delete_dirs=deletes,
-                )
-                return v, {
-                    "partitions_replaced": len(replaced),
-                    "subdirs_carried": subdirs_carried,
-                    "dirs_carried": dirs_carried,
-                    "dirs_rewritten": dirs_rewritten,
-                }
-            except CommitConflictError:
-                for sd in scratch_dirs:  # orphaned survivor rewrites
-                    shutil.rmtree(sd, ignore_errors=True)
-                continue
-        shutil.rmtree(new_dir, ignore_errors=True)
-        raise CommitConflictError(
-            f"table {self.name}: overwrite_partitions gave up after "
-            f"{max_retries} retries"
+            v = self._commit(
+                "overwrite-partitions", dirs_out, cur, schema_json,
+                spec=spec, dir_specs=specs_out, expect_parent=cur,
+                delete_dirs=deletes, parent_meta=meta,
+            )
+            return v, {
+                "partitions_replaced": len(replaced),
+                "subdirs_carried": subdirs_carried,
+                "dirs_carried": dirs_carried,
+                "dirs_rewritten": dirs_rewritten,
+            }
+
+        return self._commit_loop(
+            "OVERWRITE", build, max_retries, "overwrite_partitions"
         )
 
     def truncate(self) -> int:
@@ -1716,6 +1534,7 @@ class SnapshotTable:
         return self._commit(
             "truncate", [], cur, meta["schema"],
             spec=meta.get("spec", []), dir_specs=[], retry_on_race=True,
+            parent_meta=meta,
         )
 
     @staticmethod
@@ -2060,80 +1879,64 @@ class SnapshotTable:
         # membership join, final write) — cache it so an expensive source
         # pipeline computes once
         source = source.persist()
-        try:
-            for _ in range(max_retries + 1):
-                cur = self.current_version()
-                if cur is None:
+
+        def build(cur: int, meta: dict, staged: list) -> tuple[int, dict]:
+            # canonicalize the key to the TABLE schema's spelling: Spark
+            # resolves column references case-insensitively, but
+            # Python-side schema[...] lookups and the envelope cache key
+            # by exact string
+            tbl_by_lower = {
+                f.name.lower(): f.name
+                for f in T.StructType.fromJson(json.loads(meta["schema"])).fields
+            }
+            key_c = tbl_by_lower.get(key.lower())
+            if key_c is None:
+                raise ValueError(
+                    f"table {self.name}: MERGE key {key!r} is not a "
+                    "table column"
+                )
+            if clauses is None:
+                aligned = self._align_source_to_schema(source, meta["schema"])
+            else:
+                # Clause merges never pre-align: the source may carry
+                # EXTRA columns the conditions/assignments reference (a
+                # CDC feed's `op` column) — SET * / INSERT * expansions
+                # project to the table columns and type-conform per piece
+                # inside _apply_merge_clauses (Delta's SET * semantics:
+                # source must CONTAIN every table column, extras are
+                # simply not assigned). Case-INSENSITIVE membership
+                # (Spark's own resolution is case-insensitive by default,
+                # so `ON t.C_K = s.C_K` against a lowercase column is a
+                # valid statement; only Python-side checks were
+                # case-sensitive).
+                src_lower = {c.lower() for c in source.columns}
+                if key_c.lower() not in src_lower:
                     raise ValueError(
-                        f"table {self.name}: cannot MERGE before create"
+                        f"table {self.name}: MERGE source lacks the key "
+                        f"column {key_c!r}"
                     )
-                meta = self._read_meta(cur)
-                deletes = meta.get("delete_dirs", [])
-                spec = meta.get("spec", [])
-                # canonicalize the key to the TABLE schema's spelling:
-                # Spark resolves column references case-insensitively,
-                # but Python-side schema[...] lookups and the envelope
-                # cache key by exact string
-                tbl_by_lower = {
-                    f.name.lower(): f.name
-                    for f in T.StructType.fromJson(
-                        json.loads(meta["schema"])
-                    ).fields
-                }
-                key_c = tbl_by_lower.get(key.lower())
-                if key_c is None:
-                    raise ValueError(
-                        f"table {self.name}: MERGE key {key!r} is not a "
-                        "table column"
-                    )
-                key = key_c
-                if clauses is None:
-                    aligned = self._align_source_to_schema(source, meta["schema"])
-                else:
-                    # Clause merges never pre-align: the source may carry
-                    # EXTRA columns the conditions/assignments reference
-                    # (a CDC feed's `op` column) — SET * / INSERT *
-                    # expansions project to the table columns and
-                    # type-conform per piece inside _apply_merge_clauses
-                    # (Delta's SET * semantics: source must CONTAIN every
-                    # table column, extras are simply not assigned).
-                    # Case-INSENSITIVE membership (Spark's own resolution
-                    # is case-insensitive by default, so `ON t.C_K = s.C_K`
-                    # against a lowercase column is a valid statement;
-                    # only Python-side checks were case-sensitive).
-                    src_lower = {c.lower() for c in source.columns}
-                    if key.lower() not in src_lower:
+                star_used = any(
+                    s["action"] == "update" and s["set"] == "*"
+                    for s in clauses["matched"]
+                ) or any(s.get("cols") is None for s in clauses["not_matched"])
+                if star_used:
+                    missing = [
+                        c for c in tbl_by_lower.values() if c.lower() not in src_lower
+                    ]
+                    if missing:
                         raise ValueError(
-                            f"table {self.name}: MERGE source lacks the key "
-                            f"column {key!r}"
+                            f"table {self.name}: MERGE SET */INSERT * "
+                            f"requires the source to contain every table "
+                            f"column; missing {missing}"
                         )
-                    star_used = any(
-                        s["action"] == "update" and s["set"] == "*"
-                        for s in clauses["matched"]
-                    ) or any(
-                        s.get("cols") is None for s in clauses["not_matched"]
-                    )
-                    if star_used:
-                        tbl_cols = list(tbl_by_lower.values())
-                        missing = [
-                            c for c in tbl_cols if c.lower() not in src_lower
-                        ]
-                        if missing:
-                            raise ValueError(
-                                f"table {self.name}: MERGE SET */INSERT * "
-                                f"requires the source to contain every table "
-                                f"column; missing {missing}"
-                            )
-                    aligned = source
-                try:
-                    return self._merge_impl(
-                        aligned, key, cur, meta, deletes, spec, clauses
-                    )
-                except CommitConflictError:
-                    continue  # re-read the head and rebuild the merge
-            raise CommitConflictError(
-                f"table {self.name}: merge gave up after {max_retries} retries"
+                aligned = source
+            return self._merge_impl(
+                aligned, key_c, cur, meta, meta.get("delete_dirs", []),
+                meta.get("spec", []), clauses, staged,
             )
+
+        try:
+            return self._commit_loop("MERGE", build, max_retries, "merge")
         finally:
             source.unpersist()
 
@@ -2287,6 +2090,7 @@ class SnapshotTable:
         deletes: list,
         spec: list,
         clauses: dict | None = None,
+        staged: list | None = None,
     ) -> tuple[int, dict]:
         # Envelope + dup-key guard in ONE pass: a per-key partial
         # aggregate (map-side combine, one key shuffle, no Expand — the
@@ -2615,6 +2419,8 @@ class SnapshotTable:
             obs = Observation(f"merge_ins_{uuid.uuid4().hex[:8]}")
             merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
         d_new = self._write_data(self._to_physical(merged, meta["schema"]), spec)
+        if staged is not None:
+            staged.append(d_new)
         if obs is not None and obs.get["n"] == 0:
             shutil.rmtree(d_new, ignore_errors=True)
             return cur, {
@@ -2633,27 +2439,16 @@ class SnapshotTable:
             if untouched or clauses is not None
             else merged.schema.json()
         )
-        try:
-            version = self._commit(
-                "merge",
-                untouched + [d_new],
-                cur,
-                schema_json,
-                spec=spec,
-                dir_specs=untouched_specs + [spec],
-                # OCC (Iceberg commit semantics): this merge carried
-                # `untouched` by reference from snapshot `cur`; if the
-                # table moved on between our _read_meta and this publish,
-                # committing would silently drop the concurrent writer's
-                # files. expect_parent makes the stale-base check raise;
-                # merge()'s retry loop rebuilds against the fresh head.
-                expect_parent=cur,
-            )
-        except CommitConflictError:
-            # the freshly written dir belongs to no snapshot — reclaim it
-            # now, or expire/GC never would
-            shutil.rmtree(d_new, ignore_errors=True)
-            raise
+        version = self._commit(
+            "merge",
+            untouched + [d_new],
+            cur,
+            schema_json,
+            spec=spec,
+            dir_specs=untouched_specs + [spec],
+            expect_parent=cur,
+            parent_meta=meta,
+        )
         return version, {
             "dirs_rewritten": len(touched),
             "dirs_reused": len(untouched),
@@ -2929,40 +2724,23 @@ class SnapshotTable:
         anti-joins it. O(deleted keys) write instead of O(table) —
         the delete path that stays cheap at 100 TB; `compact()`
         later folds deletes into a rewritten file set."""
-        # Append-shaped OCC (same window as merge): the delete snapshot
-        # carries the parent's dirs by reference, so a writer landing
-        # between our read and publish must conflict us — the keys and
-        # applies_to list are rebuilt against the fresh head on retry.
-        max_retries = 3
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            meta = self._read_meta(cur)
-            keys = self.read().filter(condition).select(key).distinct()
-            version = (self._versions()[-1] + 1) if self._versions() else 1
-            dd = os.path.join(self.data_dir, f"d{version:05d}-{uuid.uuid4().hex[:8]}")
+
+        def build(cur: int, meta: dict, staged: list) -> int:
+            keys = self.read(version=cur).filter(condition).select(key).distinct()
+            dd = os.path.join(self.data_dir, f"d{cur + 1:05d}-{uuid.uuid4().hex[:8]}")
+            staged.append(dd)
             keys.write.mode("overwrite").parquet(dd)
-            try:
-                return self._commit(
-                    "delete-mor",
-                    meta["dirs"],
-                    cur,
-                    meta["schema"],
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    # prior delete files carry forward so stacked deletes
-                    # compose; `applies_to` pins the data files that existed at
-                    # delete time (Iceberg's sequence-number semantics) so rows
-                    # APPENDED later under the same key are NOT swallowed
-                    delete_dirs=meta.get("delete_dirs", [])
-                    + [{"dir": dd, "key": key, "applies_to": list(meta["dirs"])}],
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(dd, ignore_errors=True)  # orphaned delete file
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: MOR delete gave up after {max_retries} retries"
-        )
+            # prior delete files carry forward so stacked deletes
+            # compose; `applies_to` pins the data files that existed at
+            # delete time (Iceberg's sequence-number semantics) so rows
+            # APPENDED later under the same key are NOT swallowed
+            return self._carry(
+                "delete-mor", cur, meta,
+                delete_dirs=meta.get("delete_dirs", [])
+                + [{"dir": dd, "key": key, "applies_to": list(meta["dirs"])}],
+            )
+
+        return self._commit_loop("DELETE", build, what="MOR delete")
 
     def delete_where_position(self, condition, max_retries: int = 3) -> int:
         """Merge-on-read POSITION delete (Iceberg v2's second delete
@@ -2983,16 +2761,12 @@ class SnapshotTable:
 
         OCC note (r14 verdict nit, accepted): the coordinates file is
         written BEFORE the commit precondition check, so a conflicting
-        concurrent writer costs one re-scan + re-write per retry (≤4)
-        and leaves an orphan dir reclaimed by remove_orphan_files.
+        concurrent writer costs one re-scan + re-write per retry (≤4).
         Correct and point-shaped — the scan is the unavoidable part
         (coordinates must be found against the fresh head anyway), so
         checking first would save only the tiny parquet write."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"table {self.name}: cannot DELETE before create")
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> int:
             hits = (
                 self._read_dirs_mor(meta, meta["dirs"], with_lineage=True)
                 .filter(condition)
@@ -3001,10 +2775,8 @@ class SnapshotTable:
                     F.col(self._POS_IDX).alias("row_index"),
                 )
             )
-            version = (self._versions()[-1] + 1) if self._versions() else 1
-            dd = os.path.join(
-                self.data_dir, f"p{version:05d}-{uuid.uuid4().hex[:8]}"
-            )
+            dd = os.path.join(self.data_dir, f"p{cur + 1:05d}-{uuid.uuid4().hex[:8]}")
+            staged.append(dd)
             hits.write.mode("overwrite").parquet(dd)
             # prune applies_to to the dirs holding a referenced file —
             # bounded driver probe: one row per distinct FILE (metadata-
@@ -3032,25 +2804,13 @@ class SnapshotTable:
                 )
 
             applies = [d for d in meta["dirs"] if _holds(d)]
-            try:
-                return self._commit(
-                    "delete-mor-position",
-                    meta["dirs"],
-                    cur,
-                    meta["schema"],
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    delete_dirs=meta.get("delete_dirs", [])
-                    + [{"dir": dd, "kind": "position", "applies_to": applies}],
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(dd, ignore_errors=True)
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: position delete gave up after "
-            f"{max_retries} retries"
-        )
+            return self._carry(
+                "delete-mor-position", cur, meta,
+                delete_dirs=meta.get("delete_dirs", [])
+                + [{"dir": dd, "kind": "position", "applies_to": applies}],
+            )
+
+        return self._commit_loop("DELETE", build, max_retries, "position delete")
 
     def delete_where(self, condition) -> int:
         # SQL DELETE semantics: only predicate-TRUE rows go; NULL-
@@ -3081,14 +2841,8 @@ class SnapshotTable:
         dirs, zero NEW delete entries — the commit contributes no
         change rows (asserted by the registered story). No-op (current
         version returned) when fewer than two position entries exist."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot rewrite position deletes "
-                    "before create"
-                )
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> int:
             deletes = meta.get("delete_dirs", [])
             pos = [dd for dd in deletes if dd.get("kind") == "position"]
             if len(pos) <= 1:
@@ -3102,34 +2856,20 @@ class SnapshotTable:
             dd_dir = os.path.join(
                 self.data_dir, f"p{cur + 1:05d}-{uuid.uuid4().hex[:8]}"
             )
+            staged.append(dd_dir)
             merged.coalesce(1).write.parquet(dd_dir)
             applies = sorted(
                 {d for dd in pos for d in dd.get("applies_to", meta["dirs"])}
             )
-            try:
-                return self._commit(
-                    "rewrite-position-deletes",
-                    meta["dirs"],
-                    cur,
-                    meta["schema"],
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    delete_dirs=other
-                    + [
-                        {
-                            "dir": dd_dir,
-                            "kind": "position",
-                            "applies_to": applies,
-                        }
-                    ],
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(dd_dir, ignore_errors=True)
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: rewrite_position_deletes gave up after "
-            f"{max_retries} retries"
+            return self._carry(
+                "rewrite-position-deletes", cur, meta,
+                delete_dirs=other
+                + [{"dir": dd_dir, "kind": "position", "applies_to": applies}],
+            )
+
+        return self._commit_loop(
+            "rewrite position deletes", build, max_retries,
+            "rewrite_position_deletes",
         )
 
     # --------------------------------------------- per-file column stats
@@ -3187,6 +2927,7 @@ class SnapshotTable:
         sidecar. Parquet writers must keep stored min/max CONSERVATIVE
         under truncation (format contract), so a consult can prune a
         file only when its whole range provably misses the bound."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         side = os.path.join(d, self._STATS_SIDECAR)
@@ -3208,12 +2949,17 @@ class SnapshotTable:
                     if "." in name or name in bad:
                         continue  # nested leaves don't prune top-level
                     st = c.statistics
-                    if st is None or not st.has_min_max:
-                        bad.add(name)
-                        per.pop(name, None)
-                        continue
-                    emin = self._stats_encode(st.min)
-                    emax = self._stats_encode(st.max)
+                    try:
+                        # pyarrow cannot extract some logical types'
+                        # stats (Spark's int-backed decimals): unusable,
+                        # like a chunk without min/max
+                        emin, emax = (
+                            (self._stats_encode(st.min), self._stats_encode(st.max))
+                            if st is not None and st.has_min_max
+                            else (None, None)
+                        )
+                    except pa.ArrowNotImplementedError:
+                        emin = emax = None
                     if emin is None or emax is None or emin[1] != emax[1]:
                         bad.add(name)
                         per.pop(name, None)
@@ -3352,11 +3098,8 @@ class SnapshotTable:
         Optimistic-concurrency checked like merge: the commit declares
         its parent; a concurrent writer forces a rebuild against the
         fresh head. Returns (version, audit)."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"table {self.name}: cannot {op} before create")
-            meta = self._read_meta(cur)
+
+        def build(cur: int, meta: dict, staged: list) -> tuple[int, dict]:
             deletes = meta.get("delete_dirs", [])
             spec = meta.get("spec", [])
             hit = self._dirs_matching(meta, condition)
@@ -3379,27 +3122,18 @@ class SnapshotTable:
             rewritten = transform(self._read_dirs_mor(meta, touched))
             self._enforce_constraints(rewritten, meta)
             d_new = self._write_data(self._to_physical(rewritten, meta["schema"]), spec)
-            schema_json = meta["schema"]
-            try:
-                version = self._commit(
-                    op,
-                    untouched + [d_new],
-                    cur,
-                    schema_json,
-                    spec=spec,
-                    dir_specs=untouched_specs + [spec],
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(d_new, ignore_errors=True)  # orphaned rewrite
-                continue
+            staged.append(d_new)
+            version = self._commit(
+                op, untouched + [d_new], cur, meta["schema"], spec=spec,
+                dir_specs=untouched_specs + [spec], expect_parent=cur,
+                parent_meta=meta,
+            )
             return version, {
                 "dirs_rewritten": len(touched),
                 "dirs_reused": len(untouched),
             }
-        raise CommitConflictError(
-            f"table {self.name}: {op} gave up after {max_retries} retries"
-        )
+
+        return self._commit_loop(op, build, max_retries)
 
     def update_where(
         self, condition, assignments: dict, max_retries: int = 3
@@ -3488,30 +3222,26 @@ class SnapshotTable:
         commit is a CoW swap of exactly the merged dirs, so changes()
         diffs it to zero rows and a skip_change_commits tail skips it —
         rows were already emitted when they first landed."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"table {self.name}: nothing to compact")
-            meta = self._read_meta(cur)
+
+        def _size(d: str) -> int:
+            total = 0
+            for r_, _ds, fs in os.walk(d):
+                for f in fs:
+                    if f.endswith(".parquet"):
+                        total += os.path.getsize(os.path.join(r_, f))
+            return total
+
+        def _flat(d: str) -> bool:
+            # flat = no hive _p_ subdirs (sink dirs and unpartitioned
+            # writes); the Arrow fallback can only concat flat dirs
+            for r_, ds_, _fs in os.walk(d):
+                if any(x.startswith("_p_") for x in ds_):
+                    return False
+            return True
+
+        def build(cur: int, meta: dict, staged: list) -> tuple[int | None, dict]:
             deletes = meta.get("delete_dirs", [])
             spec = meta.get("spec", [])
-
-            def _size(d: str) -> int:
-                total = 0
-                for r_, _ds, fs in os.walk(d):
-                    for f in fs:
-                        if f.endswith(".parquet"):
-                            total += os.path.getsize(os.path.join(r_, f))
-                return total
-
-            def _flat(d: str) -> bool:
-                # flat = no hive _p_ subdirs (sink dirs and unpartitioned
-                # writes); the Arrow fallback can only concat flat dirs
-                for r_, ds_, _fs in os.walk(d):
-                    if any(x.startswith("_p_") for x in ds_):
-                        return False
-                return True
-
             small, kept, kept_specs = [], [], []
             merged_bytes = 0
             for d, dspec in zip(meta["dirs"], self._dir_specs(meta)):
@@ -3560,25 +3290,15 @@ class SnapshotTable:
                     audit["dirs_merged"] = 0
                     return None, audit
                 merged_spec = []
-            try:
-                v = self._commit(
-                    "compact-minor",
-                    kept + [merged],
-                    cur,
-                    meta["schema"],
-                    spec=spec,
-                    dir_specs=kept_specs + [merged_spec],
-                    expect_parent=cur,
-                    delete_dirs=deletes,
-                )
-                return v, audit
-            except CommitConflictError:
-                shutil.rmtree(merged, ignore_errors=True)
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: compact_minor gave up after "
-            f"{max_retries} retries"
-        )
+            staged.append(merged)
+            v = self._commit(
+                "compact-minor", kept + [merged], cur, meta["schema"],
+                spec=spec, dir_specs=kept_specs + [merged_spec],
+                expect_parent=cur, delete_dirs=deletes, parent_meta=meta,
+            )
+            return v, audit
+
+        return self._commit_loop("compact", build, max_retries, "compact_minor")
 
     def _merge_dirs_arrow(self, dirs: list[str], cur: int) -> str | None:
         """Concat the parquet files of flat dirs into ONE file in a new
@@ -3723,26 +3443,11 @@ class SnapshotTable:
         the log as auditable history until expire_snapshots)."""
         for _ in range(max_retries + 1):
             parent = self.get_ref(branch)
-            pmeta = self._read_meta(parent)
-            spec = pmeta.get("spec", [])
-            aligned, schema_json = self._align_append_to_schema(df, pmeta["schema"])
-            self._enforce_constraints(aligned, pmeta)
-            d = self._write_data(self._to_physical(aligned, schema_json), spec)
-            v = self._commit(
-                f"append@{branch}",
-                pmeta["dirs"] + [d],
-                parent,
-                schema_json,
-                spec=spec,
-                dir_specs=self._dir_specs(pmeta) + [spec],
-                # parent dirs ride by reference ⇒ so must the parent's
-                # MOR delete files (same hazard as evolve_partitioning)
-                delete_dirs=pmeta.get("delete_dirs", []),
-                # a lost publish race only needs the next free version slot:
-                # this snapshot's dirs are parented to the BRANCH REF,
-                # not the global latest, so re-sequencing can never
-                # republish a stale dirs list
-                retry_on_race=True,
+            v = self._append_on(
+                f"append@{branch}", parent, self._read_meta(parent), df, [],
+                # the head is the branch ref, not the global latest: a
+                # lost publish race only needs the next free version slot
+                expect_parent=None, retry_on_race=True,
             )
             try:
                 self.set_ref(branch, v, expect=parent)
