@@ -460,7 +460,14 @@ class SnapshotTable:
             for s in all_specs
             for e in s
         ):
-            sess_tz = self.spark.conf.get("spark.sql.session.timeZone")
+            # a session-free commit (the snapshot_write sink, the Arrow
+            # compaction) lands only flat dirs, which hold no time-
+            # transform value of its own: the table's pinned zone stands
+            sess_tz = (
+                self.spark.conf.get("spark.sql.session.timeZone")
+                if self.spark is not None
+                else parent_tz
+            )
             if parent_tz is not None and parent_tz != sess_tz:
                 raise ValueError(
                     f"table {self.name}: time-transform partition values "

@@ -2,16 +2,21 @@
 (`SnapshotTable._commit_loop`): one before-create refusal, one conflict
 rebuild with cleanup of what the losing attempt staged. Plus the
 regressions fixed alongside it: decimal footer stats, the session conf
-a table write used to pin, and views over time travel."""
+a table write used to pin, views over time travel, and the session-free
+sink commit into a time-partitioned table."""
 
 from __future__ import annotations
 
+import datetime
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import empdia_iceberg_spark.tables.manager as mgr
+from empdia_iceberg_spark.sources.table_sink import SnapshotStreamWriter
 from empdia_iceberg_spark.tables.ddl import execute_ddl, execute_sql
 from empdia_iceberg_spark.tables.manager import SnapshotTable, scratch_root
 
@@ -233,4 +238,29 @@ def test_view_over_time_travel_reads_from_another_session(spark):
     got = execute_sql(other, "SELECT * FROM v_tt_view_unit", root).collect()
     assert [tuple(r) for r in got] == [(1, "a")]
     execute_sql(spark, "DROP VIEW v_tt_view_unit", root)
+    t.drop()
+
+
+def test_sink_commits_into_a_time_partitioned_table(spark):
+    """The sink commits with no session (it runs in the Python worker):
+    on a days(ts) table the commit keeps the table's pinned zone."""
+    root = scratch_root()
+    t = SnapshotTable(spark, "t_sink_days_unit", root)
+    t.drop()
+    execute_sql(
+        spark,
+        "CREATE TABLE t_sink_days_unit (ts TIMESTAMP, n BIGINT) "
+        "PARTITIONED BY (days(ts))",
+        root,
+    )
+    schema = T.StructType.fromJson(json.loads(t._read_meta(1)["schema"]))
+    w = SnapshotStreamWriter(
+        {"table": "t_sink_days_unit", "root": root, "run_id": "r"}, schema
+    )
+    ts = datetime.datetime(2024, 1, 1, 12)
+    w.commit([w.write(iter([(ts, 1)]))], 0)
+    w.commit([], 1)  # an empty batch stamps a metadata-only commit
+    assert t.current_version() == 3
+    assert [tuple(r) for r in t.read().collect()] == [(ts, 1)]
+    assert t._read_meta(3)["tz"] == t._read_meta(1)["tz"]
     t.drop()
