@@ -22,8 +22,15 @@ modules on its first read, and ``__spark_entry__.py`` puts the names in
 the driver's sweep order.
 """
 
-from empdia_iceberg_spark import registry  # noqa: F401
-from empdia_iceberg_spark.session import get_spark  # noqa: F401
+import os
+
+# The checkout holding this package. Default roots for engine-managed
+# files sit under it, so each checkout (a copy of the tree included)
+# keeps its own tables and caches.
+CHECKOUT_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+from empdia_iceberg_spark import registry  # noqa: F401,E402
+from empdia_iceberg_spark.session import get_spark  # noqa: F401,E402
 
 __all__ = ["registry", "get_spark"]
 __version__ = "0.1.0"

@@ -22,12 +22,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from empdia_iceberg_spark import CHECKOUT_DIR
 from empdia_iceberg_spark.functions.exact import exact_sum2, sql_sum2
 from empdia_iceberg_spark.registry import register
 from empdia_iceberg_spark.sources.tables import load
 
 BUCKET_ROOT = os.environ.get(
-    "SPARK_GRAFT_BUCKET_ROOT", "/root/repo/.managed_tables/bucketed"
+    "SPARK_GRAFT_BUCKET_ROOT",
+    os.path.join(CHECKOUT_DIR, ".managed_tables", "bucketed"),
 )
 N_BUCKETS = 8
 

@@ -38,10 +38,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from empdia_iceberg_spark import CHECKOUT_DIR
 from empdia_iceberg_spark.functions.exact import det_round, sql_det_round, sql_sum_r6
 from empdia_iceberg_spark.registry import register
 from empdia_iceberg_spark.sources.tables import load, path_for
 
+# the IVF shard cache's root unless SPARK_GRAFT_ANN_ROOT names another
+ANN_DEFAULT_ROOT = os.path.join(CHECKOUT_DIR, ".ann_work")
 TOP_K = 5
 NEAR_DUP_COS = 0.4  # synthetic 64-dim data: cos>=0.4 marks the planted tail
 _CHUNK = 256  # rows per matmul chunk: 256 × n_index × 8 B stays ≪ executor memory
@@ -757,7 +760,7 @@ def _ivf_cells_dir(
     import shutil
     import uuid
 
-    ann_root = os.environ.get("SPARK_GRAFT_ANN_ROOT", "/root/repo/.ann_work")
+    ann_root = os.environ.get("SPARK_GRAFT_ANN_ROOT", ANN_DEFAULT_ROOT)
     # src partitions the cache namespace by index path, so generation
     # reclamation below can never delete another dataset's live shards
     # (several sf dirs share one ann_root in tests and bench).

@@ -56,6 +56,7 @@ from typing import Any, Callable, NamedTuple
 
 from py4j.protocol import Py4JError
 from pyspark.errors import ParseException, PySparkException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1650,6 +1651,13 @@ def _statement(spark: SparkSession, text: str, root: str) -> tuple[_Entry, _Stat
         m = pattern.match(text)
         if m:
             return entry, _Statement(spark, root, text, m)
+    # pyspark logs an ERROR record with the JVM stack for every
+    # ParseException it converts; hold it back, drop it when the
+    # reserved-key parse recovers, and log it when the statement fails
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    held: list = []
+    hold = held.append  # as a filter it returns None: the record waits
+    logger.addFilter(hold)
     try:
         node, props = _parse(spark, text), None
     except ValueError as ex:
@@ -1657,7 +1665,12 @@ def _statement(spark: SparkSession, text: str, root: str) -> tuple[_Entry, _Stat
         if not (isinstance(cause, ParseException)
                 and cause.getCondition() == "UNSUPPORTED_FEATURE.SET_TABLE_PROPERTY"):
             raise
+        held.clear()
         node, props = _parse_with_reserved_keys(spark, text)
+    finally:
+        logger.removeFilter(hold)
+        for record in held:
+            logger.handle(record)
     kind = _kind(node)
     entry = _NODES.get(kind)
     if entry is None:

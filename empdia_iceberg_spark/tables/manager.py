@@ -46,13 +46,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from empdia_iceberg_spark import CHECKOUT_DIR
 from empdia_iceberg_spark.functions.exact import sql_sum2, sql_sum8, exact_sum2, exact_sum8
 from empdia_iceberg_spark.registry import register
 from empdia_iceberg_spark.sources.tables import load, local_df
 
-# Engine-managed table root (inside the repo; never touches /root/testdata).
+# Engine-managed table root (inside the checkout; never touches the
+# test data).
 DEFAULT_ROOT = os.environ.get(
-    "SPARK_GRAFT_TABLE_ROOT", "/root/repo/.managed_tables"
+    "SPARK_GRAFT_TABLE_ROOT", os.path.join(CHECKOUT_DIR, ".managed_tables")
 )
 
 # ---------------------------------------------------------- scratch catalog
@@ -110,6 +112,50 @@ def scratch_root(root: str | None = None) -> str:
 # Snapshot writes aim for files of this size (Iceberg's
 # write.target-file-size-bytes default), via shuffle-free coalesce.
 TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+# A snapshot read whose files (data plus delete files) total fewer bytes
+# than this runs as one partition; `tools/scaling_study.py small_scan`
+# prints the crossover it is set below.
+SMALL_SCAN_BYTES = 1024 * 1024
+
+
+def _fits_one_split(paths) -> bool:
+    """Whether the files Spark reads under ``paths`` (dirs or single
+    files; names starting with ``.`` or ``_``, like checksums and
+    markers, are skipped as Spark skips them) total fewer than
+    SMALL_SCAN_BYTES. Stats files only until the sum reaches the gate;
+    a missing path answers False and is left for Spark's reader to
+    report."""
+    total = 0
+    stack = list(paths)
+    while stack:
+        p = stack.pop()
+        try:
+            with os.scandir(p) as entries:
+                for e in entries:
+                    if e.is_dir(follow_symlinks=False):
+                        stack.append(e.path)
+                        continue
+                    if e.name.startswith((".", "_")):
+                        continue
+                    total += e.stat().st_size
+                    if total >= SMALL_SCAN_BYTES:
+                        return False
+        except NotADirectoryError:
+            total += os.path.getsize(p)
+        except FileNotFoundError:
+            return False
+        if total >= SMALL_SCAN_BYTES:
+            return False
+    return True
+
+
+def _split_small(df: DataFrame, paths: list[str], one_split: bool | None) -> DataFrame:
+    """``df`` coalesced to one partition (no shuffle) when ``one_split``
+    says so, or, left None, when the files under ``paths`` fit the gate."""
+    if one_split is None:
+        one_split = _fits_one_split(paths)
+    return df.coalesce(1) if one_split else df
 
 # sentinel: footer stats could not prove a dir's key envelope — the
 # caller must fall back to the Spark scan path (None is taken: it is a
@@ -3161,13 +3207,29 @@ class SnapshotTable:
         cur = self.current_version()
         if cur is None:
             raise ValueError(f"table {self.name}: cannot update before create")
-        schema = T.StructType.fromJson(json.loads(self._read_meta(cur)["schema"]))
+        schema_json = self._read_meta(cur)["schema"]
+        schema = T.StructType.fromJson(json.loads(schema_json))
         cols = set(schema.fieldNames())
         unknown = sorted(set(assignments) - cols)
         if unknown:
             raise ValueError(
                 f"table {self.name}: UPDATE assigns unknown column(s) {unknown}"
             )
+        # MERGE's assignment rule, applied before any file is written to
+        # the type each rewritten column takes (the assignment coerced
+        # with the column's old value): the column's own type passes,
+        # anything else (decimal(13,2) from `d + 1` on decimal(12,2))
+        # raises. Plan-only, on an empty frame of the table schema.
+        self._conform_clause_types(
+            self._read_dirs([], schema_json=schema_json).select(
+                *[
+                    F.when(F.lit(True), e).otherwise(F.col(c)).alias(c)
+                    for c, e in assignments.items()
+                ]
+            ),
+            {f.name: f.dataType for f in schema.fields},
+            "UPDATE",
+        )
 
         def transform(df: DataFrame) -> DataFrame:
             # withColumns applies simultaneously from one projection, so
@@ -3658,6 +3720,8 @@ class SnapshotTable:
             return self._read_dirs(dirs, merge_schema, meta["schema"])
         from collections import defaultdict
 
+        # one gate decision for the whole read, delete files included
+        one = _fits_one_split([*dirs, *(dd["dir"] for dd in deletes)])
         groups: dict[tuple, list[str]] = defaultdict(list)
         for d in dirs:
             # _dir_within, not membership: pruned reads pass hive
@@ -3696,10 +3760,14 @@ class SnapshotTable:
                     sides = []
                     if plain:
                         sides.append(
-                            self._read_dirs(plain, merge_schema, meta["schema"])
+                            self._read_dirs(
+                                plain, merge_schema, meta["schema"], one
+                            )
                         )
                     if touched:
-                        hit = self._read_dirs_lineage(touched, meta["schema"])
+                        hit = self._read_dirs_lineage(
+                            touched, meta["schema"], one
+                        )
                         for i in pos_idx:
                             hit = self._apply_position_delete(hit, deletes[i])
                         sides.append(hit.drop(self._POS_FILE, self._POS_IDX))
@@ -3722,9 +3790,9 @@ class SnapshotTable:
             # read the whole group through the lineage scan
             need_lineage = with_lineage or bool(pos_idx)
             part = (
-                self._read_dirs_lineage(group_dirs, meta["schema"])
+                self._read_dirs_lineage(group_dirs, meta["schema"], one)
                 if need_lineage
-                else self._read_dirs(group_dirs, merge_schema, meta["schema"])
+                else self._read_dirs(group_dirs, merge_schema, meta["schema"], one)
             )
             for i in applicable:
                 if deletes[i].get("kind") == "position":
@@ -3743,7 +3811,7 @@ class SnapshotTable:
         out = parts[0]
         for p_ in parts[1:]:
             out = out.unionByName(p_, allowMissingColumns=merge_schema)
-        return out
+        return out.coalesce(1) if one else out
 
     @staticmethod
     def _schema_defaults(schema_json: str) -> dict:
@@ -3797,7 +3865,22 @@ class SnapshotTable:
         dirs: list[str],
         merge_schema: bool = False,
         schema_json: str | None = None,
+        one_split: bool | None = None,
     ) -> DataFrame:
+        """Scan frame over data dirs (or files) of one snapshot, read
+        under the committed schema when ``schema_json`` is given.
+
+        Every snapshot scan frame (`read`, the views `execute_sql`
+        registers and prunes, time travel, `table_changes`, the MOR
+        reads) is built here or in `_read_dirs_lineage`. A read whose
+        files total less than SMALL_SCAN_BYTES comes back as one
+        partition (``coalesce(1)``, no shuffle): Spark then reports
+        SinglePartition, plans no Exchange, and runs scan plus
+        aggregate as one job of one task. Below the gate, the launches
+        of a parallel scan stage and of each exchange's stage cost more
+        than scanning the bytes on one core; above it the plan is
+        unchanged. ``one_split`` passes a decision the caller already
+        made for a larger read (data plus delete files)."""
         if not dirs:
             # a TRUNCATEd snapshot has an empty file list: an empty
             # frame in the committed (logical) schema, no scan at all
@@ -3839,7 +3922,7 @@ class SnapshotTable:
                         ]
                     )
                 )
-                return reader.parquet(*dirs)
+                return _split_small(reader.parquet(*dirs), dirs, one_split)
             # Metadata-only RENAME support: files carry PHYSICAL names,
             # so the reader schema lists those, and one projection maps
             # physical → logical (aliases push through Catalyst, so
@@ -3856,21 +3939,24 @@ class SnapshotTable:
                     ]
                 )
             )
-            return reader.parquet(*dirs).select(
+            df = reader.parquet(*dirs).select(
                 *[
                     F.col(phys[f.name]).alias(f.name, metadata={})
                     for f in stored.fields
                 ]
             )
+            return _split_small(df, dirs, one_split)
         elif merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*dirs)
+        return _split_small(reader.parquet(*dirs), dirs, one_split)
 
     # row-lineage column names (position-delete coordinates)
     _POS_FILE = "_pos_file"
     _POS_IDX = "_pos_idx"
 
-    def _read_dirs_lineage(self, dirs: list[str], schema_json: str) -> DataFrame:
+    def _read_dirs_lineage(
+        self, dirs: list[str], schema_json: str, one_split: bool | None = None
+    ) -> DataFrame:
         """_read_dirs plus the two ROW-LINEAGE columns position deletes
         key on: `_pos_file` / `_pos_idx` from the parquet scan's hidden
         `_metadata` column (file_path, row_index — Spark 3.5+ public
@@ -3899,7 +3985,7 @@ class SnapshotTable:
                 ]
             )
         )
-        return reader.parquet(*dirs).select(
+        df = reader.parquet(*dirs).select(
             *[
                 F.col(phys[f.name]).alias(f.name, metadata={})
                 for f in stored.fields
@@ -3907,6 +3993,7 @@ class SnapshotTable:
             F.col("_metadata.file_path").alias(self._POS_FILE),
             F.col("_metadata.row_index").alias(self._POS_IDX),
         )
+        return _split_small(df, dirs, one_split)
 
     @staticmethod
     def _walk_parquet(d: str) -> list[str]:

@@ -203,6 +203,31 @@ def test_predicate_dml_on_a_decimal_table_equals_an_unpruned_rewrite(spark):
         t.drop()
 
 
+def test_update_refuses_a_value_of_another_type_than_the_column(spark):
+    """UPDATE applies MERGE's assignment rule: `d + 1` on decimal(12,2)
+    is decimal(13,2), which would commit a file no read of `d` accepts,
+    so it raises naming the column and commits nothing; with the cast
+    (or a literal that fits the column) it commits and reads back."""
+    from decimal import Decimal
+
+    root = scratch_root()
+    t = SnapshotTable(spark, "td", root)
+    t.drop()
+    t.create(spark.createDataFrame(
+        [(1, Decimal("1.50")), (2, Decimal("2.25"))], "k int, d decimal(12,2)"
+    ))
+    v = t.current_version()
+    with pytest.raises(ValueError, match="'d'.*decimal\\(13,2\\)"):
+        execute_sql(spark, "UPDATE td SET d = d + 1 WHERE k = 2", root)
+    assert t.current_version() == v
+    execute_sql(spark, "UPDATE td SET d = CAST(d + 1 AS decimal(12,2)) WHERE k = 2", root)
+    execute_sql(spark, "UPDATE td SET d = 7.5 WHERE k = 1", root)
+    assert t.current_version() == v + 2
+    rows = execute_sql(spark, "SELECT k, d FROM td", root).collect()
+    assert sorted((r.k, r.d) for r in rows) == [(1, Decimal("7.50")), (2, Decimal("3.25"))]
+    t.drop()
+
+
 def test_table_write_leaves_the_session_conf_as_it_found_it(spark):
     """Both confs a write pins (the parquet timestamp type, and the AQE
     advisory size for partitioned writes) are restored to "not set"."""

@@ -182,3 +182,18 @@ def test_profile_replication_scales_users_not_profiles(x2_new):
 
     ids = _col(sf, "events", "event_id")
     assert pc.count_distinct(ids).as_py() == 2 * len(base_ts)
+
+
+def test_small_scan_study_runs_at_its_smallest_size(spark, tmp_path):
+    """The small_scan study (the source of tables/manager.py's
+    SMALL_SCAN_BYTES) runs each shape at the smallest size, with both
+    arms returning equal rows, and leaves the gate as it found it."""
+    import empdia_iceberg_spark.tables.manager as mgr
+
+    gate = mgr.SMALL_SCAN_BYTES
+    out = scaling_study.run_small_scan_study(
+        spark, scaling_study.SMALL_SCAN_MB[:1], reps=1, tiny=None, root=str(tmp_path)
+    )
+    assert [r["shape"] for r in out] == list(scaling_study.SMALL_SCAN_SHAPES)
+    assert all(r["one_s"] > 0 and r["parallel_s"] > 0 for r in out)
+    assert mgr.SMALL_SCAN_BYTES == gate

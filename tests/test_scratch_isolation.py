@@ -167,3 +167,36 @@ def test_concurrent_processes_do_not_corrupt_stream_feeds(tmp_path):
             if line.startswith("WORK_ROOT=")
         }
     assert len(roots) == 2, f"work roots must be process-unique: {roots}"
+
+
+def test_default_roots_follow_the_checkout(tmp_path):
+    """The engine's default table, bucketed-table and ANN-cache roots sit
+    inside the checkout the package is imported from, so a copy of the
+    tree never writes into another checkout."""
+    import shutil
+
+    copy = tmp_path / "checkout"
+    shutil.copytree(
+        os.path.join(REPO, "empdia_iceberg_spark"),
+        copy / "empdia_iceberg_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    probe = (
+        "import empdia_iceberg_spark.tables.manager as m\n"
+        "import empdia_iceberg_spark.operators.bucketing as b\n"
+        "import empdia_iceberg_spark.operators.similarity as s\n"
+        "print(m.DEFAULT_ROOT); print(b.BUCKET_ROOT); print(s.ANN_DEFAULT_ROOT)\n"
+    )
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_TABLE_ROOT", "SPARK_GRAFT_BUCKET_ROOT", "PYTHONPATH")
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=copy, env=env,
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert out == [
+        str(copy / ".managed_tables"),
+        str(copy / ".managed_tables" / "bucketed"),
+        str(copy / ".ann_work"),
+    ]

@@ -2450,6 +2450,41 @@ def test_reserved_property_keys_round_trip_without_touching_the_session(spark):
     t.drop()
 
 
+def test_recovered_reserved_key_parse_logs_nothing(spark):
+    """pyspark logs an ERROR record with the JVM stack for each
+    ParseException it converts. A reserved-key statement that the
+    engine then parses succeeds without one; a statement Spark rejects
+    (here a duplicate key; plain syntax errors carry no query context
+    and pyspark logs none for them) still raises and logs its record."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    from empdia_iceberg_spark.tables.ddl import execute_sql
+
+    records: list = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    logger.addHandler(handler)
+    root = scratch_root()
+    t = SnapshotTable(spark, "t_quiet_parse", root)
+    t.drop()
+    try:
+        execute_sql(spark, "CREATE TABLE t_quiet_parse (k int)", root)
+        execute_sql(spark, "ALTER TABLE t_quiet_parse SET TBLPROPERTIES ('owner'='x')", root)
+        assert t.properties()["owner"] == "x"
+        assert records == []
+        with pytest.raises(ValueError, match="DUPLICATE_KEY"):
+            execute_sql(
+                spark, "ALTER TABLE t_quiet_parse SET TBLPROPERTIES ('a'='1', 'a'='2')", root
+            )
+        assert len(records) == 1 and records[0].levelno == logging.ERROR
+    finally:
+        logger.removeHandler(handler)
+        t.drop()
+
+
 # ------------------------------------------------------- SQL time travel
 
 

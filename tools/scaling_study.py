@@ -53,7 +53,17 @@ Studies:
                 fully-merged table to parquet — what an engine without
                 file pruning must write)
 
+  small_scan    snapshot-table reads below and above the one-split
+                gate (tables/manager.py SMALL_SCAN_BYTES): a projection
+                collect, a one-exchange GROUP BY and a two-exchange
+                COUNT(DISTINCT) through execute_sql, each timed with
+                the read forced to one task and forced parallel, over
+                tables of SMALL_SCAN_MB megabytes in 256 KB files plus
+                one of SMALL_SCAN_TINY tiny files; prints where
+                the one-task read stops winning. Ignores --scales.
+
 Usage:
+  python tools/scaling_study.py small_scan --reps 7
   python tools/scaling_study.py window_rank events_hourly --scales 10,30,100
   python tools/scaling_study.py q3 q3_bucketed --scales 10,30,100
   python tools/scaling_study.py q1 --scales 10,30,100
@@ -105,6 +115,7 @@ STUDY_TABLES = {
     "dml_stats": ["orders"],
     "bucket_join": ["orders", "customer"],
     "sql_prune": ["events"],
+    "small_scan": [],  # generates its own tables
 }
 STUDY_QUERY = {
     "q1": "q1_pricing_agg",
@@ -1214,6 +1225,129 @@ def run_bucket_join_study(spark, scale: int, reps: int) -> dict:
     }
 
 
+# small_scan: table sizes in MB, the file size they are written in, and
+# the many-small-files table (file count, MB)
+SMALL_SCAN_MB = (0.25, 0.5, 1, 2, 4, 8)
+SMALL_SCAN_FILE_BYTES = 256 * 1024
+SMALL_SCAN_TINY = (200, 0.5)
+SMALL_SCAN_SHAPES = {
+    "projection": "SELECT event_id, user_id, value FROM {t}",
+    "group_by": (
+        "SELECT user_id, count(*) AS n, sum(value) AS s FROM {t} GROUP BY user_id"
+    ),
+    "count_distinct": (
+        "SELECT count(*) AS n, count(DISTINCT event_id) AS n_ids, "
+        "coalesce(sum(event_id), 0) AS s_id, coalesce(sum(user_id), 0) AS s_user "
+        "FROM {t}"
+    ),
+}
+
+
+def _small_scan_table(spark, root, name: str, rows: int, n_files: int):
+    """A snapshot table of the stream_ingest silver shape: ``rows`` rows
+    in ``n_files`` files. Returns the table and its parquet bytes."""
+    import empdia_iceberg_spark.tables.manager as M
+
+    df = spark.range(0, rows, numPartitions=n_files).selectExpr(
+        "id AS event_id",
+        "timestamp_seconds(1706745600 + id * 7 % 86400) AS ts",
+        "xxhash64(id) % 1500 AS user_id",
+        "element_at(array('click','error','purchase','signup','view'), "
+        "CAST(pmod(xxhash64(id, 1), 5) + 1 AS int)) AS event_type",
+        "round(pmod(xxhash64(id, 2), 100000) / 100.0 + 1, 2) AS value",
+        "hour(timestamp_seconds(1706745600 + id * 7 % 86400)) AS hour",
+    )
+    t = M.SnapshotTable(spark, name, root)
+    t.drop()
+    saved, M.TARGET_FILE_BYTES = M.TARGET_FILE_BYTES, 1  # one file per partition
+    try:
+        t.create(df)
+    finally:
+        M.TARGET_FILE_BYTES = saved
+    meta = t._read_meta(t.current_version())
+    files = [f for d in meta["dirs"] for f in t._walk_parquet(d)]
+    assert len(files) == n_files, (len(files), n_files)
+    return t, sum(os.path.getsize(f) for f in files)
+
+
+def run_small_scan_study(
+    spark, sizes_mb, reps: int, tiny=SMALL_SCAN_TINY, root: str | None = None
+) -> list[dict]:
+    """Each SMALL_SCAN_SHAPES statement over each table, timed with the
+    snapshot read forced to one task (gate raised past the table) and
+    forced parallel (gate 0); arms alternate within each repetition,
+    the view-frame cache is cleared before every run so each run
+    builds its scan under the arm's gate, and the two arms' rows must
+    be equal. Reports medians; negative delta = one task is faster."""
+    import statistics
+
+    import empdia_iceberg_spark.tables.manager as M
+    from empdia_iceberg_spark.tables import ddl
+
+    tables = [
+        (f"{mb} MB", mb * 1024 * 1024, max(1, round(mb * 1024 * 1024 / SMALL_SCAN_FILE_BYTES)))
+        for mb in sizes_mb
+    ]
+    if tiny:
+        tables.append((f"{tiny[1]} MB tiny", tiny[1] * 1024 * 1024, tiny[0]))
+    root = root or M.DEFAULT_ROOT
+    _pilot, pilot_bytes = _small_scan_table(spark, root, "small_scan_t", 50_000, 1)
+    rows_per_byte = 50_000 / pilot_bytes
+    saved = M.SMALL_SCAN_BYTES
+    out = []
+    try:
+        for label, target, n_files in tables:
+            rows = max(n_files, int(target * rows_per_byte))
+            t, nbytes = _small_scan_table(spark, root, "small_scan_t", rows, n_files)
+            for shape, stmt in SMALL_SCAN_SHAPES.items():
+                sql = stmt.format(t=t.name)
+                times = {"one": [], "parallel": []}
+                got = {}
+                for rep in range(reps + 1):  # rep 0 warms both arms
+                    arms = ("one", "parallel") if rep % 2 else ("parallel", "one")
+                    for arm in arms:
+                        M.SMALL_SCAN_BYTES = 1 << 62 if arm == "one" else 0
+                        ddl._VIEW_FRAME_CACHE.clear()
+                        t0 = time.perf_counter()
+                        pdf = ddl.execute_sql(spark, sql, root=root).toPandas()
+                        if rep:
+                            times[arm].append(time.perf_counter() - t0)
+                        got[arm] = sorted(map(tuple, pdf.itertuples(index=False)))
+                assert got["one"] == got["parallel"], f"small_scan {label} {shape}: arms differ"
+                one = statistics.median(times["one"])
+                par = statistics.median(times["parallel"])
+                r = {
+                    "study": "small_scan", "table": label, "mb": round(nbytes / 2**20, 2),
+                    "files": n_files, "shape": shape, "one_s": round(one, 4),
+                    "parallel_s": round(par, 4), "delta_pct": round(100 * (one / par - 1), 1),
+                }
+                print(
+                    f"| small_scan | {label} | {r['mb']} MB | {n_files} files | {shape} | "
+                    f"one {r['one_s']} s | parallel {r['parallel_s']} s | {r['delta_pct']:+}% |",
+                    flush=True,
+                )
+                out.append(r)
+            t.drop()
+    finally:
+        M.SMALL_SCAN_BYTES = saved
+        ddl._VIEW_FRAME_CACHE.clear()
+    # the crossover per shape, and for the three shapes' summed time
+    sized = [r for r in out if "tiny" not in r["table"]]
+    mbs = sorted({r["mb"] for r in sized})
+    for shape in [*SMALL_SCAN_SHAPES, "all shapes"]:
+        lost = [
+            mb for mb in mbs
+            if sum(r["one_s"] - r["parallel_s"] for r in sized
+                   if r["mb"] == mb and shape in (r["shape"], "all shapes")) >= 0
+        ]
+        print(
+            f"| small_scan crossover | {shape} | one task stops winning at "
+            f"{f'{min(lost)} MB' if lost else f'> {max(mbs)} MB'} |",
+            flush=True,
+        )
+    return out
+
+
 def run_study(
     spark, study: str, scale: int, reps: int, check: bool, spark_only: bool = False
 ) -> dict:
@@ -1306,6 +1440,9 @@ def main() -> None:
 
     spark = get_spark(app_name="scaling-study")
     for study in args.studies:
+        if study == "small_scan":  # sized in MB, not by --scales
+            run_small_scan_study(spark, SMALL_SCAN_MB, args.reps)
+            continue
         for scale in [int(s) for s in args.scales.split(",")]:
             if study == "cdc_apply":
                 r = run_cdc_apply_study(
