@@ -114,19 +114,19 @@ def scratch_root(root: str | None = None) -> str:
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 # A snapshot read whose files (data plus delete files) total fewer bytes
-# than this runs as one partition; `tools/scaling_study.py small_scan`
-# prints the crossover it is set below.
+# than SMALL_SCAN_BYTES, in fewer than SMALL_SCAN_FILES files, runs as
+# one partition. One task opens the files one after another, so many
+# tiny files lose to a parallel scan even when their bytes are few.
+# `tools/scaling_study.py small_scan` prints the crossovers both gates
+# are set below.
 SMALL_SCAN_BYTES = 1024 * 1024
+SMALL_SCAN_FILES = 32
 
 
-def _fits_one_split(paths) -> bool:
-    """Whether the files Spark reads under ``paths`` (dirs or single
-    files; names starting with ``.`` or ``_``, like checksums and
-    markers, are skipped as Spark skips them) total fewer than
-    SMALL_SCAN_BYTES. Stats files only until the sum reaches the gate;
-    a missing path answers False and is left for Spark's reader to
-    report."""
-    total = 0
+def _leaf_sizes(paths):
+    """Sizes of the files Spark reads under ``paths`` (dirs or single
+    files), listed lazily; names starting with ``.`` or ``_``, like
+    checksums and markers, are skipped as Spark skips them."""
     stack = list(paths)
     while stack:
         p = stack.pop()
@@ -135,18 +135,24 @@ def _fits_one_split(paths) -> bool:
                 for e in entries:
                     if e.is_dir(follow_symlinks=False):
                         stack.append(e.path)
-                        continue
-                    if e.name.startswith((".", "_")):
-                        continue
-                    total += e.stat().st_size
-                    if total >= SMALL_SCAN_BYTES:
-                        return False
+                    elif not e.name.startswith((".", "_")):
+                        yield e.stat().st_size
         except NotADirectoryError:
-            total += os.path.getsize(p)
-        except FileNotFoundError:
-            return False
-        if total >= SMALL_SCAN_BYTES:
-            return False
+            yield os.path.getsize(p)
+
+
+def _fits_one_split(paths) -> bool:
+    """Whether the files under ``paths`` stay under both gates. Stats
+    files only until a gate is reached; a missing path answers False
+    and is left for Spark's reader to report."""
+    total = 0
+    try:
+        for files, size in enumerate(_leaf_sizes(paths), 1):
+            total += size
+            if total >= SMALL_SCAN_BYTES or files >= SMALL_SCAN_FILES:
+                return False
+    except FileNotFoundError:
+        return False
     return True
 
 
@@ -3873,12 +3879,13 @@ class SnapshotTable:
         Every snapshot scan frame (`read`, the views `execute_sql`
         registers and prunes, time travel, `table_changes`, the MOR
         reads) is built here or in `_read_dirs_lineage`. A read whose
-        files total less than SMALL_SCAN_BYTES comes back as one
-        partition (``coalesce(1)``, no shuffle): Spark then reports
+        files total less than SMALL_SCAN_BYTES, in fewer than
+        SMALL_SCAN_FILES files, comes back as one partition
+        (``coalesce(1)``, no shuffle): Spark then reports
         SinglePartition, plans no Exchange, and runs scan plus
-        aggregate as one job of one task. Below the gate, the launches
+        aggregate as one job of one task. Below the gates, the launches
         of a parallel scan stage and of each exchange's stage cost more
-        than scanning the bytes on one core; above it the plan is
+        than scanning the files on one core; above them the plan is
         unchanged. ``one_split`` passes a decision the caller already
         made for a larger read (data plus delete files)."""
         if not dirs:

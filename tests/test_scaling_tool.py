@@ -190,10 +190,10 @@ def test_small_scan_study_runs_at_its_smallest_size(spark, tmp_path):
     arms returning equal rows, and leaves the gate as it found it."""
     import empdia_iceberg_spark.tables.manager as mgr
 
-    gate = mgr.SMALL_SCAN_BYTES
+    gates = mgr.SMALL_SCAN_BYTES, mgr.SMALL_SCAN_FILES
     out = scaling_study.run_small_scan_study(
-        spark, scaling_study.SMALL_SCAN_MB[:1], reps=1, tiny=None, root=str(tmp_path)
+        spark, scaling_study.SMALL_SCAN_MB[:1], reps=1, tiny_files=(), root=str(tmp_path)
     )
     assert [r["shape"] for r in out] == list(scaling_study.SMALL_SCAN_SHAPES)
     assert all(r["one_s"] > 0 and r["parallel_s"] > 0 for r in out)
-    assert mgr.SMALL_SCAN_BYTES == gate
+    assert (mgr.SMALL_SCAN_BYTES, mgr.SMALL_SCAN_FILES) == gates

@@ -1,8 +1,8 @@
 """Snapshot reads whose files fit one split run as one task
-(`SMALL_SCAN_BYTES` in tables/manager.py): below the gate a SQL
-aggregate plans no Exchange and runs as one job of one task, at or above
-it the plan is the parallel one, and on either side every read path
-returns the same rows."""
+(`SMALL_SCAN_BYTES` and `SMALL_SCAN_FILES` in tables/manager.py): below
+the gates a SQL aggregate plans no Exchange and runs as one job of one
+task, at or above either the plan is the parallel one, and on either
+side every read path returns the same rows."""
 
 from __future__ import annotations
 
@@ -110,6 +110,20 @@ def test_gate_boundary_keeps_the_parallel_plan_at_and_above(spark, root, monkeyp
     assert "Coalesce" not in plan and plan.count("Exchange") >= 2, plan
     assert t.read().rdd.getNumPartitions() > 1
     assert over.collect() == under.collect()
+
+
+def test_many_files_keep_the_parallel_plan(spark, root, monkeypatch):
+    """The file-count gate: one task opens files one after another, so
+    a read of SMALL_SCAN_FILES files stays parallel however few bytes
+    they hold."""
+    t = _table(spark, root, "t_small_files")
+    meta = t._read_meta(t.current_version())
+    n = sum(len(t._walk_parquet(d)) for d in meta["dirs"])
+    assert _data_bytes(t) < mgr.SMALL_SCAN_BYTES
+    monkeypatch.setattr(mgr, "SMALL_SCAN_FILES", n)
+    assert t.read().rdd.getNumPartitions() > 1
+    monkeypatch.setattr(mgr, "SMALL_SCAN_FILES", n + 1)
+    assert t.read().rdd.getNumPartitions() == 1
 
 
 def test_delete_files_count_toward_the_gate(spark, root, monkeypatch):

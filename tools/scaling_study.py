@@ -58,9 +58,10 @@ Studies:
                 collect, a one-exchange GROUP BY and a two-exchange
                 COUNT(DISTINCT) through execute_sql, each timed with
                 the read forced to one task and forced parallel, over
-                tables of SMALL_SCAN_MB megabytes in 256 KB files plus
-                one of SMALL_SCAN_TINY tiny files; prints where
-                the one-task read stops winning. Ignores --scales.
+                tables of SMALL_SCAN_MB megabytes in 256 KB files and
+                of SMALL_SCAN_TINY_MB in SMALL_SCAN_TINY_FILES tiny
+                files; prints the size and the file count at which the
+                one-task read stops winning. Ignores --scales.
 
 Usage:
   python tools/scaling_study.py small_scan --reps 7
@@ -1225,11 +1226,12 @@ def run_bucket_join_study(spark, scale: int, reps: int) -> dict:
     }
 
 
-# small_scan: table sizes in MB, the file size they are written in, and
-# the many-small-files table (file count, MB)
+# small_scan: table sizes in MB and the file size they are written in,
+# then file counts for tables of SMALL_SCAN_TINY_MB in tiny files
 SMALL_SCAN_MB = (0.25, 0.5, 1, 2, 4, 8)
 SMALL_SCAN_FILE_BYTES = 256 * 1024
-SMALL_SCAN_TINY = (200, 0.5)
+SMALL_SCAN_TINY_FILES = (16, 32, 64, 200)
+SMALL_SCAN_TINY_MB = 0.5
 SMALL_SCAN_SHAPES = {
     "projection": "SELECT event_id, user_id, value FROM {t}",
     "group_by": (
@@ -1271,11 +1273,11 @@ def _small_scan_table(spark, root, name: str, rows: int, n_files: int):
 
 
 def run_small_scan_study(
-    spark, sizes_mb, reps: int, tiny=SMALL_SCAN_TINY, root: str | None = None
+    spark, sizes_mb, reps: int, tiny_files=SMALL_SCAN_TINY_FILES, root: str | None = None
 ) -> list[dict]:
     """Each SMALL_SCAN_SHAPES statement over each table, timed with the
-    snapshot read forced to one task (gate raised past the table) and
-    forced parallel (gate 0); arms alternate within each repetition,
+    snapshot read forced to one task (both gates raised past the table)
+    and forced parallel (gates 0); arms alternate within each repetition,
     the view-frame cache is cleared before every run so each run
     builds its scan under the arm's gate, and the two arms' rows must
     be equal. Reports medians; negative delta = one task is faster."""
@@ -1285,18 +1287,16 @@ def run_small_scan_study(
     from empdia_iceberg_spark.tables import ddl
 
     tables = [
-        (f"{mb} MB", mb * 1024 * 1024, max(1, round(mb * 1024 * 1024 / SMALL_SCAN_FILE_BYTES)))
+        ("mb", mb * 1024 * 1024, max(1, round(mb * 1024 * 1024 / SMALL_SCAN_FILE_BYTES)))
         for mb in sizes_mb
-    ]
-    if tiny:
-        tables.append((f"{tiny[1]} MB tiny", tiny[1] * 1024 * 1024, tiny[0]))
+    ] + [("files", SMALL_SCAN_TINY_MB * 1024 * 1024, n) for n in tiny_files]
     root = root or M.DEFAULT_ROOT
     _pilot, pilot_bytes = _small_scan_table(spark, root, "small_scan_t", 50_000, 1)
     rows_per_byte = 50_000 / pilot_bytes
-    saved = M.SMALL_SCAN_BYTES
+    saved = M.SMALL_SCAN_BYTES, M.SMALL_SCAN_FILES
     out = []
     try:
-        for label, target, n_files in tables:
+        for kind, target, n_files in tables:
             rows = max(n_files, int(target * rows_per_byte))
             t, nbytes = _small_scan_table(spark, root, "small_scan_t", rows, n_files)
             for shape, stmt in SMALL_SCAN_SHAPES.items():
@@ -1306,45 +1306,47 @@ def run_small_scan_study(
                 for rep in range(reps + 1):  # rep 0 warms both arms
                     arms = ("one", "parallel") if rep % 2 else ("parallel", "one")
                     for arm in arms:
-                        M.SMALL_SCAN_BYTES = 1 << 62 if arm == "one" else 0
+                        gate = 1 << 62 if arm == "one" else 0
+                        M.SMALL_SCAN_BYTES = M.SMALL_SCAN_FILES = gate
                         ddl._VIEW_FRAME_CACHE.clear()
                         t0 = time.perf_counter()
                         pdf = ddl.execute_sql(spark, sql, root=root).toPandas()
                         if rep:
                             times[arm].append(time.perf_counter() - t0)
                         got[arm] = sorted(map(tuple, pdf.itertuples(index=False)))
-                assert got["one"] == got["parallel"], f"small_scan {label} {shape}: arms differ"
+                assert got["one"] == got["parallel"], f"small_scan {n_files} files {shape}: arms differ"
                 one = statistics.median(times["one"])
                 par = statistics.median(times["parallel"])
                 r = {
-                    "study": "small_scan", "table": label, "mb": round(nbytes / 2**20, 2),
+                    "study": "small_scan", "kind": kind, "mb": round(nbytes / 2**20, 2),
                     "files": n_files, "shape": shape, "one_s": round(one, 4),
                     "parallel_s": round(par, 4), "delta_pct": round(100 * (one / par - 1), 1),
                 }
                 print(
-                    f"| small_scan | {label} | {r['mb']} MB | {n_files} files | {shape} | "
+                    f"| small_scan | {r['mb']} MB | {n_files} files | {shape} | "
                     f"one {r['one_s']} s | parallel {r['parallel_s']} s | {r['delta_pct']:+}% |",
                     flush=True,
                 )
                 out.append(r)
             t.drop()
     finally:
-        M.SMALL_SCAN_BYTES = saved
+        M.SMALL_SCAN_BYTES, M.SMALL_SCAN_FILES = saved
         ddl._VIEW_FRAME_CACHE.clear()
-    # the crossover per shape, and for the three shapes' summed time
-    sized = [r for r in out if "tiny" not in r["table"]]
-    mbs = sorted({r["mb"] for r in sized})
-    for shape in [*SMALL_SCAN_SHAPES, "all shapes"]:
-        lost = [
-            mb for mb in mbs
-            if sum(r["one_s"] - r["parallel_s"] for r in sized
-                   if r["mb"] == mb and shape in (r["shape"], "all shapes")) >= 0
-        ]
-        print(
-            f"| small_scan crossover | {shape} | one task stops winning at "
-            f"{f'{min(lost)} MB' if lost else f'> {max(mbs)} MB'} |",
-            flush=True,
-        )
+    # the crossover in size and in file count, per shape and for the
+    # three shapes' summed time
+    for kind, unit in (("mb", "MB"), ("files", "files")):
+        sized = [r for r in out if r["kind"] == kind]
+        if not sized:
+            continue
+        points = sorted({r[kind] for r in sized})
+        for shape in [*SMALL_SCAN_SHAPES, "all shapes"]:
+            lost = [
+                x for x in points
+                if sum(r["one_s"] - r["parallel_s"] for r in sized
+                       if r[kind] == x and shape in (r["shape"], "all shapes")) >= 0
+            ]
+            at = f"{min(lost)} {unit}" if lost else f"> {max(points)} {unit}"
+            print(f"| small_scan crossover | {shape} | one task stops winning at {at} |", flush=True)
     return out
 
 
