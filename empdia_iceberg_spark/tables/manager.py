@@ -3213,40 +3213,30 @@ class SnapshotTable:
         cur = self.current_version()
         if cur is None:
             raise ValueError(f"table {self.name}: cannot update before create")
-        schema_json = self._read_meta(cur)["schema"]
-        schema = T.StructType.fromJson(json.loads(schema_json))
+        schema = T.StructType.fromJson(json.loads(self._read_meta(cur)["schema"]))
         cols = set(schema.fieldNames())
         unknown = sorted(set(assignments) - cols)
         if unknown:
             raise ValueError(
                 f"table {self.name}: UPDATE assigns unknown column(s) {unknown}"
             )
-        # MERGE's assignment rule, applied before any file is written to
-        # the type each rewritten column takes (the assignment coerced
-        # with the column's old value): the column's own type passes,
-        # anything else (decimal(13,2) from `d + 1` on decimal(12,2))
-        # raises. Plan-only, on an empty frame of the table schema.
-        self._conform_clause_types(
-            self._read_dirs([], schema_json=schema_json).select(
-                *[
-                    F.when(F.lit(True), e).otherwise(F.col(c)).alias(c)
-                    for c, e in assignments.items()
-                ]
-            ),
-            {f.name: f.dataType for f in schema.fields},
-            "UPDATE",
-        )
+        ttypes = {f.name: f.dataType for f in schema.fields}
 
         def transform(df: DataFrame) -> DataFrame:
             # withColumns applies simultaneously from one projection, so
             # every RHS sees pre-update values even when one assigned
             # column references another.
-            return df.withColumns(
+            out = df.withColumns(
                 {
                     c: F.when(condition, expr).otherwise(F.col(c)).alias(c)
                     for c, expr in assignments.items()
                 }
             )
+            # MERGE's assignment rule on the types the rewrite would
+            # write, before any file is written: `d + 1` on decimal(12,2)
+            # makes the column decimal(13,2), which no read of `d`
+            # accepts, so it raises naming the column
+            return self._conform_clause_types(out, ttypes, "UPDATE")
 
         return self._cow_rewrite("update", condition, transform, max_retries)
 
