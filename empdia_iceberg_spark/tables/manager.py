@@ -158,10 +158,11 @@ def _fits_one_split(paths) -> bool:
 
 def _split_small(df: DataFrame, paths: list[str], one_split: bool | None) -> DataFrame:
     """``df`` coalesced to one partition (no shuffle) when ``one_split``
-    says so, or, left None, when the files under ``paths`` fit the gate."""
+    says so, or, left None, when the files under ``paths`` fit the gates."""
     if one_split is None:
         one_split = _fits_one_split(paths)
     return df.coalesce(1) if one_split else df
+
 
 # sentinel: footer stats could not prove a dir's key envelope — the
 # caller must fall back to the Spark scan path (None is taken: it is a
