@@ -31,8 +31,9 @@ class; the handlers read the node's fields (column definitions,
 partition transforms, property maps, CHECK conditions, CALL arguments,
 query bodies), never the statement text. Only the few extension forms
 Spark's grammar rejects match an anchored regex, one per statement. The
-read-side sugar stays a text rewrite ahead of the parse: rewriting a
-parsed plan from Python would need a JVM-side transform.
+tables a statement reads are its parsed plan's relation leaves; the
+read-side sugar among them is rewritten to temp views at the leaves'
+spans, then parsed once more.
 
 Scale posture: CTAS is one Spark job writing the table's initial
 snapshot under the target-file-size policy; ADD COLUMN is O(1) —
@@ -162,24 +163,21 @@ def _view_names(root: str) -> list[str]:
 
 
 def materialize_views(
-    spark: SparkSession, statement: str, root: str, depth: int = 0
+    spark: SparkSession, names: set, root: str, depth: int = 0
 ) -> None:
-    """Resolve persisted views referenced by ``statement``: each view
-    name found at a word boundary (literal-masked scan, same discipline
-    as time travel) has its stored SQL executed — recursively, so views
-    can stack — and registered as a session temp view under its own
-    name, which Spark's analyzer then resolves. Depth-capped so a
-    reference cycle fails with a clear error instead of recursing."""
+    """Resolve the persisted views among ``names``, the one-part relation
+    names a parsed statement holds: each view's stored SQL runs through
+    `execute_sql` (recursively, so views can stack) and is registered as
+    a session temp view under its own name, which Spark's analyzer then
+    resolves. Depth-capped so a reference cycle fails with a clear error
+    instead of recursing."""
     if depth > 8:
         raise ValueError(
             "view resolution exceeded depth 8 — reference cycle? "
-            f"(while materializing for: {statement[:60]!r})"
+            f"(while materializing {sorted(names)})"
         )
-    masked = _mask_literals(statement)
-    for name in _view_names(root):
-        if re.search(rf"\b{re.escape(name)}\b", masked) and _should_register(
-            spark, name
-        ):
+    for name in sorted(names):
+        if _view_versions(root, name) and _should_register(spark, name):
             execute_sql(
                 spark, _view_sql(root, name), root, _view_depth=depth + 1
             ).createOrReplaceTempView(name)
@@ -213,34 +211,30 @@ def _should_register(spark: SparkSession, name: str) -> bool:
 
 
 def materialize_tables(
-    spark: SparkSession, statement: str, root: str
+    spark: SparkSession, names: set, root: str
 ) -> list:
-    """Make bare snapshot-table references resolvable: any identifier in
-    the (literal-masked) statement that names a snapshot table under the
-    catalog root gets its CURRENT state registered as a temp view —
-    re-registered on EVERY statement, because a temp view pins the
-    snapshot read it was built from and would otherwise serve stale
-    state after a write. A temp view the USER registered always wins
-    (tracked via _AUTO_MATERIALIZED), and view materialization runs
-    first, so the precedence is: user temp views > persisted views >
-    snapshot tables. Returns the (name, DataFrame) pairs registered
-    for THIS statement — the SQL-prune pass inspects exactly those,
-    and restoring a view from the SAME DataFrame object costs nothing
-    (its file index is already built; a fresh t.read() would RELIST
-    the whole table)."""
+    """Make bare snapshot-table references resolvable: each of ``names``
+    (a parsed statement's one-part relation names; nothing under the
+    root is listed) that is a snapshot table gets its CURRENT state
+    registered as a temp view — re-registered on EVERY statement,
+    because a temp view pins the snapshot read it was built from. A
+    temp view the USER registered always wins (tracked via
+    _AUTO_MATERIALIZED), and view materialization runs first, so the
+    precedence is: user temp views > persisted views > snapshot tables.
+    Returns the (name, DataFrame) pairs registered for THIS statement —
+    the SQL-prune pass inspects exactly those, and restoring a view from
+    the SAME DataFrame object costs nothing (a fresh t.read() would
+    RELIST the whole table)."""
     import os as _os
 
     if not _os.path.isdir(root):
         return []
-    masked = _mask_literals(statement)
     live = set()
     registered: list = []
-    for name in sorted(_os.listdir(root)):
+    for name in sorted(names):
         if not _os.path.isdir(_os.path.join(root, name, "_meta")):
             continue
         live.add(name)
-        if not re.search(rf"\b{re.escape(name)}\b", masked):
-            continue
         if not _should_register(spark, name):
             continue
         t = SnapshotTable(spark, name, root)
@@ -270,11 +264,14 @@ def materialize_tables(
             full_df.createOrReplaceTempView(name)
             registered.append((name, full_df))
     # a DROPped table or view must stop resolving through OUR stale
-    # registration (a user temp view is untouched — not in the set)
-    views = set(_view_names(root))
-    for key in list(_AUTO_MATERIALIZED):
-        sid, name = key
-        if sid == id(spark) and name not in live and name not in views:
+    # registration (a user temp view is untouched — not in the set);
+    # only this session's own registrations are checked
+    for key in [k for k in _AUTO_MATERIALIZED if k[0] == id(spark)]:
+        name = key[1]
+        if name not in live and not (
+            _os.path.isdir(_os.path.join(root, name, "_meta"))
+            or _view_versions(root, name)
+        ):
             spark.catalog.dropTempView(name)
             _AUTO_MATERIALIZED.discard(key)
     return registered
@@ -298,8 +295,6 @@ class _Statement:
     props: Any = None  # TBLPROPERTIES read with Spark's reserved keys kept
     mor_key: str | None = None
     registered: list = field(default_factory=list)
-    # the statement as written, before the read-side rewrites to temp views
-    written: str = ""
 
     def table(self, node, what: str) -> SnapshotTable:
         return SnapshotTable(self.spark, _table_name(node, what), self.root)
@@ -387,6 +382,12 @@ def _create_table(s: _Statement) -> dict:
         names = [c.name() for c in cols]
         if len(set(names)) != len(names):
             raise ValueError(f"duplicate column names in CREATE TABLE: {names}")
+        char_varchar = getattr(spark._jvm, "org.apache.spark.sql.catalyst.util.CharVarcharUtils")
+        for c in cols:  # a string column would drop the unenforced length
+            if char_varchar.hasCharVarchar(c.dataType()):
+                raise ValueError(f"CREATE TABLE {name}: column {c.name()} has type "
+                                 f"{c.dataType().sql()}, whose length the engine "
+                                 "does not enforce; declare it STRING")
         for c in cols:
             _refuse(f"column {c.name()}", {
                 "COMMENT": c.comment().isDefined(),
@@ -766,12 +767,7 @@ def _create_view(s: _Statement) -> dict:
         "TBLPROPERTIES": n.properties().nonEmpty(),
     })
     body = n.originalText().get()
-    if s.written != s.text:
-        # store the body as written: time travel, table_changes() and
-        # metadata tables were rewritten to this session's temp views,
-        # and every read of the view applies those rewrites again
-        body = _parse(s.spark, s.written).originalText().get()
-    if re.search(rf"\b{re.escape(name)}\b", _mask_literals(body)):
+    if name in _names(_leaves(s.spark, n.query())):
         raise ValueError(f"view {name} cannot reference itself")
     if SnapshotTable(s.spark, name, root).current_version() is not None:
         raise ValueError(f"cannot CREATE VIEW {name}: a TABLE of that name exists")
@@ -779,9 +775,9 @@ def _create_view(s: _Statement) -> dict:
     if vs and not n.replace():
         raise ValueError(f"view {name} already exists (use OR REPLACE)")
     # validate the body resolves NOW (analyzer errors surface here, not
-    # at first read); the stored text stays lazy
-    _materialize(s.spark, body, root)
-    _dataframe(s.spark, n.query()).limit(0).collect()
+    # at first read), through the same statement path every read of the
+    # view takes; the stored text stays lazy
+    execute_sql(s.spark, body, root).limit(0).collect()
     d = _views_dir(root, name)
     _os.makedirs(d, exist_ok=True)
     v = (vs[-1] + 1) if vs else 1
@@ -1107,16 +1103,72 @@ def _optimize(s: _Statement) -> dict:
     }
 
 
-# Iceberg metadata tables: `SELECT ... FROM <table>.snapshots|refs|files`
-# materializes the snapshot log / named refs / data-file inventory as a
-# queryable frame. Resolution requires <table> to BE a snapshot table;
-# a dotted ref whose head is a view/alias (e.g. `s.refs` where `refs`
-# is a column) is left untouched. Like Iceberg, a COLUMN named exactly
-# like a metadata table on a snapshot table of the same name is
-# shadowed — qualify through a view alias to reach it.
-_META_REF = re.compile(
-    r"\b([A-Za-z_]\w*)\.(snapshots|refs|files|stats|partitions|file_stats)\b"
-)
+# ------------------------------------------------------- table references
+# The tables a statement reads are the relation leaves of its parsed plan.
+# Three kinds are read-side sugar, each registered as a temp view and
+# replaced by the view's name at its span before one more parse: time
+# travel (a RelationTimeTravel), Delta's CDC read `table_changes('t', v1
+# [, v2 [, 'key']])` (an UnresolvedTableValuedFunction; the key folds
+# same-commit delete+insert pairs into update pre/postimages) and the
+# Iceberg metadata tables `t.snapshots|refs|files|...` (a two-part
+# UnresolvedRelation whose head is a snapshot table, not a database).
+# Comments, literals and columns are not leaves; a span that cannot be
+# shown exact is refused.
+
+
+def _leaves(spark: SparkSession, plan) -> list[tuple[str, Any, list | None]]:
+    """A parsed plan's relation leaves as (node class, node, name parts of
+    an UnresolvedRelation): those of its tree, of every CTE definition
+    (an UnresolvedWith's innerChildren, which no tree walk visits) and of
+    every subquery expression."""
+    with_ = getattr(
+        spark._jvm, "org.apache.spark.sql.catalyst.trees.TreePattern"
+    ).UNRESOLVED_WITH()
+    out, todo = [], [(plan, True)]
+    while todo:
+        p, root = todo.pop()
+        for leaf in _seq(p.collectLeaves()):
+            kind = _kind(leaf)
+            parts = _seq(leaf.multipartIdentifier()) if kind == "UnresolvedRelation" else None
+            out.append((kind, leaf, parts))
+        if root:  # subqueriesAll already holds subqueries of subqueries
+            todo += [(q, False) for q in _seq(p.subqueriesAll())]
+        nodes = [p] if p.containsPattern(with_) else []
+        while nodes:  # descend only into children that hold a WITH
+            n = nodes.pop()
+            if _kind(n) == "UnresolvedWith":
+                todo += [(d, True) for d in _seq(n.innerChildren())]
+            nodes += [c for c in _seq(n.children()) if c.containsPattern(with_)]
+    return out
+
+
+def _names(leaves: list) -> set:
+    """The one-part relation names among a plan's leaves."""
+    return {parts[0] for _kind_, _leaf, parts in leaves if parts and len(parts) == 1}
+
+
+def _span(text: str, node, what: str, spelled: str | None = None) -> tuple[int, int]:
+    """A parsed node's [start, end) in the statement text; with
+    ``spelled``, checked to hold exactly that name (backticks aside)."""
+    origin = node.origin()
+    start, stop = origin.startIndex(), origin.stopIndex()
+    if not start.isDefined() or (
+        spelled is not None and text[start.get() : stop.get() + 1].replace("`", "") != spelled
+    ):
+        raise ValueError(f"{what}: its position in the statement is not exact")
+    return start.get(), stop.get() + 1
+
+
+def _literal(expr, what: str) -> str | int | float:
+    """A parsed string or number literal's value; anything else is refused."""
+    dtype = expr.dataType().simpleString() if _kind(expr) == "Literal" else ""
+    if dtype == "string":
+        return str(expr.value())
+    if dtype in ("int", "bigint"):
+        return expr.value()
+    if dtype == "double" or dtype.startswith("decimal"):
+        return float(str(expr.value()))
+    raise ValueError(f"{what} takes string or number literals")
 
 
 def _metadata_frame(spark: SparkSession, t: SnapshotTable, kind: str) -> DataFrame:
@@ -1245,66 +1297,6 @@ def _metadata_frame(spark: SparkSession, t: SnapshotTable, kind: str) -> DataFra
     return spark.createDataFrame(rows, schema)
 
 
-def materialize_metadata_tables(
-    spark: SparkSession, statement: str, root: str = DEFAULT_ROOT
-) -> str:
-    """Rewrite `<snapshot-table>.<snapshots|refs|files>` references to
-    temp views over the metadata frames. Non-snapshot-table heads pass
-    through untouched (they are column/alias accessors)."""
-    masked = _mask_literals(statement)
-    matches = list(_META_REF.finditer(masked))
-    if not matches:
-        return statement
-    out = statement
-    for m in reversed(matches):
-        name, kind = m.group(1), m.group(2)
-        t = SnapshotTable(spark, name, root)
-        if t.current_version() is None:
-            continue  # not a snapshot table: a column/alias accessor
-        view = f"_meta_{name}_{kind}"
-        _metadata_frame(spark, t, kind).createOrReplaceTempView(view)
-        out = out[: m.start()] + view + out[m.end() :]
-    return out
-
-
-# Read-side time travel: `t VERSION AS OF 3` / `t FOR TIMESTAMP AS OF
-# '2026-08-16 12:00:00'` (Spark 3.3+/Delta syntax; SYSTEM_VERSION /
-# SYSTEM_TIME are the Iceberg spellings). The value group matches a
-# quoted literal or a bare number/ISO token; the scan runs over a
-# LITERAL-MASKED copy of the statement so `AS OF` inside a string can
-# never trigger a rewrite.
-_AS_OF = re.compile(
-    r"\b([A-Za-z_]\w*)\s+(?:FOR\s+)?"
-    r"(VERSION|SYSTEM_VERSION|TIMESTAMP|SYSTEM_TIME)\s+AS\s+OF\s+"
-    r"('[^']*'|\"[^\"]*\"|[\w.:+\-]+)",
-    re.IGNORECASE,
-)
-
-
-def _mask_literals(s: str) -> str:
-    """Same-length copy with every string-literal INTERIOR (including
-    backslash escapes, so an escaped quote cannot end the masked span
-    early) replaced by 'x' — regex scans over the mask, spans index the
-    original."""
-    out = list(s)
-    i, n, quote = 0, len(s), None
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\" and i + 1 < n:
-                out[i] = out[i + 1] = "x"
-                i += 2
-                continue
-            if ch == quote:
-                quote = None
-            else:
-                out[i] = "x"
-        elif ch in ("'", '"'):
-            quote = ch
-        i += 1
-    return "".join(out)
-
-
 def _parse_as_of_ts(raw: str) -> float:
     """Epoch seconds from a TIMESTAMP AS OF literal: a bare epoch number
     or an ISO-8601 string ('2026-08-16 12:00:00[+00:00]'); a naive
@@ -1320,68 +1312,46 @@ def _parse_as_of_ts(raw: str) -> float:
     return dt.timestamp()
 
 
-def materialize_time_travel(
-    spark: SparkSession, statement: str, root: str = DEFAULT_ROOT
-) -> str:
-    """Rewrite every `table [FOR] VERSION|TIMESTAMP AS OF <literal>`
-    reference in ``statement`` to a temp view over that snapshot read
-    (`SnapshotTable.read(version)` — the committed-schema read, so time
-    travel shows the schema AS OF each version) and return the rewritten
-    statement. Statements without time-travel refs pass through
-    untouched. Metadata-only: resolution reads snapshot JSONs; the scan
-    itself stays one pruned parquet read per referenced version."""
-    masked = _mask_literals(statement)
-    matches = list(_AS_OF.finditer(masked))
-    if not matches:
-        return statement
-    out = statement
-    for m in reversed(matches):  # right-to-left keeps earlier spans valid
-        name, kind = m.group(1), m.group(2).upper()
-        raw = statement[m.start(3) : m.end(3)]
-        t = SnapshotTable(spark, name, root)
-        if t.current_version() is None:
-            raise ValueError(
-                f"time travel requires a snapshot table: {name!r} not found"
-            )
-        if kind in ("VERSION", "SYSTEM_VERSION"):
-            v = raw.strip().strip("'\"")
-            # Iceberg lets VERSION AS OF name a branch/tag ref
-            try:
-                version = int(v) if v.isdigit() else t.get_ref(v)
-            except KeyError as e:
-                raise ValueError(str(e))
-        else:
-            version = t.version_as_of(_parse_as_of_ts(raw))
-        view = f"_asof_{name}_v{version}"
-        t.read(version).createOrReplaceTempView(view)
-        out = out[: m.start()] + view + out[m.end() :]
-    return out
+def _time_travel(spark: SparkSession, text: str, leaf, root: str) -> tuple:
+    """A RelationTimeTravel as (start, end, temp view over the snapshot's
+    committed-schema read, so time travel shows the schema AS OF each
+    version). Its origin() covers only the temporal clause, so the span
+    runs from the table name through the clause, whitespace between."""
+    rel = leaf.relation()
+    parts = _seq(rel.multipartIdentifier()) if _kind(rel) == "UnresolvedRelation" else []
+    if len(parts) != 1:
+        raise ValueError("time travel requires a one-part snapshot table name")
+    name, what = parts[0], f"time travel on {parts[0]!r}"
+    start, name_end = _span(text, rel, what, spelled=name)
+    clause, end = _span(text, leaf, what)
+    if text[name_end:clause].strip() or not re.match(
+        r"(?i)(FOR|VERSION|SYSTEM_VERSION|TIMESTAMP|SYSTEM_TIME)\b", text[clause:end]
+    ):
+        raise ValueError(f"{what}: its position in the statement is not exact")
+    t = SnapshotTable(spark, name, root)
+    if t.current_version() is None:
+        raise ValueError(f"time travel requires a snapshot table: {name!r} not found")
+    if leaf.version().isDefined():
+        v = leaf.version().get()
+        try:  # Iceberg lets VERSION AS OF name a branch/tag ref
+            version = int(v) if v.isdigit() else t.get_ref(v)
+        except KeyError as e:
+            raise ValueError(str(e))
+    else:
+        ts = _literal(leaf.timestamp().get(), "TIMESTAMP AS OF")
+        version = t.version_as_of(_parse_as_of_ts(str(ts)))
+    view = f"_asof_{name}_v{version}"
+    t.read(version).createOrReplaceTempView(view)
+    return start, end, view
 
 
-# CDC read TVF (r13, VERDICT r12 ask #5): Delta's
-# `table_changes('t', start [, end])` spelling, with an optional 4th
-# argument naming a key column to fold same-commit delete+insert pairs
-# into update_preimage/update_postimage (Delta CDF's shape). Scanned on
-# the literal-masked copy like time travel, so the TVF name inside a
-# string can never trigger a rewrite.
-_TABLE_CHANGES = re.compile(
-    r"\btable_changes\s*\(\s*('[^']*'|\"[^\"]*\")\s*,\s*(\d+|'[^']*')\s*"
-    r"(?:,\s*(\d+|'[^']*')\s*)?(?:,\s*('[^']*'|\"[^\"]*\")\s*)?\)",
-    re.IGNORECASE,
-)
-
-
-def _changes_bound(t: SnapshotTable, tok: str | None, is_start: bool):
-    """Resolve one table_changes() bound: a bare integer is a version;
-    a quoted literal is a TIMESTAMP bound (Delta parity) — the start
+def _changes_bound(t: SnapshotTable, lit: int | str | None, is_start: bool):
+    """Resolve one table_changes() bound: an integer is a version; a
+    string literal is a TIMESTAMP bound (Delta parity) — the start
     resolves to the earliest version committed AT OR AFTER it, the end
     to the latest committed at or before it."""
-    if tok is None:
-        return None
-    tok = tok.strip()
-    if re.fullmatch(r"\d+", tok):
-        return int(tok)
-    lit = tok.strip("'\"")
+    if lit is None or isinstance(lit, int):
+        return lit
     try:
         ts = _parse_as_of_ts(lit)
     except ValueError:
@@ -1424,58 +1394,78 @@ def _table_columns(t: SnapshotTable) -> set:
     )
 
 
-def materialize_table_changes(
-    spark: SparkSession, statement: str, root: str = DEFAULT_ROOT
-) -> str:
-    """Rewrite every `table_changes('t', v1 [, v2 [, 'key']])` reference
-    to a temp view over :meth:`SnapshotTable.changes` and return the
-    rewritten statement — the SQL spelling of the CDC read, resolved
-    pre-dispatch exactly like time travel and the metadata tables.
-    Statements without the TVF pass through untouched."""
-    masked = _mask_literals(statement)
-    matches = list(_TABLE_CHANGES.finditer(masked))
-    if not matches:
-        return statement
-    out = statement
-    for m in reversed(matches):  # right-to-left keeps earlier spans valid
-        name = statement[m.start(1) : m.end(1)].strip("'\"")
-        if not re.fullmatch(r"\w+", name):
-            raise ValueError(f"table_changes: invalid table name {name!r}")
-        key = (
-            statement[m.start(4) : m.end(4)].strip("'\"") if m.group(4) else None
-        )
-        t = SnapshotTable(spark, name, root)
-        if t.current_version() is None:
-            raise ValueError(
-                f"table_changes requires a snapshot table: {name!r} not found"
-            )
-        v1 = _changes_bound(
-            t, statement[m.start(2) : m.end(2)], is_start=True
-        )
-        v2 = None
-        if m.group(3):
-            tok3 = statement[m.start(3) : m.end(3)].strip()
-            lit3 = tok3.strip("'\"")
-            if (
-                key is None
-                and not re.fullmatch(r"\d+", tok3)
-                and not _ts_literal_parses(lit3)
-                and lit3 in _table_columns(t)
-            ):
-                # legacy 3-arg key-folding form table_changes('t', v1,
-                # 'key'): a quoted 3rd arg that is not a timestamp but
-                # IS a table column keeps its pre-r14 meaning (ADVICE
-                # r14 — the widened timestamp-bound regex had turned it
-                # into a hard error)
-                key = lit3
-            else:
-                v2 = _changes_bound(t, tok3, is_start=False)
-        view = f"_changes_{name}_{v1}_{v2 if v2 is not None else 'cur'}" + (
-            f"_{key}" if key else ""
-        )
-        t.changes(v1, v2, key=key).createOrReplaceTempView(view)
-        out = out[: m.start()] + view + out[m.end() :]
-    return out
+def _table_changes(spark: SparkSession, text: str, leaf, root: str) -> tuple:
+    """A `table_changes('t', v1 [, v2 [, 'key']])` call as (start, end,
+    temp view over `SnapshotTable.changes`). Its origin() runs on over a
+    following alias, so the span ends at the `)` after the last argument."""
+    usage = "table_changes('t', v1 [, v2 [, 'key']])"
+    args = _seq(leaf.functionArgs())
+    vals = [_literal(a, "table_changes") for a in args]
+    name, bounds, key = vals[0] if vals else None, vals[1:3], (vals[3:] or [None])[0]
+    if not (2 <= len(vals) <= 4 and isinstance(name, str) and isinstance(key, (str, type(None)))
+            and not any(isinstance(b, float) for b in bounds)):
+        raise ValueError(f"bad table_changes arguments {vals}: {usage}")
+    start, _ = _span(text, leaf, "table_changes")
+    _, last = _span(text, args[-1], "table_changes")
+    rest = text[last:].lstrip()
+    if not (rest.startswith(")") and text[start:last].replace("`", "").lower()
+            .startswith("table_changes")):
+        raise ValueError("table_changes: its position in the statement is not exact")
+    end = len(text) - len(rest) + 1
+    if not re.fullmatch(r"\w+", name):
+        raise ValueError(f"table_changes: invalid table name {name!r}")
+    t = SnapshotTable(spark, name, root)
+    if t.current_version() is None:
+        raise ValueError(f"table_changes requires a snapshot table: {name!r} not found")
+    v1, v2 = _changes_bound(t, bounds[0], is_start=True), None
+    if len(bounds) == 2:
+        third = bounds[1]
+        if (key is None and isinstance(third, str) and not _ts_literal_parses(third)
+                and third in _table_columns(t)):
+            # legacy 3-arg key-folding form table_changes('t', v1, 'key'):
+            # a string 3rd arg that is not a timestamp but IS a table
+            # column keeps that meaning
+            key = third
+        else:
+            v2 = _changes_bound(t, third, is_start=False)
+    view = f"_changes_{name}_{v1}_{v2 if v2 is not None else 'cur'}" + (
+        f"_{key}" if key else ""
+    )
+    t.changes(v1, v2, key=key).createOrReplaceTempView(view)
+    return start, end, view
+
+
+def _rewrite(spark: SparkSession, text: str, leaves: list, root: str) -> str | None:
+    """Register a temp view for each time-travel, table_changes() and
+    metadata-table leaf; return the statement with each replaced by its
+    view's name, or None when the plan holds none of them."""
+    metadata = ("snapshots", "refs", "files", "stats", "partitions", "file_stats")
+    sugar = [(kind, leaf, parts) for kind, leaf, parts in leaves
+             if kind in ("RelationTimeTravel", "UnresolvedTableValuedFunction")
+             or (parts and len(parts) == 2 and parts[1] in metadata)]
+    if not sugar:
+        return None
+    # the parser substitutes ${var} references first; its spans index the result
+    text = getattr(
+        spark._jvm, "org.apache.spark.sql.internal.VariableSubstitution"
+    )().substitute(text)
+    edits = set()
+    for kind, leaf, parts in sugar:
+        if kind == "RelationTimeTravel":
+            edits.add(_time_travel(spark, text, leaf, root))
+        elif (kind == "UnresolvedTableValuedFunction"
+              and _seq(leaf.name())[-1].lower() == "table_changes"):
+            edits.add(_table_changes(spark, text, leaf, root))
+        elif parts:
+            t = SnapshotTable(spark, parts[0], root)
+            if t.current_version() is not None:  # else database-qualified
+                ref = ".".join(parts)
+                view = f"_meta_{parts[0]}_{parts[1]}"
+                _metadata_frame(spark, t, parts[1]).createOrReplaceTempView(view)
+                edits.add((*_span(text, leaf, f"metadata table {ref}", ref), view))
+    for start, end, view in sorted(edits, reverse=True):  # right to left
+        text = text[:start] + view + text[end:]
+    return text if edits else None
 
 
 def execute_sql_script(
@@ -1532,7 +1522,8 @@ def _read(s: _Statement) -> DataFrame:
 
 
 def _dml(s: _Statement) -> dict:
-    return execute_dml(s.spark, s.text, s.root, s.mor_key, plan=s.node)
+    return execute_dml(s.spark, s.text, s.root, s.mor_key, plan=s.node,
+                       registered=s.registered)
 
 
 _READ = _Entry(_read, body=True, ddl=False)
@@ -1688,13 +1679,6 @@ def _statement(spark: SparkSession, text: str, root: str) -> tuple[_Entry, _Stat
     return entry, _Statement(spark, root, text, node, props)
 
 
-def _materialize(spark: SparkSession, text: str, root: str, depth: int = 0) -> list:
-    """Resolve the persisted views and snapshot tables a body reads as
-    temp views; returns the tables registered (see materialize_tables)."""
-    materialize_views(spark, text, root, depth=depth)
-    return materialize_tables(spark, text, root)
-
-
 def _run(
     spark: SparkSession,
     statement: str,
@@ -1703,24 +1687,24 @@ def _run(
     mor_key: str | None = None,
     view_depth: int = 0,
 ):
-    # read-side sugar, rewritten to temp views before parsing
-    written = statement
-    statement = materialize_time_travel(spark, statement, root)
-    statement = materialize_table_changes(spark, statement, root)
-    statement = materialize_metadata_tables(spark, statement, root)
     entry, s = _statement(spark, statement, root)
-    s.written = written
     if ddl_only and not entry.ddl:
         raise ValueError(f"not a DDL statement (use execute_sql): {statement[:80]!r}")
     if mor_key is not None and entry is not _DML:
         raise ValueError("mor_key applies to DML DELETE only")
-    s.mor_key = mor_key
-    # Only a statement with a body resolves the temp-view namespace;
-    # refreshing every view for pure metadata statements cost
-    # O(tables·py4j) per statement. A DROP's stale auto-view is harmless:
-    # the next reading statement's materialize_tables drops it first.
+    # Only a statement with a body reads tables; refreshing views for
+    # pure metadata statements cost O(tables·py4j) per statement. A
+    # DROP's stale auto-view is harmless: the next reading statement's
+    # materialize_tables drops it first.
     if entry.body:
-        s.registered = _materialize(spark, statement, root, view_depth)
+        leaves = _leaves(spark, s.node)
+        rewritten = _rewrite(spark, statement, leaves, root)
+        if rewritten is not None:
+            entry, s = _statement(spark, rewritten, root)
+        names = _names(leaves)
+        materialize_views(spark, names, root, view_depth)
+        s.registered = materialize_tables(spark, names, root)
+    s.mor_key = mor_key
     return entry.handler(s)
 
 
@@ -1789,9 +1773,9 @@ def execute_sql(
     _view_depth: int = 0,
 ):
     """One entry point for the whole declarative surface. Spark's parser
-    reads the statement once and the engine dispatches on the plan
-    node's class: a query returns a DataFrame analyzed from its parsed
-    plan (snapshot tables and persisted views it names resolve as temp
+    reads the statement and the engine dispatches on the plan node's
+    class: a query returns a DataFrame analyzed from its parsed plan
+    (snapshot tables and persisted views it names resolve as temp
     views first); INSERT/UPDATE/DELETE/MERGE go to
     :func:`tables.dml.execute_dml` with the parsed node; DESCRIBE, SHOW
     TABLES|VIEWS, SHOW CREATE TABLE|VIEW and SHOW TBLPROPERTIES return
@@ -1799,11 +1783,12 @@ def execute_sql(
     result dict. ``mor_key`` is the DML DELETE routing knob and is
     rejected elsewhere. Read-side time travel (`t [FOR] VERSION|
     TIMESTAMP AS OF <literal>`), `table_changes(...)` and metadata
-    tables (`t.snapshots`, ...) are rewritten to temp views BEFORE the
-    parse, so they work anywhere a read ref appears: a SELECT, an
-    INSERT body, a MERGE source. Only query nodes reach Spark's
-    evaluation directly; `WITH ... INSERT` is refused, since its insert
-    would write into the table's committed files."""
+    tables (`t.snapshots`, ...) are relation leaves of the parsed plan,
+    CTEs and subqueries included; each is rewritten to a temp view at
+    its span AFTER the parse, so they work anywhere a read ref appears:
+    a SELECT, an INSERT body, a MERGE source. Only query nodes reach
+    Spark's evaluation directly; `WITH ... INSERT` is refused, since
+    its insert would write into the table's committed files."""
     return _run(spark, statement, root, False, mor_key, _view_depth)
 
 

@@ -134,10 +134,10 @@ def _assignments(spark: SparkSession, seq, t_names: set, what: str) -> dict:
 def _execute_insert(
     spark: SparkSession,
     plan,
-    statement: str,
     root: str,
     mor_key: str | None,
     mor_position: bool,
+    registered: list,
 ) -> dict:
     """``INSERT INTO t [(cols)] VALUES (...), (...) | SELECT ...`` —
     the append statement that completes the DML surface. The row source
@@ -190,10 +190,7 @@ def _execute_insert(
     # shape — the source read prunes exactly like a standalone SELECT
     # (same Catalyst-proven scoping; falls back to the full plan
     # whenever unprovable)
-    from .ddl import materialize_tables
-
     query = plan.query()
-    registered = materialize_tables(spark, statement, root)
     df = _dataframe(spark, query)
     pruned = try_sql_prune(
         spark, df, lambda: _dataframe(spark, query), root, registered
@@ -523,11 +520,12 @@ def execute_dml(
     mor_key: str | None = None,
     mor_position: bool = False,
     plan=None,
+    registered: list | None = None,
 ) -> dict:
     """Execute one INSERT, UPDATE, DELETE or MERGE statement against a
-    snapshot table. ``plan`` is the statement's node when the caller
-    already parsed it (`ddl.execute_sql` does), so no statement is
-    parsed twice.
+    snapshot table. ``plan`` and ``registered`` (the tables it reads, as
+    temp views) come from a caller that parsed the statement
+    (`ddl.execute_sql`), so nothing is parsed or registered twice.
 
     Returns {"op", "table", "version", "audit"}; ``audit`` carries the
     pruning decision (dirs_rewritten / dirs_reused) for COW paths and
@@ -563,7 +561,11 @@ def execute_dml(
         plan = _parse(spark, statement)
     kind = _kind(plan)
     if kind == "InsertIntoStatement":
-        return _execute_insert(spark, plan, statement, root, mor_key, mor_position)
+        if registered is None:
+            from .ddl import _leaves, _names, materialize_tables
+
+            registered = materialize_tables(spark, _names(_leaves(spark, plan)), root)
+        return _execute_insert(spark, plan, root, mor_key, mor_position, registered)
     if kind == "UpdateTable":
         return _execute_update(spark, plan, root, mor_key, mor_position)
     if kind == "DeleteFromTable":

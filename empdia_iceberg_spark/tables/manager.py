@@ -187,6 +187,7 @@ _TRANSFORM_RE = re.compile(
     r"(\w+)\s*\)$",
     re.IGNORECASE,
 )
+_DECIMAL = re.compile(r"decimal\((\d+),(\d+)\)")  # a decimal's simpleString
 _TIME_TRANSFORM_FMT = {
     "years": "yyyy",
     "months": "yyyy-MM",
@@ -2012,6 +2013,16 @@ class SnapshotTable:
         ("int", "bigint"), ("float", "double"),
     }
 
+    @classmethod
+    def _safe_widening(cls, stype: str, ttype: str) -> bool:
+        """A listed widening, or decimal(p1,s1) into a decimal(p2,s2) that
+        keeps the scale and the integral digits (1.50 is decimal(3,2))."""
+        src, tgt = _DECIMAL.fullmatch(stype), _DECIMAL.fullmatch(ttype)
+        if src and tgt:
+            (p1, s1), (p2, s2) = map(int, src.groups()), map(int, tgt.groups())
+            return s2 >= s1 and p2 - s2 >= p1 - s1
+        return (stype, ttype) in cls._SAFE_WIDENINGS
+
     def _align_append_to_schema(
         self, df: DataFrame, schema_json: str
     ) -> tuple[DataFrame, str]:
@@ -2036,7 +2047,7 @@ class SnapshotTable:
             stype, ttype = src[name], tgt.get(name)
             if ttype is None or stype == ttype:
                 cols.append(F.col(name))
-            elif (stype, ttype) in self._SAFE_WIDENINGS:
+            elif self._safe_widening(stype, ttype):
                 cols.append(F.col(name).cast(ttype).alias(name))
                 changed = True
             else:
@@ -2095,7 +2106,7 @@ class SnapshotTable:
             stype = src[name]
             if stype == ttype:
                 cols.append(F.col(name))
-            elif (stype, ttype) in self._SAFE_WIDENINGS:
+            elif self._safe_widening(stype, ttype):
                 cols.append(F.col(name).cast(ttype).alias(name))
             else:
                 raise ValueError(
@@ -2123,7 +2134,7 @@ class SnapshotTable:
         for name, stype in df.dtypes:
             ttype = ttypes[name].simpleString()
             ok_cast = (
-                (stype, ttype) in self._SAFE_WIDENINGS
+                self._safe_widening(stype, ttype)
                 or (stype in self._INTEGRAL_TYPES and ttype in ("float", "double"))
                 or stype == "void"  # untyped NULL literal
             )

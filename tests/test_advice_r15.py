@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from empdia_iceberg_spark.tables.ddl import execute_sql, materialize_table_changes
+from empdia_iceberg_spark.tables.ddl import execute_sql
 from empdia_iceberg_spark.tables.manager import (
     SnapshotTable,
     hive_escape_value,
@@ -133,7 +133,7 @@ def test_table_changes_legacy_three_arg_key_form(spark):
     }
     # a quoted 3rd arg that is neither timestamp nor column still errors
     with pytest.raises(ValueError, match="neither a version number"):
-        materialize_table_changes(
+        execute_sql(
             spark,
             "SELECT * FROM table_changes('t_tvf3_unit', 2, 'nope')",
             scratch_root(),

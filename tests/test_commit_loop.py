@@ -228,6 +228,37 @@ def test_update_refuses_a_value_of_another_type_than_the_column(spark):
     t.drop()
 
 
+def test_decimal_literals_that_fit_the_column_insert_and_merge(spark):
+    """A decimal literal is typed by its digits (1.50 is decimal(3,2)),
+    and a decimal whose scale and integral digits both fit the column's
+    widens into it: INSERT VALUES and a MERGE INSERT clause commit into
+    decimal(12,2) and read back, while UPDATE's decimal(13,2) `d + 1`
+    is still refused."""
+    from decimal import Decimal
+
+    root = scratch_root()
+    t = SnapshotTable(spark, "td_lit", root)
+    t.drop()
+    t.create(spark.createDataFrame([], "k int, d decimal(12,2)"))
+    execute_sql(spark, "INSERT INTO td_lit VALUES (1, 1.50)", root)
+    spark.createDataFrame([(2,)], "k int").createOrReplaceTempView("td_lit_src")
+    execute_sql(
+        spark,
+        "MERGE INTO td_lit t USING td_lit_src s ON t.k = s.k "
+        "WHEN NOT MATCHED THEN INSERT (k, d) VALUES (s.k, 2.25)",
+        root,
+    )
+    rows = execute_sql(spark, "SELECT k, d FROM td_lit", root).collect()
+    assert sorted((r.k, r.d) for r in rows) == [(1, Decimal("1.50")), (2, Decimal("2.25"))]
+    assert t.read().schema["d"].dataType.simpleString() == "decimal(12,2)"
+    v = t.current_version()
+    with pytest.raises(ValueError, match="'d'.*decimal\\(13,2\\)"):
+        execute_sql(spark, "UPDATE td_lit SET d = d + 1 WHERE k = 2", root)
+    assert t.current_version() == v
+    spark.catalog.dropTempView("td_lit_src")
+    t.drop()
+
+
 def test_table_write_leaves_the_session_conf_as_it_found_it(spark):
     """Both confs a write pins (the parquet timestamp type, and the AQE
     advisory size for partitioned writes) are restored to "not set"."""

@@ -560,43 +560,55 @@ def test_hilbert_sql_mirror_matches_kernel_on_edges(spark):
     assert duck21 == {r.id: r.d for r in sdf21.collect()}
 
 
-# ---------------------------------------------- statement-scanner invariants
+# ---------------------------------------------- statement-reference invariants
 #
-# Pure-Python properties (no Spark job): the literal-masking and
-# clause-splitting primitives under the SQL statement surface must hold
-# for arbitrary statements, not just the grammar the tests exercise.
+# Properties of the reference collector under the SQL statement surface
+# (a parse, no Spark job): text planted inside a string literal is never
+# a table reference, whatever the statement, not just the grammar the
+# tests exercise.
 
-_scanner_settings = settings(max_examples=200, deadline=None)
+_scanner_settings = settings(
+    max_examples=200, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
 
 _sql_texts = st.text(
     alphabet=st.sampled_from(list("abcXYZ01 _.,()'\"\\=<>%")), max_size=60
 )
 
 
-@given(_sql_texts)
-@_scanner_settings
-def test_mask_literals_is_length_preserving_and_idempotent_outside_quotes(s):
-    from empdia_iceberg_spark.tables.ddl import _mask_literals
+def _references_in(spark, statement):
+    from empdia_iceberg_spark.tables.ddl import _leaves, _names, _rewrite
+    from empdia_iceberg_spark.tables.dml import _parse
 
-    masked = _mask_literals(s)
-    assert len(masked) == len(s)
-    # every position that is not inside a literal is unchanged
-    for i, (a, b) in enumerate(zip(s, masked)):
-        assert b in (a, "x")
+    leaves = _leaves(spark, _parse(spark, statement))
+    return leaves, _names(leaves), _rewrite(spark, statement, leaves, "/nonexistent")
 
 
 @given(_sql_texts)
 @_scanner_settings
-def test_as_of_rewrite_never_fires_inside_literals(s):
+def test_literal_text_is_never_a_table_reference(spark, s):
+    """Any text, escaped into a string literal, parses back to exactly
+    that text and leaves the plan with no relation to resolve."""
+    from empdia_iceberg_spark.tables.dml import _parse
+
+    escaped = s.replace("\\", "\\\\").replace("'", "\\'")
+    stmt = f"SELECT '{escaped}' AS c"
+    assert _parse(spark, stmt).projectList().apply(0).child().value().toString() == s
+    leaves, names, rewritten = _references_in(spark, stmt)
+    assert [kind for kind, _leaf, _parts in leaves] == ["OneRowRelation"]
+    assert names == set() and rewritten is None
+
+
+@given(_sql_texts)
+@_scanner_settings
+def test_as_of_rewrite_never_fires_inside_literals(spark, s):
     """Whatever the statement, planting an AS OF phrase INSIDE a string
-    literal must not produce a time-travel match."""
-    from empdia_iceberg_spark.tables.ddl import _AS_OF, _mask_literals
-
+    literal must not produce a time-travel reference."""
     stmt = f"SELECT '{s.replace(chr(39), '')} tbl VERSION AS OF 1' AS c"
-    masked = _mask_literals(stmt)
-    for m in _AS_OF.finditer(masked):
-        # any match must start OUTSIDE the literal span (cols 8..-6)
-        assert not (8 <= m.start() < len(stmt) - 6)
+    leaves, names, rewritten = _references_in(spark, stmt)
+    assert "RelationTimeTravel" not in {kind for kind, _leaf, _parts in leaves}
+    assert names == set() and rewritten is None
 
 
 _decimal_types = st.builds(
@@ -698,14 +710,11 @@ def test_call_argument_parsing_round_trips(spark, args, kwargs):
 
 @given(st.text(alphabet=st.sampled_from(list("abcz _.,()'\"=<>0")), max_size=50))
 @_scanner_settings
-def test_view_body_self_reference_detection_ignores_literals(body):
+def test_view_body_self_reference_detection_ignores_literals(spark, body):
     """A view name planted INSIDE a string literal of the body must not
-    count as self-reference (the guard scans the masked text)."""
-    from empdia_iceberg_spark.tables.ddl import _mask_literals
-    import re as _re
-
+    count as self-reference (the guard reads the body's relation names)."""
     stmt = f"SELECT '{body.replace(chr(39), '')} myview ' AS c"
-    assert not _re.search(r"\bmyview\b", _mask_literals(stmt))
+    assert "myview" not in _references_in(spark, stmt)[1]
 
 
 @given(

@@ -3969,6 +3969,31 @@ def test_create_table_column_list_guards(spark):
     t.drop()
 
 
+def test_create_table_refuses_char_and_varchar_columns(spark, monkeypatch):
+    """CHAR/VARCHAR lengths are not enforced, so such a column is refused
+    by name, with its type and the STRING alternative, before any Spark
+    call; nothing is created."""
+    from empdia_iceberg_spark.tables import ddl
+
+    root = scratch_root()
+    t = SnapshotTable(spark, "tv_unit", root)
+    t.drop()
+
+    def no_spark_call(*args, **kwargs):
+        raise AssertionError("a Spark call before the refusal")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", no_spark_call)
+    for cols, bad in (("k int, s varchar(10), c char(3)", "s has type VARCHAR\\(10\\)"),
+                      ("k int, a array<char(2)>", "a has type ARRAY<CHAR\\(2\\)>")):
+        with pytest.raises(ValueError, match=f"column {bad}.*STRING"):
+            ddl.execute_sql(spark, f"CREATE TABLE tv_unit ({cols})", root)
+    monkeypatch.undo()
+    assert t.current_version() is None
+    ddl.execute_sql(spark, "CREATE TABLE tv_unit (k int, s string, c string)", root)
+    assert t.read().dtypes == [("k", "int"), ("s", "string"), ("c", "string")]
+    t.drop()
+
+
 # ---------------------------------------- CALL remove_orphan_files (r13)
 
 
