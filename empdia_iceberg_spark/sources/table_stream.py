@@ -382,21 +382,15 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         else:
             parent = meta.get("parent")
             parent_dirs = set(self._meta(parent)["dirs"]) if parent else set()
-            files = []
-            for d in meta["dirs"]:
-                if d in parent_dirs:
-                    continue
-                for root_, _dirs, fnames in os.walk(d):
-                    # Deterministic traversal (ADVICE r12): os.walk's
-                    # subdir order is readdir order, which is not stable
-                    # across filesystems/processes — and file-level
-                    # offsets INDEX into this sequence, so a checkpoint
-                    # resumed in a new process must reproduce it exactly.
-                    _dirs.sort()
-                    for fn in sorted(fnames):
-                        if fn.endswith(".parquet"):
-                            fp = os.path.join(root_, fn)
-                            files.append((fp, os.path.getsize(fp)))
+            # file-level offsets INDEX into this sequence, so a checkpoint
+            # resumed in a new process must reproduce it exactly: the
+            # sorted listing, never readdir order
+            files = [
+                (fp, os.path.getsize(fp))
+                for d in meta["dirs"]
+                if d not in parent_dirs
+                for fp in self._t._walk_parquet(d)
+            ]
         self._files_cache[v] = files
         return files
 
@@ -464,18 +458,6 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         self._learn(end)
 
     # ------------------------------------------------- partition planning
-    def _files_under(self, d: str) -> list[str]:
-        """Deterministic sorted parquet listing of one data dir (same
-        traversal contract as _new_files — offsets and re-plans must
-        reproduce it exactly)."""
-        out = []
-        for root_, _dirs, fnames in os.walk(d):
-            _dirs.sort()
-            for fn in sorted(fnames):
-                if fn.endswith(".parquet"):
-                    out.append(os.path.join(root_, fn))
-        return out
-
     def _mor_groups(self, meta: dict, dirs: list[str]) -> list[dict]:
         """Dirs grouped by their applicable equality-delete set, resolved
         to plain file lists — the picklable twin of _read_dirs_mor's
@@ -489,13 +471,13 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
                 if d in dd.get("applies_to", meta["dirs"])
             )
             g = groups.setdefault(applicable, {"files": [], "deletes": []})
-            g["files"].extend(self._files_under(d))
+            g["files"].extend(self._t._walk_parquet(d))
         for applicable, g in groups.items():
             g["deletes"] = [
                 (
                     deletes[i].get("kind", "equality"),
                     deletes[i].get("key"),
-                    self._files_under(deletes[i]["dir"]),
+                    self._t._walk_parquet(deletes[i]["dir"]),
                 )
                 for i in applicable
             ]
@@ -532,7 +514,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
             op_is_change = not (op in _APPEND_OPS or op.startswith("append@"))
             if added and not removed and not op_is_change and not new_deletes:
                 for d in added:
-                    for fp in self._files_under(d):
+                    for fp in self._t._walk_parquet(d):
                         parts.append(
                             _TailFilePartition(
                                 fp, fields, self.schema_ddl,
@@ -558,7 +540,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
                 touched = sum(
                     os.path.getsize(f)
                     for d in set(guarded_dirs)
-                    for f in self._files_under(d)
+                    for f in self._t._walk_parquet(d)
                 )
                 if touched > self.cdc_cow_max_bytes:
                     raise ValueError(
@@ -581,7 +563,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
                         "groups": self._mor_groups(parent_meta, applies),
                         "kind": dd.get("kind", "equality"),
                         "key": dd.get("key"),
-                        "key_files": self._files_under(dd["dir"]),
+                        "key_files": self._t._walk_parquet(dd["dir"]),
                     }
                 )
             parts.append(
@@ -596,7 +578,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
                         self._mor_groups(meta, added) if (added and cow) else []
                     ),
                     plain_added_files=(
-                        [f for d in added for f in self._files_under(d)]
+                        [f for d in added for f in self._t._walk_parquet(d)]
                         if (added and not cow)
                         else []
                     ),

@@ -49,6 +49,7 @@ the public Iceberg spec's metadata-evolution model.
 
 from __future__ import annotations
 
+import functools
 import re
 import warnings
 from dataclasses import dataclass, field
@@ -382,12 +383,8 @@ def _create_table(s: _Statement) -> dict:
         names = [c.name() for c in cols]
         if len(set(names)) != len(names):
             raise ValueError(f"duplicate column names in CREATE TABLE: {names}")
-        char_varchar = getattr(spark._jvm, "org.apache.spark.sql.catalyst.util.CharVarcharUtils")
-        for c in cols:  # a string column would drop the unenforced length
-            if char_varchar.hasCharVarchar(c.dataType()):
-                raise ValueError(f"CREATE TABLE {name}: column {c.name()} has type "
-                                 f"{c.dataType().sql()}, whose length the engine "
-                                 "does not enforce; declare it STRING")
+        for c in cols:
+            _refuse_char_varchar(spark, f"CREATE TABLE {name}", c.name(), c.dataType())
         for c in cols:
             _refuse(f"column {c.name()}", {
                 "COMMENT": c.comment().isDefined(),
@@ -465,10 +462,21 @@ def _drop_table(s: _Statement) -> dict:
     return {"op": "drop", "table": t.name, "version": None, "audit": None}
 
 
+def _refuse_char_varchar(spark: SparkSession, what: str, col: str, dtype) -> None:
+    """Refuse a CHAR/VARCHAR column type (also nested): the engine stores
+    a string, so the length would go unenforced."""
+    if getattr(spark._jvm, "org.apache.spark.sql.catalyst.util.CharVarcharUtils") \
+            .hasCharVarchar(dtype):
+        raise ValueError(f"{what}: column {col} has type {dtype.sql()}, whose length "
+                         "the engine does not enforce; declare it STRING")
+
+
 def _add_columns(s: _Statement) -> dict:
     t = s.table(s.node.table(), "ALTER TABLE")
     defs = []
     for c in _seq(s.node.columnsToAdd()):
+        _refuse_char_varchar(s.spark, f"ALTER TABLE {t.name} ADD COLUMNS",
+                             c.colName(), c.dataType())
         _refuse(f"ADD COLUMN {c.colName()}", {
             "a nested field": c.path().isDefined(),
             "NOT NULL": not c.nullable(),
@@ -1116,14 +1124,18 @@ def _optimize(s: _Statement) -> dict:
 # shown exact is refused.
 
 
+@functools.cache
+def _unresolved_with(jvm):
+    """TreePattern.UNRESOLVED_WITH, fetched once per JVM gateway."""
+    return getattr(jvm, "org.apache.spark.sql.catalyst.trees.TreePattern").UNRESOLVED_WITH()
+
+
 def _leaves(spark: SparkSession, plan) -> list[tuple[str, Any, list | None]]:
     """A parsed plan's relation leaves as (node class, node, name parts of
     an UnresolvedRelation): those of its tree, of every CTE definition
     (an UnresolvedWith's innerChildren, which no tree walk visits) and of
     every subquery expression."""
-    with_ = getattr(
-        spark._jvm, "org.apache.spark.sql.catalyst.trees.TreePattern"
-    ).UNRESOLVED_WITH()
+    with_ = _unresolved_with(spark._jvm)
     out, todo = [], [(plan, True)]
     while todo:
         p, root = todo.pop()

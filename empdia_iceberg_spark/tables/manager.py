@@ -3088,12 +3088,12 @@ class SnapshotTable:
         """The data dirs holding a row that matches a predicate DML's
         ``condition``, found in O(candidate files) — Iceberg's manifest
         shape. The predicate's top-level conjuncts become raw bounds
-        (the SQL prune parser over its Catalyst SQL, ANALYZED over an
-        empty frame in the committed schema: driver-only, no job),
+        (the SQL prune walk over its Catalyst condition, ANALYZED over
+        an empty frame in the committed schema: driver-only, no job),
         `plan_files` narrows the scan, and `_dirs_hit` runs it exactly
         over raw dirs — a MOR-deleted match costs at most a spurious
         rewrite, never a wrong answer."""
-        from .sqlprune import bounds_from_condition
+        from .sqlprune import bounds_from_conditions
 
         bounds: dict = {}
         why = None
@@ -3107,9 +3107,7 @@ class SnapshotTable:
                 .analyzed()
             )
             if jplan.getClass().getSimpleName() == "Filter":
-                bounds = bounds_from_condition(
-                    jplan.condition().sql(), allow_float=True
-                )
+                bounds = bounds_from_conditions([jplan.condition()])
         except _SPARK_ERRORS as ex:
             why = f"predicate not analyzable into bounds: {ex!r}"
         paths, decision = self.plan_files(meta, bounds)

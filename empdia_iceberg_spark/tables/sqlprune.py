@@ -15,10 +15,13 @@ re-parsing user SQL:
    WHERE x.ts ...`), join-side predicate splitting, and the
    `CAST(ts AS DATE) = d` → timestamp-range rewrite
    (UnwrapCastInBinaryComparison) for free.
-2. Conditions are split into top-level AND conjuncts; the ones
-   matching `col <op> literal` shapes become inclusive raw-value
-   bounds per column. Ignoring a conjunct is always SOUND: bounds
-   from a SUBSET of conjuncts admit a SUPERSET of the filter's rows.
+2. Each condition is read as Catalyst's typed expression tree
+   (`toJSON()`, one py4j call per Filter, never its SQL text). Its
+   top-level AND conjuncts of the shape `column <op> literal` or
+   `column IN (literals)` become inclusive raw-value bounds per
+   column; a column is a bare attribute, also under a value-preserving
+   widening cast. Ignoring a conjunct is always SOUND: bounds from a
+   SUBSET of conjuncts admit a SUPERSET of the filter's rows.
 3. Per table, bounds are unioned across scan occurrences (a self-join
    needs rows for BOTH sides) and handed to `SnapshotTable.plan_files`,
    which maps them through the monotone partition transforms onto
@@ -41,13 +44,15 @@ extraction."""
 from __future__ import annotations
 
 import datetime
-import re
+import json
+import math
 import warnings
 from typing import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-from .manager import SnapshotTable, _dir_within
+from .manager import _SPARK_ERRORS, SnapshotTable, _dir_within
 
 # audits of the last try_sql_prune call that re-registered anything:
 # {table_name: audit dict, plus the table's Decision under "decision"}
@@ -56,240 +61,202 @@ from .manager import SnapshotTable, _dir_within
 LAST_SQL_PRUNE_AUDITS: dict = {}
 
 
-# ------------------------------------------------------ conjunct split
+# ---------------------------------------------- condition expression tree
+# A condition is read as Catalyst's typed tree: `toJSON()` lists its
+# nodes in pre-order, each with its class, "num-children" and fields
+# (an AttributeReference's unqualified name and dataType, a Literal's
+# value and dataType, a Cast's target dataType).
 
-def _strip_outer_parens(s: str) -> str:
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        ok = True
-        for i, c in enumerate(s):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    ok = False
-                    break
-        if not ok:
-            break
-        s = s[1:-1].strip()
-    return s
-
-
-def _top_split(s: str, sep: str) -> list[str]:
-    """Split on ``sep`` at paren depth 0, outside string literals."""
-    parts, depth, in_str, cur, i = [], 0, False, [], 0
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            cur.append(c)
-            if c == "'":
-                if s[i + 1 : i + 2] == "'":
-                    cur.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-            cur.append(c)
-        elif c in "()":
-            depth += 1 if c == "(" else -1
-            cur.append(c)
-        elif depth == 0 and s.startswith(sep, i):
-            parts.append("".join(cur))
-            cur = []
-            i += len(sep) - 1
-        else:
-            cur.append(c)
-        i += 1
-    parts.append("".join(cur))
-    return parts
-
-
-def conjuncts(cond_sql: str) -> list[str]:
-    """Recursively flatten a Catalyst condition-SQL string into its
-    top-level AND conjuncts (each stripped of redundant parens)."""
-    s = _strip_outer_parens(cond_sql)
-    parts = _top_split(s, " AND ")
-    if len(parts) == 1:
-        return [s]
-    return [c for p in parts for c in conjuncts(p)]
-
-
-# ---------------------------------------------------- conjunct parsing
-
-_LIT = (
-    r"(?:TIMESTAMP(?:_NTZ)? '(?P<ts{i}>[^']*)'"
-    r"|DATE '(?P<date{i}>[^']*)'"
-    r"|CAST\('(?P<cstr{i}>[^']*)' AS (?P<ctyp{i}>\w+)\)"
-    r"|CAST\((?P<cnum{i}>-?\d+(?:\.\d+)?)(?:[SLD]|BD)? AS \w+(?:\([^)]*\))?\)"
-    r"|'(?P<str{i}>(?:[^']|'')*)'"
-    r"|(?P<num{i}>-?\d+(?:\.\d+)?)(?:[SLD]|BD)?)"
-)
-_COL = r"(?:[\w.]+\.)?`?(?P<col>\w+)`?"
-_OP = r"(?P<op><=|>=|<|>|=)"
-_FWD = re.compile(rf"^{_COL}\s*{_OP}\s*{_LIT.format(i='')}$")
-_REV = re.compile(rf"^{_LIT.format(i='')}\s*{_OP}\s*{_COL}$")
+_CMP = {"EqualTo": "=", "LessThan": "<", "LessThanOrEqual": "<=",
+        "GreaterThan": ">", "GreaterThanOrEqual": ">="}
 _FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
+_DIGITS = {"byte": 3, "short": 5, "integer": 10, "long": 20}  # integral types
+_EPOCH = datetime.datetime(1970, 1, 1)
+_STEP = {"int": 1, "date": datetime.timedelta(days=1),
+         "ts": datetime.timedelta(microseconds=1)}  # strict -> inclusive
 
 
-def _parse_literal(m, allow_float: bool = False) -> tuple[object, str] | None:
-    """matched literal -> (python value, kind) or None if unusable."""
-    if m.group("ts") is not None:
-        try:
-            return (datetime.datetime.fromisoformat(m.group("ts")), "ts")
-        except ValueError:
+def _tree(nodes: list) -> dict:
+    """The root of toJSON's pre-order node list, children under "kids"
+    and an atomic dataType (else None) under "type". Iterative: a long
+    OR chain is as deep as it is long."""
+    open_ = []  # nodes still owed children, innermost last
+    for node in nodes:
+        node["kids"] = []
+        node["type"] = node.get("dataType") if isinstance(node.get("dataType"), str) else None
+        if open_:
+            open_[-1]["kids"].append(node)
+            if len(open_[-1]["kids"]) == open_[-1]["num-children"]:
+                open_.pop()
+        if node["num-children"]:
+            open_.append(node)
+    return nodes[0]
+
+
+def _cls(node: dict) -> str:
+    return node["class"].rsplit(".", 1)[-1]
+
+
+def _digits(t) -> tuple[int, int] | None:
+    """An integral or decimal type's (integer digits, scale)."""
+    if t in _DIGITS:
+        return _DIGITS[t], 0
+    if t and t.startswith("decimal("):
+        p, s = map(int, t[len("decimal("):-1].split(","))
+        return p - s, s
+    return None
+
+
+def _widens(src, dst) -> bool:
+    """CAST(src AS dst) keeps every value exactly, so a bound on the
+    cast is the same bound on its child."""
+    a, b = _digits(src), _digits(dst)
+    if a and b and (src in _DIGITS or dst not in _DIGITS):
+        return b[0] >= a[0] and b[1] >= a[1]
+    return (src is not None and src == dst) or (src, dst) == ("float", "double") or (
+        src in ("byte", "short", "integer") and dst == "double")
+
+
+def _value(v, t) -> tuple[object, str] | None:
+    """A JSON literal value of type ``t`` -> (python value, kind). A
+    TIMESTAMP reads as the session-zone wall time `.sql()` prints, a
+    TIMESTAMP_NTZ as epoch microseconds."""
+    try:
+        if v is None:
             return None
-    if m.group("date") is not None:
-        try:
-            return (datetime.date.fromisoformat(m.group("date")), "date")
-        except ValueError:
-            return None
-    if m.group("cstr") is not None:
-        # an UN-optimized plan leaves implicit coercions as
-        # CAST('lit' AS T) — recover the typed literal (the DML path
-        # reads the ANALYZED plan, where constant folding hasn't run)
-        typ = m.group("ctyp").upper()
-        raw = m.group("cstr")
-        try:
-            if typ.startswith("TIMESTAMP"):
-                return (datetime.datetime.fromisoformat(raw), "ts")
-            if typ == "DATE":
-                return (datetime.date.fromisoformat(raw), "date")
-            if typ == "STRING":
-                return (raw, "str")
-        except ValueError:
-            return None
+        if t in _DIGITS:
+            return int(v), "int"
+        if t == "double" or _digits(t):
+            return (float(v), "float") if math.isfinite(float(v)) else None
+        if t == "string":
+            return v, "str"
+        if t == "date":
+            return datetime.date.fromisoformat(v), "date"
+        if t == "timestamp":
+            ts = datetime.datetime.fromisoformat(v)
+            return (ts, "ts") if ts.tzinfo is None else None
+        if t == "timestamp_ntz":
+            return _EPOCH + int(v) * _STEP["ts"], "ts"
+    except (ValueError, OverflowError):
+        pass
+    return None
+
+
+def _literal(node: dict) -> tuple[object, str] | None:
+    """A literal, also under the cast an implicit coercion leaves in the
+    analyzed plan (CAST(5 AS BIGINT), CAST(1.5BD AS DOUBLE),
+    CAST('2024-01-03' AS DATE))."""
+    if _cls(node) == "Literal":
+        return _value(node["value"], node["type"])
+    if _cls(node) != "Cast" or _cls(node["kids"][0]) != "Literal":
         return None
-    if m.group("str") is not None:
-        return (m.group("str").replace("''", "'"), "str")
-    num = m.group("cnum") if m.group("cnum") is not None else m.group("num")
-    if "." in num:
-        # float literals have no provable DIR rendering (no partition
-        # pruning) — but footer-stat consults compare VALUES, so the
-        # stats path opts in
-        return (float(num), "float") if allow_float else None
-    return (int(num), "int")
+    (lit,), dst = node["kids"], node["type"]
+    src = lit["type"]
+    if src == "string" and dst in ("string", "date", "timestamp", "timestamp_ntz"):
+        return _value(lit["value"], "timestamp" if dst.startswith("timestamp") else dst)
+    # read as the target type (a decimal bound is not tightened like an
+    # int); a FLOAT literal's text is not its float32 value
+    if src != "float" and (_widens(src, dst) or (dst == "double" and _digits(src))):
+        return _value(lit["value"], dst)
+    return None
 
 
-_US = datetime.timedelta(microseconds=1)
-_DAY = datetime.timedelta(days=1)
-
-# A NUMERIC-WIDENING cast on the COLUMN side is order-preserving and
-# value-faithful, so `CAST(k AS BIGINT) >= 5` bounds k exactly like
-# `k >= 5` (the analyzed plan wraps implicit int-family coercions this
-# way). The inner must be identifier-shaped — a literal cast's inner
-# starts with a digit/quote and is left alone.
-_COL_CAST = re.compile(
-    r"CAST\(((?:[\w.]+\.)?`?[A-Za-z_]\w*`?) AS "
-    r"(?:TINYINT|SMALLINT|INT|INTEGER|BIGINT|DOUBLE|FLOAT|REAL|"
-    r"DECIMAL(?:\([^)]*\))?)\)"
-)
-_IN = re.compile(rf"^{_COL}\s+IN\s+\((?P<items>.*)\)$", re.DOTALL)
-_LIT_ONLY = re.compile(rf"^{_LIT.format(i='')}$")
+def _column(node: dict) -> str | None:
+    """A bare column, also under value-preserving casts (a struct field
+    or an outer reference is none)."""
+    while _cls(node) == "Cast" and _widens(node["kids"][0]["type"], node["type"]):
+        node = node["kids"][0]
+    return node["name"] if _cls(node) == "AttributeReference" else None
 
 
-def parse_conjunct(
-    conj: str, allow_float: bool = False
-) -> list[tuple[str, str, object]] | None:
-    """One conjunct -> a list of (column, 'lo'|'hi'|'eq', inclusive
-    bound value) actions, or None when the shape is not
-    `col <op> literal` / `col IN (literals)` (ignored — always sound).
-    Strict < / > tighten to inclusive bounds exactly for microsecond
-    timestamps / dates / ints; strings stay inclusive (sound: a wider
-    bound only admits more rows). IN-lists bound to [min, max] of the
-    member literals — coarser than the exact set, still implied."""
-    conj = _COL_CAST.sub(r"\1", conj)
-    mi = _IN.match(conj)
-    if mi:
-        vals, fams = [], set()
-        for item in _top_split(mi.group("items"), ","):
-            lm = _LIT_ONLY.match(item.strip())
-            lit = _parse_literal(lm, allow_float) if lm else None
-            if lit is None:
-                return None
-            vals.append(lit[0])
-            fams.add(lit[1])
-        if not vals or len(fams) != 1 or any(v is None for v in vals):
-            return None
-        col = mi.group("col")
-        return [(col, "lo", min(vals)), (col, "hi", max(vals))]
-    m = _FWD.match(conj)
-    op = None
-    if m:
-        op = m.group("op")
-    else:
-        m = _REV.match(conj)
-        if m:
-            op = _FLIP[m.group("op")]
-    if not m or op is None:
+def _inset_ends(jnode, t) -> list | None:
+    """An InSet's least and greatest members as (value, kind). toJSON
+    writes its set as null: the JVM node's type ordering picks them, and
+    each reads back through a Literal's own toJSON."""
+    hset, dtype = jnode.hset(), jnode.child().dataType()
+    if hset.contains(None):
         return None
-    lit = _parse_literal(m, allow_float)
-    if lit is None:
+    jvm = SparkContext._jvm
+    order = getattr(jvm, "org.apache.spark.sql.catalyst.types.PhysicalDataType") \
+        .apply(dtype).ordering()
+    literal = getattr(jvm, "org.apache.spark.sql.catalyst.expressions.Literal")
+    return [_value(json.loads(literal(v, dtype).toJSON())[0]["value"], t)
+            for v in (hset.min(order), hset.max(order))]
+
+
+def _conjuncts(root: dict) -> list:
+    """(conjunct, child-index path from the root) per top-level AND
+    operand."""
+    out, todo = [], [(root, ())]
+    while todo:
+        node, path = todo.pop()
+        if _cls(node) == "And":
+            todo += [(kid, path + (i,)) for i, kid in enumerate(node["kids"])]
+        else:
+            out.append((node, path))
+    return out
+
+
+def _bound(node: dict, jnode) -> tuple[str, object, object, str] | None:
+    """One conjunct -> (column, inclusive lo, inclusive hi, kind), None
+    for an open end; None when it is not `col <op> literal` or `col IN
+    (literals)` (ignored, which is always sound). Strict < and >
+    tighten exactly for ints, dates and microsecond timestamps; an IN
+    list bounds to [min, max] of its members."""
+    cls = _cls(node)
+    if cls in ("In", "InSet"):
+        col = _column(node["kids"][0])
+        if col is None:
+            return None
+        ends = ([_literal(k) for k in node["kids"][1:]] if cls == "In"
+                else _inset_ends(jnode(), node["kids"][0]["type"]))
+        if not ends or None in ends or len({k for _v, k in ends}) != 1:
+            return None
+        return col, min(v for v, _k in ends), max(v for v, _k in ends), ends[0][1]
+    if cls not in _CMP:
+        return None
+    left, right = node["kids"]
+    col, lit, op = _column(left), _literal(right), _CMP[cls]
+    if col is None or lit is None:
+        col, lit, op = _column(right), _literal(left), _FLIP[op]
+    if col is None or lit is None:
         return None
     val, kind = lit
-    col = m.group("col")
-    if op == "=":
-        return [(col, "eq", val)]
-    if op in (">", ">="):
-        if op == ">":
-            if kind == "ts":
-                val = val + _US
-            elif kind == "date":
-                val = val + _DAY
-            elif kind == "int":
-                val = val + 1
-        return [(col, "lo", val)]
-    if op == "<":
-        if kind == "ts":
-            val = val - _US
-        elif kind == "date":
-            val = val - _DAY
-        elif kind == "int":
-            val = val - 1
-    return [(col, "hi", val)]
-
-
-def bounds_from_condition(cond_sql: str, allow_float: bool = False) -> dict:
-    """Condition SQL -> {col: (lo, hi)} inclusive raw-value bounds
-    (None = open end). Conjuncts that don't parse are ignored; columns
-    whose bounds mix incomparable types are dropped."""
-    acc: dict[str, dict] = {}
-    for conj in conjuncts(cond_sql):
-        parsed = parse_conjunct(conj, allow_float)
-        if parsed is None:
-            continue
-        for col, side, val in parsed:
-            slot = acc.setdefault(col, {"lo": [], "hi": []})
-            if side in ("lo", "eq"):
-                slot["lo"].append(val)
-            if side in ("hi", "eq"):
-                slot["hi"].append(val)
-    def _family(v) -> str:
-        if isinstance(v, bool):
-            return "bool"
-        if isinstance(v, (int, float)):
-            return "num"
-        if isinstance(v, datetime.datetime):
-            return "ts"
-        if isinstance(v, datetime.date):
-            return "date"
-        return type(v).__name__
-
-    out: dict[str, tuple] = {}
-    for col, slot in acc.items():
-        fams = {_family(v) for v in slot["lo"] + slot["hi"]}
-        if len(fams) != 1:
-            continue  # incomparable mixed-type bounds: no pruning
+    if op in ("<", ">") and kind in _STEP:
         try:
-            lo = max(slot["lo"]) if slot["lo"] else None
-            hi = min(slot["hi"]) if slot["hi"] else None
-        except TypeError:
-            continue
-        if lo is not None or hi is not None:
-            out[col] = (lo, hi)
-    return out
+            val = val + _STEP[kind] if op == ">" else val - _STEP[kind]
+        except OverflowError:  # strictly past the type's last value
+            return None
+    return col, None if op[0] == "<" else val, None if op[0] == ">" else val, kind
+
+
+def bounds_from_conditions(jconds: list) -> dict:
+    """Catalyst conditions (JVM expressions, one toJSON call each) that
+    all hold for the same rows -> {col: (lo, hi)} inclusive raw-value
+    bounds (None = open end). A column whose bounds mix value families
+    (numbers, strings, dates, timestamps) is dropped."""
+    acc: dict[str, tuple[list, list, set]] = {}
+    for jcond in jconds:
+        for node, path in _conjuncts(_tree(json.loads(jcond.toJSON()))):
+
+            def jnode(node=jcond, path=path):
+                for i in path:
+                    node = node.children().apply(i)
+                return node
+
+            b = _bound(node, jnode)
+            if b is None:
+                continue
+            col, lo, hi, kind = b
+            los, his, fams = acc.setdefault(col, ([], [], set()))
+            fams.add("num" if kind in ("int", "float") else kind)
+            los += [lo] if lo is not None else []
+            his += [hi] if hi is not None else []
+    return {
+        col: (max(los) if los else None, min(his) if his else None)
+        for col, (los, his, fams) in acc.items()
+        if len(fams) == 1
+    }
 
 
 def _union_bounds(per_occurrence: list[dict]) -> dict:
@@ -342,9 +309,9 @@ def _relation_table(jnode, table_dirs: dict) -> str | None:
 
 
 def collect_scan_occurrences(df: DataFrame, table_dirs: dict) -> dict:
-    """Optimized-plan walk: {table: [condition-SQL or None, ...]} —
-    one entry per parquet-scan occurrence of the table, carrying the
-    AND of Filter conditions sitting directly above it (only Filter
+    """Optimized-plan walk: {table: [conditions or None, ...]} — one
+    entry per parquet-scan occurrence of the table, carrying the JVM
+    conditions of the Filters sitting directly above it (only Filter
     and alias-free Project nodes may stand between; anything else
     resets the context, so a condition is never attributed across an
     aggregate, join, or renaming projection). A py4j failure anywhere
@@ -355,7 +322,7 @@ def collect_scan_occurrences(df: DataFrame, table_dirs: dict) -> dict:
     def walk(node, conds: list):
         cls = node.getClass().getSimpleName()
         if cls == "Filter":
-            walk(_seq(node.children())[0], conds + [node.condition().sql()])
+            walk(_seq(node.children())[0], conds + [node.condition()])
             return
         if cls == "Project":
             alias_free = all(
@@ -370,9 +337,7 @@ def collect_scan_occurrences(df: DataFrame, table_dirs: dict) -> dict:
         if cls == "LogicalRelation":
             name = _relation_table(node, table_dirs)
             if name is not None:
-                out.setdefault(name, []).append(
-                    " AND ".join(f"({c})" for c in conds) if conds else None
-                )
+                out.setdefault(name, []).append(conds or None)
             return
         for ch in _seq(node.children()):
             walk(ch, [])
@@ -394,10 +359,11 @@ def try_sql_prune(
     auto-materialized snapshot-table views; ``analyze`` analyzes the
     same query again (``spark.sql`` on its text, or its parsed plan).
     Returns the re-planned DataFrame when pruning engaged for at least
-    one table, else None (caller keeps the full-read plan). Never
-    raises: any unexpected failure warns with its reason and falls
-    back — pruning is a physical optimization, the full-read plan is
-    always available."""
+    one table, else None (caller keeps the full-read plan). A Spark or
+    py4j error, or table metadata that cannot be read, warns with its
+    reason and falls back — pruning is a physical optimization, the
+    full-read plan is always available; any other error is a fault of
+    this module and raises."""
     try:
         full_views = dict(registered)
         # ONE version listing and metadata read per table and statement:
@@ -418,12 +384,7 @@ def try_sql_prune(
             if not conds or any(c is None for c in conds):
                 continue  # some scan of this table needs every row
             t, meta = tables[name]
-            # a bound naming no column of this table (the parser is
-            # textual) bounds nothing: plan_files reads only spec
-            # sources and schema columns
-            bounds = _union_bounds(
-                [bounds_from_condition(c, allow_float=True) for c in conds]
-            )
+            bounds = _union_bounds([bounds_from_conditions(c) for c in conds])
             if not bounds:
                 continue
             paths, decision = t.plan_files(meta, bounds)
@@ -449,6 +410,6 @@ def try_sql_prune(
         LAST_SQL_PRUNE_AUDITS.clear()
         LAST_SQL_PRUNE_AUDITS.update(audits)
         return out
-    except Exception as ex:  # pragma: no cover - defensive fallback
+    except _SPARK_ERRORS + (OSError, json.JSONDecodeError) as ex:
         warnings.warn(f"SQL partition pruning skipped: {ex!r}")
         return None

@@ -1,15 +1,18 @@
 """Property tests for the pruning machinery: hive escape/unescape
-roundtrip (against arbitrary strings), conjunct-parser robustness
-(never raises, bounds always implied), and `SnapshotTable.plan_files`
-soundness over a table mixing every partition layout."""
+roundtrip (against arbitrary strings), the bounds walk over Catalyst
+conditions (never raises on any predicate Spark analyzes, bounds always
+implied), and `SnapshotTable.plan_files` soundness over a table mixing
+every partition layout."""
 
 from __future__ import annotations
 
 import datetime
 
 import pytest
-from hypothesis import example, given, settings
+from hypothesis import example, given, reject, settings
 from hypothesis import strategies as st
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from empdia_iceberg_spark.tables.manager import (
@@ -19,10 +22,7 @@ from empdia_iceberg_spark.tables.manager import (
     hive_unescape_value,
     scratch_root,
 )
-from empdia_iceberg_spark.tables.sqlprune import (
-    bounds_from_condition,
-    conjuncts,
-)
+from empdia_iceberg_spark.tables.sqlprune import bounds_from_conditions
 
 _FAST = settings(max_examples=200, deadline=None)
 
@@ -49,18 +49,93 @@ def test_hive_escape_ints_identity(n):
     assert hive_unescape_value(str(n)) == str(n)
 
 
-@_FAST
-@given(st.text(max_size=80))
-def test_parser_never_raises_on_garbage(s):
-    """Arbitrary condition text: the parser may extract nothing, but it
-    must never raise and never return a malformed bounds dict."""
-    b = bounds_from_condition(s, allow_float=True)
-    assert isinstance(b, dict)
-    for col, (lo, hi) in b.items():
-        assert isinstance(col, str) and col
-        assert lo is not None or hi is not None
-    cs = conjuncts(s)
-    assert isinstance(cs, list) and cs
+_TYPED = "k int, l bigint, s string, ts timestamp, d date, v double, st struct<a:int>"
+
+
+@pytest.fixture(scope="module")
+def typed(spark, tmp_path_factory):
+    """A typed empty parquet scan whose Filters the optimizer keeps."""
+    return spark.read.schema(_TYPED).parquet(str(tmp_path_factory.mktemp("typed")))
+
+
+def _conditions(frame, where: str, stages=("analyzed",)) -> list:
+    """The Filter condition of each plan stage of ``frame.where(where)``."""
+    qe = frame.where(where)._jdf.queryExecution()
+    out = []
+    for stage in stages:
+        plan = getattr(qe, stage)()
+        while plan.getClass().getSimpleName() != "Filter" and plan.children().size():
+            plan = plan.children().apply(0)
+        if plan.getClass().getSimpleName() == "Filter":
+            out.append(plan.condition())
+    return out
+
+
+def _bounds(frame, where: str) -> dict:
+    return bounds_from_conditions(_conditions(frame, where))
+
+
+def _atoms(columns: list, literals):
+    """Comparisons, IN lists and IS NULL over one family's columns and
+    literals (either side of a comparison may be either)."""
+    side = st.one_of(st.sampled_from(columns), literals)
+    return st.one_of(
+        st.builds("{} {} {}".format, side,
+                  st.sampled_from(["=", "<", "<=", ">", ">=", "<=>", "!="]), side),
+        st.builds(lambda c, xs: f"{c} IN ({', '.join(xs)})",
+                  st.sampled_from(columns), st.lists(literals, min_size=1, max_size=12)),
+        st.builds("{} IS NULL".format, st.sampled_from(columns)),
+    )
+
+
+_ATOM = st.one_of(
+    _atoms(
+        ["k", "l", "v", "st.a", "abs(k)", "k + 1", "CAST(k AS BIGINT)", "CAST(v AS INT)"],
+        st.one_of(
+            st.integers(-(2**40), 2**40).map(str),
+            st.floats(allow_nan=False, allow_infinity=False, width=32).map(repr),
+            st.sampled_from(["1.5BD", "CAST(5 AS BIGINT)", "NULL"]),
+        ),
+    ),
+    _atoms(
+        ["s", "upper(s)"],
+        st.text(max_size=6).map(
+            lambda t: "'" + t.replace("\\", "").replace("'", "''") + "'"
+        ),
+    ),
+    _atoms(
+        ["ts", "d", "CAST(ts AS DATE)"],
+        st.sampled_from(["DATE'2024-01-03'", "TIMESTAMP'2024-01-03 04:05:06.7'",
+                         "'2024-01-03'", "NULL"]),
+    ),
+)
+_PREDICATE = st.recursive(
+    _ATOM,
+    lambda sub: st.one_of(
+        st.builds("({}) AND ({})".format, sub, sub),
+        st.builds("({}) OR ({})".format, sub, sub),
+        st.builds("NOT ({})".format, sub),
+    ),
+    max_leaves=4,
+)
+
+
+@settings(max_examples=100, deadline=None, derandomize=True)
+@given(_PREDICATE)
+def test_walk_never_raises_on_any_analyzed_predicate(typed, where):
+    """Any predicate Spark analyzes and optimizes: the walk may extract
+    nothing, but it never raises and never returns a malformed bounds
+    dict."""
+    try:
+        conds = _conditions(typed, where, ("analyzed", "optimizedPlan"))
+    except (PySparkException, Py4JError):
+        reject()  # not a predicate Spark accepts over these columns
+    for cond in conds:
+        b = bounds_from_conditions([cond])
+        assert isinstance(b, dict)
+        for col, (lo, hi) in b.items():
+            assert col in ("k", "l", "s", "ts", "d", "v")
+            assert lo is not None or hi is not None
 
 
 @_FAST
@@ -69,12 +144,12 @@ def test_parser_never_raises_on_garbage(s):
     st.integers(min_value=-1000, max_value=1000),
     st.sampled_from([">", ">=", "<", "<=", "="]),
 )
-def test_int_bounds_are_implied(v, probe, op):
+def test_int_bounds_are_implied(typed, v, probe, op):
     """For every integer conjunct `k <op> v` and every probe value: if
     the probe SATISFIES the conjunct, it must fall inside the
     extracted bounds (bounds admit a superset — the soundness
     contract)."""
-    b = bounds_from_condition(f"(k {op} {v})")
+    b = _bounds(typed, f"k {op} {v}")
     assert "k" in b
     lo, hi = b["k"]
     sat = {
@@ -90,8 +165,8 @@ def test_int_bounds_are_implied(v, probe, op):
 
 @_FAST
 @given(st.lists(st.integers(min_value=-99, max_value=99), min_size=1, max_size=6))
-def test_in_list_bounds_are_implied(vals):
-    b = bounds_from_condition(f"(k IN ({', '.join(map(str, vals))}))")
+def test_in_list_bounds_are_implied(typed, vals):
+    b = _bounds(typed, f"k IN ({', '.join(map(str, vals))})")
     lo, hi = b["k"]
     assert lo == min(vals) and hi == max(vals)
 
@@ -104,11 +179,11 @@ def test_in_list_bounds_are_implied(vals):
     ),
     st.sampled_from([">", ">=", "<", "<="]),
 )
-def test_ts_strictness_tightening_exact(ts, op):
+def test_ts_strictness_tightening_exact(typed, ts, op):
     """Strict timestamp bounds tighten by exactly 1 microsecond — the
     precision of Spark timestamps, so no value is ever excluded."""
     lit = ts.isoformat(sep=" ", timespec="microseconds")
-    b = bounds_from_condition(f"(ts {op} TIMESTAMP '{lit}')")
+    b = _bounds(typed, f"ts {op} TIMESTAMP '{lit}'")
     lo, hi = b["ts"]
     us = datetime.timedelta(microseconds=1)
     if op == ">":

@@ -238,65 +238,207 @@ def test_no_false_prune_property_battery(spark, day_table):
         assert got == want, f"row mismatch for {where!r}: {got} != {want}"
 
 
-def test_bounds_parser_edge_cases():
-    """Pure-function battery over the conjunct grammar: quoted ' AND '
-    inside literals, reversed operands, doubled quotes, cast-wrapped
-    literals, numeric suffixes, mixed incomparable types dropped."""
+_EDGE_SCHEMA = (
+    "k int, l bigint, s string, ts timestamp, tn timestamp_ntz, d date, "
+    "v double, f double, q decimal(12,2), st struct<a:int>"
+)
+
+
+@pytest.fixture(scope="module")
+def typed_empty(spark, tmp_path_factory):
+    """A typed empty parquet scan: the optimizer keeps a Filter over it
+    (an empty LocalRelation would fold the Filter away)."""
+    path = str(tmp_path_factory.mktemp("typed_empty"))
+    return spark.read.schema(_EDGE_SCHEMA).parquet(path)
+
+
+def _cond(frame, where: str, stage: str = "optimizedPlan"):
+    plan = getattr(frame.where(where)._jdf.queryExecution(), stage)()
+    while plan.getClass().getSimpleName() != "Filter":
+        plan = plan.children().apply(0)
+    return plan.condition()
+
+
+def _bounds(frame, where: str, stage: str = "optimizedPlan") -> dict:
+    return sqlprune.bounds_from_conditions([_cond(frame, where, stage)])
+
+
+def test_bounds_parser_edge_cases(spark, typed_empty):
+    """The bounds walk over Catalyst's own conditions, analyzed (the
+    predicate-DML shapes, implicit coercions still cast) and optimized
+    (the SQL read path): quoted ' AND ' inside literals, reversed
+    operands, doubled quotes, cast-wrapped literals, long literals,
+    IN lists (InSet beyond ten items), mixed families dropped."""
     import datetime
 
-    from empdia_iceberg_spark.tables.sqlprune import (
-        bounds_from_condition,
-        conjuncts,
-    )
-
-    assert conjuncts("((a = 'x AND y') AND (b > 2))") == [
-        "a = 'x AND y'",
-        "b > 2",
-    ]
-    b = bounds_from_condition("(k = 'it''s')")
-    assert b == {"k": ("it's", "it's")}
+    e = typed_empty
+    an = "analyzed"
+    assert _bounds(e, "s = 'x AND y' AND k > 2") == {
+        "s": ("x AND y", "x AND y"),
+        "k": (3, None),
+    }
+    assert _bounds(e, "s = 'it''s'") == {"s": ("it's", "it's")}
     # reversed operand order flips the operator
-    assert bounds_from_condition("(5 <= k)") == {"k": (5, None)}
+    assert _bounds(e, "5 <= k") == {"k": (5, None)}
     # strict int bounds tighten to inclusive
-    assert bounds_from_condition("(k > 5) AND (k < 10)") == {"k": (6, 9)}
+    assert _bounds(e, "k > 5 AND k < 10") == {"k": (6, 9)}
     # timestamp strictness tightens by 1 microsecond
-    lo, hi = bounds_from_condition(
-        "(ts > TIMESTAMP '2024-01-03 00:00:00')"
-    )["ts"]
+    lo, hi = _bounds(e, "ts > TIMESTAMP '2024-01-03 00:00:00'")["ts"]
     assert lo == datetime.datetime(2024, 1, 3, 0, 0, 0, 1) and hi is None
-    # cast-wrapped literals (analyzed-plan shapes) and suffixes
-    assert bounds_from_condition("(k = CAST(1500 AS BIGINT))") == {
-        "k": (1500, 1500)
+    lo, hi = _bounds(e, "tn < TIMESTAMP_NTZ '2024-01-03 00:00:00'")["tn"]
+    assert lo is None and hi == datetime.datetime(2024, 1, 2, 23, 59, 59, 999999)
+    # cast-wrapped literals (analyzed-plan shapes) and long literals
+    assert _bounds(e, "l = 1500", an) == {"l": (1500, 1500)}
+    assert _bounds(e, "l >= 100") == {"l": (100, None)}
+    assert _bounds(e, "d = '2024-01-03'", an) == {
+        "d": (datetime.date(2024, 1, 3),) * 2
     }
-    assert bounds_from_condition("(k >= 100L)") == {"k": (100, None)}
-    assert bounds_from_condition(
-        "(d = CAST('2024-01-03' AS DATE))"
-    ) == {"d": (datetime.date(2024, 1, 3),) * 2}
-    # float literals only with allow_float
-    assert bounds_from_condition("(v < 1.5)") == {}
-    assert bounds_from_condition("(v < 1.5)", allow_float=True) == {
-        "v": (None, 1.5)
+    # float literals: CAST(1.5BD AS DOUBLE) analyzed, 1.5D optimized
+    assert _bounds(e, "v < 1.5", an) == {"v": (None, 1.5)}
+    assert _bounds(e, "v < 1.5") == {"v": (None, 1.5)}
+    # OR -> ignored; contradictory bounds survive as an empty range
+    assert _bounds(e, "k = 1 OR k = 2", an) == {}
+    assert _bounds(e, "k > 10 AND k < 5", an) == {"k": (11, 4)}
+    # one column bounded by two families (numbers, strings) -> dropped
+    s_frame = spark.createDataFrame([], "k string")
+    assert sqlprune.bounds_from_conditions(
+        [_cond(e, "k > 5", an), _cond(s_frame, "k < 'z'", an)]
+    ) == {}
+    # IN lists bound to [min, max]; widening column casts unwrap
+    assert _bounds(e, "k IN (7, 2, 5)") == {"k": (2, 7)}
+    assert _bounds(e, "s IN ('b', 'a')") == {"s": ("a", "b")}
+    # analyzed: (CAST(l AS BIGINT) IN (CAST(1 AS BIGINT), CAST(3 AS BIGINT)))
+    assert _bounds(e, "l IN (1, 3)", an) == {"l": (1, 3)}
+    assert _bounds(e, "CAST(k AS BIGINT) IN (1, 3)", an) == {"k": (1, 3)}
+    assert _bounds(e, "CAST(k AS BIGINT) >= 5", an) == {"k": (5, None)}
+    assert _bounds(e, "k = CAST(42 AS BIGINT)", an) == {"k": (42, 42)}
+    # a literal cast to a decimal bounds as a number, never tightened
+    # like an int: q > 5 holds for q = 5.5
+    assert _bounds(e, "q > CAST(5 AS DECIMAL(12,2))", an) == {"q": (5.0, None)}
+    # IN with a non-literal member: whole conjunct ignored
+    assert _bounds(e, "k IN (1, l)", an) == {}
+    # more than ten members: the optimizer's InSet, read from the JVM
+    many = ", ".join(str(i) for i in range(20, 8, -1))
+    assert _cond(e, f"k IN ({many})").getClass().getSimpleName() == "InSet"
+    assert _bounds(e, f"k IN ({many})") == {"k": (9, 20)}
+    assert _bounds(e, f"k IN ({many}, NULL)") == {}
+    words = ", ".join(f"'w{i:02d}'" for i in range(12))
+    assert _bounds(e, f"s IN ({words})") == {"s": ("w00", "w11")}
+    cents = ", ".join(f"{i}.25" for i in range(12))
+    assert _bounds(e, f"q IN ({cents})") == {"q": (0.25, 11.25)}
+    days = ", ".join(f"DATE'2024-01-{i:02d}'" for i in range(1, 13))
+    assert _bounds(e, f"d IN ({days})") == {
+        "d": (datetime.date(2024, 1, 1), datetime.date(2024, 1, 12))
     }
-    # incomparable mixed types for one column -> dropped, OR -> ignored
-    assert bounds_from_condition("(k > 5) AND (k < 'z')") == {}
-    assert bounds_from_condition("((k = 1) OR (k = 2))") == {}
-    # contradictory bounds survive as an empty range (prunes everything)
-    assert bounds_from_condition("(k > 10) AND (k < 5)") == {"k": (11, 4)}
-    # IN-lists bound to [min, max]; cast-wrapped columns normalize
-    assert bounds_from_condition("(k IN (7, 2, 5))") == {"k": (2, 7)}
-    assert bounds_from_condition("(s IN ('b', 'a'))") == {"s": ("a", "b")}
-    assert bounds_from_condition(
-        "(CAST(k AS BIGINT) IN (CAST(1 AS BIGINT), CAST(3 AS BIGINT)))"
-    ) == {"k": (1, 3)}
-    assert bounds_from_condition("(CAST(k AS BIGINT) >= 5)") == {
-        "k": (5, None)
-    }
-    # a literal cast's inner is not identifier-shaped: left alone
-    assert bounds_from_condition("(k = CAST(42 AS BIGINT))") == {
-        "k": (42, 42)
-    }
-    # IN with an unparseable member: whole conjunct ignored
-    assert bounds_from_condition("(k IN (1, other_col))") == {}
+    # narrowing column casts and struct fields bound nothing
+    assert _bounds(e, "CAST(f AS BIGINT) = 5", an) == {}
+    assert _bounds(e, "CAST(f AS BIGINT) = 5") == {}
+    assert _bounds(e, "st.a = 5") == {}
+
+
+def test_timestamp_bounds_follow_the_session_zone(spark, typed_empty):
+    """Under a non-UTC session a TIMESTAMP literal bounds the session-zone
+    wall time `.sql()` prints, and an InSet's members (UTC micros in
+    the JVM) convert to that same wall time."""
+    import datetime
+
+    old = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        cond = _cond(typed_empty, "ts >= TIMESTAMP '2024-03-10 02:30:00.25'")
+        lo, hi = sqlprune.bounds_from_conditions([cond])["ts"]
+        printed = cond.sql().split("TIMESTAMP '")[1].split("'")[0]
+        assert lo == datetime.datetime.fromisoformat(printed)
+        assert lo == datetime.datetime(2024, 3, 10, 3, 30, 0, 250000)
+        stamps = ", ".join(
+            f"TIMESTAMP'2024-01-{i:02d} 01:02:03.5'" for i in range(1, 13)
+        )
+        assert _bounds(typed_empty, f"ts IN ({stamps})") == {
+            "ts": (
+                datetime.datetime(2024, 1, 1, 1, 2, 3, 500000),
+                datetime.datetime(2024, 1, 12, 1, 2, 3, 500000),
+            )
+        }
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def _table(spark, name, schema, *batches):
+    t = SnapshotTable(spark, name, scratch_root())
+    t.drop()
+    t.create(spark.createDataFrame(batches[0], schema).coalesce(1))
+    for rows in batches[1:]:
+        t.append(spark.createDataFrame(rows, schema).coalesce(1))
+    return t
+
+
+def test_narrowing_column_cast_bounds_nothing(spark):
+    """CAST(f AS BIGINT) = 5 holds for f = 5.3 and 5.7: a narrowing cast
+    is not value-preserving, so it must not become the bound f = 5
+    (whose footer stats would prune both files), on reads and on DML."""
+    t = _table(
+        spark, "t_sqlp_narrow", "k int, f double",
+        [(1, 5.3), (2, 5.7)], [(3, 1.0), (4, 2.0)],
+    )
+    r = execute_sql(
+        spark,
+        "SELECT count(*) AS c FROM t_sqlp_narrow WHERE CAST(f AS BIGINT) = 5",
+        scratch_root(),
+    )
+    assert r.collect()[0]["c"] == 2
+    v0 = t.current_version()
+    execute_sql(
+        spark, "DELETE FROM t_sqlp_narrow WHERE CAST(f AS BIGINT) = 5", scratch_root()
+    )
+    assert t.current_version() == v0 + 1
+    assert sorted(x["f"] for x in t.read().collect()) == [1.0, 2.0]
+    assert SnapshotTable._DML_STATS_AUDITS["t_sqlp_narrow"]["bounded_columns"] == []
+    t.drop()
+
+
+def test_struct_field_is_not_a_column(spark):
+    """`s.a = 5` compares a nested field; it bounds nothing, least of all
+    the top-level column `a`."""
+    t = _table(spark, "t_sqlp_nested", "a int, s struct<a:int>", [(1, (5,))])
+    r = execute_sql(
+        spark, "SELECT count(*) AS c FROM t_sqlp_nested WHERE s.a = 5", scratch_root()
+    )
+    assert r.collect()[0]["c"] == 1
+    t.drop()
+
+
+def test_widening_column_cast_still_prunes(spark):
+    """The analyzed DML plan keeps `CAST(k AS BIGINT) >= CAST(25 AS
+    BIGINT)` over an int column: a widening cast unwraps to k >= 25."""
+    t = SnapshotTable(spark, "t_sqlp_widen", scratch_root())
+    t.drop()
+    one_file = lambda lo: spark.range(lo, lo + 10, numPartitions=1).selectExpr(
+        "CAST(id AS INT) AS k"
+    )
+    t.create(one_file(0))
+    t.append(one_file(10))
+    t.append(one_file(20))
+    execute_sql(
+        spark, "DELETE FROM t_sqlp_widen WHERE CAST(k AS BIGINT) >= 25", scratch_root()
+    )
+    audit = SnapshotTable._DML_STATS_AUDITS["t_sqlp_widen"]
+    assert audit["bounded_columns"] == ["k"]
+    assert audit["files_skipped_by_stats"] == 2, audit
+    assert t.read().count() == 25
+    t.drop()
+
+
+def test_a_fault_in_the_walk_is_not_swallowed(spark, day_table, monkeypatch):
+    """Only Spark, py4j and metadata-read errors fall back to the full
+    plan; a bug of the bounds walk itself raises instead of silently
+    turning every pruned read into a full scan."""
+
+    def broken(_conds):
+        raise TypeError("a fault in the bounds walk")
+
+    monkeypatch.setattr(sqlprune, "bounds_from_conditions", broken)
+    with pytest.raises(TypeError, match="bounds walk"):
+        execute_sql(spark, "SELECT n FROM t_sqlp_days WHERE n = 3", scratch_root())
 
 
 def test_file_stats_refine_nonpartition_predicate(spark):

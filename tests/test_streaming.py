@@ -518,6 +518,33 @@ def test_snapshot_tail_bounded_offsets_split_within_commit(spark):
     t.drop()
 
 
+def test_snapshot_tail_lists_files_in_the_table_order(spark):
+    """A partitioned version spread over several hive subdirs lists its
+    files in one order, the table's sorted walk, through the plain
+    tail's offsets and partitions and through the MOR/CDC grouping:
+    file offsets index into that order, so a resumed checkpoint must
+    see it again."""
+    import os
+
+    from empdia_iceberg_spark.sources.table_stream import SnapshotTailStreamReader
+    from empdia_iceberg_spark.tables.manager import SnapshotTable
+
+    t = SnapshotTable(spark, "t_tail_order_unit")
+    t.drop()
+    rows = [(i, f"p{i % 3}") for i in range(24)]
+    t.create(spark.createDataFrame(rows, "k int, p string").repartition(2), partition_by=["p"])
+    meta = t._read_meta(1)
+    walked = [f for d in meta["dirs"] for f in SnapshotTable._walk_parquet(d)]
+    assert len({os.path.dirname(f) for f in walked}) == 3
+    assert walked == sorted(walked)
+    r = SnapshotTailStreamReader({"table": "t_tail_order_unit"}, meta["schema"])
+    assert [f for f, _size in r._new_files(1, raise_on_change=True)] == walked
+    parts = r.partitions({"version": 0, "file": None}, {"version": 1, "file": None})
+    assert [p.path for p in parts] == walked
+    assert r._mor_groups(meta, meta["dirs"]) == [{"files": walked, "deletes": []}]
+    t.drop()
+
+
 def test_snapshot_tail_byte_budget_bounds_batches(spark):
     """max_bytes_per_trigger: the byte-budget twin of the file cap —
     whichever exhausts first ends the batch, and a single file larger

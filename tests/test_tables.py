@@ -3994,6 +3994,26 @@ def test_create_table_refuses_char_and_varchar_columns(spark, monkeypatch):
     t.drop()
 
 
+def test_add_columns_refuses_char_and_varchar_columns(spark):
+    """ALTER TABLE ... ADD COLUMNS refuses a CHAR/VARCHAR column by name
+    like CREATE TABLE does, before any column of the list commits."""
+    from empdia_iceberg_spark.tables import ddl
+
+    root = scratch_root()
+    t = SnapshotTable(spark, "tv_add_unit", root)
+    t.drop()
+    ddl.execute_sql(spark, "CREATE TABLE tv_add_unit (k int)", root)
+    v = t.current_version()
+    with pytest.raises(ValueError, match="column s has type VARCHAR\\(10\\).*STRING"):
+        ddl.execute_sql(
+            spark, "ALTER TABLE tv_add_unit ADD COLUMNS (n int, s varchar(10))", root
+        )
+    assert t.current_version() == v
+    ddl.execute_sql(spark, "ALTER TABLE tv_add_unit ADD COLUMNS (n int, s string)", root)
+    assert t.read().dtypes == [("k", "int"), ("n", "int"), ("s", "string")]
+    t.drop()
+
+
 # ---------------------------------------- CALL remove_orphan_files (r13)
 
 
